@@ -25,13 +25,20 @@ Scale design (the whole point — SURVEY.md §2g / north star):
 
 from __future__ import annotations
 
+import logging
 from typing import Optional, Sequence
 
+import pyarrow as pa
+from pyspark.errors import PySparkException
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.operators import adaptive_partitions
 from big_data_validator_spark.operators.text import char_ngrams, fingerprint
+
+_log = logging.getLogger(__name__)
+_row_fallback_logged = False
 
 
 # ------------------------------------------------------------ cache hygiene
@@ -69,6 +76,7 @@ def materialize_release(df: DataFrame, *sources: DataFrame) -> DataFrame:
     removes.  Only for results that fit the driver comfortably — the
     full-corpus serving path manages cache lifetime itself.
     """
+    global _row_fallback_logged
     try:
         # Arrow round-trip (r14, guide §6 — Arrow for driver
         # transfers): exact for every engine type incl. NULLs,
@@ -79,7 +87,19 @@ def materialize_release(df: DataFrame, *sources: DataFrame) -> DataFrame:
         tbl = df.toArrow()
         release_pinned(df, *sources)
         return df.sparkSession.createDataFrame(tbl, schema=df.schema)
-    except Exception:
+    except (pa.ArrowException, PySparkException) as exc:
+        # A failure of the query itself (a CapturedException from the
+        # JVM) must raise once, not re-run on the Row path; only a
+        # driver-side Arrow conversion failure falls back.
+        if isinstance(exc, CapturedException):
+            raise
+        if not _row_fallback_logged:
+            _row_fallback_logged = True
+            _log.warning(
+                "materialize_release: Arrow conversion failed (%s); "
+                "collecting Rows instead",
+                exc,
+            )
         rows = df.collect()
         release_pinned(df, *sources)
         return df.sparkSession.createDataFrame(rows, df.schema)

@@ -23,10 +23,11 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from big_data_validator_spark.functions.exprs import (
     cosine_similarity,
@@ -148,7 +149,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_stream(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Streaming reader for the events table with ``ts`` normalized to the
     SAME canonical TIMESTAMP the batch loader (:func:`_t`) produces.
 
@@ -159,46 +160,139 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction instead of hard-coding one storage era's schema.
 
     The file source watches a DIRECTORY; testdata is a flat dir of tables,
-    so the one table is exposed through a symlink — zero copy, and in
+    so the one table is exposed through a symlink in a fresh directory
+    under the drain's ``root`` — zero copy, removed with the root, and in
     production the source dir is already per-table.
     """
-    import os
     import tempfile
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="bdv_stream_src_")
+    src_dir = tempfile.mkdtemp(prefix="events_", dir=root)
     os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
     return _normalize_ts(spark.readStream.schema(raw_schema).parquet(src_dir))
 
 
-from contextlib import contextmanager
+class _Drain(NamedTuple):
+    """What one :func:`_bounded_drain` call owns."""
+
+    root: str  # per-call temp root: sources, sinks, repositories
+    checkpoint: str  # the query's checkpoint, under ``root``
+    table: str  # the query name, which is also a memory sink's table
 
 
-@contextmanager
-def _drain_partitions(spark: SparkSession, n: int = 2):
-    """Pin ``spark.sql.shuffle.partitions`` (and hence streaming state
-    partitions — fixed at query start) for the duration of a BOUNDED
-    streaming drain, restoring the session value after.
+def _bounded_drain(
+    spark: SparkSession,
+    name: str,
+    writer: Callable[[_Drain], DataStreamWriter],
+    read_back: Callable[[_Drain], DataFrame],
+    state_partitions: int = 2,
+) -> DataFrame:
+    """Run registry entry ``name``'s BOUNDED streaming drain and return
+    its collected result.
 
-    Measured at sf0.1 on local[32]: a finite availableNow drain spends
-    more on per-partition state-store checkpointing than on data
-    (r12: 32 → 8 partitions took the attribution join 3.3 s → 1.6 s;
-    r14 within-session A/B, 8 → 2 partitions: attribution_left 5.5 →
-    4.4 s, mannwhitney 5.8 → 5.4 s, attribution_join 1.6 → 1.35 s,
-    dedup 1.2 → 1.15 s — every drained batch here is file-sized, so
-    two state partitions already hold it).  The principle is
-    data-sized state sharding: a real deployment sizes this to drained
-    bytes per trigger, not to core count.  NOT used for the
-    applyInPandasWithState sessionizer — its Arrow workers parallelize
-    with partitions and few-way is measurably slower there.
+    ``writer(d)`` builds the unstarted query, with every source, sink
+    and repository it creates under ``d.root``.  The harness names it
+    ``d.table`` (the entry name plus a uniqueness suffix), sets its
+    checkpoint, starts it with ``availableNow`` and awaits it;
+    ``awaitTermination`` re-raises the query's own failure.
+    ``read_back(d)`` reads the sink, and its result is materialized
+    (:func:`~big_data_validator_spark.operators.dedup
+    .materialize_release`) BEFORE the root is deleted: lazy parquet
+    reads must not outlive their directory.  The root and a memory
+    sink's temp view are removed whether the drain succeeds or not.
+
+    ``spark.sql.shuffle.partitions`` — hence the state partitions, fixed
+    at query start — is ``state_partitions`` for the drain only and is
+    restored before the read-back, so read-back plans keep the session
+    value.  Measured at sf0.1 on local[32]: a finite drain spends more
+    on per-partition state-store checkpointing than on data (r12: 32 →
+    8 partitions took the attribution join 3.3 s → 1.6 s; r14
+    within-session A/B, 8 → 2 partitions: attribution_left 5.5 → 4.4 s,
+    mannwhitney 5.8 → 5.4 s, attribution_join 1.6 → 1.35 s, dedup 1.2 →
+    1.15 s — every drained batch here is file-sized, so two state
+    partitions already hold it).  A real deployment sizes this to
+    drained bytes per trigger, not to core count.
     """
+    import shutil
+    import tempfile
+    import uuid
+
+    root = tempfile.mkdtemp(prefix=f"bdv_{name}_")
+    d = _Drain(root, f"{root}/checkpoint", f"{name}_{uuid.uuid4().hex[:8]}")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
-        yield
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            q = (
+                writer(d)
+                .queryName(d.table)
+                .option("checkpointLocation", d.checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return D.materialize_release(read_back(d))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.catalog.dropTempView(d.table)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _memory_sink(stream: DataFrame, output_mode: str) -> DataStreamWriter:
+    """An unstarted memory-sink writer for :func:`_bounded_drain`, which
+    names the query and with it the sink's table (``_Drain.table``)."""
+    return stream.writeStream.format("memory").outputMode(output_mode)
+
+
+#: (applicationId, sf_dir, tag) → root of a staged :func:`_staged_runs`
+#: source.  Staging is input minting, not operator work — reused across
+#: calls the way production sources pre-exist their consumers.
+_STAGED_RUNS: dict[tuple, str] = {}
+
+
+def _staged_runs(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    runs: Callable[[], list],
+) -> str:
+    """Write (once per session+sf) the frames ``runs()`` returns as
+    single-file parquet dirs ``run0``, ``run1``, … whose explicit mtimes
+    agree with their names, so :func:`_ordered_stream` delivers run r as
+    micro-batch r (batch_id == run_id) without sleeping between
+    writes."""
+    import tempfile
+
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    hit = _STAGED_RUNS.get(key)
+    if hit and os.path.isdir(hit):
+        return hit
+    root = tempfile.mkdtemp(prefix=f"bdv_{tag}_src_")
+    for r, frame in enumerate(runs()):
+        dst = f"{root}/run{r}"
+        frame.coalesce(1).write.parquet(dst)
+        for f in os.listdir(dst):
+            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
+    _STAGED_RUNS[key] = root
+    return root
+
+
+def _ordered_stream(
+    spark: SparkSession, src: str, first: str = "run0"
+) -> DataFrame:
+    """Stream the file groups under ``src`` one file per micro-batch,
+    oldest mtime first, with the schema of ``src/first``."""
+    return (
+        spark.readStream.schema(spark.read.parquet(f"{src}/{first}").schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(f"{src}/*")
+    )
 
 
 # =====================================================================
@@ -1594,22 +1688,18 @@ def streaming_windowed_violations(spark: SparkSession, sf_dir: str) -> DataFrame
     """Structured Streaming end-to-end, oracle-checked: the SAME rule
     expressions the batch runner aggregates, evaluated by a real
     ``readStream`` → watermark → tumbling-window plan, drained to a memory
-    sink with ``trigger(availableNow=True)`` (process-everything-then-stop,
+    sink with the ``availableNow`` trigger (process-everything-then-stop,
     so the finite parquet source yields a deterministic, batch-equal
     answer).  Streaming here is genuinely the engine under test — the
     returned DataFrame is read back from the sink's result table.
 
     At 100 TB/day the identical plan runs unbounded: the shuffle carries
     only per-window partial counts and the watermark bounds state."""
-    import tempfile
-    import uuid
-
     from big_data_validator_spark.streaming.validate_stream import (
         StreamingRuleConfig,
         windowed_violation_counts,
     )
 
-    stream = _events_stream(spark, sf_dir)
     rules = {
         "value_range": (
             F.col("value").isNull()
@@ -1621,29 +1711,25 @@ def streaming_windowed_violations(spark: SparkSession, sf_dir: str) -> DataFrame
             | F.col("event_type").isNull()
         ),
     }
-    counts = windowed_violation_counts(
-        stream,
-        rules,
-        StreamingRuleConfig(event_time_col="ts", watermark="0 seconds", window="1 hour"),
-    )
-    sink_name = f"bdv_stream_q_{uuid.uuid4().hex[:8]}"
-    with _drain_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
+
+    def writer(d: _Drain):
+        counts = windowed_violation_counts(
+            _events_stream(spark, sf_dir, d.root),
+            rules,
+            StreamingRuleConfig(event_time_col="ts", watermark="0 seconds", window="1 hour"),
         )
-        q.awaitTermination()
-    return spark.table(sink_name).select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "total_rows",
-        F.col("value_range_violations").cast("long").alias("value_range_violations"),
-        F.col("type_domain_violations").cast("long").alias("type_domain_violations"),
+        return _memory_sink(counts, "complete")
+
+    return _bounded_drain(
+        spark,
+        "streaming_windowed_violations",
+        writer,
+        lambda d: spark.table(d.table).select(
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "total_rows",
+            F.col("value_range_violations").cast("long").alias("value_range_violations"),
+            F.col("type_domain_violations").cast("long").alias("type_domain_violations"),
+        ),
     )
 
 
@@ -1668,20 +1754,17 @@ def streaming_failure_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming failure sink end-to-end, oracle-checked: a real
     ``readStream`` → stateless rule filter → append-only parquet sink
     partitioned by event date (``stream_violation_sink``), drained with
-    ``trigger(availableNow=True)``, then the SINK FILES are read back and
+    the ``availableNow`` trigger, then the SINK FILES are read back and
     summarized.  Statless append drops nothing at the watermark (only
     stateful operators expire rows), so the sink holds exactly the batch
     answer — the oracle recomputes it relationally from the source table.
     ``event_dates`` counts the sink's physical partition values, proving
     the partitioned layout round-trips."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         StreamingRuleConfig,
         stream_violation_sink,
     )
 
-    stream = _events_stream(spark, sf_dir)
     rules = {
         "value_range": (
             F.col("value").isNull()
@@ -1693,26 +1776,26 @@ def streaming_failure_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             | F.col("event_type").isNull()
         ),
     }
-    out_dir = tempfile.mkdtemp(prefix="bdv_stream_sink_out_")
-    q = stream_violation_sink(
-        stream,
-        rules,
-        output_path=out_dir,
-        checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
-        config=StreamingRuleConfig(event_time_col="ts", watermark="0 seconds"),
-        available_now=True,
-    )
-    q.awaitTermination()
-    sink = spark.read.parquet(out_dir)
-    return sink.agg(
-        F.count(F.lit(1)).alias("violation_rows"),
-        F.sum(
-            F.array_contains("violated_rules", "value_range").cast("long")
-        ).alias("value_range_rows"),
-        F.sum(
-            F.array_contains("violated_rules", "type_domain").cast("long")
-        ).alias("type_domain_rows"),
-        F.count_distinct("event_date").alias("event_dates"),
+    return _bounded_drain(
+        spark,
+        "streaming_failure_sink",
+        lambda d: stream_violation_sink(
+            _events_stream(spark, sf_dir, d.root),
+            rules,
+            output_path=f"{d.root}/sink",
+            checkpoint_path=d.checkpoint,
+            config=StreamingRuleConfig(event_time_col="ts", watermark="0 seconds"),
+        ),
+        lambda d: spark.read.parquet(f"{d.root}/sink").agg(
+            F.count(F.lit(1)).alias("violation_rows"),
+            F.sum(
+                F.array_contains("violated_rules", "value_range").cast("long")
+            ).alias("value_range_rows"),
+            F.sum(
+                F.array_contains("violated_rules", "type_domain").cast("long")
+            ).alias("type_domain_rows"),
+            F.count_distinct("event_date").alias("event_dates"),
+        ),
     )
 
 
@@ -2973,7 +3056,7 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     """The custom stateful streaming operator, oracle-checked end-to-end:
     ``applyInPandasWithState`` sessionization (per-user gap state machine
     with in-session violation counts) drained through a real
-    ``readStream`` → memory sink with ``trigger(availableNow=True)``.
+    ``readStream`` → memory sink with the ``availableNow`` trigger.
 
     The emission contract on bounded input is deterministic: a session
     closed by a later event of the same user is emitted in-batch; each
@@ -2988,33 +3071,34 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     state is bounded per active user and timeouts flush idle sessions —
     the capability the windowed-aggregation queries can't express
     (SURVEY.md §2g streaming)."""
-    import tempfile
-    import uuid
-
     from big_data_validator_spark.streaming.stateful import (
         sessionize_with_state,
     )
 
-    stream = _events_stream(spark, sf_dir)
-    sessions = sessionize_with_state(
-        stream, gap_seconds=1800, watermark="36500 days"
-    )
-    sink_name = f"bdv_stateful_q_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        "event_count",
-        "violation_count",
+    def writer(d: _Drain):
+        sessions = sessionize_with_state(
+            _events_stream(spark, sf_dir, d.root),
+            gap_seconds=1800,
+            watermark="36500 days",
+        )
+        return _memory_sink(sessions, "append")
+
+    # the session's partition count, not the harness's 2: the
+    # applyInPandasWithState Arrow workers parallelize with partitions
+    # (sf0.1, local[4], 4 alternating pairs: median 7.5 s with 2 state
+    # partitions against 5.5 s with the session's 4)
+    return _bounded_drain(
+        spark,
+        "streaming_sessionize_stateful",
+        writer,
+        lambda d: spark.table(d.table).select(
+            "user_id",
+            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+            "event_count",
+            "violation_count",
+        ),
+        state_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
 
 
@@ -3036,37 +3120,28 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     expires at the watermark horizon instead of accumulating forever —
     the property that makes streaming dedup viable at 100 TB/day
     (``streaming/validate_stream.py:stream_dedup``)."""
-    import tempfile
-    import uuid
-
     from big_data_validator_spark.streaming.validate_stream import (
         StreamingRuleConfig,
         stream_dedup,
     )
 
-    stream = _events_stream(spark, sf_dir)
-    deduped = stream_dedup(
-        stream,
-        ["user_id", "event_type"],
-        StreamingRuleConfig(event_time_col="ts", watermark="1 hour"),
-    )
-    sink_name = f"bdv_sdedup_q_{uuid.uuid4().hex[:8]}"
-    with _drain_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
+    def writer(d: _Drain):
+        deduped = stream_dedup(
+            _events_stream(spark, sf_dir, d.root),
+            ["user_id", "event_type"],
+            StreamingRuleConfig(event_time_col="ts", watermark="1 hour"),
         )
-        q.awaitTermination()
-    return spark.table(sink_name).agg(
-        F.count(F.lit(1)).alias("dedup_rows"),
-        F.count_distinct("user_id").alias("distinct_users"),
-        F.count_distinct("event_type").alias("distinct_types"),
+        return _memory_sink(deduped, "append")
+
+    return _bounded_drain(
+        spark,
+        "streaming_dedup_events",
+        writer,
+        lambda d: spark.table(d.table).agg(
+            F.count(F.lit(1)).alias("dedup_rows"),
+            F.count_distinct("user_id").alias("distinct_users"),
+            F.count_distinct("event_type").alias("distinct_types"),
+        ),
     )
 
 
@@ -3654,51 +3729,44 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/validate_stream.py: stream_static_enrich).  The join is
     STATELESS — only the windowed agg keeps state — which is what makes
     dim enrichment safe at any stream volume."""
-    import tempfile
-    import uuid
-
     from big_data_validator_spark.streaming.validate_stream import (
         StreamingRuleConfig,
         stream_static_enrich,
     )
 
-    stream = _events_stream(spark, sf_dir)
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("segment")
     )
-    enriched = stream_static_enrich(
-        stream,
-        cust,
-        F.col("c_custkey") == F.col("user_id") + F.lit(1),
-        StreamingRuleConfig(
-            event_time_col="ts", watermark="1 hour", window="1 day"
-        ),
-        group_col="segment",
-        value_col="value",
-    )
-    sink_name = f"bdv_enrich_q_{uuid.uuid4().hex[:8]}"
-    # complete mode: the memory sink re-materializes every window each
-    # trigger, so the final (not-yet-watermark-finalized) day is included
-    # — the same drain contract streaming_windowed_violations pins.
-    with _drain_partitions(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
+
+    def writer(d: _Drain):
+        enriched = stream_static_enrich(
+            _events_stream(spark, sf_dir, d.root),
+            cust,
+            F.col("c_custkey") == F.col("user_id") + F.lit(1),
+            StreamingRuleConfig(
+                event_time_col="ts", watermark="1 hour", window="1 day"
+            ),
+            group_col="segment",
+            value_col="value",
         )
-        q.awaitTermination()
-    return spark.table(sink_name).select(
-        F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
+        # complete mode: the memory sink re-materializes every window
+        # each trigger, so the final (not-yet-watermark-finalized) day is
+        # included — the same drain contract streaming_windowed_violations
+        # pins.
+        return _memory_sink(enriched, "complete")
+
+    return _bounded_drain(
+        spark,
+        "streaming_static_enrich",
+        writer,
+        lambda d: spark.table(d.table).select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "segment",
+            "n",
+            "avg_value",
         ),
-        "segment",
-        "n",
-        "avg_value",
     )
 
 
@@ -3772,37 +3840,27 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     span (drain determinism under any batching); production uses a real
     lateness horizon and Spark evicts per-side state beyond watermark +
     attribution window — the property that bounds stream-stream state."""
-    import tempfile
-    import uuid
-
     from big_data_validator_spark.streaming.validate_stream import (
         stream_stream_attribution,
     )
 
-    clicks = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "click"
-    )
-    purchases = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    )
-    pairs = stream_stream_attribution(
-        clicks, purchases, "user_id", "ts", 1800, watermark="36500 days"
-    )
-    sink_name = f"bdv_attrib_q_{uuid.uuid4().hex[:8]}"
-    with _drain_partitions(spark):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_")
+    def writer(d: _Drain):
+        def side(etype: str) -> DataFrame:
+            return _events_stream(spark, sf_dir, d.root).filter(
+                F.col("event_type") == etype
             )
-            .trigger(availableNow=True)
-            .start()
+
+        pairs = stream_stream_attribution(
+            side("click"), side("purchase"), "user_id", "ts", 1800,
+            watermark="36500 days",
         )
-        q.awaitTermination()
-    return (
-        spark.table(sink_name)
+        return _memory_sink(pairs, "append")
+
+    return _bounded_drain(
+        spark,
+        "streaming_attribution_join",
+        writer,
+        lambda d: spark.table(d.table)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -3810,7 +3868,7 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.min("click_ts"), "yyyy-MM-dd HH:mm:ss").alias(
                 "first_click"
             ),
-        )
+        ),
     )
 
 
@@ -4711,27 +4769,25 @@ def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-written across micro-batches.  The replay-idempotence
     property itself is pinned in tests/test_streaming_exactly_once.py
     by re-invoking a committed batch id."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         idempotent_batch_sink,
     )
 
-    stream = _events_stream(spark, sf_dir).filter(F.col("value") > 50)
-    out_dir = tempfile.mkdtemp(prefix="bdv_eo_sink_")
-    q = idempotent_batch_sink(
-        stream,
-        out_dir,
-        tempfile.mkdtemp(prefix="bdv_eo_ckpt_"),
-        available_now=True,
-    )
-    q.awaitTermination()
-    back = spark.read.option("recursiveFileLookup", "false").parquet(
-        out_dir
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
+    return _bounded_drain(
+        spark,
+        "streaming_exactly_once_sink",
+        lambda d: idempotent_batch_sink(
+            _events_stream(spark, sf_dir, d.root).filter(F.col("value") > 50),
+            f"{d.root}/sink",
+            d.checkpoint,
+        ),
+        lambda d: spark.read.option("recursiveFileLookup", "false")
+        .parquet(f"{d.root}/sink")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        ),
     )
 
 
@@ -5427,37 +5483,20 @@ def _mv_total_micro(col: str = "total"):
     return (guarded * F.lit(1000000).cast("decimal(7,0)")).cast("long")
 
 
-_MV_SRC_CACHE: dict[tuple, str] = {}
-
-
 def _mv_delta_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per session+sf) the 3-batch CDC delta feed for the
-    streaming view maintenance drain: the signed delta rows between the
-    agg_incremental_totals snapshots, split by ``o_orderkey % 3`` into
-    mtime-ordered file groups."""
-    import os
-    import tempfile
-
+    """The 3-batch CDC delta feed for the streaming view maintenance
+    drain: the signed delta rows between the agg_incremental_totals
+    snapshots, split by ``o_orderkey % 3`` into staged runs."""
     from big_data_validator_spark.operators.cdc import changeset_delta_rows
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MV_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
-    current, incoming = _mv_snapshots(spark, sf_dir)
-    deltas = changeset_delta_rows(
-        current, incoming, ["o_orderkey"], ["o_orderpriority", "total"]
-    )
-    root = tempfile.mkdtemp(prefix="bdv_mv_src_")
-    for r in range(3):
-        dst = f"{root}/run{r}"
-        deltas.filter(F.col("o_orderkey") % 3 == r).coalesce(
-            1
-        ).write.parquet(dst)
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _MV_SRC_CACHE[key] = root
-    return root
+    def runs() -> list:
+        current, incoming = _mv_snapshots(spark, sf_dir)
+        deltas = changeset_delta_rows(
+            current, incoming, ["o_orderkey"], ["o_orderpriority", "total"]
+        )
+        return [deltas.filter(F.col("o_orderkey") % 3 == r) for r in range(3)]
+
+    return _staged_runs(spark, sf_dir, "mv", runs)
 
 
 def _mv_snapshots(spark: SparkSession, sf_dir: str):
@@ -5524,8 +5563,6 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     state of the table.  Ships micro-unit BIGINT like the batch twin
     (wide-decimal outputs break driver-hash canonicalization; the
     DECIMAL accumulation stays internal)."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         stream_apply_deltas_to_totals,
     )
@@ -5536,30 +5573,23 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("total").alias("total"),
     )
     src = _mv_delta_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    state = tempfile.mkdtemp(prefix="bdv_mv_state_")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_apply_deltas_to_totals(
-            stream,
+    return _bounded_drain(
+        spark,
+        "streaming_incremental_mv",
+        lambda d: stream_apply_deltas_to_totals(
+            _ordered_stream(spark, src),
             summary,
             group_cols=["o_orderpriority"],
             sum_cols=["total"],
-            state_path=state,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
+            state_path=f"{d.root}/state",
+            checkpoint_path=d.checkpoint,
             count_col="n_orders",
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(f"{state}/batch_id=2")
-    return final.select(
-        "o_orderpriority",
-        "n_orders",
-        _mv_total_micro().alias("total_micro"),
+        ),
+        lambda d: spark.read.parquet(f"{d.root}/state/batch_id=2").select(
+            "o_orderpriority",
+            "n_orders",
+            _mv_total_micro().alias("total_micro"),
+        ),
     )
 
 
@@ -7118,48 +7148,31 @@ def streaming_attribution_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     is INPUT data, not operator work — it is minted once per
     (session, sf_dir) and reused, exactly as production sources
     pre-exist their consumers; the streaming query itself (state
-    stores, join, sink) runs fully every call.  State partitions are
-    pinned to 8 for the drain: a 4-batch bounded replay gains nothing
-    from 32-way state-store checkpointing (a real deployment sizes
-    this to throughput)."""
-    import tempfile
-    import uuid
-
+    stores, join, sink) runs fully every call.  The drain uses the
+    harness's ``availableNow`` trigger like every other entry:
+    ``maxFilesPerTrigger`` still feeds one file per side per
+    micro-batch, and the answer equals the oracle's at sf0.001 and
+    sf0.01."""
     from big_data_validator_spark.streaming.validate_stream import (
         stream_stream_attribution_left,
     )
 
     cdir, pdir = _lo_attrib_sources(spark, sf_dir)
 
-    def src(path: str) -> DataFrame:
-        schema = spark.read.parquet(f"{path}/real").schema
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{path}/*")
-        )
-
-    with _drain_partitions(spark):
+    def writer(d: _Drain):
         pairs = stream_stream_attribution_left(
-            src(pdir), src(cdir), "user_id", "ts", 1800,
+            _ordered_stream(spark, pdir, "real"),
+            _ordered_stream(spark, cdir, "real"),
+            "user_id", "ts", 1800,
             watermark="1 second",
         )
-        sink_name = f"bdv_lo_q_{uuid.uuid4().hex[:8]}"
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="bdv_ckpt_")
-            )
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    return (
-        spark.table(sink_name)
+        return _memory_sink(pairs, "append")
+
+    return _bounded_drain(
+        spark,
+        "streaming_attribution_left",
+        writer,
+        lambda d: spark.table(d.table)
         .filter(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(
@@ -7175,40 +7188,22 @@ def streaming_attribution_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.min("purchase_ts"), "yyyy-MM-dd HH:mm:ss").alias(
                 "first_purchase"
             ),
-        )
+        ),
     )
 
 
-_SM_SRC_CACHE: dict[tuple, str] = {}
-
-
 def _metrics_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per session+sf) the 4-run streaming source for the
-    metrics-repository drain: one parquet file group per micro-batch,
-    run ``r`` holding events with ``least(user_id % 12, 3) == r`` —
-    three ~equal small runs then a ~9× volume spike the trend rule must
-    flag.  Explicit mtimes AND lexicographic names agree on the order,
-    so ``maxFilesPerTrigger=1`` maps batch_id == run_id
-    deterministically (the same device as :func:`_lo_attrib_sources`)."""
-    import os
-    import tempfile
+    """The 4-run streaming source for the metrics-repository drain: run
+    ``r`` holds events with ``least(user_id % 12, 3) == r`` — three
+    ~equal small runs then a ~9× volume spike the trend rule must
+    flag."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SM_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
+    def runs() -> list:
+        ev = _t(spark, sf_dir, "events").select("user_id", "event_type")
+        run = F.least(F.col("user_id") % 12, F.lit(3))
+        return [ev.filter(run == r) for r in range(4)]
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type")
-    root = tempfile.mkdtemp(prefix="bdv_metrics_src_")
-    for r in range(4):
-        dst = f"{root}/run{r}"
-        ev.filter(
-            F.least(F.col("user_id") % 12, F.lit(3)) == r
-        ).coalesce(1).write.parquet(dst)
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _SM_SRC_CACHE[key] = root
-    return root
+    return _staged_runs(spark, sf_dir, "metrics", runs)
 
 
 def _stream_metrics_oracle_sql() -> str:
@@ -7367,8 +7362,6 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compaction_manifest(frags, target_rows=15_000)
 
 
-_DRIFT_SRC_CACHE: dict[tuple, str] = {}
-
 #: Run assignment for the streaming drift monitor: two uniform samples
 #: (calm baseline traffic), then the remaining rows split BY VALUE —
 #: run 2 high-only, run 3 low-only — the regime shift the monitor must
@@ -7381,32 +7374,15 @@ _DRIFT_RUN_CASE = (
 
 
 def _drift_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per session+sf) the 4-run streaming source for the
-    drift drain: runs 0/1 are uniform user-hash samples (PSI ≈ 0), runs
-    2/3 carry only the high / only the low half of the value range (PSI
-    large) — same mtime+name ordering device as the other streaming
-    sources, so ``maxFilesPerTrigger=1`` maps batch_id == run_id."""
-    import os
-    import tempfile
+    """The 4-run streaming source for the drift drains: runs 0/1 are
+    uniform user-hash samples (PSI ≈ 0), runs 2/3 carry only the high /
+    only the low half of the value range (PSI large)."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DRIFT_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
+    def runs() -> list:
+        ev = _t(spark, sf_dir, "events").select("user_id", "value")
+        return [ev.filter(F.expr(_DRIFT_RUN_CASE) == r) for r in range(4)]
 
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "value", F.expr(_DRIFT_RUN_CASE).alias("_run")
-    )
-    root = tempfile.mkdtemp(prefix="bdv_drift_src_")
-    for r in range(4):
-        dst = f"{root}/run{r}"
-        ev.filter(F.col("_run") == r).drop("_run").coalesce(1).write.parquet(
-            dst
-        )
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _DRIFT_SRC_CACHE[key] = root
-    return root
+    return _staged_runs(spark, sf_dir, "drift", runs)
 
 
 @query(
@@ -7463,40 +7439,31 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (their psi_terms are large).  The baseline histogram folds into the
     per-batch plan as literals (bounded driver work: one row per bin);
     each micro-batch is one pass."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         read_metrics_repository,
         stream_drift_psi,
     )
 
     src = _drift_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_drift_repo_")
     baseline = _t(spark, sf_dir, "events").select("value")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_drift_psi(
-            stream,
+    return _bounded_drain(
+        spark,
+        "streaming_drift_psi",
+        lambda d: stream_drift_psi(
+            _ordered_stream(spark, src),
             baseline,
             value_col="value",
             bin_edges=[25.0, 50.0, 75.0, 100.0],
-            repo_path=repo,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
-        )
-        q.awaitTermination()
-    hist = read_metrics_repository(spark, repo)
-    return hist.select(
-        "run_id",
-        "bin_id",
-        F.round("p_base", 6).alias("p_base"),
-        F.round("p_run", 6).alias("p_run"),
-        F.round("psi_term", 6).alias("psi_term"),
+            repo_path=f"{d.root}/repo",
+            checkpoint_path=d.checkpoint,
+        ),
+        lambda d: read_metrics_repository(spark, f"{d.root}/repo").select(
+            "run_id",
+            "bin_id",
+            F.round("p_base", 6).alias("p_base"),
+            F.round("p_run", 6).alias("p_run"),
+            F.round("psi_term", 6).alias("psi_term"),
+        ),
     )
 
 
@@ -7515,8 +7482,6 @@ def streaming_metrics_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact.  Scale: profiles aggregate map-side inside each
     micro-batch; the repository and the trend window hold one row per
     (run, column, metric) — unbounded streams stay bounded state."""
-    import tempfile
-
     from big_data_validator_spark.operators.profile import (
         profile_trend_anomalies,
     )
@@ -7526,31 +7491,26 @@ def streaming_metrics_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _metrics_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_metrics_repo_")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_metrics_repository(
-            stream,
-            repo_path=repo,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
-            columns=["user_id", "event_type"],
-        )
-        q.awaitTermination()
     keep = [
         "row_count", "null_count", "distinct_count",
         "min", "max", "min_length", "max_length",
     ]
-    hist = read_metrics_repository(spark, repo)
-    return profile_trend_anomalies(
-        hist.filter(F.col("metric").isin(keep)),
-        trailing=3,
-        z_threshold=3.0,
+    return _bounded_drain(
+        spark,
+        "streaming_metrics_trend",
+        lambda d: stream_metrics_repository(
+            _ordered_stream(spark, src),
+            repo_path=f"{d.root}/repo",
+            checkpoint_path=d.checkpoint,
+            columns=["user_id", "event_type"],
+        ),
+        lambda d: profile_trend_anomalies(
+            read_metrics_repository(spark, f"{d.root}/repo").filter(
+                F.col("metric").isin(keep)
+            ),
+            trailing=3,
+            z_threshold=3.0,
+        ),
     )
 
 
@@ -8658,29 +8618,12 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCD2_SRC_CACHE: dict[tuple, str] = {}
-
-
 def _scd2_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (once per session+sf) the three customer snapshot versions
-    as a 3-run streaming source — one parquet file per version, mtime
-    ordered, so ``maxFilesPerTrigger=1`` delivers exactly one snapshot
-    version per micro-batch in order."""
-    import os
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCD2_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
-    root = tempfile.mkdtemp(prefix="bdv_scd2_src_")
-    for r, frame in enumerate(_customer_scd2_versions(spark, sf_dir)):
-        dst = f"{root}/run{r}"
-        frame.coalesce(1).write.parquet(dst)
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _SCD2_SRC_CACHE[key] = root
-    return root
+    """The three customer snapshot versions as a 3-run streaming source:
+    exactly one snapshot version per micro-batch, in order."""
+    return _staged_runs(
+        spark, sf_dir, "scd2", lambda: list(_customer_scd2_versions(spark, sf_dir))
+    )
 
 
 @query("streaming_scd2_history", oracle=_SCD2_CUSTOMER_ORACLE)
@@ -8697,40 +8640,33 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin's oracle — the strongest possible check that
     incremental == rebuild across the batch/streaming boundary (the
     streaming_incremental_mv device, now for dimension history)."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         _committed_batch_dirs,
         stream_scd2_history,
     )
 
     src = _scd2_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    state = tempfile.mkdtemp(prefix="bdv_scd2_state_")
     empty_history = spark.createDataFrame(
         [],
         "c_custkey long, c_mktsegment string, acct_cents long, "
         "valid_from int, valid_to int, is_current boolean",
     )
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_scd2_history(
-            stream,
+    return _bounded_drain(
+        spark,
+        "streaming_scd2_history",
+        lambda d: stream_scd2_history(
+            _ordered_stream(spark, src),
             key_cols=["c_custkey"],
             tracked_cols=["c_mktsegment", "acct_cents"],
             version_col="v",
             initial_history=empty_history,
-            state_path=state,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(_committed_batch_dirs(spark, state)[-1])
-    return final.orderBy("c_custkey", "valid_from")
+            state_path=f"{d.root}/state",
+            checkpoint_path=d.checkpoint,
+        ),
+        lambda d: spark.read.parquet(
+            _committed_batch_dirs(spark, f"{d.root}/state")[-1]
+        ).orderBy("c_custkey", "valid_from"),
+    )
 
 
 def _label_propagation_oracle(iters: int = 3) -> str:
@@ -9042,8 +8978,6 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact percentile over the same drained rows plus the ±2.5% rank
     verdict — the agg_kll_mergeable hash discipline, now across the
     batch/streaming boundary."""
-    import tempfile
-
     from big_data_validator_spark.operators.sketches import (
         kll_rollup_quantiles,
         kll_verify_quantiles,
@@ -9054,78 +8988,59 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _drift_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_kll_repo_")
     cents = F.floor(F.col("value") * 100).cast("long").alias("c")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
+
+    def read_back(d: _Drain) -> DataFrame:
+        sketches = read_metrics_repository(spark, f"{d.root}/repo")
+        est = kll_rollup_quantiles(sketches, [50, 90, 99], k=200)
+        drained = (
+            spark.read.parquet(f"{src}/*")
             .filter(F.col("value").isNotNull())
             .select(cents)
         )
-        q = stream_kll_sketches(
-            stream,
-            value_col="c",
-            repo_path=repo,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
-            k=200,
+        res = kll_verify_quantiles(
+            est, drained, "c", tol_ppm=25_000, block_width=1_000_000
         )
-        q.awaitTermination()
-    sketches = read_metrics_repository(spark, repo)
-    est = kll_rollup_quantiles(sketches, [50, 90, 99], k=200)
-    drained = (
-        spark.read.parquet(f"{src}/*")
-        .filter(F.col("value").isNotNull())
-        .select(cents)
-    )
-    res = kll_verify_quantiles(
-        est, drained, "c", tol_ppm=25_000, block_width=1_000_000
-    )
-    out = res.orderBy("quantile_pct")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
+        out = res.orderBy("quantile_pct")
+        out._bdv_pinned = D.pinned_caches(res)
+        return out
 
-
-_KLL_GRP_SRC_CACHE: dict[tuple, str] = {}
+    return _bounded_drain(
+        spark,
+        "streaming_kll_quantiles",
+        lambda d: stream_kll_sketches(
+            _ordered_stream(spark, src)
+            .filter(F.col("value").isNotNull())
+            .select(cents),
+            value_col="c",
+            repo_path=f"{d.root}/repo",
+            checkpoint_path=d.checkpoint,
+            k=200,
+        ),
+        read_back,
+    )
 
 
 def _kll_group_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (once per session+sf) a 3-run streaming source for the
-    per-group sketch drain: events split by ``user_id % 3`` into runs
-    (a full partition — the union of runs is the whole table, so the
-    oracle is plain SQL over ``events``), keeping the event_type group
-    key and floor-quantized cents.  Same mtime+name ordering device as
-    the other streaming sources: ``maxFilesPerTrigger=1`` maps
-    batch_id == run_id."""
-    import os
-    import tempfile
+    """A 3-run streaming source for the per-group sketch drain: events
+    split by ``user_id % 3`` into runs (a full partition — the union of
+    runs is the whole table, so the oracle is plain SQL over
+    ``events``), keeping the event_type group key and floor-quantized
+    cents."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KLL_GRP_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            (F.col("user_id") % 3).alias("_run"),
+    def runs() -> list:
+        ev = (
+            _t(spark, sf_dir, "events")
+            .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
+            .select(
+                "event_type",
+                F.floor(F.col("value") * 100).cast("long").alias("c"),
+                (F.col("user_id") % 3).alias("_run"),
+            )
         )
-    )
-    root = tempfile.mkdtemp(prefix="bdv_kll_grp_src_")
-    for r in range(3):
-        dst = f"{root}/run{r}"
-        ev.filter(F.col("_run") == r).drop("_run").coalesce(1).write.parquet(
-            dst
-        )
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _KLL_GRP_SRC_CACHE[key] = root
-    return root
+        return [ev.filter(F.col("_run") == r).drop("_run") for r in range(3)]
+
+    return _staged_runs(spark, sf_dir, "kll_group", runs)
 
 
 @query(
@@ -9160,8 +9075,6 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values are floor-quantized cents (floor of a double product is
     engine-portable).  The runs partition events by user hash, so the
     oracle is plain SQL over the whole table."""
-    import tempfile
-
     from big_data_validator_spark.operators.sketches import (
         kll_group_rollup_quantiles,
         kll_group_verify_quantiles,
@@ -9172,39 +9085,37 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _kll_group_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_kll_grp_repo_")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_kll_group_sketches(
-            stream,
-            value_col="c",
-            group_cols=["event_type"],
-            repo_path=repo,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
+
+    def read_back(d: _Drain) -> DataFrame:
+        sketches = read_metrics_repository(spark, f"{d.root}/repo")
+        est = kll_group_rollup_quantiles(
+            sketches.select("event_type", "sketch", "n_rows"),
+            ["event_type"],
+            [50, 90],
             k=200,
         )
-        q.awaitTermination()
-    sketches = read_metrics_repository(spark, repo)
-    est = kll_group_rollup_quantiles(
-        sketches.select("event_type", "sketch", "n_rows"),
-        ["event_type"],
-        [50, 90],
-        k=200,
+        drained = spark.read.parquet(f"{src}/*")
+        res = kll_group_verify_quantiles(
+            est, drained, "c", ["event_type"], tol_ppm=25_000,
+            block_width=1_000_000,
+        )
+        out = res.orderBy("event_type", "quantile_pct")
+        out._bdv_pinned = D.pinned_caches(res)
+        return out
+
+    return _bounded_drain(
+        spark,
+        "streaming_kll_by_group",
+        lambda d: stream_kll_group_sketches(
+            _ordered_stream(spark, src),
+            value_col="c",
+            group_cols=["event_type"],
+            repo_path=f"{d.root}/repo",
+            checkpoint_path=d.checkpoint,
+            k=200,
+        ),
+        read_back,
     )
-    drained = spark.read.parquet(f"{src}/*")
-    res = kll_group_verify_quantiles(
-        est, drained, "c", ["event_type"], tol_ppm=25_000,
-        block_width=1_000_000,
-    )
-    out = res.orderBy("event_type", "quantile_pct")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
 
 
 def _unigram_viterbi_ctes(
@@ -10641,50 +10552,32 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi_collocations(docs, min_count=10, top_k=20)
 
 
-_MARKOV_SRC_CACHE: dict = {}
-
-
 def _markov_stream_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per session+sf) the 4-run streaming source for the
-    Markov-drift drain: runs 0/1 are untouched user cohorts (calm,
-    TV ≈ 0.03), run 2 remaps click→error, run 3 drops purchases — the
-    two transition-level regime shifts a behavioral monitor exists to
-    catch.  Same mtime+name ordering device as _drift_stream_source so
-    ``maxFilesPerTrigger=1`` maps batch_id == run_id."""
-    import os
-    import tempfile
+    """The 4-run streaming source for the Markov-drift drain: runs 0/1
+    are untouched user cohorts (calm, TV ≈ 0.03), run 2 remaps
+    click→error, run 3 drops purchases — the two transition-level
+    regime shifts a behavioral monitor exists to catch."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MARKOV_SRC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
+    def runs() -> list:
+        ev = _t(spark, sf_dir, "events").select(
+            "user_id",
+            "ts",
+            "event_id",
+            "event_type",
+            (F.col("user_id") % 4).alias("_run"),
+        )
+        staged = ev.filter(
+            ~((F.col("_run") == 3) & (F.col("event_type") == "purchase"))
+        ).withColumn(
+            "event_type",
+            F.when(
+                (F.col("_run") == 2) & (F.col("event_type") == "click"),
+                F.lit("error"),
+            ).otherwise(F.col("event_type")),
+        )
+        return [staged.filter(F.col("_run") == r).drop("_run") for r in range(4)]
 
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        (F.col("user_id") % 4).alias("_run"),
-    )
-    staged = ev.filter(
-        ~((F.col("_run") == 3) & (F.col("event_type") == "purchase"))
-    ).withColumn(
-        "event_type",
-        F.when(
-            (F.col("_run") == 2) & (F.col("event_type") == "click"),
-            F.lit("error"),
-        ).otherwise(F.col("event_type")),
-    )
-    root = tempfile.mkdtemp(prefix="bdv_markov_src_")
-    for r in range(4):
-        dst = f"{root}/run{r}"
-        staged.filter(F.col("_run") == r).drop("_run").coalesce(
-            1
-        ).write.parquet(dst)
-        for f in os.listdir(dst):
-            os.utime(f"{dst}/{f}", (1_000_000 + r, 1_000_000 + r))
-    _MARKOV_SRC_CACHE[key] = root
-    return root
+    return _staged_runs(spark, sf_dir, "markov", runs)
 
 
 @query(
@@ -10746,41 +10639,29 @@ def streaming_markov_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.38/0.36).  The baseline matrix folds into each batch plan as a
     ≤|types|²-row literal grid (the stream_drift_psi histogram device);
     each batch is one user-key window pass + one (src,dst) aggregate."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         read_metrics_repository,
         stream_markov_drift,
     )
 
     src = _markov_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_markov_repo_")
     baseline = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_markov_drift(
-            stream,
-            baseline,
-            repo,
-            tempfile.mkdtemp(prefix="bdv_ckpt_"),
-        )
-        q.awaitTermination()
-    rep = read_metrics_repository(spark, repo)
-    return rep.select(
-        "run_id",
-        "src",
-        "dst",
-        F.round("p_base", 6).alias("p_base"),
-        F.round("p_run", 6).alias("p_run"),
-        F.round("tv_term", 6).alias("tv_term"),
+    return _bounded_drain(
+        spark,
+        "streaming_markov_drift",
+        lambda d: stream_markov_drift(
+            _ordered_stream(spark, src), baseline, f"{d.root}/repo", d.checkpoint
+        ),
+        lambda d: read_metrics_repository(spark, f"{d.root}/repo").select(
+            "run_id",
+            "src",
+            "dst",
+            F.round("p_base", 6).alias("p_base"),
+            F.round("p_run", 6).alias("p_run"),
+            F.round("tv_term", 6).alias("tv_term"),
+        ),
     )
 
 
@@ -12763,35 +12644,27 @@ def streaming_mannwhitney_drift(
     no driver state, and the statistic is mwu_from_value_counts, the
     SAME math as the batch mannwhitney_u, which is what lets DuckDB
     replay all four cumulative prefixes as one windowed query."""
-    import tempfile
-
     from big_data_validator_spark.streaming.validate_stream import (
         read_metrics_repository,
         stream_mannwhitney_drift,
     )
 
     src = _drift_stream_source(spark, sf_dir)
-    schema = spark.read.parquet(f"{src}/run0").schema
-    repo = tempfile.mkdtemp(prefix="bdv_mwu_repo_")
     reference = _t(spark, sf_dir, "events").select("value")
-    with _drain_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{src}/*")
-        )
-        q = stream_mannwhitney_drift(
-            stream,
+    return _bounded_drain(
+        spark,
+        "streaming_mannwhitney_drift",
+        lambda d: stream_mannwhitney_drift(
+            _ordered_stream(spark, src),
             reference,
             value_col="value",
-            repo_path=repo,
-            checkpoint_path=tempfile.mkdtemp(prefix="bdv_ckpt_"),
+            repo_path=f"{d.root}/repo",
+            checkpoint_path=d.checkpoint,
             value_scale=100,
-        )
-        q.awaitTermination()
-    return read_metrics_repository(spark, f"{repo}/stats").select(
-        "run_id", "n_a", "n_b", "u_a_x2", "u_b_x2", "z"
+        ),
+        lambda d: read_metrics_repository(spark, f"{d.root}/repo/stats").select(
+            "run_id", "n_a", "n_b", "u_a_x2", "u_b_x2", "z"
+        ),
     )
 
 

@@ -3,14 +3,12 @@ Streaming."""
 
 from big_data_validator_spark.streaming.validate_stream import (
     StreamingRuleConfig,
-    stream_rule_metrics,
     stream_violation_sink,
     windowed_violation_counts,
 )
 
 __all__ = [
     "StreamingRuleConfig",
-    "stream_rule_metrics",
     "stream_violation_sink",
     "windowed_violation_counts",
 ]

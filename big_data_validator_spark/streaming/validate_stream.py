@@ -16,16 +16,20 @@ Design:
 - **At 100 TB/day**: windowed counts shuffle only (window, flag) partial
   counts; the violation sink streams full rows append-only, partitioned by
   window date so triage prunes.
+- **The caller picks the trigger**: every sink builder returns an
+  unstarted ``DataStreamWriter`` with its checkpoint (the exactly-once
+  state) already set.  An unbounded consumer calls ``.start()``; a
+  bounded replay sets the ``availableNow`` trigger first.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
 
 @dataclass
@@ -76,8 +80,7 @@ def stream_violation_sink(
     output_path: str,
     checkpoint_path: str,
     config: StreamingRuleConfig = StreamingRuleConfig(),
-    available_now: bool = False,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """Continuously append rows violating ANY rule to a partitioned parquet
     sink (the streaming analogue of the batch failure sink,
     ``big_data_validator.py:81-95``), tagged with the violated rule names.
@@ -99,18 +102,13 @@ def stream_violation_sink(
             "event_date", F.to_date(F.col(config.event_time_col))
         )
     )
-    writer = (
+    return (
         out.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .partitionBy("event_date")
         .outputMode("append")
     )
-    if available_now:
-        # drain-everything-then-stop: bounded replays and tests get the
-        # deterministic batch-equal sink without changing the plan
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -135,26 +133,6 @@ def stream_dedup(
     return stream.withWatermark(
         config.event_time_col, config.watermark
     ).dropDuplicatesWithinWatermark(key_cols)
-
-
-def stream_rule_metrics(
-    stream: DataFrame,
-    rules: dict[str, Column],
-    checkpoint_path: str,
-    config: StreamingRuleConfig = StreamingRuleConfig(),
-    query_name: str = "bdv_stream_metrics",
-) -> StreamingQuery:
-    """Windowed violation counts to an in-memory sink (dashboards/tests).
-    ``update`` mode emits refinements as late data arrives inside the
-    watermark."""
-    counts = windowed_violation_counts(stream, rules, config)
-    return (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("complete")
-        .start()
-    )
 
 
 def stream_static_enrich(
@@ -293,8 +271,7 @@ def idempotent_batch_sink(
     stream: DataFrame,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = False,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """EXACTLY-ONCE parquet sink via ``foreachBatch`` + batch-id
     directory commits — the pattern for sinks Spark's own file-sink
     transaction log can't cover (multiple destinations, JDBC, object
@@ -334,14 +311,11 @@ def idempotent_batch_sink(
             return
         batch_df.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_metrics_repository(
@@ -350,8 +324,7 @@ def stream_metrics_repository(
     checkpoint_path: str,
     columns=None,
     run_col: str = "run_id",
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING metrics repository (VERDICT r6 item 2): every
     micro-batch is profiled with the same single-pass
     :func:`~big_data_validator_spark.operators.profile.profile_table`
@@ -396,14 +369,11 @@ def stream_metrics_repository(
             "value",
         ).write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_metrics_repository(spark, repo_path: str) -> DataFrame:
@@ -464,8 +434,7 @@ def stream_drift_psi(
     checkpoint_path: str,
     epsilon: float = 1e-6,
     run_col: str = "run_id",
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING drift monitor: every micro-batch's ``value_col``
     distribution is PSI-scored against a STATIC baseline (the training
     distribution) over EXPLICIT bin edges, and the per-bin terms append
@@ -548,14 +517,11 @@ def stream_drift_psi(
         )
         out.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _resolve_prior_state(spark, root: str, batch_id: int, initial_summary):
@@ -588,8 +554,7 @@ def stream_apply_deltas_to_totals(
     state_path: str,
     checkpoint_path: str,
     count_col: str = "n_rows",
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING materialized-view maintenance: a CDC feed of SIGNED
     delta rows (:func:`~big_data_validator_spark.operators.cdc
     .changeset_delta_rows` shape — ``sign`` ±1 plus group/value
@@ -631,14 +596,11 @@ def stream_apply_deltas_to_totals(
         )
         nxt.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         delta_stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_kll_sketches(
@@ -647,8 +609,7 @@ def stream_kll_sketches(
     repo_path: str,
     checkpoint_path: str,
     k: int = 200,
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING mergeable quantile sketches: every micro-batch reduces
     to ONE persisted KLL sketch row (``sketch`` json + exact
     ``n_rows``) appended under the exactly-once batch-id ``_SUCCESS``
@@ -692,14 +653,11 @@ def stream_kll_sketches(
         )
         merged.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_kll_group_sketches(
@@ -709,8 +667,7 @@ def stream_kll_group_sketches(
     repo_path: str,
     checkpoint_path: str,
     k: int = 200,
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """Per-GROUP streaming mergeable quantile sketches: every
     micro-batch reduces to ONE persisted KLL sketch row PER GROUP
     (``group…, sketch, n_rows``) under the same exactly-once batch-id
@@ -759,14 +716,11 @@ def stream_kll_group_sketches(
             "n_rows",
         ).write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_scd2_history(
@@ -777,8 +731,7 @@ def stream_scd2_history(
     initial_history: DataFrame,
     state_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING SCD Type-2 maintenance: a stream of dimension snapshot
     versions advances the history table micro-batch by micro-batch —
     each batch reads the LATEST COMMITTED prior history
@@ -824,14 +777,11 @@ def stream_scd2_history(
             hist = scd2_apply_snapshot(hist, snap, kcols, tcols, int(v))
         hist.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         snapshot_stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_markov_drift(
@@ -844,8 +794,7 @@ def stream_markov_drift(
     type_col: str = "event_type",
     tiebreak_col: str = "event_id",
     run_col: str = "run_id",
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING behavioral-drift monitor: every micro-batch's
     first-order event-transition matrix is compared cell-by-cell
     against a STATIC baseline (the healthy traffic's matrix), emitting
@@ -933,14 +882,11 @@ def stream_markov_drift(
         )
         out.write.mode("overwrite").parquet(dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_mannwhitney_drift(
@@ -952,8 +898,7 @@ def stream_mannwhitney_drift(
     value_scale: int = 100,
     bin_width: int = 1 << 20,
     run_col: str = "run_id",
-    available_now: bool = True,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """STREAMING Mann–Whitney drift monitor: after every micro-batch,
     the CUMULATIVE stream-so-far is rank-tested against a static
     reference with the exact doubled-midrank U — the rank-based member
@@ -1072,11 +1017,8 @@ def stream_mannwhitney_drift(
         )
         out.write.mode("overwrite").parquet(stats_dst)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -341,7 +341,7 @@ def test_stream_kll_sketches_exactly_once_and_merge(spark, tmp_path):
         )
         q = stream_kll_sketches(
             stream, "c", repo, str(tmp_path / ckpt), k=100
-        )
+        ).trigger(availableNow=True).start()
         q.awaitTermination()
 
     drain("ckpt1")
@@ -414,7 +414,7 @@ def test_stream_kll_group_sketches_per_group_rows_and_replay(spark, tmp_path):
         )
         q = stream_kll_group_sketches(
             stream, "c", ["seg"], repo, str(tmp_path / ckpt), k=100
-        )
+        ).trigger(availableNow=True).start()
         q.awaitTermination()
 
     drain("ckpt1")

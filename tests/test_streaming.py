@@ -175,7 +175,7 @@ def test_stream_violation_sink_partitioned(spark, event_data, tmp_path):
         output_path=out,
         checkpoint_path=str(tmp_path / "ckpt2"),
         config=StreamingRuleConfig(watermark="1 hour", window="10 minutes"),
-    )
+    ).start()
     _wait(q)
     sunk = spark.read.parquet(out)
     expected = batch_df.filter(
@@ -365,7 +365,7 @@ def test_stream_metrics_repository_matches_batch_and_replay(spark, tmp_path):
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt"),
         columns=["k", "name"],
-    )
+    ).trigger(availableNow=True).start()
     q.awaitTermination()
 
     got = read_metrics_repository(spark, repo)
@@ -416,7 +416,7 @@ def test_stream_metrics_repository_matches_batch_and_replay(spark, tmp_path):
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt2"),  # fresh checkpoint → full replay
         columns=["k", "name"],
-    )
+    ).trigger(availableNow=True).start()
     q2.awaitTermination()
     g2 = {key(r): r["value"] for r in read_metrics_repository(spark, repo).collect()}
     assert g2 == w  # torn batch healed, committed batches untouched
@@ -458,7 +458,7 @@ def test_stream_drift_psi_flags_regime_shift(spark, tmp_path):
         bin_edges=[50.0],
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt"),
-    )
+    ).trigger(availableNow=True).start()
     q.awaitTermination()
     hist = read_metrics_repository(spark, repo)
     psi = {
@@ -487,7 +487,7 @@ def test_stream_drift_psi_flags_regime_shift(spark, tmp_path):
         bin_edges=[50.0],
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt2"),
-    )
+    ).trigger(availableNow=True).start()
     q2.awaitTermination()
     after = sorted(map(tuple, read_metrics_repository(spark, repo).collect()))
     assert after == before
@@ -537,7 +537,7 @@ def test_stream_apply_deltas_chained_state_and_replay(spark, tmp_path):
         state_path=state,
         checkpoint_path=str(tmp_path / "ckpt"),
         count_col="n",
-    )
+    ).trigger(availableNow=True).start()
     q.awaitTermination()
 
     def view(batch_id):
@@ -563,7 +563,7 @@ def test_stream_apply_deltas_chained_state_and_replay(spark, tmp_path):
         state_path=state,
         checkpoint_path=str(tmp_path / "ckpt2"),
         count_col="n",
-    )
+    ).trigger(availableNow=True).start()
     q2.awaitTermination()
     assert view(2) == final
 
@@ -674,7 +674,7 @@ def test_stream_markov_drift_flags_transition_shift(spark, tmp_path):
         baseline=baseline,
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt"),
-    )
+    ).trigger(availableNow=True).start()
     q.awaitTermination()
     hist = read_metrics_repository(spark, repo)
     tv = {
@@ -701,7 +701,7 @@ def test_stream_markov_drift_flags_transition_shift(spark, tmp_path):
         baseline=baseline,
         repo_path=repo,
         checkpoint_path=str(tmp_path / "ckpt2"),
-    )
+    ).trigger(availableNow=True).start()
     q2.awaitTermination()
     after = sorted(
         map(tuple, read_metrics_repository(spark, repo).collect())
@@ -771,7 +771,7 @@ def test_stream_mannwhitney_drift_matches_batch_on_prefixes(spark, tmp_path):
             repo_path=repo,
             checkpoint_path=str(tmp_path / ckpt),
             value_scale=100,
-        )
+        ).trigger(availableNow=True).start()
 
     launch("ckpt").awaitTermination()
     got = {
@@ -812,3 +812,41 @@ def test_stream_mannwhitney_drift_matches_batch_on_prefixes(spark, tmp_path):
     after = sorted(map(tuple, read_metrics_repository(
         spark, f"{repo}/stats").collect()))
     assert after == before
+
+
+def test_bounded_drain_failure_cleans_up(spark, tmp_path, monkeypatch):
+    """A drain whose batch function raises re-raises the query's failure,
+    removes its temp root, restores the session's shuffle partitions and
+    leaves no active query behind; the read-back never runs."""
+    import os
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_validator_spark.queries import _bounded_drain
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("batch function failed")
+
+    def writer(d):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        stream = spark.readStream.schema("id long").parquet(src)
+        return stream.writeStream.foreachBatch(boom)
+
+    def read_back(d):
+        raise AssertionError("read-back ran after a failed drain")
+
+    with pytest.raises(StreamingQueryException, match="batch function failed"):
+        _bounded_drain(spark, "streaming_failing", writer, read_back)
+    assert seen == ["2"]
+    assert os.listdir(tmp) == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []

@@ -13,8 +13,8 @@ def _drain(spark, src_dir, out_dir, ckpt_dir):
     schema = "k long, v double"
     stream = spark.readStream.schema(schema).parquet(src_dir)
     q = idempotent_batch_sink(
-        stream, out_dir, ckpt_dir, available_now=True
-    )
+        stream, out_dir, ckpt_dir
+    ).trigger(availableNow=True).start()
     q.awaitTermination()
 
 

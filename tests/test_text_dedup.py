@@ -1099,3 +1099,39 @@ def test_excise_duplicate_spans_removes_planted_boilerplate(spark):
         excise_duplicate_spans(docs, n_words=0)
     with pytest.raises(ValueError, match=">= 2"):
         excise_duplicate_spans(docs, n_words=6, min_docs=1)
+
+
+def test_materialize_release_query_failure_raises_once(spark, monkeypatch):
+    """A failing query raises from the Arrow path; the Row fallback
+    never re-runs it."""
+    from pyspark.errors import PySparkException
+
+    bad = spark.range(3).select(
+        (F.col("id") + F.raise_error(F.lit("boom")).cast("long")).alias("x")
+    )
+    calls = []
+    monkeypatch.setattr(type(bad), "collect", lambda self: calls.append(1))
+    with pytest.raises(PySparkException, match="boom"):
+        D.materialize_release(bad)
+    assert calls == []
+
+
+def test_materialize_release_arrow_conversion_falls_back(
+    spark, monkeypatch, caplog
+):
+    """An Arrow conversion failure falls back to Rows, and says so once."""
+    import pyarrow as pa
+
+    def no_arrow(self):
+        raise pa.ArrowInvalid("unconvertible")
+
+    df = spark.range(3).select((F.col("id") * 2).alias("x"))
+    monkeypatch.setattr(type(df), "toArrow", no_arrow)
+    monkeypatch.setattr(D, "_row_fallback_logged", False)
+    with caplog.at_level("WARNING", logger=D.__name__):
+        first = D.materialize_release(df)
+        second = D.materialize_release(df)
+    assert sorted(r.x for r in first.collect()) == [0, 2, 4]
+    assert second.count() == 3
+    logged = [r.getMessage() for r in caplog.records]
+    assert len(logged) == 1 and "Arrow conversion failed" in logged[0]
