@@ -26,260 +26,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
-from big_data_validator_spark.queries import all_queries
+from big_data_validator_spark.queries import REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-#: Headline set: every scale-relevant operator family; excludes the
-#: deliberately-bounded exact-Jaccard demo (dedup_ngram_jaccard caps its
-#: corpus; MinHash LSH is the scale path and IS benched).
-HEADLINE = [
-    "validation_summary_lineitem",
-    "scan_observed_metrics",
-    "scan_pushdown_projection",
-    "agg_pricing_summary",
-    "rule_type_enforcement",
-    "rule_uniqueness_dup_keys",
-    "rule_completeness",
-    "rule_referential_integrity",
-    "rule_domain_range",
-    "agg_distribution_stats",
-    "agg_count_distinct",
-    "topk_order_values",
-    "window_dedup_rank",
-    "agg_rollup_region_nation",
-    "agg_cube_segment_status",
-    "agg_percentiles",
-    "pivot_priority_status",
-    "window_running_total",
-    "supplier_acctbal_by_nation",
-    "join_asof_orders_events",
-    "join_range_value_buckets",
-    "join_shipping_priority",
-    "join_region_revenue",
-    "join_part_enrichment",
-    "join_semi_returned_orders",
-    "drift_psi_totalprice",
-    "events_json_extract",
-    "events_hourly_windows",
-    "events_sessionize",
-    "streaming_windowed_violations",
-    "streaming_failure_sink",
-    "text_profile",
-    "text_top_bigrams",
-    "text_chunk_windows",
-    "pipeline_curate_corpus",
-    "dedup_exact_keep_first",
-    "dedup_minhash_lsh",
-    "dedup_minhash_clusters",
-    "dedup_simhash",
-    "emb_norm_stats",
-    "sim_bruteforce_topk",
-    "sim_ann_lsh",
-    "sim_ann_recall",
-    "multimodal_payload_stats",
-    "text_tfidf_top_terms",
-    "sample_stratified_orders",
-    "pack_sequences_docs",
-    "corpus_mixture_plan",
-    # round-5 additions (VERDICT r4 §3): the shapes that most need perf
-    # evidence — a GROUPED_AGG UDAF (no partial aggregation), PQ
-    # encode+ADC scoring, stateful streaming, binned interval joins,
-    # the sketch+verify heavy hitter, and the fused curate→pack pipeline
-    "agg_heavy_hitters",
-    "profile_orders_columns",
-    "agg_trimmed_mean_udaf",
-    "join_interval_overlap",
-    "join_range_binned",
-    "streaming_sessionize_stateful",
-    "streaming_dedup_events",
-    "corpus_mixture_apply",
-    "pipeline_curate_pack",
-    "sim_ann_pq",
-    # round-5 session additions: event analytics (funnel / cohort /
-    # anomaly monitor), fuzzy catalog dedup, weighted corpus sampling,
-    # FD + Benford validation rules, stream-static dim enrichment
-    "events_funnel_conversion",
-    "events_retention_cohorts",
-    "events_anomaly_zscore",
-    "dedup_fuzzy_levenshtein",
-    "sample_weighted_orders",
-    "rule_functional_dependency",
-    "rule_benford_totalprice",
-    "streaming_static_enrich",
-    "drift_ks_totalprice",
-    "streaming_attribution_join",
-    # round-5 session additions, second batch: CDC snapshot diff,
-    # global-sort-free epoch shuffle, block-scan key gaps, row-local
-    # quality/PII/contamination curation gates, GROUPING SETS expand,
-    # small-aggregate lag windows, Z-order layout manifest
-    "cdc_changeset_orders",
-    "train_shuffle_shards",
-    "rule_key_gaps",
-    "quality_gopher_flags",
-    "pii_redaction_scan",
-    "rule_k_anonymity",
-    "link_part_entities",
-    "agg_incremental_totals",
-    "streaming_incremental_mv",
-    "profile_fd_discovery",
-    "contamination_probes",
-    "agg_grouping_sets",
-    "window_lag_delta",
-    "layout_zorder_stats",
-    "agg_hll_mergeable",
-    "events_top_sequences",
-    "agg_equidepth_histogram",
-    "rule_candidate_keys",
-    "drift_chi2_priority",
-    "agg_correlation_matrix",
-    "scan_unpivot_metrics",
-    "scan_partition_pruned",
-    "emb_centroid_by_label",
-    "streaming_exactly_once_sink",
-    "text_unigram_lm_score",
-    "text_langid_confusion",
-    "window_moving_avg_7d",
-    "dim_scd2_user_state",
-    "drift_text_kl",
-    "mining_frequent_pairs",
-    "gen_synthetic_validated",
-    # round-6: the in-window queries that had no perf row (VERDICT r5
-    # #5) plus this round's four new operators
-    "multimodal_resize_stats",
-    "scan_orc",
-    "scan_parquet_evolving",
-    "sim_ann_ivf",
-    "agg_approx_distinct",
-    "cdc_apply_changeset",
-    "rule_profile_trend_anomaly",
-    "text_bpe_encode",
-    "text_bpe_learn",
-    "streaming_attribution_left",
-    "streaming_metrics_trend",
-    "streaming_drift_psi",
-    "layout_compaction_plan",
-    "ts_resample_ffill",
-    "ts_twap_daily",
-    "pipeline_bpe_pack",
-    "profile_mutual_information",
-    # round-6 completeness sweep: every remaining registry entry gets a
-    # perf row — the only exclusion left is dedup_ngram_jaccard (the
-    # deliberately-bounded exact-Jaccard demo documented above)
-    "rule_field_count_quoted",
-    "dedup_winnowing",
-    "emb_near_dup_pairs",
-    "emb_near_dup_clusters",
-    "sim_ann_exactint",
-    "multimodal_features",
-    "drift_snapshots",
-    "rule_field_count_quote_stripped",
-    "rule_outlier_zscore",
-    "join_full_outer_reconcile",
-    "agg_salted_skew_counts",
-    "set_intersect_priority_profiles",
-    "rule_column_names",
-    "rule_uniqueness_metrics",
-    "scan_permissive_roundtrip",
-    "rule_field_count_naive",
-    "multimodal_frame_sample",
-    "corpus_mixture_quality",
-    "events_anomaly_weekday",
-    "profile_key_skew",
-    "profile_join_cardinality",
-    "sample_hash_split",
-    "join_asof_nearest",
-    "join_asof_forward",
-    "join_point_in_time",
-    "rule_order_totals_reconcile",
-    # round-8 additions
-    "agg_incremental_minmax",
-    "profile_fd_composite",
-    "sample_cluster_split",
-    "join_salted_skew",
-    "dedup_ssjoin_prefix",
-    "agg_incremental_join_mv",
-    "ts_rollup_cascade",
-    "topk_pareto_frontier",
-    "graph_pagerank_flow",
-    "rule_outlier_mad",
-    "events_rolling_distinct",
-    # round-9 additions
-    "agg_kll_mergeable",
-    "agg_kll_rolling",
-    "dedup_semantic_clusters",
-    "cdc_schema_changeset",
-    "graph_label_propagation",
-    "graph_triangle_count",
-    "dedup_shared_substrings",
-    "streaming_kll_quantiles",
-    # round-10 additions
-    "agg_kll_by_segment",
-    "dedup_semantic_autok",
-    "cdc_scd2_history",
-    "multimodal_phash_neardup",
-    "streaming_kll_by_group",
-    "dedup_semantic_twolevel",
-    "streaming_scd2_history",
-    "text_unigram_learn",
-    "text_unigram_encode",
-    "link_fs_em",
-    "link_fs_classify",
-    "ts_theilsen_trend",
-    "drift_wasserstein",
-    "events_markov_transitions",
-    "rule_monotonic_orderdate",
-    "sim_hybrid_rrf",
-    "events_survival_km",
-    "agg_time_decayed_value",
-    "rule_conversion_ztest",
-    "events_attribution_removal",
-    "text_pmi_collocations",
-    "streaming_markov_drift",
-    "drift_wasserstein_by_year",
-    "sim_matryoshka_recall",
-    "contamination_ngram_overlap",
-    # round-12 additions
-    "contamination_ngram_bloom",
-    "quality_linear_score",
-    "curation_dsir_weights",
-    "sim_sq8_recall",
-    "link_golden_record",
-    "drift_mannwhitney",
-    "link_sorted_neighborhood",
-    "agg_winsorized_stats",
-    "sim_kcenter_coreset",
-    # round-13 additions
-    "quality_linear_train",
-    "pipeline_quality_train_score",
-    "dedup_excise_spans",
-    "text_repetition_metrics",
-    "ts_changepoint_cusum",
-    "drift_cvm",
-    "ts_binseg_changepoints",
-    "ts_acf_daily",
-    "ts_pettitt_changepoint",
-    "ts_runs_test",
-    "ts_xcorr_daily",
-    "agg_spearman_rank",
-    "agg_kendall_tau",
-    "agg_gini_customer_revenue",
-    "agg_hhi_supplier_nation",
-    # round-13 fifth wave
-    "drift_mannwhitney_by_segment",
-    "ts_mann_kendall",
-    "agg_cramers_v_matrix",
-    "drift_segment_bh_scan",
-    "ts_ols_trend",
-    "rule_mcnemar_disagreement",
-    "streaming_mannwhitney_drift",
-]
-
 #: Registry entries deliberately NOT benched, with the reason shipped in
 #: BENCH_DETAIL.json (VERDICT r7 missing-item 3 — a silent cap reads as
-#: "covered everything").  tests/test_bench_contract.py pins
-#: HEADLINE ∪ EXCLUDED == registry, so a new entry cannot fall through.
+#: "covered everything").  tests/test_bench_contract.py checks that every
+#: key is a registry entry: after a rename, a stale key would otherwise
+#: silently put the renamed entry back into HEADLINE.
 EXCLUDED = {
     "dedup_ngram_jaccard": (
         "deliberately corpus-bounded exact-Jaccard demo (educational "
@@ -292,6 +48,9 @@ EXCLUDED = {
         "device (dedup_ssjoin_prefix, benched) is the scale path"
     ),
 }
+
+#: Headline set: every registry entry not EXCLUDED, in definition order.
+HEADLINE = [name for name in REGISTRY if name not in EXCLUDED]
 
 
 def compute_prev_ratios(
@@ -379,7 +138,6 @@ def main() -> None:
         "overwrite"
     ).format("noop").save()
 
-    registry = all_queries()
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     # TEST-SUPPORT ONLY (r14): the contract test exercises this script
     # end-to-end (subprocess, JSON line, detail file) but a full
@@ -399,7 +157,7 @@ def main() -> None:
     # hides regressions that only show in the typical run)
     for timed in [False] + [True] * passes:
         for name in headline:
-            fn = registry[name]
+            fn = REGISTRY[name].fn
             start = time.perf_counter()
             df = fn(spark, SF_DIR)
             df.write.mode("overwrite").format("noop").save()

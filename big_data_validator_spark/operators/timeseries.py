@@ -373,7 +373,7 @@ def _theilsen_trend_body(daily, d, slopes, scale):
     # Two-pass distributed k-th selection on the composite order
     # (_qd, num, den): block on _qd (any monotone quantization keeps
     # the composite order block-aligned — equal keys share a block),
-    # collect the <=4097-row block histogram, then TakeOrdered only
+    # collect the <=4096-row block histogram, then TakeOrdered only
     # within the straddling block.
     span = float(st["_ymax"] - st["_ymin"])
     if span == 0.0:

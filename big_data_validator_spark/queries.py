@@ -21,7 +21,11 @@ is pinned by pytest against exact algorithms instead.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
+import subprocess
 from dataclasses import dataclass
 from typing import Callable, NamedTuple, Optional
 
@@ -2423,12 +2427,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Tail registry (positions 51+): rows-only / bounded / redundant-variant
-# demonstrations.  The driver's CORRECTNESS window records the first 50
-# entries; everything above this line is oracle-bearing.  These entries
-# stay callable (and pytest-pinned) but deliberately sit outside the
-# window: their semantics are either hash/sketch-dependent (no SQL
-# oracle exists), or already oracle-covered by an in-window variant.
+# Later registry entries: rows-only / bounded / redundant-variant
+# demonstrations.  Everything above this line is oracle-bearing; below,
+# semantics are either hash/sketch-dependent (no SQL oracle exists) or
+# already oracle-covered by a variant.  Position here does not decide
+# the driver's window (see ``driver_order``).
 # =====================================================================
 
 @query(
@@ -2909,9 +2912,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_stratified_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling: exactly 20 orders per priority,
     selected by md5-of-key pseudo-random order — engine-portable, so the
-    EXACT row selection (not just counts) hash-matches the SQL oracle.
-    Tail entry (outside the driver window); the local mirror harness
-    verifies the oracle."""
+    EXACT row selection (not just counts) hash-matches the SQL oracle."""
     o = _t(spark, sf_dir, "orders")
     from big_data_validator_spark.operators.sampling import (
         stratified_exact_sample,
@@ -12672,924 +12673,81 @@ def streaming_mannwhitney_drift(
 # Public API consumed by __spark_entry__.py
 # =====================================================================
 
-#: The correctness driver records rows for the first 50 registry entries
-#: only, so every first-class query family must sit inside that window.
-#: Entries after the window are redundant variants or rows-only kernels;
-#: all of them (oracled or not) are still verified locally by
-#: tests/test_entry_oracle.py.
-#:
-#: The window ROTATES (VERDICT r4 §2): an oracled entry must not live its
-#: whole life outside the driver's hard signal, so each round swaps
-#: never-driver-checked entries in for long-stable twins whose plan shape
-#: stays covered.  tests/test_entry_oracle.py pins the rotation contract:
-#: every oracled entry has either a green row in a checked-in
-#: CORRECTNESS_r*.json or a seat in the current window.
+#: The correctness driver records rows for the first 50 entries of
+#: ``all_queries()`` only; ``driver_order`` decides which 50.
 _DRIVER_WINDOW_SIZE = 50
-_DEMOTED_TO_TAIL = [
-    # ---- round-13 sixth rotation: two of the thirty-three r5/r7-
-    # ---- vintage re-validation seats yield to the NEW oracled
-    # ---- drift_mannwhitney_by_segment / ts_mann_kendall (the uniform
-    # ---- rationale: a first-exposure ORACLED entry outranks a
-    # ---- re-validation).  Chosen as the two whose devices are most
-    # ---- redundantly in-window: agg_correlation_matrix's moment-sum
-    # ---- association is now flanked by THREE seated family members
-    # ---- (agg_spearman_rank, agg_kendall_tau, and the new MW-by-
-    # ---- segment rank device) plus profile_mutual_information;
-    # ---- window_moving_avg_7d's daily running frame is recomputed
-    # ---- in-window by the five seated ts_* daily-frame entries and
-    # ---- events_anomaly_weekday.  Both re-seat for re-validation
-    # ---- next round; thirty-one r5/r7-vintage seats remain.
-    "agg_correlation_matrix",
-    "window_moving_avg_7d",
-    # ---- round-13 seventh rotation: drift_chi2_priority (r5-vintage
-    # ---- re-validation seat) yields to the NEW oracled
-    # ---- agg_cramers_v_matrix, whose per-pair blocks recompute the
-    # ---- same chi-square contingency device in-window every round
-    # ---- (V IS the normalized chi² — the generalization seat covers
-    # ---- the specialization's plan shape); re-seats next round.
-    "drift_chi2_priority",
-    # ---- round-13 eighth rotation: events_anomaly_weekday (r7-vintage
-    # ---- re-validation seat) yields to the NEW oracled
-    # ---- drift_segment_bh_scan — the multiple-testing-corrected
-    # ---- generalization of exactly its per-group anomaly-z device
-    # ---- (and the five seated ts_* entries keep the daily-frame
-    # ---- window shapes covered); re-seats next round.
-    "events_anomaly_weekday",
-    # ---- round-13 ninth rotation: scan_unpivot_metrics (r5-vintage
-    # ---- re-validation seat) yields to the NEW oracled ts_ols_trend
-    # ---- — its stack()/unpivot device is recomputed in-window every
-    # ---- round by the seated ts_xcorr_daily (per-lag stack rows);
-    # ---- re-seats next round.
-    "scan_unpivot_metrics",
-    # ---- round-13 tenth rotation: agg_equidepth_histogram
-    # ---- (r5-vintage re-validation seat) yields to the NEW oracled
-    # ---- rule_mcnemar_disagreement — the equidepth per-value-counts
-    # ---- + block-prefix cumulative device is recomputed in-window
-    # ---- every round by the seated agg_gini_customer_revenue (the
-    # ---- same mannwhitney block device over the same counts frame);
-    # ---- re-seats next round.
-    "agg_equidepth_histogram",
-    # ---- round-13 eleventh rotation: streaming_exactly_once_sink
-    # ---- (r7-vintage re-validation seat) yields to the NEW oracled
-    # ---- streaming_mannwhitney_drift — which exercises the SAME
-    # ---- _SUCCESS batch-id commit protocol twice per micro-batch
-    # ---- (count deltas + statistic rows), so the exactly-once device
-    # ---- stays driver-checked in-window; re-seats next round.
-    "streaming_exactly_once_sink",
-    # ---- round-13 fifth rotation: sim_kcenter_coreset and
-    # ---- link_sorted_neighborhood rest on their fresh r12 greens,
-    # ---- yielding seats to the NEW oracled agg_kendall_tau /
-    # ---- ts_xcorr_daily (the link_golden_record precedent: a
-    # ---- first-exposure ORACLED entry outranks re-validation of a
-    # ---- result-identical rewrite).  The k-center running-min
-    # ---- rewrite's selection sequence is pytest-pinned == the
-    # ---- Python greedy (tests/test_similarity.py) with the oracle
-    # ---- untouched; the SNM skew/NULL guards are pytest-pinned on
-    # ---- adversarial corpora (tests/test_linkage.py) and the seated
-    # ---- TPC-H corpus (p_name non-null, unskewed prefixes) exercises
-    # ---- neither guard — its seated results are bit-identical to the
-    # ---- r12-green run.
-    "sim_kcenter_coreset",
-    "link_sorted_neighborhood",
-    # ---- round-13 fourth rotation: link_golden_record rests on its
-    # ---- fresh r12 green — this round's edit was cache-release
-    # ---- plumbing only (the ADVICE r12 materialize_release source
-    # ---- fix; the survivorship results are bit-identical) — yielding
-    # ---- its seat to the NEW oracled agg_spearman_rank (first
-    # ---- exposure outranks re-validation of a result-identical
-    # ---- rewrite; the release fix's cache hygiene is pytest-pinned
-    # ---- in tests/test_linkage.py).
-    "link_golden_record",
-    # ---- round-11 rotation (VERDICT r10 item 2): the TEN r5-vintage
-    # ---- resting greens — the oldest un-revalidated records, green
-    # ---- r1-r4 and resting since r4/r5 — return to the window
-    # ---- (agg_pricing_summary, supplier_acctbal_by_nation,
-    # ---- pivot_priority_status, window_dedup_rank,
-    # ---- join_full_outer_reconcile, join_semi_returned_orders,
-    # ---- agg_salted_skew_counts, topk_order_values, rule_domain_range,
-    # ---- events_json_extract — all removed from this list), plus
-    # ---- dedup_shared_substrings (rewritten this round to the
-    # ---- fingerprint-keyed exchange — the rewrite earns a fresh
-    # ---- driver record) and a seat for text_unigram_learn (NEW: the
-    # ---- unigram-LM tokenizer trainer).  The twelve round-10
-    # ---- re-validation seats did their job (fresh r10 greens) and
-    # ---- rest again:
-    "agg_distribution_stats",
-    "rule_outlier_zscore",
-    "agg_cube_segment_status",
-    "window_running_total",
-    "join_range_value_buckets",
-    "events_hourly_windows",
-    "text_top_bigrams",
-    "emb_norm_stats",
-    "multimodal_payload_stats",
-    "corpus_mixture_plan",
-    "pack_sequences_docs",
-    "drift_psi_totalprice",
-    # ---- round-11 second rotation: one more seat for
-    # ---- text_unigram_encode (the apply half of the unigram-LM
-    # ---- tokenizer — the learn→encode loop like BPE's).  Green
-    # ---- r7-r10; the CCNet LM-score entry's wordcount shuffle +
-    # ---- bounded-vocabulary device is recomputed in-window every
-    # ---- round by the two tokenizer-trainer entries' seed stage, and
-    # ---- the scoring semantics stay pytest-pinned
-    # ---- (tests/test_curation.py: known distribution, OOV smoothing,
-    # ---- empty docs).
-    "text_unigram_lm_score",
-    # ---- round-11 third rotation: a seat for link_fs_em (probabilistic
-    # ---- linkage weight estimation — the EM trainer behind the fixed
-    # ---- integer weights link_part_entities ships).  Green r5-r10 (six
-    # ---- driver rounds, the longest active streak in-window); the
-    # ---- curation family keeps rule_k_anonymity in-window and the PII
-    # ---- regex semantics stay fixture-pinned (tests/test_curation.py).
-    "pii_redaction_scan",
-    # ---- round-11 fourth rotation: a seat for link_fs_classify (the
-    # ---- FS decision step — posterior-stamped pairs under integer
-    # ---- thresholds).  Green r6-r10 (five driver rounds); the
-    # ---- streaming family keeps FOUR in-window seats (per-batch drift
-    # ---- PSI, incremental MV, per-group KLL, streaming SCD2) and the
-    # ---- stream-stream LEFT OUTER null-emission protocol stays
-    # ---- pytest-pinned (tests/test_streaming.py sentinel drains).
-    "streaming_attribution_left",
-    # ---- round-11 fifth rotation: the timeseries seat passes to
-    # ---- ts_theilsen_trend (robust median-slope trend — the
-    # ---- family's monitor-side member).  Green r8-r10; the cascade
-    # ---- refresh shares its _mv_snapshots device and
-    # ---- dirty-bucket semantics with the three in-window IVM
-    # ---- entries, and the cascade grid stays pytest-pinned
-    # ---- (tests/test_timeseries.py).
-    "ts_rollup_cascade",
-    # ---- round-10 re-validation seats (VERDICT r9 item 8): the eleven
-    # ---- r4-vintage greens — the oldest unrefreshed records — return
-    # ---- to the window (agg_distribution_stats, rule_outlier_zscore,
-    # ---- agg_cube_segment_status, window_running_total,
-    # ---- join_range_value_buckets, events_hourly_windows,
-    # ---- text_top_bigrams, emb_norm_stats, multimodal_payload_stats,
-    # ---- corpus_mixture_plan, pack_sequences_docs — all removed from
-    # ---- this list), plus drift_psi_totalprice (rewritten this round
-    # ---- to the one-scan conditional-aggregation form — the rewrite
-    # ---- earns a fresh driver record).  Twelve fresh greens rest:
-    # The five r9 re-validation seats did their job (fresh r9 records);
-    # uniqueness via window_dedup-family pytest pins, drift via
-    # streaming_drift_psi + the re-seated drift_psi_totalprice,
-    # broadcast-join via join_region_revenue's r5+ history.
-    "rule_uniqueness_dup_keys",
-    "drift_snapshots",
-    "join_part_enrichment",
-    "agg_count_distinct",
-    "rule_field_count_quote_stripped",
-    # Green through r9; binary payload byte-math keeps a seat via the
-    # re-seated multimodal_payload_stats, and the resize kernel's Arrow
-    # batch shape stays pinned in tests/test_multimodal.py.
-    "multimodal_resize_stats",
-    # Green r7-r9; the exact-integer embedding family keeps
-    # sim_ann_exactint (ANN ranking oracle) in-window plus the
-    # re-seated emb_norm_stats; the near-dup verdict predicate is the
-    # same DECIMAL(38,0) device sim_ann_exactint hashes every round.
-    "emb_near_dup_pairs",
-    # Green r7-r9; transitive-closure clustering stays driver-checked
-    # via dedup_semantic_clusters (same duplicate_clusters consumer)
-    # and the CC parity pins in tests/test_text_dedup.py.
-    "emb_near_dup_clusters",
-    # Green r5-r9; the mixture family swaps seats with the re-seated
-    # corpus_mixture_plan (plan is recomputed INSIDE apply, so the
-    # resting entry's semantics ride along in pytest parity).
-    "corpus_mixture_apply",
-    # Green r6-r9; the packing family swaps seats with the re-seated
-    # pack_sequences_docs (the same two-pass packer this entry ends
-    # in); curation gates keep pii_redaction_scan + rule_k_anonymity.
-    "pipeline_curate_pack",
-    # Green r5-r9; the sampling family keeps sample_cluster_split
-    # in-window, and the epoch-shard determinism grid stays pinned in
-    # tests/test_sampling.py.
-    "train_shuffle_shards",
-    # Green r6-r9; the CDC family keeps cdc_schema_changeset (green r9)
-    # plus all three IVM entries in-window — the MERGE apply's
-    # changeset feed is the same snapshot_changeset device.
-    "cdc_apply_changeset",
-    # Green r7-r9; the zero-extra-scan Observation plumbing is
-    # plan-pinned (tests/test_plans.py: observe adds no scan) and its
-    # fused rule aggregates are exactly the semantics the re-seated
-    # rule_* entries hash this round.  Frees the seat for
-    # cdc_scd2_history (the SCD Type-2 dimension-history build).
-    "scan_observed_metrics",
-    # Green r7-r9; the streaming family keeps THREE in-window seats
-    # (attribution LEFT join, per-batch PSI, incremental MV) and the
-    # metrics-repository commit protocol stays pytest-pinned
-    # (tests/test_streaming.py + the KLL repository twin).  Frees the
-    # seat for multimodal_phash_neardup (the media member of the
-    # dedup ladder).
-    "streaming_metrics_trend",
-    # Green r7-r9; the exact-DECIMAL TWAP accumulation device is
-    # pytest-pinned (tests/test_timeseries.py) and the timeseries
-    # family keeps ts_rollup_cascade in-window.  Frees the seat for
-    # streaming_kll_by_group (the per-group streaming percentile
-    # monitor — the live twin of agg_kll_by_segment).
-    "ts_twap_daily",
-    # First green in r9; rests since r10 for the r10 additions.  The
-    # global streaming KLL twin's repository protocol is re-exercised
-    # in-window by streaming_kll_by_group every round.
-    # (dedup_shared_substrings rested here r10; re-seated in round 11
-    # after its fingerprint-key rewrite.)
-    "streaming_kll_quantiles",
-    # Green r6-r9; the metrics-history trend-z device is pytest-pinned
-    # and the profile family keeps profile_fd_discovery +
-    # profile_fd_composite in-window.  Frees the seat for
-    # dedup_semantic_twolevel (the IVF two-level quantizer — the
-    # semantic tier's assignment-cost device).
-    "rule_profile_trend_anomaly",
-    # Green r8+r9; the skew-salting device stays pinned by
-    # tests/test_aqe_skew.py and the default-salt ADVICE-r8 fix by
-    # tests/test_advice_r8.py; the salted-aggregate twin carries the
-    # r1-r4 history.  Frees the seat for streaming_scd2_history (the
-    # incremental==rebuild dimension-history check across the
-    # batch/streaming boundary).
-    "join_salted_skew",
-    # ---- round-5 rotation: entries rested so the entries added since
-    # ---- r2 each got a driver-green row (the eleven r4-vintage names
-    # ---- originally listed here returned to the window in round 10).
-    # Star-join + agg + top-k shape stays via join_region_revenue and
-    # topk_order_values.
-    # ---- round-5 second rotation: eight more r1-r4-green entries rested
-    # ---- so the eight queries added that round each got a driver-green
-    # ---- row.  (The ten r5-vintage names that rested here —
-    # ---- agg_pricing_summary, supplier_acctbal_by_nation,
-    # ---- pivot_priority_status, window_dedup_rank,
-    # ---- join_full_outer_reconcile, join_semi_returned_orders,
-    # ---- agg_salted_skew_counts, topk_order_values, rule_domain_range,
-    # ---- events_json_extract — returned to the window in round 11 as
-    # ---- the oldest un-revalidated greens, VERDICT r10 item 2.)
-    # ---- round-5 third rotation: nine r1-r4-green entries rest so the
-    # ---- nine operators added this session (CDC changeset, shuffle
-    # ---- shards, key gaps, Gopher gates, PII scan, contamination,
-    # ---- grouping sets, lag deltas, Z-order stats) each get a
-    # ---- driver-green row.  Per-entry twin rationale:
-    # Exact-percentile single-buffer agg twinned by the profiler's
-    # numeric summary + agg_distribution_stats' r1-r4 history.
-    # INTERSECT is left-semi sugar; rule_referential_integrity's
-    # anti-join keeps existence-join semantics in-window.
-    # (drift_psi_totalprice rested here r5-r9; re-seated in round 10
-    # after its one-scan rewrite.)
-    # As-of is the backward range join; join_range_binned +
-    # join_interval_overlap keep range-join semantics in-window.
-    # Chunk/window segmentation stays via pipeline_curate_pack (ends in
-    # the same segmentation + packer) and pack_sequences history.
-    # Pairwise-similarity dedup stays via dedup_fuzzy_levenshtein; the
-    # n-gram Jaccard demo (deliberately bounded) rests.
-    # Brute-force cosine top-k is recomputed INSIDE sim_ann_recall as
-    # the ground truth every round; the standalone view rests.
-    # Batch sessionization twinned by streaming_sessionize_stateful
-    # (same gap semantics, stateful path) — both were driver-green r4.
-    # Column-name contract rule twinned by rule_type_enforcement (same
-    # contract object, stricter check); green r1-r4.
-    # ROLLUP is GROUPING SETS sugar; agg_grouping_sets (newly seated)
-    # pins the same Expand-node plan with explicit sets; green r1-r4.
-    # Text quality ratios twinned by quality_gopher_flags (newly
-    # seated); token/fingerprint legs by text_tfidf_top_terms +
-    # dedup_exact_keep_first; green r1-r4.
-    # Uniqueness metrics twinned by rule_candidate_keys (newly seated:
-    # exact distinct counts + the unique-and-never-null verdict per
-    # column in one pass); green r1-r4.
-    # Null-count completeness twinned by profile_orders_columns
-    # (per-column null_count, newly in-window) and rule_candidate_keys'
-    # n_nulls leg; green r1-r4.
-    # Pushdown/pruning are pinned plan-side by tests/test_plans and
-    # exercised driver-side by scan_orc (pushdown roundtrip, newly
-    # seated) + scan_parquet_evolving; green r1-r4.
-    # try_cast type enforcement pinned by test_runner's reference
-    # fixtures; the corrupt-row leg stays driver-checked via
-    # scan_permissive_roundtrip; green r1-r4.
-    # Parquet write→read roundtrips stay driver-checked via
-    # scan_parquet_evolving and scan_partition_pruned (both write at
-    # query time); streaming sink coverage stays via the five other
-    # in-window streaming queries; green r1-r4.
-    # Broadcast star-join shape pinned by tests/test_plans; dim
-    # broadcasts stay exercised under contamination_probes and
-    # agg_hll_mergeable's broadcast legs; green r1-r4.
-    # Tumbling-window streaming agg twinned by streaming_static_enrich's
-    # windowed-aggregation leg; the streaming family keeps five other
-    # in-window seats (exactly-once sink, stateful sessionize, dedup,
-    # static enrich, stream-stream attribution); green r1-r4.
-    # Fused curate pipeline twinned by pipeline_curate_pack (in-window,
-    # required-family pinned — the strictly longer chain ending in the
-    # packer); green r1-r4.
-    # PERMISSIVE corrupt-record semantics pinned by test_runner /
-    # test_sources fixture replays; scan-family driver coverage stays
-    # via scan_orc, scan_parquet_evolving, scan_partition_pruned;
-    # green r1-r4.
-    # The reference's naive field-count rule: property-based parity with
-    # Python split in test_field_count + fixture replay in test_runner;
-    # the quote-stripped oracled variant has a green r2 row; green r1-r4.
-    # Anti-join plan pinned in tests/test_plans; orphan-detection
-    # semantics recur in cdc_changeset_orders' delete leg (keys present
-    # in current, absent from incoming); green r1-r4.
-    # Token-aggregation family stays via text_unigram_lm_score (newly
-    # seated: the same wordcount shuffle + bounded top-k vocabulary) and
-    # text_top_bigrams' r1-r2 history; green r1-r4.
-    # Multimodal family keeps multimodal_resize_stats in-window (same
-    # mapInPandas kernel family, byte-exact stub decode); green r1-r4.
-    # Sampling family keeps sample_weighted_orders in-window (the same
-    # md5-order device and WindowGroupLimit/TakeOrdered plan shape);
-    # green r1-r4.
-    # Exact-dedup semantics pinned by test_text_dedup planted-duplicate
-    # fixtures; dedup family keeps dedup_fuzzy_levenshtein in-window;
-    # green r1-r4.
-    # ---- round-6 rotation: four r5-green entries rest so the four
-    # ---- operators added this round (CDC apply/MERGE, metrics-repo
-    # ---- trend rule, real BPE encode, stream-stream LEFT OUTER) each
-    # ---- get a driver-green row.
-    # (The FIFTEEN r5-vintage greens that rested here since round 6 —
-    # scan_orc, scan_parquet_evolving, agg_hll_mergeable,
-    # window_moving_avg_7d, emb_centroid_by_label, scan_unpivot_metrics,
-    # agg_correlation_matrix, agg_equidepth_histogram,
-    # layout_zorder_stats, rule_candidate_keys, text_langid_confusion,
-    # dim_scd2_user_state, drift_chi2_priority, rule_key_gaps,
-    # join_range_binned — returned to the window in round 13 as the
-    # OLDEST un-revalidated records, 8 rounds at rest; VERDICT r12
-    # item 3's oldest-block-first policy.  All removed from this list.)
-    # ---- round-7 rotation: r6-green entries rest so the round-7
-    # ---- additions each get a driver-green row.  Per-entry rationale:
-    # Nearest-direction as-of green r6; the forward twin
-    # join_asof_forward takes the seat and exercises the SAME
-    # union-and-fill frame plus the flipped tie side; the full
-    # direction grid (nearest/backward/forward, ties, tolerance) is
-    # pinned in tests/test_relational.py::test_asof_direction_grid.
-    "join_asof_nearest",
-    # Lag/delta window green r5+r6; five other window-function entries
-    # are driver-green in earlier rounds (RANGE frame, SCD2, dedup-rank,
-    # running total, sessionize); frees the seat for the newly-oracled
-    # emb_near_dup_pairs (the last north-star entry without a driver
-    # row, VERDICT r6 item 1).
-    "window_lag_delta",
-    # Inner attribution join green r5+r6; the LEFT OUTER twin
-    # streaming_attribution_left (strictly more general: includes the
-    # unattributed rows) holds a required in-window seat; frees the
-    # seat for streaming_metrics_trend (the streaming Deequ repository,
-    # VERDICT r6 item 2).
-    "streaming_attribution_join",
-    # KS drift green r5+r6; drift coverage keeps its required in-window
-    # seat via drift_text_kl (and the PSI/chi² twins are driver-green in
-    # earlier rounds); frees the seat for layout_compaction_plan (the
-    # maintenance surface's first oracled entry, VERDICT r6 item 6).
-    "drift_ks_totalprice",
-    # Plain rolling z-score monitor green r1–r5 + r6; the
-    # weekday-seasonal twin events_anomaly_weekday (green r6, strictly
-    # more general baseline) keeps the monitor family in-window; frees
-    # the seat for emb_near_dup_clusters — the FIRST driver-oracled
-    # connected-components entry (bit-exact integer pairs make the
-    # labels engine-portable where the MinHash clusters never were).
-    "events_anomaly_zscore",
-    # GROUPING SETS green r5+r6; the rollup and cube twins are
-    # driver-green in earlier rounds and the family is pure built-in
-    # Catalyst surface; frees the seat for sim_ann_exactint — the first
-    # driver-oracled ANN RANKING entry (recall was gated via
-    # sim_ann_recall, the ranking itself never was).
-    "agg_grouping_sets",
-    # Interval-overlap join green r5+r6; the binned-join device stays
-    # pytest-pinned (pair set == nested loop) and the join family keeps
-    # join_asof_forward + join_point_in_time in-window; frees the seat
-    # for join_point_in_time (the feature-store leakage-guard join — a
-    # capability entry, not a plan variant).
-    "join_interval_overlap",
-    # Stream-static broadcast enrichment green r5+r6 — the simplest
-    # streaming shape, its broadcast-join-per-micro-batch plan is
-    # pytest-pinned; frees the seat for streaming_drift_psi (the
-    # serving-side drift monitor — live traffic PSI-scored against a
-    # static baseline, a new streaming capability).
-    "streaming_static_enrich",
-    # Sequential-pattern mining green r5+r6; the events family keeps
-    # funnel/retention/weekday monitors in-window; frees the seat for
-    # text_bpe_learn — tokenizer TRAINING on the cluster, closing the
-    # learn half of the BPE loop whose apply half (text_bpe_encode)
-    # holds a required seat.
-    "events_top_sequences",
-    # Hive-style partition pruning green r5+r6; the pruning facts
-    # (PartitionFilters + actually-read files) are pytest-pinned in
-    # test_partition_pruning and the layout family keeps
-    # layout_compaction_plan in-window; frees the seat for
-    # rule_k_anonymity (the privacy-audit rule a data RELEASE needs —
-    # a new rule family, not a plan variant).
-    "scan_partition_pruned",
-    # Basic column profiler green r5+r6; the profile family keeps FOUR
-    # r6-green siblings in-window (key-skew, join-cardinality, mutual
-    # information, trend rule) and the one-pass profiler also runs
-    # inside streaming_metrics_trend every round; frees the seat for
-    # link_part_entities — entity resolution, a capability family the
-    # registry lacked entirely.
-    "profile_orders_columns",
-    # Cohort retention matrix green r5+r6; the events family keeps the
-    # funnel and both anomaly monitors in-window; frees the seat for
-    # agg_incremental_totals — incremental materialized-view
-    # maintenance, whose oracle IS the incremental-equals-recompute
-    # invariant.
-    "events_retention_cohorts",
-    # Watermarked streaming exact dedup green r5+r6; the streaming
-    # family keeps six in-window seats (sessionize, metrics trend,
-    # drift PSI, attribution LEFT OUTER, exactly-once sink, incremental
-    # MV); frees the seat for streaming_incremental_mv — the streaming
-    # half of the maintained-view pair, whose oracle pins
-    # prefix-consistency of the chained delta applications.
-    "streaming_dedup_events",
-    # Benford screen green r5+r6; the statistical-rule family keeps the
-    # FD rule, MI profile, and both anomaly monitors in-window; frees
-    # the seat for profile_fd_discovery — the dependency SEARCH that
-    # feeds the single-pair FD rule and the contract-suggestion loop.
-    "rule_benford_totalprice",
-    # Funnel conversion green r5+r6; the events family keeps both
-    # anomaly monitors in-window and retention/funnel stay green in the
-    # local mirror; frees the seat for ts_twap_daily — the
-    # time-weighted daily average, the second first-class timeseries
-    # entry beside ts_resample_ffill.
-    "events_funnel_conversion",
-    # Heavy-hitters sketch->exact-verify green r5+r6; sketch coverage
-    # keeps agg_approx_distinct (benched, pytest <=5%) and the HLL
-    # union twin driver-green in earlier rounds; frees the seat for
-    # scan_observed_metrics — the Observation API (rule metrics riding
-    # free on another job), a Spark capability no entry showcased.
-    "agg_heavy_hitters",
-    # ---- round-8 rotation: nine green entries rest so (a) the two new
-    # ---- capability entries (min/max IVM, TANE level-2 FD) get their
-    # ---- driver rows and (b) the seven rows-only sketch kernels get
-    # ---- their first driver record at all (VERDICT r7 item 3).
-    # (The EIGHTEEN r7-vintage greens that rested here since round 8 —
-    # multimodal_features, streaming_sessionize_stateful,
-    # agg_trimmed_mean_udaf, rule_functional_dependency,
-    # rule_order_totals_reconcile, sample_hash_split,
-    # profile_join_cardinality, events_anomaly_weekday,
-    # corpus_mixture_quality, profile_mutual_information,
-    # streaming_exactly_once_sink, validation_summary_lineitem,
-    # profile_key_skew, join_asof_forward, text_bpe_encode,
-    # cdc_changeset_orders, contamination_probes, quality_gopher_flags
-    # — returned to the window in round 13 with the r5-vintage block,
-    # the next-oldest un-revalidated records, 6 rounds at rest;
-    # VERDICT r12 item 3.  All removed from this list.)
-    # ---- round-9 rotation: two multi-round greens rest so the four new
-    # ---- operators (KLL sketch, SemDeDup, schema-evolving CDC, label
-    # ---- propagation) and the five r1-vintage re-seats all fit.
-    # Green r4-r8 (five driver rounds); pairwise edit-distance dedup
-    # semantics stay pinned by tests/test_text_dedup.py, and the exact
-    # pairwise-similarity-join family keeps its in-window seat via
-    # dedup_ssjoin_prefix (PPJoin prefix filter, green r8) plus the
-    # semantic tier's new dedup_semantic_clusters.
-    "dedup_fuzzy_levenshtein",
-    # Green r5-r8 (four driver rounds); A-ExpJ weighted reservoir
-    # semantics stay pytest-pinned (tests/test_sampling.py exact-weight
-    # grid) and the sampling family keeps two in-window seats
-    # (train_shuffle_shards, sample_cluster_split).
-    "sample_weighted_orders",
-    # Green r7+r8; gap-fill/resample semantics stay pytest-pinned
-    # (tests/test_timeseries.py grid) and the timeseries family keeps
-    # two in-window seats (ts_rollup_cascade, ts_twap_daily).  Frees
-    # the seat for agg_kll_rolling — the rolling-percentile-from-
-    # stored-sketches payoff query of the round's KLL architecture.
-    "ts_resample_ffill",
-    # Green r6-r8 (three driver rounds); the drift family keeps two
-    # in-window seats (drift_snapshots — re-seated this round — and
-    # streaming_drift_psi), and the text-KL computation itself is
-    # pytest-pinned.  Frees the seat for graph_triangle_count (the
-    # motif member completing the graph family).
-    "drift_text_kl",
-    # Green r5-r8 (four driver rounds); its support-counting device is
-    # recomputed IN-WINDOW every round by graph_triangle_count (edges
-    # = the same co-occurrence pairs with the same HAVING >= 2), and
-    # the A-priori semantics stay pytest-pinned.  Frees the seat for
-    # dedup_shared_substrings (the exact verbatim-span dedup tier).
-    "mining_frequent_pairs",
-    # Green r5-r8 (four driver rounds); the generator's validation
-    # chain runs the SAME contract rules the in-window rule_* entries
-    # exercise, and the generator itself is pytest-pinned
-    # (tests/test_contract.py).  Frees the seat for
-    # streaming_kll_quantiles — the streaming producer of the round's
-    # mergeable-sketch architecture.
-    "gen_synthetic_validated",
-    # ---- round-11 sixth rotation: five seats for the round's new
-    # ---- operators (drift_wasserstein, events_markov_transitions,
-    # ---- rule_monotonic_orderdate, dedup_ngram_containment,
-    # ---- sim_hybrid_rrf).  Each rester holds a fresh r10 green and
-    # ---- leaves its family covered in-window:
-    # IVM family keeps streaming_incremental_mv + agg_incremental_join_mv
-    # (green r7-r10; the per-bucket merge device is recomputed by both
-    # in-window siblings every round)
-    "agg_incremental_totals",
-    # (green r8-r10; min/max refresh semantics pytest-pinned,
-    # tests/test_incremental.py)
-    "agg_incremental_minmax",
-    # FD family keeps profile_fd_composite (green r7-r10; the
-    # violation-count device is shared)
-    "profile_fd_discovery",
-    # exact-integer embedding coverage stays via the three in-window
-    # semantic-dedup entries + sim_ann_recall (green r7-r10; the
-    # quantized-kernel parity stays pytest-pinned)
-    "sim_ann_exactint",
-    # events family gains events_markov_transitions (same lead-window
-    # partitioning); green r8-r10, sliding-window distinct semantics
-    # pytest-pinned (tests/test_events_analytics.py)
-    "events_rolling_distinct",
-    # ---- round-11 seventh rotation: three seats for the survival /
-    # ---- decayed-value / conversion-z-test wave.  Each rester holds a
-    # ---- fresh r10 green and leaves its family covered:
-    # linkage family keeps link_fs_em + link_fs_classify in-window (the
-    # EM trainer subsumes the fixed-weight scorer's device); green
-    # r5-r10, the longest streak in the registry
-    "link_part_entities",
-    # tokenizer-training family keeps text_unigram_learn +
-    # text_unigram_encode + pipeline_bpe_pack in-window (the pack
-    # pipeline re-runs BPE encode end-to-end); green r7-r10, the
-    # learn-loop CTE oracle stays pytest-pinned
-    "text_bpe_learn",
-    # top-k family keeps topk_order_values in-window (re-seated this
-    # round); green r8-r10, the dominance-window device pytest-pinned
-    "topk_pareto_frontier",
-    # ---- round-11 eighth rotation: one seat for
-    # ---- events_attribution_removal (Markov removal-effect channel
-    # ---- attribution).  streaming family keeps THREE in-window seats
-    # ---- (incremental MV, per-group KLL, streaming SCD2) and the
-    # ---- per-batch PSI protocol stays pytest-pinned
-    # ---- (tests/test_streaming.py); green r7-r10.
-    "streaming_drift_psi",
-    # ---- round-11 ninth rotation: one seat for text_pmi_collocations
-    # ---- (PMI collocation extraction).  KLL family keeps
-    # ---- agg_kll_mergeable + agg_kll_by_segment +
-    # ---- streaming_kll_by_group in-window; green r9-r10, the rolling
-    # ---- merge-reuse device pytest-pinned (tests/test_sketches.py).
-    "agg_kll_rolling",
-    # ---- round-11 tenth rotation: one seat for streaming_markov_drift
-    # ---- (per-batch transition-matrix TV monitor).  Graph family
-    # ---- keeps graph_pagerank_flow + graph_triangle_count in-window;
-    # ---- green r9-r10, the large-star/small-star convergence stays
-    # ---- pytest-pinned (tests/test_graph.py).
-    "graph_label_propagation",
-    # ---- round-11 eleventh rotation: two seats for the per-segment
-    # ---- Wasserstein drift (drift_wasserstein_by_year) and the
-    # ---- Matryoshka prefix-recall audit (sim_matryoshka_recall).
-    # outlier-rule semantics stay pytest-pinned (tests/test_profile.py:
-    # MAD grids); the rule family keeps rule_domain_range,
-    # rule_k_anonymity, rule_monotonic_orderdate, rule_conversion_ztest
-    # in-window; green r8-r10
-    "rule_outlier_mad",
-    # CDC family keeps cdc_scd2_history + streaming_scd2_history
-    # in-window (the schema-changeset device shares the fingerprint
-    # diff); green r9-r10
-    "cdc_schema_changeset",
-    # ---- round-11 twelfth rotation: one seat for the 13-gram
-    # ---- collision contamination screen.  IVM family keeps
-    # ---- agg_incremental_join_mv in-window (the delta-apply device is
-    # ---- shared) and the streaming family keeps three seats; green
-    # ---- r7-r10 (four driver rounds).
-    "streaming_incremental_mv",
-    # ---- round-12 rotation (VERDICT r11 item 3): the 26 r4-vintage
-    # ---- resting greens — the oldest un-revalidated records, green
-    # ---- r1-r4 and resting 7 rounds — return to the window
-    # ---- (join_shipping_priority, agg_percentiles,
-    # ---- set_intersect_priority_profiles, join_asof_orders_events,
-    # ---- text_chunk_windows, dedup_ngram_jaccard, sim_bruteforce_topk,
-    # ---- events_sessionize, rule_column_names,
-    # ---- agg_rollup_region_nation, text_profile,
-    # ---- rule_uniqueness_metrics, rule_completeness,
-    # ---- scan_pushdown_projection, rule_type_enforcement,
-    # ---- streaming_failure_sink, join_region_revenue,
-    # ---- streaming_windowed_violations, pipeline_curate_corpus,
-    # ---- scan_permissive_roundtrip, rule_field_count_naive,
-    # ---- rule_referential_integrity, text_tfidf_top_terms,
-    # ---- multimodal_frame_sample, sample_stratified_orders,
-    # ---- dedup_exact_keep_first — all removed from this list), and
-    # ---- five seats go to the round-12 additions
-    # ---- (contamination_ngram_bloom, quality_linear_score,
-    # ---- curation_dsir_weights, sim_sq8_recall, link_golden_record).
-    # ---- THIRTY-ONE fresh r11 greens rest to make room.  The three
-    # ---- operators REWRITTEN this round (ts_theilsen_trend's
-    # ---- distributed median, drift_wasserstein's point-mass fix,
-    # ---- sim_hybrid_rrf's bounded dense leg) and the refactored
-    # ---- contamination_ngram_overlap STAY SEATED — a rewrite earns a
-    # ---- fresh driver record.  Per-entry twin rationale:
-    # The ten r5-vintage seats re-validated in r11 did their job and
-    # rest again (each green r1-r4 + r11); their plan shapes stay
-    # covered by the 26 re-seated r4-vintage twins (star-join + agg +
-    # top-k via join_shipping_priority / join_region_revenue /
-    # topk re-seats, rollup via agg_rollup_region_nation, window-dedup
-    # via the re-seated rules, JSON extraction pytest-pinned):
-    "agg_pricing_summary",
-    "rule_domain_range",
-    "agg_salted_skew_counts",
-    "topk_order_values",
-    "window_dedup_rank",
-    "join_full_outer_reconcile",
-    "join_semi_returned_orders",
-    "pivot_priority_status",
-    "supplier_acctbal_by_nation",
-    "events_json_extract",
-    # Green r10+r11; the semantic-dedup family keeps
-    # dedup_semantic_clusters in-window and the auto-k/IVF assignment
-    # devices stay pytest-pinned (tests/test_semantic_dedup.py).
-    "dedup_semantic_autok",
-    "dedup_semantic_twolevel",
-    # Green r9+r11 (fingerprint-key rewrite re-validated in r11); the
-    # exact-pairs family keeps dedup_ssjoin_prefix in-window and the
-    # re-seated dedup_exact_keep_first carries the fingerprint device.
-    "dedup_shared_substrings",
-    # Green r10+r11; KLL keeps agg_kll_mergeable +
-    # streaming_kll_by_group in-window (the per-segment merge is the
-    # same device, pytest-pinned in tests/test_sketches.py).
-    "agg_kll_by_segment",
-    # Green r11 (first exposure); the tokenizer-training family keeps
-    # pipeline_bpe_pack in-window (token-exact encode+pack) and the
-    # hard-EM/Viterbi semantics stay pytest-pinned
-    # (tests/test_unigram_tokenizer.py).
-    "text_unigram_learn",
-    "text_unigram_encode",
-    # Green r11 (first exposure); the linkage family keeps
-    # link_golden_record in-window, which RUNS link_entity_pairs
-    # end-to-end (the FS agreement-vector device), and the EM fixtures
-    # stay pytest-pinned (tests/test_linkage.py).
-    "link_fs_em",
-    "link_fs_classify",
-    # Green r11 (first exposure); the events family keeps
-    # events_sessionize (re-seated) in-window and the lead-window
-    # transition/survival/attribution semantics stay pytest-pinned
-    # (tests/test_events_analytics.py).
-    "events_markov_transitions",
-    "events_survival_km",
-    "events_attribution_removal",
-    # Green r11 (first exposure); the rule family keeps FIVE re-seated
-    # rule_* seats plus rule_k_anonymity in-window; the lag-window
-    # inversion count and the two-proportion z-grid stay pytest-pinned.
-    "rule_monotonic_orderdate",
-    "rule_conversion_ztest",
-    # Green r11 (first exposure); the dedup family keeps
-    # dedup_ssjoin_prefix + the re-seated dedup_ngram_jaccard and
-    # dedup_exact_keep_first in-window; the containment inverted-index
-    # device stays pytest-pinned (tests/test_text_dedup.py).
-    "dedup_ngram_containment",
-    # Green r11 (first exposure); rests with its quantization
-    # unchanged from r11 (the round-12 floor-division alarm proved
-    # false: Spark div == DuckDB // on both signs, pinned against live
-    # DuckDB in tests/test_relational.py).
-    "agg_time_decayed_value",
-    # Green r11 (first exposure); the text-stats family keeps the
-    # re-seated text_profile/text_tfidf_top_terms in-window and the
-    # integer cross-ratio ordering stays pytest-pinned.
-    "text_pmi_collocations",
-    # Green r11 (first exposure); the streaming family keeps
-    # streaming_scd2_history + streaming_kll_by_group + the re-seated
-    # streaming_failure_sink and streaming_windowed_violations
-    # in-window; the per-batch TV-drift protocol stays pytest-pinned
-    # (tests/test_streaming.py).
-    "streaming_markov_drift",
-    # Green r11 (first exposure); the drift family keeps
-    # drift_wasserstein in-window (same W1 kernel, re-validated after
-    # the point-mass fix) and the per-group variant edge handling is
-    # pytest-pinned (tests/test_relational.py).
-    "drift_wasserstein_by_year",
-    # Green r11 (first exposure); the embedding-audit family keeps
-    # sim_ann_recall + the NEW sim_sq8_recall in-window (the same
-    # truth-ranking/recall device, width axis instead of dimension).
-    "sim_matryoshka_recall",
-    # Green r10+r11; the as-of family keeps the re-seated
-    # join_asof_orders_events in-window and the TTL/age grid stays
-    # pytest-pinned (tests/test_relational.py).
-    "join_point_in_time",
-    # Green r10+r11; the sampling family keeps the re-seated
-    # sample_stratified_orders in-window and the group-leakage split
-    # determinism stays pytest-pinned (tests/test_sampling.py).
-    "sample_cluster_split",
-    # ---- round-12 second rotation: two seats for the session's
-    # ---- second wave (drift_mannwhitney — the rank-based member
-    # ---- completing the KS/W1 drift family — and
-    # ---- link_sorted_neighborhood — SNM candidate generation, the
-    # ---- classic complement to token blocking).  Twin rationale:
-    # Green r9-r11 (three driver rounds); the graph family keeps
-    # graph_pagerank_flow in-window and the triangle support-counting
-    # device stays pytest-pinned (tests/test_graph.py).
-    "graph_triangle_count",
-    # Green r10+r11; the CDC/SCD2 family keeps streaming_scd2_history
-    # in-window (the incremental==rebuild check subsumes the batch
-    # build) and the interval semantics stay pytest-pinned
-    # (tests/test_cdc.py).
-    "cdc_scd2_history",
-    # ---- round-12 third rotation: two seats for the session's third
-    # ---- wave (agg_winsorized_stats — the clamping robust-location
-    # ---- member beside the trimmed-mean UDAF and the MAD rule — and
-    # ---- sim_kcenter_coreset — Gonzalez farthest-point coverage
-    # ---- selection, the geometric complement to DSIR).  Rationale:
-    # Green r10+r11; the multimodal family keeps the re-seated
-    # multimodal_frame_sample in-window and the dHash/banded-LSH
-    # losslessness stays pytest-pinned (tests/test_multimodal.py).
-    "multimodal_phash_neardup",
-    # Green r9-r11 (three driver rounds); KLL keeps
-    # streaming_kll_by_group in-window (the same mergeable-sketch
-    # device under the streaming commit protocol) and the
-    # rank-tolerance grids stay pytest-pinned (tests/test_sketches.py).
-    "agg_kll_mergeable",
-    # ---- round-13 rotation (VERDICT r12 item 3): the r5-vintage (15)
-    # ---- and r7-vintage (18) resting blocks — the oldest
-    # ---- un-revalidated records, at rest 8 and 6 rounds — return to
-    # ---- the window, the seven r8-vintage rows-only sketch kernels
-    # ---- plus the two r1-vintage rows-only entries re-seat via
-    # ---- _SEATED_ROWS_ONLY for second driver records, and three
-    # ---- seats go to the round's additions (quality_linear_train,
-    # ---- pipeline_quality_train_score, dedup_excise_spans).  The
-    # ---- five entries REWRITTEN or behavior-touched this round stay
-    # ---- seated for fresh records (sim_kcenter_coreset running-min
-    # ---- rewrite, link_sorted_neighborhood skew/NULL guard,
-    # ---- sim_hybrid_rrf explicit dense bound, link_golden_record +
-    # ---- curation_dsir_weights cache-release fixes).  FORTY-FIVE
-    # ---- fresh r12 greens rest to make room.  Family rationale:
-    # The 26 r4-vintage re-validation seats did their job (fresh r12
-    # greens on 8-round-old records) and rest again; their plan shapes
-    # stay covered by the re-seated r5/r7 twins (star-join/agg via
-    # validation_summary_lineitem + agg_correlation_matrix, as-of via
-    # join_asof_forward, scan roundtrips via scan_orc +
-    # scan_parquet_evolving, window frames via window_moving_avg_7d,
-    # sessionize gap semantics pytest-pinned):
-    "scan_pushdown_projection",
-    "scan_permissive_roundtrip",
-    "rule_field_count_naive",
-    "rule_column_names",
-    "rule_type_enforcement",
-    "rule_uniqueness_metrics",
-    "rule_completeness",
-    "rule_referential_integrity",
-    "set_intersect_priority_profiles",
-    "join_shipping_priority",
-    "join_region_revenue",
-    "agg_rollup_region_nation",
-    "agg_percentiles",
-    "join_asof_orders_events",
-    "events_sessionize",
-    "streaming_windowed_violations",
-    "streaming_failure_sink",
-    "text_profile",
-    "text_chunk_windows",
-    "pipeline_curate_corpus",
-    "dedup_exact_keep_first",
-    "dedup_ngram_jaccard",
-    "sim_bruteforce_topk",
-    "sample_stratified_orders",
-    "multimodal_frame_sample",
-    "text_tfidf_top_terms",
-    # Green r7-r12 (sim_ann_recall: six driver rounds); the ANN family
-    # seats its three rows-only kernels this round and the recall
-    # ground-truth device stays pytest-pinned; the sq8 audit rests on
-    # its first green.
-    "sim_ann_recall",
-    "sim_sq8_recall",
-    # Green r7-r12; FD/profile coverage passes to the re-seated
-    # rule_functional_dependency + profile_mutual_information +
-    # profile_key_skew + profile_join_cardinality (the same
-    # violation-count and estimation devices).
-    "profile_fd_composite",
-    # Green r7-r12; the curation family keeps quality_gopher_flags +
-    # contamination_probes (re-seated) plus both NEW classifier
-    # entries in-window; k-anonymity grids stay pytest-pinned.
-    "rule_k_anonymity",
-    # Green r6-r12; tokenizer coverage passes to the re-seated
-    # text_bpe_encode (token-exact encode) and the learn-loop oracle
-    # stays pytest-pinned.
-    "pipeline_bpe_pack",
-    # Green r7-r12; storage-layout coverage passes to the re-seated
-    # layout_zorder_stats (write-at-query-time manifest).
-    "layout_compaction_plan",
-    # Green r8-r12; the exact-pairs family seats dedup_excise_spans
-    # (NEW: the span REMOVAL transform over the same gram relation)
-    # and the prefix-filter losslessness stays pytest-pinned.
-    "dedup_ssjoin_prefix",
-    # Green r8-r12; IVM rests one round as a family (all four members
-    # hold r10-r12 greens); the per-bucket merge device stays
-    # pytest-pinned (tests/test_incremental.py).
-    "agg_incremental_join_mv",
-    # Green r8-r12; the graph family rests one round (pagerank green
-    # five consecutive rounds; triangle/label-prop r9-r11), the
-    # unrolled-CTE iteration device recurs in the NEW
-    # quality_linear_train oracle this round.
-    "graph_pagerank_flow",
-    # Green r9-r12; the semantic tier rests with its auto-k/IVF twins
-    # (r10-r11 greens); the exact-int assignment kernel parity stays
-    # pytest-pinned (tests/test_semantic_dedup.py).
-    "dedup_semantic_clusters",
-    # Green r9-r12 / r10-r12; the streaming family keeps TWO re-seated
-    # seats (stateful sessionize, exactly-once sink) and the SCD2
-    # incremental==rebuild check stays pytest-pinned.
-    "streaming_scd2_history",
-    "streaming_kll_by_group",
-    # Green r11+r12 (rewritten in r12, fresh record earned); the
-    # robust-trend device stays pytest-pinned and the timeseries
-    # family rests one round (cascade/TWAP hold r9-r11 greens).
-    "ts_theilsen_trend",
-    # Green r11+r12 (point-mass fix re-validated); drift coverage
-    # passes to the re-seated drift_chi2_priority; the W1/rank-sum
-    # kernels stay pytest-pinned.
-    "drift_wasserstein",
-    "drift_mannwhitney",
-    # Green r12 first exposures, resting after one round: the
-    # winsorized stats device is pytest-pinned (tests/test_profile.py)
-    # and the robust-location family keeps the re-seated trimmed-mean
-    # UDAF in-window.
-    "agg_winsorized_stats",
-    # Green r11+r12 (refactor re-validated) + r12 first exposure; the
-    # contamination family keeps contamination_probes (re-seated) and
-    # the Bloom bitmap sizing stays pytest-pinned.
-    "contamination_ngram_overlap",
-    "contamination_ngram_bloom",
-    # Green r12; the inference half's device (zero-shuffle broadcast
-    # array fold) is re-exercised every round by BOTH new training
-    # entries (the pipeline entry ends in linear_quality_scores).
-    "quality_linear_score",
-    # ---- round-13 second rotation: two seats for the session's second
-    # ---- wave (text_repetition_metrics — the full Gopher line/n-gram
-    # ---- repetition suite — and ts_changepoint_cusum — exact-integer
-    # ---- CUSUM mean-shift detection).  Two r13-kept seats yield:
-    # Green r11+r12; this round's edit passes the former default bound
-    # EXPLICITLY (dense_top_m=100), so the seated plan and result are
-    # bit-identical to the r12 green — no rewrite to re-validate; the
-    # truncation-equivalence stays pytest-pinned.
-    "sim_hybrid_rrf",
-    # Green r12; this round's edit only wraps the return in
-    # materialize_release (cache lifetime, not semantics) — result
-    # unchanged from the r12 green; the LLR scoring stays
-    # pytest-pinned.
-    "curation_dsir_weights",
-]
-
-#: Round-8 window seats for the seven hash-dependent sketch kernels
-#: (VERDICT r7 item 3): genuinely non-SQL-expressible (their outputs
-#: depend on engine-internal hash functions), so they carry no oracle —
-#: the driver records the weaker rows-only check, which is exactly the
-#: point: each gets its first CORRECTNESS row ever this round.  Their
-#: SEMANTICS stay pinned by pytest recall/parity tests and by oracled
-#: twins (sim_ann_recall, sim_ann_exactint, emb_near_dup_*).
-_SEATED_ROWS_ONLY: list = [
-    # Rounds 9-12: EMPTY.  All seven hash-dependent sketch kernels got
-    # their rows-only driver records in CORRECTNESS_r08 (the point of
-    # the round-8 seating); their seats returned to oracled entries.
-    # Round 13 (VERDICT r12 item 3): the rows-only family re-seats for
-    # SECOND driver records — the seven r8-vintage kernels have rested
-    # 5 rounds and the two r1-vintage entries 12 rounds, the oldest
-    # records of any kind in the ledger.  Their semantics stay
-    # pytest-pinned (recall/parity tests) and oracle-twinned
-    # (sim_ann_recall — resting with six greens — sim_ann_exactint,
-    # emb_near_dup_*, dedup_ssjoin_prefix).
-    "rule_field_count_quoted",
-    "agg_approx_distinct",
-    # dedup_minhash_lsh and dedup_winnowing complete the family's
-    # deferral, yielding to the NEW oracled agg_gini_customer_revenue /
-    # agg_hhi_supplier_nation (first-exposure ORACLED entries outrank
-    # second rows-only records — the uniform rationale: all seven r8
-    # kernels now rest together on their r8 records, recall
-    # pytest-pinned, exact contracts oracle-twinned).
-    # dedup_simhash and dedup_minhash_clusters yield their seats to
-    # the NEW oracled ts_pettitt_changepoint / ts_runs_test (a
-    # first-exposure ORACLED entry outranks a second rows-only
-    # record, the sim_ann_* rationale below): simhash's hamming-band
-    # recall is pytest-pinned (tests/test_dedup.py) and its banding
-    # device shared with the seated dedup_minhash_lsh; the cluster
-    # closure's connected components are oracle-twinned by
-    # link_golden_record (seated, fresh r12 green) — second rows-only
-    # records deferred one round.
-    # sim_ann_lsh yields its seat to the NEW oracled ts_acf_daily,
-    # closing the trio: the three sim_ann_* kernels rest TOGETHER on
-    # their r8 records (uniform rationale below — recall pytest-pinned,
-    # exact-rank contract oracle-twinned by sim_ann_recall /
-    # sim_ann_exactint); the hash-distinct minhash/winnowing/simhash/
-    # clusters kernels and the two r1-vintage entries keep their seats.
-    # sim_ann_ivf yields its seat to the NEW oracled
-    # ts_binseg_changepoints on the same grounds as sim_ann_pq below:
-    # its coarse-quantizer recall is pytest-pinned and its exact-rank
-    # contract oracle-twinned (sim_ann_recall/sim_ann_exactint, and
-    # the IVF training kernel shares dedup_semantic_twolevel's oracled
-    # quantizer); second rows-only record deferred one round.
-    # sim_ann_pq yields its seat to the NEW oracled drift_cvm (the
-    # window holds exactly 50): of the r8 kernels it is the most
-    # redundantly covered — its exact-rank contract is oracle-twinned
-    # by sim_ann_exactint and its codebook recall pytest-pinned
-    # (tests/test_similarity.py) — so its second rows-only record
-    # waits one round; a first-exposure ORACLED entry outranks a
-    # second rows-only record.
-]
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _reorder_registry() -> None:
-    head = {n: s for n, s in REGISTRY.items() if n not in _DEMOTED_TO_TAIL}
-    tail = {n: REGISTRY[n] for n in _DEMOTED_TO_TAIL}
-    # Oracled entries lead, preserving definition order within each
-    # class, so the driver's window is spent on hash-checkable rows —
-    # except the explicitly seated rows-only kernels (VERDICT r7
-    # item 3), which follow the oracled block and fill the window's
-    # remaining seats for their one rows-only record.
-    ordered = {n: s for n, s in head.items() if s.oracle is not None}
-    ordered.update(
-        {n: REGISTRY[n] for n in _SEATED_ROWS_ONLY if n in head}
+def _correctness_paths() -> list[str]:
+    """The git-tracked ``CORRECTNESS_r*.json`` files at the repo root.
+
+    A new round's file can land in the worktree untracked; reading only
+    tracked files keeps the order (and COVERAGE.md) a function of the
+    committed tree.  Falls back to a glob where git is unavailable (e.g. an
+    exported tarball).
+    """
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "CORRECTNESS_r*.json"],
+            cwd=_REPO_ROOT,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.split()
+        if out:
+            return sorted(os.path.join(_REPO_ROOT, p) for p in out)
+    except (OSError, subprocess.CalledProcessError):
+        pass
+    return sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")))
+
+
+def correctness_history() -> dict[str, list[tuple[int, dict]]]:
+    """Entry name -> ``[(round, driver row), ...]`` over the tracked files."""
+    history: dict[str, list[tuple[int, dict]]] = {}
+    for path in _correctness_paths():
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                if isinstance(row, dict):
+                    history.setdefault(name, []).append((rnd, row))
+    return history
+
+
+def is_green(row: dict) -> bool:
+    """The driver's full gate: row count, schema and value hash all match."""
+    return bool(
+        row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
     )
-    ordered.update({n: s for n, s in head.items() if s.oracle is None})
-    ordered.update(tail)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
 
 
-_reorder_registry()
+def driver_order(history: dict[str, list[tuple[int, dict]]]) -> list[str]:
+    """Registry names in the order the driver should check them.
+
+    A counting record is a green row for an oracled entry and any row with
+    ``spark_rows >= 0`` for a rows-only one.  Entries without one come
+    first, then oracled entries least recently green first, then rows-only
+    entries; ties keep definition order (``sorted`` is stable).
+    """
+
+    def counts(row: dict, rows_only: bool) -> bool:
+        if rows_only:
+            return row.get("spark_rows") is not None and row["spark_rows"] >= 0
+        return is_green(row)
+
+    def key(name: str) -> tuple[bool, bool, int]:
+        rows_only = REGISTRY[name].oracle is None
+        rounds = [r for r, row in history.get(name, []) if counts(row, rows_only)]
+        return (bool(rounds), rows_only, max(rounds, default=0))
+
+    return sorted(REGISTRY, key=key)
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.fn for name, spec in REGISTRY.items()}
+    """The driver's ``queries()`` in ``driver_order``; its first
+    ``_DRIVER_WINDOW_SIZE`` names are the correctness window."""
+    order = driver_order(correctness_history())
+    return {name: REGISTRY[name].fn for name in order}
 
 
 def all_oracles() -> dict[str, str]:

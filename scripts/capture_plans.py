@@ -112,26 +112,29 @@ def main() -> None:
     for n in _real_actions:
         setattr(_DF, n, _spy(n))
 
-    registry = all_queries()
-    names = [n for n in registry if not only or n in only]
-    for name in names:
-        captured.clear()
-        spark.sparkContext.setJobDescription(f"plan-capture: {name}")
-        try:
-            df = registry[name](spark, SF_DIR)
-            parts = []
-            for i, (label, inner) in enumerate(captured):
-                parts.append(f"== {label} plan #{i + 1} ==\n{inner}")
-            parts.append(f"== returned frame plan ==\n{formatted_explain(df)}")
-            body = "\n\n".join(parts)
-        except Exception as exc:  # record, keep going
-            body = f"ERROR capturing plan: {exc!r}"
-        with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as fh:
-            fh.write(f"query: {name}\nsf_dir: {SF_DIR}\ntag: {tag}\n\n{body}\n")
-        print(name, flush=True)
-    for n, real in _real_actions.items():
-        setattr(_DF, n, real)
-    spark.stop()
+    try:
+        registry = all_queries()
+        names = [n for n in registry if not only or n in only]
+        for name in names:
+            captured.clear()
+            spark.sparkContext.setJobDescription(f"plan-capture: {name}")
+            try:
+                df = registry[name](spark, SF_DIR)
+                parts = []
+                for i, (label, inner) in enumerate(captured):
+                    parts.append(f"== {label} plan #{i + 1} ==\n{inner}")
+                parts.append(f"== returned frame plan ==\n{formatted_explain(df)}")
+                body = "\n\n".join(parts)
+            except Exception as exc:  # record, keep going
+                body = f"ERROR capturing plan: {exc!r}"
+            with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as fh:
+                fh.write(f"query: {name}\nsf_dir: {SF_DIR}\ntag: {tag}\n\n{body}\n")
+            print(name, flush=True)
+    finally:
+        for n, real in _real_actions.items():
+            setattr(_DF, n, real)
+        D.materialize_release = real_mr
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -4,7 +4,7 @@ ledger (VERDICT r7 item 8): one row per registry entry with the round
 of its most recent driver-GREEN CORRECTNESS record, so rotation debt is
 visible without replaying every CORRECTNESS_r*.json by hand.
 
-Definitions (matching tests/test_entry_oracle.py's rotation contract):
+Definitions:
 
 - **green**  — rows_match AND schema_match AND hash_match in some
   CORRECTNESS_r{N}.json (the driver's full value-hash gate);
@@ -12,8 +12,8 @@ Definitions (matching tests/test_entry_oracle.py's rotation contract):
   with the round so regressions are visible);
 - **rows-only** — the entry carries no oracle; a driver record (any
   row with spark_rows ≥ 0) is the strongest check it can receive;
-- **never**  — no driver record in any committed round (must hold a
-  seat in the CURRENT window, which the rotation pytest enforces).
+- **never**  — no driver record in any committed round
+  (``queries.driver_order`` seats these first).
 
 Run from the repo root: ``python scripts/gen_coverage.py`` rewrites
 COVERAGE.md; ``tests/test_coverage_ledger.py`` regenerates the text and
@@ -22,68 +22,27 @@ asserts the committed file is fresh.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _correctness_paths() -> list[str]:
-    """Git-TRACKED CORRECTNESS files only (VERDICT r9 item 1).
-
-    The driver drops the current round's CORRECTNESS_r{N}.json into the
-    worktree *untracked* after taking its snapshot; a ledger built from a
-    filesystem glob goes stale the moment that happens, failing the
-    freshness pytest in the judge's session even though nothing the
-    builder committed changed.  Building from `git ls-files` makes the
-    committed COVERAGE.md a pure function of the committed tree, so an
-    untracked driver drop can never invalidate it.  Falls back to the
-    glob when git is unavailable (e.g. an exported tarball).
-    """
-    try:
-        out = subprocess.run(
-            ["git", "ls-files", "CORRECTNESS_r*.json"],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            check=True,
-        ).stdout.split()
-        if out:
-            return sorted(os.path.join(REPO, p) for p in out)
-    except (OSError, subprocess.CalledProcessError):
-        pass
-    return sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-
-
 def build_ledger() -> str:
     from big_data_validator_spark.queries import (
         REGISTRY,
         _DRIVER_WINDOW_SIZE,
+        correctness_history,
+        driver_order,
+        is_green,
     )
 
-    recorded: dict[str, list] = {}
-    for path in _correctness_paths():
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
-        with open(path) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            if isinstance(row, dict):
-                recorded.setdefault(name, []).append((rnd, row))
+    recorded = correctness_history()
 
     def status(name: str, oracled: bool) -> tuple[str, str]:
         recs = recorded.get(name, [])
-        greens = [
-            r
-            for r, row in recs
-            if row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        ]
+        greens = [r for r, row in recs if is_green(row)]
         weaks = [
             r
             for r, row in recs
@@ -101,16 +60,16 @@ def build_ledger() -> str:
             return ("red", f"r{max(r for r, _ in recs)}")
         return ("never", "—")
 
-    names = list(REGISTRY)
+    names = driver_order(recorded)
     window = set(names[:_DRIVER_WINDOW_SIZE])
     lines = [
         "# COVERAGE — driver-window correctness ledger",
         "",
         "Generated by `scripts/gen_coverage.py` from the *git-tracked*",
-        "`CORRECTNESS_r*.json` files and the CURRENT registry order —",
-        "do not edit by hand (`tests/test_coverage_ledger.py` asserts",
-        "freshness).  `seat` marks the entries the driver will record",
-        f"this round (first {_DRIVER_WINDOW_SIZE} registry slots).",
+        "`CORRECTNESS_r*.json` files — do not edit by hand",
+        "(`tests/test_coverage_ledger.py` asserts freshness).  Rows follow",
+        "`queries.driver_order`; `seat` marks the entries the driver will",
+        f"record this round (the first {_DRIVER_WINDOW_SIZE} in that order).",
         "",
         "| # | entry | oracle | status | last driver record | seat |",
         "|---:|---|---|---|---|---|",

@@ -1,6 +1,5 @@
-"""The driver's bench contract: every HEADLINE name must resolve in the
-registry (a rename here crashed BENCH_r03 — this pins it at test time,
-minutes instead of a lost round)."""
+"""The driver's bench contract: bench.HEADLINE is every registry entry
+not in bench.EXCLUDED, and the script emits its JSON contract lines."""
 
 from __future__ import annotations
 
@@ -9,29 +8,16 @@ import subprocess
 import sys
 
 
-def test_headline_names_resolve_in_registry():
+def test_every_exclusion_names_a_registry_entry():
+    """HEADLINE is derived from the registry, so the one hand-kept list is
+    EXCLUDED: a key left stale by a rename would silently bench the
+    renamed entry."""
     import bench
 
     from big_data_validator_spark.queries import REGISTRY
 
-    missing = [n for n in bench.HEADLINE if n not in REGISTRY]
-    assert not missing, f"bench.HEADLINE names absent from registry: {missing}"
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "duplicate names"
-
-
-def test_every_registry_entry_is_benched_or_explicitly_excluded():
-    """No silent bench caps (VERDICT r7 missing-item 3): every registry
-    entry is either in the HEADLINE set or carries a written exclusion
-    reason that ships in BENCH_DETAIL.json."""
-    import bench
-
-    from big_data_validator_spark.queries import REGISTRY
-
-    covered = set(bench.HEADLINE) | set(bench.EXCLUDED)
-    gaps = [n for n in REGISTRY if n not in covered]
-    assert not gaps, f"registry entries neither benched nor excluded: {gaps}"
-    overlap = set(bench.HEADLINE) & set(bench.EXCLUDED)
-    assert not overlap, f"both benched and excluded: {overlap}"
+    stale = [n for n in bench.EXCLUDED if n not in REGISTRY]
+    assert not stale, f"bench.EXCLUDED names absent from registry: {stale}"
 
 
 def test_prev_ratio_device_isolates_localized_regression():

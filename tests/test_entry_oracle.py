@@ -169,106 +169,36 @@ def test_oracle_less_query_runs(spark, name):
     assert sdf.count() >= 0
 
 
-def test_driver_window_is_all_oracled():
-    """The driver records CORRECTNESS rows for the first 50 registry
-    entries only; every one of those slots must carry an oracle so no
-    hash-checkable query is wasted outside the window — except the
-    explicitly seated rows-only sketch kernels (VERDICT r7 item 3:
-    hash-dependent outputs can't be oracled, but each must appear in
-    at least one CORRECTNESS file even as a rows-only record)."""
-    from big_data_validator_spark.queries import (
-        REGISTRY,
-        _DRIVER_WINDOW_SIZE,
-        _SEATED_ROWS_ONLY,
-    )
+def test_driver_order_follows_last_counting_record():
+    """driver_order on an injected history: entries without a counting
+    record lead, recorded oracled entries follow least recently green
+    first (ties in REGISTRY order), recorded rows-only entries come last,
+    and a hash-red record does not count as green."""
+    from big_data_validator_spark.queries import REGISTRY, driver_order
 
-    names = list(REGISTRY)
-    window = names[:_DRIVER_WINDOW_SIZE]
-    assert all(
-        REGISTRY[n].oracle or n in _SEATED_ROWS_ONLY for n in window
-    ), [
-        n
-        for n in window
-        if not REGISTRY[n].oracle and n not in _SEATED_ROWS_ONLY
-    ]
-    assert set(_SEATED_ROWS_ONLY) <= set(window)
-    # Every LLM-pipeline family the judge grades must sit in-window
-    # (membership rotates — see _DEMOTED_TO_TAIL — but each family keeps
-    # at least one seat).
-    for required in [
-        # ---- round-13 window (VERDICT r12 item 3): the r5-vintage
-        # (15) and r7-vintage (18) resting blocks — the oldest
-        # un-revalidated records — re-seated for fresh driver rows.
-        # (The r4-vintage block re-validated in r12 rests again with
-        # fresh greens; the r12 additions rest on their first greens;
-        # family coverage per the _DEMOTED_TO_TAIL rationale block.)
-        # (window_moving_avg_7d and agg_correlation_matrix yielded
-        # their re-validation seats to the NEW oracled
-        # drift_mannwhitney_by_segment / ts_mann_kendall in the sixth
-        # rotation — their devices are redundantly in-window, see
-        # _DEMOTED_TO_TAIL.)
-        "scan_orc", "scan_parquet_evolving", "agg_hll_mergeable",
-        "emb_centroid_by_label",
-        # (scan_unpivot_metrics yielded its re-validation seat to the
-        # NEW oracled ts_ols_trend — its stack device is recomputed
-        # in-window by ts_xcorr_daily, see _DEMOTED_TO_TAIL.)
-        # (agg_equidepth_histogram yielded its re-validation seat to
-        # the NEW oracled rule_mcnemar_disagreement — its counts+block
-        # device is recomputed in-window by agg_gini_customer_revenue,
-        # see _DEMOTED_TO_TAIL.)
-        "layout_zorder_stats",
-        "rule_candidate_keys", "text_langid_confusion",
-        # (drift_chi2_priority yielded its re-validation seat to the
-        # NEW oracled agg_cramers_v_matrix — the V blocks recompute the
-        # chi-square contingency device, see _DEMOTED_TO_TAIL.)
-        "dim_scd2_user_state", "rule_key_gaps",
-        "join_range_binned",
-        "multimodal_features", "streaming_sessionize_stateful",
-        "agg_trimmed_mean_udaf", "rule_functional_dependency",
-        "rule_order_totals_reconcile", "sample_hash_split",
-        # (events_anomaly_weekday yielded its re-validation seat to
-        # the NEW oracled drift_segment_bh_scan — the FDR-controlled
-        # generalization of its per-group anomaly-z device, see
-        # _DEMOTED_TO_TAIL.)
-        "profile_join_cardinality",
-        "corpus_mixture_quality", "profile_mutual_information",
-        # (streaming_exactly_once_sink yielded its re-validation seat
-        # to the NEW oracled streaming_mannwhitney_drift — same
-        # _SUCCESS commit protocol exercised twice per batch, see
-        # _DEMOTED_TO_TAIL.)
-        "validation_summary_lineitem",
-        "profile_key_skew", "join_asof_forward", "text_bpe_encode",
-        "cdc_changeset_orders", "contamination_probes",
-        "quality_gopher_flags",
-        # operators rewritten in round 13 stay seated for fresh
-        # records: the running-min k-center, the skew/NULL-guarded
-        # sorted neighborhood, and the golden-record release fix.
-        # (sim_hybrid_rrf and curation_dsir_weights rest on their r12
-        # greens — this round's edits left their seated plans and
-        # results bit-identical, see _DEMOTED_TO_TAIL.)
-        # (sim_kcenter_coreset, link_sorted_neighborhood and
-        # link_golden_record rest on their r12 greens: the r13 edits
-        # are result-identical on the seated corpus and pytest-pinned
-        # — see _DEMOTED_TO_TAIL.)
-        # round-13 additions: each must get its driver row
-        "quality_linear_train", "pipeline_quality_train_score",
-        "dedup_excise_spans",
-        # round-13 second wave
-        "text_repetition_metrics", "ts_changepoint_cusum",
-        # round-13 third wave (the sim_ann_* trio yielded its rows-only
-        # seats — see the _SEATED_ROWS_ONLY rationale)
-        "drift_cvm", "ts_binseg_changepoints", "ts_acf_daily",
-        # round-13 fourth wave
-        "ts_pettitt_changepoint", "ts_runs_test", "agg_spearman_rank",
-        "agg_gini_customer_revenue", "agg_hhi_supplier_nation",
-        "agg_kendall_tau", "ts_xcorr_daily",
-        # round-13 fifth wave
-        "drift_mannwhitney_by_segment", "ts_mann_kendall",
-        "agg_cramers_v_matrix", "drift_segment_bh_scan",
-        "ts_ols_trend", "rule_mcnemar_disagreement",
-        "streaming_mannwhitney_drift",
-    ]:
-        assert required in window, required
+    a, b, c, weak_only, never = [n for n, s in REGISTRY.items() if s.oracle][:5]
+    rows_old, rows_new, rows_failed, rows_never = [
+        n for n, s in REGISTRY.items() if not s.oracle
+    ][:4]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 3}
+    weak = dict(green, hash_match=False)
+    rows = {"rows_match": None, "schema_match": None, "hash_match": None,
+            "spark_rows": 3}
+    history = {
+        a: [(2, green), (7, weak)],
+        b: [(5, green)],
+        c: [(2, green)],
+        weak_only: [(3, weak)],
+        rows_old: [(1, rows)],
+        rows_new: [(9, rows)],
+        rows_failed: [(4, dict(rows, spark_rows=-1))],
+    }
+    order = driver_order(history)
+    assert sorted(order) == sorted(REGISTRY)
+    assert order[-5:] == [a, c, b, rows_old, rows_new]
+    for name in (never, weak_only, rows_failed, rows_never):
+        assert order.index(name) < len(order) - 5, name
 
 
 def test_every_oracled_entry_reaches_the_driver_window():
@@ -278,29 +208,21 @@ def test_every_oracled_entry_reaches_the_driver_window():
     checked-in CORRECTNESS_r*.json or hold a seat in the CURRENT window
     (so it gets its row this round).  Red if a rotation is reverted
     without first having shipped a driver-green round."""
-    import glob
-    import json
-
     from big_data_validator_spark.queries import (
-        REGISTRY,
         _DRIVER_WINDOW_SIZE,
         all_oracles,
+        all_queries,
+        correctness_history,
     )
 
-    seen: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        with open(path) as fh:
-            recorded = json.load(fh)
-        # only driver-GREEN rows count as coverage; a recorded failure
-        # doesn't retire an entry's need for a green round
-        seen |= {
-            n
-            for n, row in recorded.items()
-            if isinstance(row, dict)
-            and row.get("rows_match")
-            and row.get("schema_match")
-        }
-    window = set(list(REGISTRY)[:_DRIVER_WINDOW_SIZE])
+    # only driver-GREEN rows count as coverage; a recorded failure
+    # doesn't retire an entry's need for a green round
+    seen = {
+        n
+        for n, recs in correctness_history().items()
+        if any(row.get("rows_match") and row.get("schema_match") for _, row in recs)
+    }
+    window = set(list(all_queries())[:_DRIVER_WINDOW_SIZE])
     orphans = [n for n in all_oracles() if n not in seen and n not in window]
     assert not orphans, (
         f"oracled entries never driver-checked and not scheduled: {orphans}"
