@@ -1,13 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark registry entries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints per-query detail (one JSON line + BENCH_DETAIL.json, both with the
-full {name: sec} median and min maps), then the FINAL line is the compact
-driver contract — small enough to always survive the driver's ~2 KB tail
-capture (VERDICT r4 §1):
+    python bench.py                       # the HEADLINE (the contract run)
+    python bench.py name1 name2 ...       # just those entries
+    python bench.py --ref DIR [names...]  # scale run, merged into BENCH_SCALE.json
+
+Every run builds one session, runs an untimed warm pass, then reports the
+per-query median (and min) of $SPARK_GRAFT_BENCH_PASSES timed passes.
+
+Prints per-query detail (one JSON line, with the full {name: sec} median
+and min maps), then the FINAL line is the compact driver contract — small
+enough to always survive the driver's ~2 KB tail capture (VERDICT r4 §1):
     {"metric": "headline_queries_total_wall", "value": <total_sec>,
      "unit": "sec", "value_min": ..., "sf": ..., "stat": "median",
      "passes": N, "n_queries": N, "queries_detail": "BENCH_DETAIL.json"}
+The no-argument run also writes the detail to the repo-root
+BENCH_DETAIL.json; a run with names or ``--ref`` writes a detail file only
+where $SPARK_GRAFT_DETAIL_PATH points.
+
+``--ref DIR`` times each name at DIR and at $SPARK_GRAFT_SF_DIR,
+interleaved in the same session so the data-scale ratio is free of
+host-speed drift between sessions, and merges those rows into
+BENCH_SCALE.json (with no names: every row already in it).
 
 Each query executes fully (noop sink — no driver-side row transfer, so the
 measurement is the distributed plan, not collect serialization).
@@ -15,6 +29,8 @@ measurement is the distributed plan, not collect serialization).
 
 from __future__ import annotations
 
+import argparse
+import copy
 import json
 import os
 import statistics
@@ -22,7 +38,8 @@ import sys
 import time
 from typing import Optional
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +47,8 @@ from big_data_validator_spark.queries import REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DETAIL_PATH = os.path.join(ROOT, "BENCH_DETAIL.json")
+SCALE_PATH = os.path.join(ROOT, "BENCH_SCALE.json")
 
 #: Registry entries deliberately NOT benched, with the reason shipped in
 #: BENCH_DETAIL.json (VERDICT r7 missing-item 3 — a silent cap reads as
@@ -51,6 +70,75 @@ EXCLUDED = {
 
 #: Headline set: every registry entry not EXCLUDED, in definition order.
 HEADLINE = [name for name in REGISTRY if name not in EXCLUDED]
+
+SCALE_NOTE = (
+    "synthetic sf1.0: 10 key-shifted copies of sf0.1 "
+    "(scripts/gen_sf_scaleup.py; docs near-dup-tagged, embeddings "
+    "noise-decorrelated); median of timed passes after a warm pass; "
+    "sf0.1 reference timed in the SAME session so the 10x-data ratio is "
+    "host-noise-free; `cpus` is each row's local[N] (rows without one "
+    "predate the field: r14, local[32], BENCH_SCALE.md)"
+)
+
+
+def session(app: str) -> SparkSession:
+    """The one local session config every timing and plan tool uses:
+    local[$SPARK_GRAFT_CPUS], as many shuffle partitions, AQE, UTC, no
+    UI, and a driver heap capped at half the host's memory."""
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    spark = (
+        SparkSession.builder.master(f"local[{CPUS}]")
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", CPUS)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.driver.memory", f"{max(1, min(32, host_gb // 2))}g")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark: SparkSession) -> None:
+    """First JVM job + first Arrow python-worker spawn are session costs,
+    not query costs — standard bench hygiene so each query's number
+    reflects its plan, not who ran first."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    spark.range(1000).select(F.sum("id")).collect()
+
+    @pandas_udf("long")
+    def _warm(v):
+        return v
+
+    spark.range(1000).repartition(int(CPUS)).select(_warm("id")).write.mode(
+        "overwrite"
+    ).format("noop").save()
+
+
+def time_entries(
+    spark: SparkSession, names: list[str], sf_dirs: list[str], passes: int
+) -> dict[str, dict[str, list[float]]]:
+    """{sf_dir: {name: [sec per timed pass]}}.  One untimed warm pass
+    (JIT/codegen caches, file-index warm), then `passes` timed runs, each
+    name run at every sf_dir back to back: single-shot numbers on a shared
+    host swing 3-6x from scheduler noise, so callers report the MEDIAN —
+    robust to one bad run AND attributable round-over-round (a min hides
+    regressions that only show in the typical run)."""
+    samples = {d: {name: [] for name in names} for d in sf_dirs}
+    for timed in [False] + [True] * passes:
+        for name in names:
+            for sf_dir in sf_dirs:
+                start = time.perf_counter()
+                df = REGISTRY[name].fn(spark, sf_dir)
+                df.write.mode("overwrite").format("noop").save()
+                if timed:
+                    samples[sf_dir][name].append(time.perf_counter() - start)
+    return samples
 
 
 def compute_prev_ratios(
@@ -107,62 +195,72 @@ def compute_prev_ratios(
     }
 
 
+def merge_scale(
+    record: dict,
+    samples: dict[str, list[float]],
+    ref_samples: dict[str, list[float]],
+    sf_val: Optional[float],
+    cpus: int,
+) -> dict:
+    """BENCH_SCALE.json with the timed rows replaced and every other row,
+    ``excluded`` included, kept; the totals are recomputed over all rows.
+    Raises ValueError when the run's sf is not the record's."""
+    if record.get("sf") != sf_val:
+        raise ValueError(f"scale record is sf{record.get('sf')}, run is sf{sf_val}")
+    out = copy.deepcopy(record)
+    for name, vals in samples.items():
+        med = round(statistics.median(vals), 3)
+        ref = round(statistics.median(ref_samples[name]), 3)
+        out["queries"][name] = med
+        out["queries_min"][name] = round(min(vals), 3)
+        out["queries_sf01_same_session"][name] = ref
+        out["ratio_vs_sf01"][name] = round(med / ref, 2) if ref else None
+        # max/min over the timed samples: an entry whose spread exceeds
+        # ~2x is a session-noise suspect (VERDICT r10 item 5) and must be
+        # re-measured in a fresh session before its ratio is believed
+        out["sample_spread"][name] = (
+            round(max(vals) / min(vals), 2) if min(vals) else None
+        )
+        out.setdefault("cpus", {})[name] = cpus
+    out["value"] = round(sum(out["queries"].values()), 3)
+    out["value_sf01"] = round(sum(out["queries_sf01_same_session"].values()), 3)
+    out["note"] = SCALE_NOTE
+    return out
+
+
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bdv-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up (untimed): first JVM job + first Arrow python-worker spawn
-    # are session costs, not query costs — standard bench hygiene so each
-    # query's number reflects its plan, not who ran first.
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    spark.range(1000).select(F.sum("id")).collect()
-
-    @pandas_udf("long")
-    def _warm(v):
-        return v
-
-    spark.range(1000).repartition(int(CPUS)).select(_warm("id")).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="registry entries (default: HEADLINE)")
+    ap.add_argument("--ref", metavar="DIR", help="reference sf dir for a scale run")
+    args = ap.parse_args()
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf else None
+    names = args.names or HEADLINE
+    if args.ref:
+        with open(SCALE_PATH) as fh:
+            record = json.load(fh)
+        if record.get("sf") != sf_val:
+            ap.error(f"{SCALE_PATH} is sf{record.get('sf')}; {SF_DIR} is sf{sf_val}")
+        names = args.names or list(record["queries"])
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"not registry entries: {', '.join(unknown)}")
 
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    # TEST-SUPPORT ONLY (r14): the contract test exercises this script
-    # end-to-end (subprocess, JSON line, detail file) but a full
-    # 217-query pass at sf0.001 cost 356 s of the pytest wall — the
-    # single reason the r13 verify run exceeded the driver's budget.
-    # The driver never sets this variable, so every real bench run
-    # times the complete HEADLINE; a limited run still records
-    # n_queries, so a truncated detail can never masquerade as a full
-    # one.
-    limit = int(os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_LIMIT", "0"))
-    headline = HEADLINE[:limit] if limit > 0 else HEADLINE
-    samples: dict[str, list[float]] = {name: [] for name in headline}
-    # one untimed warm pass (JIT/codegen caches, file-index warm), then
-    # `passes` timed runs reported as the per-query MEDIAN: single-shot
-    # numbers on a shared host swing 3-6x from scheduler noise; the median
-    # is robust to one bad run AND attributable round-over-round (a min
-    # hides regressions that only show in the typical run)
-    for timed in [False] + [True] * passes:
-        for name in headline:
-            fn = REGISTRY[name].fn
-            start = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            if timed:
-                samples[name].append(time.perf_counter() - start)
+    spark = session("bdv-bench")
+    warm_up(spark)
+    sf_dirs = [args.ref, SF_DIR] if args.ref else [SF_DIR]
+    runs = time_entries(spark, names, sf_dirs, passes)
+    spark.stop()
+    samples = runs[SF_DIR]
+
+    if args.ref:
+        record = merge_scale(record, samples, runs[args.ref], sf_val, int(CPUS))
+        with open(SCALE_PATH, "w") as fh:
+            json.dump(record, fh, indent=1)
+        print(json.dumps({k: v for k, v in record.items()
+                          if k not in ("queries_min", "queries_sf01_same_session")}))
+
     timings = {
         name: round(statistics.median(vals), 3)
         for name, vals in samples.items()
@@ -176,20 +274,11 @@ def main() -> None:
     timings_min = {
         name: round(min(vals), 3) for name, vals in samples.items()
     }
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf else None
     # Previous round's committed detail, read BEFORE this run overwrites
     # it — the denominator of the session-noise device (see
-    # compute_prev_ratios).  Env-overridable for tests.
-    prev_path = os.environ.get(
-        "SPARK_GRAFT_PREV_DETAIL",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        ),
-    )
+    # compute_prev_ratios).
     try:
-        with open(prev_path) as fh:
+        with open(DETAIL_PATH) as fh:
             prev_detail = json.load(fh)
     except (OSError, ValueError):
         prev_detail = None
@@ -205,6 +294,7 @@ def main() -> None:
         "queries": timings,
         "queries_min": timings_min,
         "sf": sf_val,
+        "cpus": int(CPUS),
         # explicit, machine-readable exclusion record (VERDICT r7
         # missing-item 3): silence reads as "covered everything"
         "excluded": EXCLUDED,
@@ -219,15 +309,14 @@ def main() -> None:
     }
     # Overridable so the sf0.001 contract test never clobbers the
     # committed sf0.1 detail record (r5's checked-in file was silently
-    # a test-run artifact, making round-over-round comparison a trap).
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_DETAIL_PATH",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        ),
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
+    # a test-run artifact, making round-over-round comparison a trap);
+    # a subset or scale run never writes the committed record.
+    detail_path = os.environ.get("SPARK_GRAFT_DETAIL_PATH")
+    if detail_path is None and not (args.names or args.ref):
+        detail_path = DETAIL_PATH
+    if detail_path:
+        with open(detail_path, "w") as fh:
+            json.dump(detail, fh, indent=1, sort_keys=True)
     print(json.dumps(detail))
     print(
         json.dumps(
@@ -240,7 +329,7 @@ def main() -> None:
                 "stat": "median",
                 "passes": passes,
                 "n_queries": len(timings),
-                "queries_detail": "BENCH_DETAIL.json",
+                "queries_detail": detail_path and os.path.basename(detail_path),
                 # compact noise-device summary: the fleet-median shift
                 # vs the previous round's detail (host-speed factor)
                 # and the single worst noise-ADJUSTED per-query ratio —
@@ -252,7 +341,6 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1029,7 +1029,7 @@ def hhi_by_group(
     """Exact-integer HERFINDAHL-HIRSCHMAN concentration index per
     group — Σ shareᵢ² of each key's value within its group, the
     market-concentration companion to :func:`gini_concentration`
-    (Gini reads inequality of the whole curve; HHI weights the TOP —
+    (Gini reads inequality of the whole curve; HHI weights the largest shares —
     a monopoly group hits 10⁶ ppm, k equal players 10⁶/k).
 
     ``hhi_ppm = (10⁶ · Σxᵢ²) div S²`` and ``top_share_ppm =

@@ -7,6 +7,9 @@ Writes ``plans/r14/<query>_<tag>.txt`` at the repo root for each entry
 ``materialize_release`` return a LocalRelation (the collected rows), so
 the real distributed plan is captured by intercepting the helper and
 dumping the pre-collect plan(s) alongside the returned frame's plan.
+Each returned-frame section opens with ``plan_report``'s facts (pushed
+filters, read schema, broadcast/take-ordered flags, shuffle and codegen
+span counts — the ones ``tests/test_plans.py`` pins).
 Additionally (VERDICT r13 item 9), EVERY eager DataFrame action fired
 while an entry builds — collect / count / first / take inside an
 operator body (Theil-Sen's selection passes, the linkage pattern-count
@@ -21,40 +24,23 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from pyspark.sql import SparkSession
-
+from bench import SF_DIR, session, warm_up
 from big_data_validator_spark.operators import dedup as D
-from big_data_validator_spark.plans.inspect import formatted_explain
-from big_data_validator_spark.queries import all_queries
+from big_data_validator_spark.plans.inspect import formatted_explain, plan_report
+from big_data_validator_spark.queries import REGISTRY
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("SPARK_GRAFT_PLAN_DIR", "r14"),
-)
+OUT_DIR = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r14"))
 
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
     os.makedirs(OUT_DIR, exist_ok=True)
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bdv-plan-capture")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("bdv-plan-capture")
+    warm_up(spark)
 
     # Intercept materialize_release: the distributed plan is the frame
     # passed IN, not the LocalRelation handed back.
@@ -113,17 +99,18 @@ def main() -> None:
         setattr(_DF, n, _spy(n))
 
     try:
-        registry = all_queries()
-        names = [n for n in registry if not only or n in only]
-        for name in names:
+        for name in [n for n in REGISTRY if not only or n in only]:
             captured.clear()
             spark.sparkContext.setJobDescription(f"plan-capture: {name}")
             try:
-                df = registry[name](spark, SF_DIR)
+                df = REGISTRY[name].fn(spark, SF_DIR)
                 parts = []
                 for i, (label, inner) in enumerate(captured):
                     parts.append(f"== {label} plan #{i + 1} ==\n{inner}")
-                parts.append(f"== returned frame plan ==\n{formatted_explain(df)}")
+                facts = "\n".join(f"- {k}: {v}" for k, v in plan_report(df).items())
+                parts.append(
+                    f"== returned frame plan ==\n{facts}\n\n{formatted_explain(df)}"
+                )
                 body = "\n\n".join(parts)
             except Exception as exc:  # record, keep going
                 body = f"ERROR capturing plan: {exc!r}"

@@ -4,21 +4,24 @@ Referential integrity preserved (all FK columns shift by the same
 per-copy offset as their PK); documents get a per-copy marker token so
 they are near- (not exact-) duplicates; embeddings get small
 deterministic per-copy noise so copies decorrelate slightly.
+
+    SPARK_GRAFT_CPUS=$(nproc) python scripts/gen_sf_scaleup.py
+
+The session is bench.py's (local[$SPARK_GRAFT_CPUS], heap sized from the
+host).
 """
 import sys, shutil, os
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession, functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import functions as F
+
+from bench import session
 
 OUT = "/tmp/bdv_sf1"
 SRC = "/root/testdata/sf0.1"
 K = 1_000_000_000
 COPIES = 10
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "48g")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.shuffle.partitions", "32").getOrCreate())
+spark = session("bdv-gen-sf-scaleup")
 
 if os.path.isdir(OUT):
     shutil.rmtree(OUT)
