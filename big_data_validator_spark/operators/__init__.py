@@ -3,9 +3,12 @@
 from __future__ import annotations
 
 import os
+from typing import Sequence
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
 
 
 def rebalance_for_compute(df: DataFrame) -> DataFrame:
@@ -66,7 +69,7 @@ def _local_input_probe(df: DataFrame):
     drifted into near-duplicate code)."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:  # streaming frames have no file listing
         return None
     if not files:
         return None
@@ -115,3 +118,67 @@ def adaptive_partitions(
     small = min(sc.defaultParallelism, total // bytes_per_partition + 1)
     size_floor = total // (256 << 20) + 1
     return int(max(1, small, size_floor))
+
+
+def block_scan(
+    df: DataFrame,
+    block: Column,
+    order_cols: Sequence[str],
+    sum_cols: Sequence[str],
+    partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Add ``<c>_before`` = exclusive running sum of each ``sum_cols``
+    column in ``order_cols`` order (per ``partition_cols`` group), with
+    no single-task global window — the two-pass distributed scan every
+    exact rank statistic and global offset in this package runs on.
+
+    ``block`` must preserve the order: every row of a lower block sorts
+    before every row of a higher one (``floor(v / width)`` for numeric
+    keys, a key prefix for strings).  Pass 1 sums each row's
+    predecessors inside its block with a window partitioned BY BLOCK
+    (parallel); pass 2 aggregates one total per block, prefix-sums that
+    tiny frame and broadcasts it back.  Block granularity moves work
+    between the passes, never the result.  The totals come from the
+    pre-window frame: a map-side-combinable aggregate, where deriving
+    them from the windowed frame would recompute and re-sort it.
+
+    Returns the input columns, then one ``<c>_before`` per sum column
+    (0 for a group's first row).  An inclusive sum is ``<c>_before +
+    <c>``.
+    """
+    parts = list(partition_cols)
+    keyed = df.withColumn("_blk", block)
+    preceding = (Window.unboundedPreceding, -1)
+    in_block = (
+        Window.partitionBy(*parts, "_blk")
+        .orderBy(*order_cols)
+        .rowsBetween(*preceding)
+    )
+    across = Window.partitionBy(*parts).orderBy("_blk").rowsBetween(*preceding)
+    idx = list(enumerate(sum_cols))
+    local = keyed.select(
+        "*", *[F.sum(c).over(in_block).alias(f"_local_cum{i}") for i, c in idx]
+    )
+    totals = (
+        keyed.groupBy(*parts, "_blk")
+        .agg(*[F.sum(c).alias(f"_blk_total{i}") for i, c in idx])
+        .select(
+            *parts,
+            "_blk",
+            *[
+                F.coalesce(F.sum(f"_blk_total{i}").over(across), F.lit(0))
+                .alias(f"_blk_offset{i}")
+                for i, _ in idx
+            ],
+        )
+    )
+    return local.join(F.broadcast(totals), [*parts, "_blk"]).select(
+        *[F.col(f"`{c}`") for c in df.columns],
+        *[
+            (
+                F.coalesce(F.col(f"_local_cum{i}"), F.lit(0))
+                + F.col(f"_blk_offset{i}")
+            ).alias(f"{c}_before")
+            for i, c in idx
+        ],
+    )

@@ -11,11 +11,11 @@ every later scan schedules against sanely-sized splits.
 from __future__ import annotations
 
 import math
-import os
 from typing import Optional, Sequence
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from big_data_validator_spark.operators import _local_input_probe
 
 
 def plan_compaction(
@@ -24,25 +24,14 @@ def plan_compaction(
     """Target output file count for ``df``'s backing files, or ``None``
     when compaction would not help (no file metadata, or the layout is
     already at/under the target count).  Driver-side metadata only —
-    the same public ``inputFiles()`` guard ``rebalance_for_compute``
-    uses; no Spark job."""
-    try:
-        files = df.inputFiles()
-    except Exception:
+    the shared ``_local_input_probe`` of ``rebalance_for_compute``; no
+    Spark job."""
+    probe = _local_input_probe(df)
+    if probe is None:
         return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(u.path)
-        except OSError:
-            return None
+    n_files, total = probe
     target_count = max(1, math.ceil(total / target_file_bytes))
-    if target_count >= len(files):
+    if target_count >= n_files:
         return None
     return target_count
 

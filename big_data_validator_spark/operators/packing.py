@@ -6,18 +6,13 @@ sequence holding its first token and may straddle a boundary.  Assigning
 those positions needs a *global running sum* of token counts — the naive
 Spark expression (``sum().over(Window.orderBy(...))`` with no
 ``partitionBy``) funnels the whole table through ONE task and dies at
-scale.  :func:`running_offset` instead does the classic two-pass
-distributed scan:
-
-1. block-local cumulative sums (window partitioned by a block key —
-   parallel, no global shuffle of rows into one task), and
-2. a tiny per-block totals aggregate, prefix-summed and broadcast back.
-
-The result is byte-identical to the single-window answer (packing is
-deterministic in the given order) while every row-bearing stage stays
-parallel.  At 100 TB the block key is the natural sort bucket (e.g. the
-range-partition id of the corpus order); here it is derived from the
-order column itself so results are reproducible on any layout.
+scale.  :func:`running_offset` instead runs
+:func:`~big_data_validator_spark.operators.block_scan`, so every
+row-bearing stage stays parallel and the result is byte-identical to
+the single-window answer.  At 100 TB the block key is the natural sort
+bucket (e.g. the range-partition id of the corpus order); here it is
+derived from the order column itself so results are reproducible on any
+layout.
 
 Mixture planning (:func:`mixture_sampling_plan`) is the other half of
 corpus assembly: given target domain proportions, compute the largest
@@ -31,6 +26,8 @@ from typing import Mapping, Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from big_data_validator_spark.operators import block_scan
 
 __all__ = [
     "running_offset",
@@ -47,14 +44,12 @@ def running_offset(
     block_rows: int = 65536,
 ) -> DataFrame:
     """Add ``offset`` = exclusive running sum of ``size_col`` in
-    ``order_col`` order, computed with the two-pass block-scan pattern
-    (no single-task global window).
+    ``order_col`` order, through :func:`~big_data_validator_spark
+    .operators.block_scan` (no single-task global window).
 
     ``order_col`` must be unique and non-negative (a rowid / doc id).
-    ``block_rows`` controls the block key granularity: ``order_col div
-    block_rows``.  The per-block totals frame has one row per block —
-    thousands of rows at 100 TB — and is prefix-summed with a window
-    over that tiny frame only, then broadcast-joined back.
+    ``block_rows`` sets the block key granularity: ``order_col div
+    block_rows``.
     """
     # integral division — double division + cast loses exactness past 2^53
     # (e.g. (2049*10**13-1)/2049 casts to 1e13, true quotient 1e13-1);
@@ -68,43 +63,10 @@ def running_offset(
             F.lit(f"running_offset: {order_col} must be non-negative")
         ).cast("long"),
     ).otherwise(F.expr(f"`{order_col}` div {int(block_rows)}"))
-    keyed = df.withColumn("_blk", block)
-    local = keyed.withColumn(
-        "_local_cum",
-        F.sum(size_col).over(
-            Window.partitionBy("_blk")
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        ),
-    )
-    # Totals come from the pre-window frame: a map-side-combinable agg whose
-    # shuffle carries one partial row per (partition, block) — re-deriving
-    # them from ``local`` would recompute (and re-sort) the windowed subtree.
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum(size_col).alias("_blk_total"))
-        .withColumn(
-            "_blk_offset",
-            F.coalesce(
-                F.sum("_blk_total").over(
-                    Window.orderBy("_blk").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_blk", "_blk_offset")
-    )
-    return (
-        local.join(F.broadcast(totals), "_blk")
-        .withColumn(
-            "offset",
-            (F.coalesce(F.col("_local_cum"), F.lit(0)) + F.col("_blk_offset")).cast(
-                "long"
-            ),
-        )
-        .drop("_blk", "_local_cum")
+    scanned = block_scan(df, block, [order_col], [size_col])
+    before = f"{size_col}_before"
+    return scanned.withColumn("offset", F.col(before).cast("long")).drop(
+        before
     )
 
 

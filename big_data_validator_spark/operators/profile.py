@@ -25,6 +25,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import block_scan
+
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
 _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
 
@@ -940,11 +942,10 @@ def gini_concentration(
     zero total ships NULL.
 
     Scale shape: one shuffle to per-key cents, one to per-value
-    counts; the cumulative count uses per-block windows plus a
-    broadcast per-block prefix frame (the mannwhitney_u device) —
-    never a single-task global window, so millions of distinct keys
-    rank in parallel.  Returns one row ``(n_keys, total_cents,
-    gini_ppm)``.
+    counts; the cumulative count is
+    :func:`~big_data_validator_spark.operators.block_scan` — never a
+    single-task global window, so millions of distinct keys rank in
+    parallel.  Returns one row ``(n_keys, total_cents, gini_ppm)``.
     """
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
@@ -962,35 +963,12 @@ def gini_concentration(
         .agg(F.count(F.lit(1)).alias("_t"))
         .cache()
     )
-    keyed = cnts.withColumn(
-        "_blk", F.floor(F.col("_x") / F.lit(float(bin_width))).cast("long")
-    )
-    bw = Window.partitionBy("_blk").orderBy("_x")
-    local = keyed.withColumn(
-        "_before_local",
-        F.coalesce(
-            F.sum("_t").over(bw.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    gw = Window.orderBy("_blk")
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_t").alias("_tt"))
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_tt").over(
-                    gw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("_before_blk"),
-        )
-    )
+    blk = F.floor(F.col("_x") / F.lit(float(bin_width))).cast("long")
+    scanned = block_scan(cnts, blk, ["_x"], ["_t"])
     dec = "decimal(38,0)"
-    c = (F.col("_before_local") + F.col("_before_blk")).cast(dec)
+    c = F.col("_t_before").cast(dec)
     t = F.col("_t").cast(dec)
-    terms = local.join(F.broadcast(totals), "_blk").select(
+    terms = scanned.select(
         (
             F.col("_x").cast(dec)
             * (F.lit(2).cast(dec) * t * c + t * t + t)

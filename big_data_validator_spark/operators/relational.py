@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import adaptive_partitions
+from big_data_validator_spark.operators import adaptive_partitions, block_scan
 
 
 # --------------------------------------------------------------- uniqueness
@@ -937,6 +937,16 @@ def top_k_by(
     return df.orderBy(*order).limit(k)
 
 
+def _value_block_scan(
+    cnts: DataFrame, bin_width: float, sum_cols: Sequence[str]
+) -> DataFrame:
+    """:func:`block_scan` of a per-distinct-value counts frame in ``_v``
+    order, blocked by ``floor(_v / bin_width)`` — the drift family's
+    exact CDFs and ranks."""
+    blk = F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
+    return block_scan(cnts, blk, ["_v"], sum_cols)
+
+
 def ks_two_sample(
     a: DataFrame,
     b: DataFrame,
@@ -951,17 +961,11 @@ def ks_two_sample(
     empirical CDFs evaluated at every observed value.
 
     The textbook formulation is a cumulative sum over the globally
-    sorted pooled sample — a single-task window at scale.  Here the
-    prefix sum is the two-pass block scan (the
-    ``packing.running_offset`` pattern, generalized to float keys):
-
-    1. pool both samples tagged, aggregate to per-distinct-value counts
-       (one shuffle, map-side combined — the frame shrinks to the value
-       domain);
-    2. derive an ORDER-PRESERVING block key ``floor(value /
-       bin_width)``; cumulative counts within each block via a window
-       partitioned BY BLOCK (parallel), plus a per-block totals frame —
-       one row per block — prefix-summed and broadcast back.
+    sorted pooled sample — a single-task window at scale.  Here both
+    samples pool tagged into per-distinct-value counts (one shuffle,
+    map-side combined — the frame shrinks to the value domain), and the
+    CDFs are :func:`~big_data_validator_spark.operators.block_scan`
+    over those counts, blocked by ``floor(value / bin_width)``.
 
     ``bin_width`` only controls block granularity, NEVER the result —
     any positive value yields the identical exact statistic (pinned in
@@ -991,54 +995,11 @@ def ks_two_sample(
         .repartition(adaptive_partitions(pooled), "_v")
         .cache()
     )
-    blk = F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    keyed = cnts.withColumn("_blk", blk)
-    local = keyed.select(
-        "_v",
-        "_blk",
-        F.sum("_na")
-        .over(
-            Window.partitionBy("_blk")
-            .orderBy("_v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .alias("_la"),
-        F.sum("_nb")
-        .over(
-            Window.partitionBy("_blk")
-            .orderBy("_v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .alias("_lb"),
+    cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"]).select(
+        (F.col("_na_before") + F.col("_na")).alias("_cuma"),
+        (F.col("_nb_before") + F.col("_nb")).alias("_cumb"),
     )
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_na").alias("_ta"), F.sum("_nb").alias("_tb"))
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_ta").over(
-                    Window.orderBy("_blk").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("_pa"),
-            F.coalesce(
-                F.sum("_tb").over(
-                    Window.orderBy("_blk").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("_pb"),
-        )
-    )
-    cum = local.join(F.broadcast(totals), "_blk").select(
-        (F.col("_la") + F.col("_pa")).alias("_cuma"),
-        (F.col("_lb") + F.col("_pb")).alias("_cumb"),
-    )
-    grand = keyed.agg(
+    grand = cnts.agg(
         F.sum("_na").alias("_n_a"), F.sum("_nb").alias("_n_b")
     )
     out = (
@@ -1078,20 +1039,18 @@ def wasserstein_1d(
     exact finite sum ``Σ_i |F_a(v_i) − F_b(v_i)| · (v_{i+1} − v_i)``
     over consecutive observed values.  ``value_col`` must be INTEGRAL
     (pass cents, not dollars) so every term is exact: with integer
-    cumulative counts the summand is ``|cuma·n_b − cumb·n_a| · gap``,
-    accumulated in DECIMAL(38,0) — no float ever enters until the final
-    division, so the statistic hash-matches any engine that sums exact
-    integers (the emb_near_dup DECIMAL(38,0) discipline).
+    cumulative counts the summand is ``D_i · gap`` with ``D_i =
+    |cuma_i·n_b − cumb_i·n_a|``, accumulated in DECIMAL(38,0) — no
+    float ever enters until the final division, so the statistic
+    hash-matches any engine that sums exact integers (the emb_near_dup
+    DECIMAL(38,0) discipline).
 
-    The prefix sums use the same two-pass block scan as
-    :func:`ks_two_sample` — per-block cumulative windows plus a tiny
-    broadcast per-block prefix frame, NEVER a single-task global window.
-    W1 additionally needs each value's SUCCESSOR in global value order:
-    within a block that is ``lead(v)``; across block boundaries the
-    successor of a block's max is the NEXT block's min, which rides the
-    same tiny per-block frame (one ``lead`` over block order).  The
-    global maximum has no successor and contributes 0 by definition
-    (both CDFs are 1 there), so dropping its row is exact.
+    The CDFs come from :func:`~big_data_validator_spark.operators
+    .block_scan`, like :func:`ks_two_sample`'s.  Summing by parts
+    removes the successor value: the exclusive CDF at ``v_i`` is the
+    inclusive one at ``v_{i−1}``, so ``Σ D_i·(v_{i+1} − v_i) = Σ
+    v_i·(D_{i−1} − D_i)`` with ``D_0 = 0`` and ``D_max = 0`` (both CDFs
+    are 1 there) — the same exact integer, and no neighbour lookup.
 
     ``bin_width`` only sets block granularity — any positive value
     yields the identical statistic (pinned in tests).  ``unit_scale``
@@ -1121,74 +1080,23 @@ def wasserstein_1d(
         .repartition(adaptive_partitions(pooled), "_v")
         .cache()
     )
-    keyed = cnts.withColumn(
-        "_blk", F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    )
-    bw = Window.partitionBy("_blk").orderBy("_v")
-    local = keyed.select(
-        "_v",
-        "_blk",
-        F.sum("_na")
-        .over(bw.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("_la"),
-        F.sum("_nb")
-        .over(bw.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("_lb"),
-        F.lead("_v").over(bw).alias("_nextv_local"),
-    )
-    gw = Window.orderBy("_blk")
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(
-            F.sum("_na").alias("_ta"),
-            F.sum("_nb").alias("_tb"),
-            F.min("_v").alias("_minv"),
-        )
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_ta").over(
-                    gw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("_pa"),
-            F.coalesce(
-                F.sum("_tb").over(
-                    gw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("_pb"),
-            F.lead("_minv").over(gw).alias("_next_blk_minv"),
-        )
-    )
-    cum = (
-        local.join(F.broadcast(totals), "_blk")
-        .select(
-            (F.col("_la") + F.col("_pa")).alias("_cuma"),
-            (F.col("_lb") + F.col("_pb")).alias("_cumb"),
-            F.col("_v"),
-            F.coalesce(
-                F.col("_nextv_local"), F.col("_next_blk_minv")
-            ).alias("_nextv"),
-        )
-        .filter(F.col("_nextv").isNotNull())
-    )
-    grand = keyed.agg(
+    cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"])
+    grand = cnts.agg(
         F.sum("_na").alias("_n_a"), F.sum("_nb").alias("_n_b")
     )
     dec = "decimal(38,0)"
-    term = F.abs(
-        F.col("_cuma").cast(dec) * F.col("_n_b")
-        - F.col("_cumb").cast(dec) * F.col("_n_a")
-    ) * (F.col("_nextv") - F.col("_v")).cast(dec)
-    # Counts come from the UN-FILTERED keyed frame and the gap-term sum
-    # coalesces to 0, so a pooled input with a single distinct value
-    # (empty gap frame — true W1 is 0.0) yields (0.0, n_a, n_b) instead
-    # of an all-NULL row, matching :func:`wasserstein_by_group`'s
-    # handling of the same edge.
-    termsum = cum.join(F.broadcast(grand)).agg(
-        F.coalesce(F.sum(term), F.lit(0).cast(dec)).alias("_ts")
+
+    def cdf_gap(cum_a, cum_b):  # D = |cuma·n_b − cumb·n_a|
+        return F.abs(
+            cum_a.cast(dec) * F.col("_n_b") - cum_b.cast(dec) * F.col("_n_a")
+        )
+
+    before_a, before_b = F.col("_na_before"), F.col("_nb_before")
+    term = F.col("_v").cast(dec) * (
+        cdf_gap(before_a, before_b)
+        - cdf_gap(before_a + F.col("_na"), before_b + F.col("_nb"))
     )
+    termsum = cum.join(F.broadcast(grand)).agg(F.sum(term).alias("_ts"))
     out = grand.join(F.broadcast(termsum)).select(
         F.round(
             F.col("_ts").cast("double")
@@ -1324,10 +1232,9 @@ def mannwhitney_u(
     Σ(t³−t)/(N(N−1)))`` (floats only in this final scalar, rounded 6).
 
     Same scale shape as :func:`ks_two_sample`/:func:`wasserstein_1d`:
-    one shuffle to per-value counts, per-block cumulative windows plus
-    a broadcast per-block prefix frame — never a single-task global
-    window; ``bin_width`` moves block granularity only (identical
-    statistic at any positive value, pinned in tests).  Returns one
+    one shuffle to per-value counts, then :func:`block_scan`;
+    ``bin_width`` moves block granularity only (identical statistic at
+    any positive value, pinned in tests).  Returns one
     row ``(n_a, n_b, u_a_x2, u_b_x2, z)``; nulls are excluded.
     """
     if bin_width <= 0:
@@ -1362,40 +1269,18 @@ def mwu_from_value_counts(
     the streaming drift monitor: given a per-value counts frame
     ``(_v long, _na, _nb)`` (sample-1 / sample-2 counts at each
     distinct value), compute the exact doubled-midrank U pair and the
-    tie-corrected z with the same blocked-window device.  The caller
+    tie-corrected z through :func:`block_scan`.  The caller
     owns any caching of ``cnts`` (the batch wrapper pins it; the
     streaming monitor's per-batch frames are bounded parquet reads
     and pass through uncached)."""
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
-    keyed = cnts.withColumn(
-        "_blk", F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    ).withColumn("_t", F.col("_na") + F.col("_nb"))
-    bw = Window.partitionBy("_blk").orderBy("_v")
-    local = keyed.withColumn(
-        "_before_local",
-        F.coalesce(
-            F.sum("_t").over(bw.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    gw = Window.orderBy("_blk")
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_t").alias("_tt"))
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_tt").over(
-                    gw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("_before_blk"),
-        )
+    scanned = _value_block_scan(
+        cnts.withColumn("_t", F.col("_na") + F.col("_nb")), bin_width, ["_t"]
     )
     dec = "decimal(38,0)"
-    c = (F.col("_before_local") + F.col("_before_blk")).cast(dec)
-    terms = local.join(F.broadcast(totals), "_blk").select(
+    c = F.col("_t_before").cast(dec)
+    terms = scanned.select(
         (
             F.col("_na").cast(dec)
             * (F.lit(2).cast(dec) * c + F.col("_t") + F.lit(1))
@@ -1479,9 +1364,8 @@ def cramer_von_mises(
     identical across engines), rounded 6.
 
     Same scale shape as the KS/W1/U siblings: one shuffle to per-value
-    counts, per-block cumulative windows (pooled AND sample-1 prefix)
-    plus a broadcast per-block prefix frame — never a single-task
-    global window; ``bin_width`` moves block granularity only.
+    counts, then one :func:`block_scan` for both the pooled and the
+    sample-1 prefix; ``bin_width`` moves block granularity only.
     Returns one row ``(n_a, n_b, cvm_t)``; ``cvm_t`` NULL when either
     sample is empty; nulls excluded.
     """
@@ -1505,34 +1389,14 @@ def cramer_von_mises(
         .repartition(adaptive_partitions(pooled), "_v")
         .cache()
     )
-    keyed = cnts.withColumn(
-        "_blk", F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    ).withColumn("_t", F.col("_na") + F.col("_nb"))
-    bw = Window.partitionBy("_blk").orderBy("_v")
-    pre = bw.rowsBetween(Window.unboundedPreceding, -1)
-    local = keyed.withColumn(
-        "_bl_t", F.coalesce(F.sum("_t").over(pre), F.lit(0))
-    ).withColumn(
-        "_bl_a", F.coalesce(F.sum("_na").over(pre), F.lit(0))
-    )
-    gw = Window.orderBy("_blk")
-    gpre = gw.rowsBetween(Window.unboundedPreceding, -1)
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_t").alias("_tt"), F.sum("_na").alias("_ta"))
-        .select(
-            "_blk",
-            F.coalesce(F.sum("_tt").over(gpre), F.lit(0)).alias(
-                "_bb_t"
-            ),
-            F.coalesce(F.sum("_ta").over(gpre), F.lit(0)).alias(
-                "_bb_a"
-            ),
-        )
+    scanned = _value_block_scan(
+        cnts.withColumn("_t", F.col("_na") + F.col("_nb")),
+        bin_width,
+        ["_t", "_na"],
     )
     dec = "decimal(38,0)"
-    cpr = (F.col("_bl_t") + F.col("_bb_t")).cast(dec)
-    apr = (F.col("_bl_a") + F.col("_bb_a")).cast(dec)
+    cpr = F.col("_t_before").cast(dec)
+    apr = F.col("_na_before").cast(dec)
     bpr = cpr - apr
     r = F.lit(2).cast(dec) * cpr + F.col("_t") + F.lit(1)
 
@@ -1547,7 +1411,7 @@ def cramer_von_mises(
             * (F.lit(2).cast(dec) * c + F.lit(1))
         )
 
-    terms = local.join(F.broadcast(totals), "_blk").select(
+    terms = scanned.select(
         F.col("_na"),
         F.col("_nb"),
         contrib3(
@@ -1596,7 +1460,7 @@ def _one_vs_rest_rank_frames(
     bin_width: int,
 ):
     """Shared internals of the one-vs-rest segment scans: ONE data
-    shuffle to (segment, value) pair counts, the KS/W1/U blocked-window
+    shuffle to (segment, value) pair counts, a :func:`block_scan`
     global cumulative on the distinct-value frame, then the per-segment
     doubled-rank sums.  Returns ``(per, glob, cnts)``: ``per`` holds one
     row per segment ``(segment, _ng, _r2)`` in DECIMAL(38,0), ``glob``
@@ -1620,38 +1484,11 @@ def _one_vs_rest_rank_frames(
         .cache()
     )
     vals = cnts.groupBy("_v").agg(F.sum("_c").alias("_t"))
-    keyed = vals.withColumn(
-        "_blk", F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    )
-    bw = Window.partitionBy("_blk").orderBy("_v")
-    local = keyed.withColumn(
-        "_before_local",
-        F.coalesce(
-            F.sum("_t").over(bw.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    gw = Window.orderBy("_blk")
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_t").alias("_tt"))
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_tt").over(
-                    gw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("_before_blk"),
-        )
-    )
     dec = "decimal(38,0)"
-    vstats = local.join(F.broadcast(totals), "_blk").select(
+    vstats = _value_block_scan(vals, bin_width, ["_t"]).select(
         "_v",
         F.col("_t").cast(dec).alias("_t"),
-        (F.col("_before_local") + F.col("_before_blk"))
-        .cast(dec)
-        .alias("_cb"),
+        F.col("_t_before").cast(dec).alias("_cb"),
     )
     glob = F.broadcast(
         vstats.agg(
@@ -1706,13 +1543,12 @@ def mannwhitney_by_segment(
 
     Scale shape: ONE data shuffle (the (segment, value) pair-count
     agg, pinned + released by the caller via materialize_release);
-    the global cumulative runs on the DISTINCT-value frame with the
-    KS/W1/U blocked-window device (per-block cumulative + broadcast
-    per-block prefix — never a single-task global window), and the
-    value-stats join back to the pair counts is a counts-frame join,
-    not a data join.  ``bin_width`` moves block granularity only.
-    Returns one row per segment ``(segment, n_seg, n_rest, u_seg_x2,
-    z)``; rows with a NULL segment or NULL value are excluded.
+    the global cumulative is a :func:`block_scan` of the
+    DISTINCT-value frame, and the value-stats join back to the pair
+    counts is a counts-frame join, not a data join.  ``bin_width``
+    moves block granularity only.  Returns one row per segment
+    ``(segment, n_seg, n_rest, u_seg_x2, z)``; rows with a NULL segment
+    or NULL value are excluded.
     """
     per, glob, cnts = _one_vs_rest_rank_frames(
         df, segment_col, value_col, bin_width
@@ -2030,14 +1866,13 @@ def equidepth_histogram(
     can't substitute for on skewed columns.
 
     The textbook formulation is ``ntile(n) OVER (ORDER BY v)`` — a
-    single-task global sort at scale.  Here it is the
-    :func:`ks_two_sample` block scan instead: per-distinct-value counts
-    (one shuffle, frame shrinks to the value domain), block-local
-    cumulative windows + a tiny prefix-summed per-block totals frame,
-    then every distinct value's bin is ``floor(cum_before · n_bins /
-    total)`` in EXACT integer arithmetic.  All duplicates of one value
-    land in one bin (bins differ from ntile's row-split exactly there,
-    which is what makes the result deterministic and engine-portable).
+    single-task global sort at scale.  Here per-distinct-value counts
+    (one shuffle, frame shrinks to the value domain) run through
+    :func:`block_scan`, then every distinct value's bin is
+    ``floor(cum_before · n_bins / total)`` in EXACT integer arithmetic.
+    All duplicates of one value land in one bin (bins differ from
+    ntile's row-split exactly there, which is what makes the result
+    deterministic and engine-portable).
 
     ``block_width`` only sets block granularity — any positive value
     yields the identical histogram (pinned in tests).  Returns one row
@@ -2053,47 +1888,15 @@ def equidepth_histogram(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    blk = F.floor(F.col("_v") / F.lit(float(block_width))).cast("long")
-    keyed = cnts.withColumn("_blk", blk)
-    local = keyed.select(
-        "_v",
-        "_n",
-        "_blk",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.partitionBy("_blk")
-                .orderBy("_v")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("_lcum"),
-    )
-    totals = (
-        keyed.groupBy("_blk")
-        .agg(F.sum("_n").alias("_t"))
-        .select(
-            "_blk",
-            F.coalesce(
-                F.sum("_t").over(
-                    Window.orderBy("_blk").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("_pre"),
-        )
-    )
-    grand = keyed.agg(F.sum("_n").alias("_total"))
+    grand = cnts.agg(F.sum("_n").alias("_total"))
     binned = (
-        local.join(F.broadcast(totals), "_blk")
+        _value_block_scan(cnts, block_width, ["_n"])
         .join(F.broadcast(grand))
         .select(
             "_v",
             "_n",
             F.least(
-                F.expr(
-                    f"((_lcum + _pre) * {int(n_bins)}) div _total"
-                ),
+                F.expr(f"(_n_before * {int(n_bins)}) div _total"),
                 F.lit(n_bins - 1),
             ).alias("bin_id"),
         )

@@ -2946,9 +2946,8 @@ def sample_stratified_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concatenate-and-cut sequence packing at 2048 units: every document's
     global stream offset, owning sequence, in-sequence position, and span
-    count.  The global running sum is the two-pass block scan from
-    ``operators/packing.py`` — block-local cumulative windows plus a tiny
-    broadcast prefix of per-block totals — so no row-bearing window ever
+    count.  The global running sum is ``operators.block_scan`` (through
+    ``packing.running_offset``), so no row-bearing window ever
     funnels the corpus through one task (the oracle's single ORDER BY
     window is exactly the plan shape this operator exists to avoid)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -3235,12 +3234,12 @@ def pipeline_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END training-data pipeline as one declarative plan:
     language-ID → quality threshold → exact fingerprint dedup → sequence
     packing coordinates of the surviving stream.  Every stage is the
-    independently-oracled operator (text.py curation, packing.py two-pass
-    block scan); this query pins that the COMPOSITION stays correct —
-    the packed offsets hash-match SQL that recomputes the whole chain
-    relationally.  Plan shape at scale: one codegen'd scan for
+    independently-oracled operator (text.py curation, packing.py on
+    ``operators.block_scan``); this query pins that the COMPOSITION
+    stays correct — the packed offsets hash-match SQL that recomputes
+    the whole chain relationally.  Plan shape at scale: one codegen'd scan for
     langid+quality+fingerprint, one fingerprint-window shuffle
-    (WindowGroupLimit), then the block-scan's block-local windows +
+    (WindowGroupLimit), then ``block_scan``'s block-local windows +
     broadcast prefix — the corpus never funnels through one task."""
     docs = _rb(_t(spark, sf_dir, "documents"))
     text = F.col("text")
@@ -3799,11 +3798,10 @@ def drift_ks_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT two-sample Kolmogorov-Smirnov drift statistic between
     urgent-priority and normal-priority order amounts
     (operators/relational.py: ks_two_sample).  The pooled-CDF prefix sum
-    runs as the two-pass block scan over per-distinct-value counts — a
-    window partitioned by value-derived blocks plus a tiny broadcast
-    per-block prefix — NEVER the textbook single-task global window;
-    the block width only sets granularity, the statistic is exact for
-    any choice (pytest-pinned)."""
+    is ``operators.block_scan`` over per-distinct-value counts — NEVER
+    the textbook single-task global window; the block width only sets
+    granularity, the statistic is exact for any choice
+    (pytest-pinned)."""
     o = _t(spark, sf_dir, "orders")
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return D.materialize_release(
@@ -4441,9 +4439,8 @@ def events_top_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT equi-depth histogram of order values, 10 bins
     (operators/relational.py: equidepth_histogram).  The oracle is the
-    textbook global cumulative window; the Spark plan is the
-    ks_two_sample block scan — per-distinct-value counts, block-local
-    cumulative windows, tiny broadcast per-block prefix — so no task
+    textbook global cumulative window; the Spark plan is
+    ``operators.block_scan`` over per-distinct-value counts, so no task
     ever sorts the full value domain.  Bin assignment is exact integer
     arithmetic; any block width yields the identical histogram
     (pinned in tests)."""
@@ -7011,7 +7008,7 @@ def pipeline_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (operators/text.py: bpe_encode_tokens applied per word inside
     an array ``transform`` + ``aggregate`` — the whole tokenizer is one
     codegen projection, ZERO shuffles) feeding concatenate-and-cut
-    packing at 512 tokens (operators/packing.py two-pass block scan).
+    packing at 512 tokens (operators/packing.py on ``block_scan``).
     This closes the LLM-cost loop: pack_sequences_docs packs by
     character proxy; this packs by what the training run actually pays.
     Tradeoff documented: encoding per word OCCURRENCE keeps the count
@@ -7034,7 +7031,7 @@ def pipeline_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0),
         lambda acc, x: acc + x,
     ).cast("long")
-    # The two-pass block scan reads its input twice (block totals +
+    # block_scan reads its input twice (block totals +
     # block-local windows), so the tokenizer expression evaluates
     # twice.  Measured at sf0.1: recompute beats persist-and-release
     # (the release path pays a driver collect/recreate of the packed
@@ -9747,12 +9744,10 @@ def drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents, so every CDF-gap term ``|cuma·n_b − cumb·n_a| · gap``
     is an exact integer accumulated in DECIMAL(38,0) (the emb_near_dup
     discipline); no float exists until the single final division.  The
-    prefix sums ride the same two-pass block scan as drift_ks_totalprice
-    — per-block windows + a tiny broadcast block-prefix frame, and each
-    value's global successor comes from lead-within-block plus the next
-    block's min on that same tiny frame — never a single-task global
-    window; bin_width only sets block granularity (pytest-pinned
-    invariant)."""
+    prefix sums are ``operators.block_scan``, as in drift_ks_totalprice,
+    and summing by parts removes each value's successor — never a
+    single-task global window; bin_width only sets block granularity
+    (pytest-pinned invariant)."""
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
@@ -9895,9 +9890,9 @@ def drift_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     any monotone value transform.  Doubled midranks make every tie
     group an exact integer (2C+t+1), so 2·R_a and 2·U accumulate in
     DECIMAL(38,0) with no float midranks; the tie-corrected normal z
-    is the only float, round-6.  Same two-pass block scan as the KS/W1
-    siblings — per-value counts, per-block windows, broadcast block
-    prefixes; never a single-task global window."""
+    is the only float, round-6.  Same ``operators.block_scan`` over
+    per-value counts as the KS/W1 siblings; never a single-task global
+    window."""
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
@@ -9978,9 +9973,9 @@ def drift_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     midranks (2C+t+1) make every tie group's Σ3(2r−2i)² a closed-form
     pure-integer expression in DECIMAL(38,0) — no division anywhere
     until the two final exact-integer quotients (IEEE-identical across
-    engines, round-6).  Same two-pass block scan as the KS/W1/U
-    siblings: per-value counts, per-block cumulative windows, broadcast
-    per-block prefixes — never a single-task global window."""
+    engines, round-6).  Same ``operators.block_scan`` over per-value
+    counts as the KS/W1/U siblings — never a single-task global
+    window."""
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
@@ -10935,10 +10930,9 @@ def link_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase-name order, catching the near-misses token blocking
     cannot (truncations/typos sharing no exact token); multi-pass
     linkage unions these with link_part_entities' token blocks.  The
-    global rank is the two-pass block device generalized to STRING
+    global rank is an ``operators.block_scan`` row count over STRING
     keys (prefix blocks partition the lexicographic order
-    contiguously; per-block row_number + a broadcast block-prefix
-    frame), and neighbors meet through a rank-div-bucket equi-join —
+    contiguously), and neighbors meet through a rank-div-bucket equi-join —
     ~2n bucket-keyed shuffle rows, output exactly n·(window−1), never
     a global single-task sort or a cross join."""
     from big_data_validator_spark.operators.linkage import (
@@ -11889,10 +11883,9 @@ def agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary a partitioner wants about a key column BEFORE a shuffle
     discovers the skew the hard way.  Per-value tie counts collapse
     the rank-weighted sum to an exact DECIMAL(38,0) identity (no
-    float sort, no tie hazard); the cumulative count runs per-block
-    with a broadcast block-prefix frame (the mannwhitney_u device) —
-    never a single-task global window, so millions of distinct
-    customers rank in parallel."""
+    float sort, no tie hazard); the cumulative count is
+    ``operators.block_scan`` — never a single-task global window, so
+    millions of distinct customers rank in parallel."""
     from big_data_validator_spark.operators.profile import (
         gini_concentration,
     )
@@ -12195,8 +12188,8 @@ def drift_mannwhitney_by_segment(
     2·R_g and 2·U_g exact DECIMAL(38,0); the per-segment z is the only
     float (round-6).  ONE data shuffle (the (segment, value)
     pair-count agg, pinned + released on materialize); the global
-    cumulative runs on the distinct-value frame with the KS/W1/U
-    blocked-window device."""
+    cumulative is an ``operators.block_scan`` of the distinct-value
+    frame."""
     c = _t(spark, sf_dir, "customer").withColumn(
         "cents", F.round(F.col("c_acctbal") * 100, 0).cast("long")
     )

@@ -300,19 +300,40 @@ def idempotent_batch_sink(
     check was local-FS-only).
     """
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{output_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
-        batch_df.write.mode("overwrite").parquet(dst)
+    return _commit_batches(
+        stream, output_path, checkpoint_path, lambda batch_df, _: batch_df
+    )
 
+
+def _committed(spark, path: str) -> bool:
+    """Whether ``path`` carries the ``_SUCCESS`` commit marker, checked
+    through the Hadoop ``FileSystem`` of the path's own scheme."""
+    marker = spark._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    return marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(
+        marker
+    )
+
+
+def _commit_batch(batch_df: DataFrame, batch_id: int, root: str, build):
+    """Write ``build(batch_df, batch_id)`` to ``root/batch_id=N`` unless
+    that directory is already committed — the exactly-once step of
+    :func:`idempotent_batch_sink`, shared by every repository sink."""
+    dst = f"{root.rstrip('/')}/batch_id={batch_id}"
+    if not _committed(batch_df.sparkSession, dst):
+        build(batch_df, batch_id).write.mode("overwrite").parquet(dst)
+
+
+def _commit_batches(
+    stream: DataFrame, root: str, checkpoint_path: str, build
+) -> DataStreamWriter:
+    """The ``foreachBatch`` writer running :func:`_commit_batch` per
+    micro-batch, with its checkpoint set."""
     return (
-        stream.writeStream.foreachBatch(write_batch)
+        stream.writeStream.foreachBatch(
+            lambda batch_df, batch_id: _commit_batch(
+                batch_df, batch_id, root, build
+            )
+        )
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
@@ -353,27 +374,15 @@ def stream_metrics_repository(
     """
     from big_data_validator_spark.operators.profile import profile_table
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{repo_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
-        profile_table(batch_df, columns=columns).select(
+    def profile(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return profile_table(batch_df, columns=columns).select(
             F.lit(int(batch_id)).cast("long").alias(run_col),
             "column",
             "metric",
             "value",
-        ).write.mode("overwrite").parquet(dst)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, repo_path, checkpoint_path, profile)
 
 
 def read_metrics_repository(spark, repo_path: str) -> DataFrame:
@@ -420,7 +429,7 @@ def _committed_batch_dirs(spark, root_path: str) -> list:
             n = int(name.split("=", 1)[1])
         except ValueError:
             continue
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
+        if _committed(spark, p.toString()):
             out.append((n, p.toString()))
     return [p for _, p in sorted(out)]
 
@@ -477,17 +486,8 @@ def stream_drift_psi(
         raise ValueError("baseline is empty — no distribution to drift from")
     p_base = {b: n / base_total for b, n in base_counts.items()}
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{repo_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
-        spark = batch_df.sparkSession
-        grid = spark.createDataFrame(
+    def psi_terms(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        grid = batch_df.sparkSession.createDataFrame(
             [(b, float(p_base[b])) for b in range(n_bins)],
             f"bin_id int, p_base double",
         )
@@ -501,7 +501,7 @@ def stream_drift_psi(
             "bin_id", (F.col("n") / total).alias("p_run")
         )
         eps = F.lit(float(epsilon))
-        out = (
+        return (
             grid.join(p_run, "bin_id", "left")
             .select(
                 F.lit(int(batch_id)).cast("long").alias(run_col),
@@ -515,13 +515,8 @@ def stream_drift_psi(
                 * F.log((F.col("p_run") + eps) / (F.col("p_base") + eps)),
             )
         )
-        out.write.mode("overwrite").parquet(dst)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, repo_path, checkpoint_path, psi_terms)
 
 
 def _resolve_prior_state(spark, root: str, batch_id: int, initial_summary):
@@ -581,26 +576,15 @@ def stream_apply_deltas_to_totals(
     gcols = list(group_cols)
     scols = list(sum_cols)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = state_path.rstrip("/")
-        dst = f"{root}/batch_id={batch_id}"
-        jvm = spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return
-        prev = _resolve_prior_state(spark, root, batch_id, initial_summary)
-        nxt = apply_delta_to_group_totals(
+    def advance(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        prev = _resolve_prior_state(
+            batch_df.sparkSession, state_path, batch_id, initial_summary
+        )
+        return apply_delta_to_group_totals(
             prev, batch_df, gcols, scols, count_col=count_col
         )
-        nxt.write.mode("overwrite").parquet(dst)
 
-    return (
-        delta_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(delta_stream, state_path, checkpoint_path, advance)
 
 
 def stream_kll_sketches(
@@ -633,31 +617,18 @@ def stream_kll_sketches(
         kll_partial_sketches,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{repo_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
+    def sketch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         src = batch_df.select(
             F.lit(0).alias("_g"), F.col(value_col).alias("_v")
         )
         partials = kll_partial_sketches(src, "_v", ["_g"], k)
-        merged = kll_merge_groups(partials, ["_g"], k).select(
+        return kll_merge_groups(partials, ["_g"], k).select(
             F.lit(int(batch_id)).cast("long").alias("run_id"),
             "sketch",
             "n_rows",
         )
-        merged.write.mode("overwrite").parquet(dst)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, repo_path, checkpoint_path, sketch)
 
 
 def stream_kll_group_sketches(
@@ -692,15 +663,7 @@ def stream_kll_group_sketches(
 
     gcols = list(group_cols)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{repo_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
+    def sketch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         src = batch_df.select(
             *gcols, F.col(value_col).alias("_v")
         )
@@ -709,18 +672,14 @@ def stream_kll_group_sketches(
         per_group = kll_partial_sketches(
             src.repartition(*[F.col(c) for c in gcols]), "_v", gcols, k
         )
-        per_group.select(
+        return per_group.select(
             F.lit(int(batch_id)).cast("long").alias("run_id"),
             *gcols,
             "sketch",
             "n_rows",
-        ).write.mode("overwrite").parquet(dst)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, repo_path, checkpoint_path, sketch)
 
 
 def stream_scd2_history(
@@ -755,16 +714,10 @@ def stream_scd2_history(
     kcols = list(key_cols)
     tcols = list(tracked_cols)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = state_path.rstrip("/")
-        dst = f"{root}/batch_id={batch_id}"
-        jvm = spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return
-        hist = _resolve_prior_state(spark, root, batch_id, initial_history)
+    def advance(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        hist = _resolve_prior_state(
+            batch_df.sparkSession, state_path, batch_id, initial_history
+        )
         versions = sorted(
             r[0]
             for r in batch_df.select(version_col).distinct().collect()
@@ -775,12 +728,10 @@ def stream_scd2_history(
                 *kcols, *tcols
             )
             hist = scd2_apply_snapshot(hist, snap, kcols, tcols, int(v))
-        hist.write.mode("overwrite").parquet(dst)
+        return hist
 
-    return (
-        snapshot_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _commit_batches(
+        snapshot_stream, state_path, checkpoint_path, advance
     )
 
 
@@ -848,17 +799,8 @@ def stream_markov_drift(
         (r["src"], r["dst"], r["n"] / base_total) for r in base_rows
     ]
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = f"{repo_path.rstrip('/')}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        if fs.exists(marker):
-            return
-        spark = batch_df.sparkSession
-        grid = spark.createDataFrame(
+    def tv_terms(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        grid = batch_df.sparkSession.createDataFrame(
             base_grid, "src string, dst string, p_base double"
         )
         cnt = transitions(batch_df)
@@ -866,7 +808,7 @@ def stream_markov_drift(
         p_run = cnt.select(
             "src", "dst", (F.col("n") / total).alias("p_run")
         )
-        out = (
+        return (
             grid.join(p_run, ["src", "dst"], "full_outer")
             .select(
                 F.lit(int(batch_id)).cast("long").alias(run_col),
@@ -880,13 +822,8 @@ def stream_markov_drift(
                 0.5 * F.abs(F.col("p_run") - F.col("p_base")),
             )
         )
-        out.write.mode("overwrite").parquet(dst)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, repo_path, checkpoint_path, tv_terms)
 
 
 def stream_mannwhitney_drift(
@@ -934,54 +871,32 @@ def stream_mannwhitney_drift(
         mwu_from_value_counts,
     )
 
-    ref_path = f"{repo_path.rstrip('/')}/reference"
-    spark0 = reference.sparkSession
-    jvm0 = spark0._jvm
-    rp = jvm0.org.apache.hadoop.fs.Path(ref_path)
-    fs0 = rp.getFileSystem(spark0._jsc.hadoopConfiguration())
-    if not fs0.exists(jvm0.org.apache.hadoop.fs.Path(ref_path, "_SUCCESS")):
+    root = repo_path.rstrip("/")
+    ref_path = f"{root}/reference"
+
+    def quantized_counts(df: DataFrame, count_col: str) -> DataFrame:
         v = F.col(value_col)
-        (
-            reference.filter(v.isNotNull())
-            .select(
-                F.round(v * F.lit(value_scale)).cast("long").alias("_v")
-            )
+        return (
+            df.filter(v.isNotNull())
+            .select(F.round(v * F.lit(value_scale)).cast("long").alias("_v"))
             .groupBy("_v")
-            .agg(F.count(F.lit(1)).alias("_nb"))
-            .write.mode("overwrite")
-            .parquet(ref_path)
+            .agg(F.count(F.lit(1)).alias(count_col))
         )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    if not _committed(reference.sparkSession, ref_path):
+        quantized_counts(reference, "_nb").write.mode("overwrite").parquet(
+            ref_path
+        )
+
+    def stats(batch_df: DataFrame, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-
-        def committed(path: str) -> bool:
-            m = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-            return m.getFileSystem(conf).exists(m)
-
-        counts_dst = f"{repo_path.rstrip('/')}/counts/batch_id={batch_id}"
-        if not committed(counts_dst):
-            v = F.col(value_col)
-            (
-                batch_df.filter(v.isNotNull())
-                .select(
-                    F.round(v * F.lit(value_scale))
-                    .cast("long")
-                    .alias("_v")
-                )
-                .groupBy("_v")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .write.mode("overwrite")
-                .parquet(counts_dst)
-            )
-        stats_dst = f"{repo_path.rstrip('/')}/stats/batch_id={batch_id}"
-        if committed(stats_dst):
-            return
-        delta_dirs = _committed_batch_dirs(
-            spark, f"{repo_path.rstrip('/')}/counts"
+        _commit_batch(
+            batch_df,
+            batch_id,
+            f"{root}/counts",
+            lambda df, _: quantized_counts(df, "_n"),
         )
+        delta_dirs = _committed_batch_dirs(spark, f"{root}/counts")
         # explicit schemas (r14): both relations are written by THIS
         # function with fixed layouts, so per-batch footer-inference
         # reads are pure driver round-trips — measured −0.35 s/query
@@ -1007,7 +922,7 @@ def stream_mannwhitney_drift(
             .groupBy("_v")
             .agg(F.sum("_na").alias("_na"), F.sum("_nb").alias("_nb"))
         )
-        out = mwu_from_value_counts(merged, bin_width).select(
+        return mwu_from_value_counts(merged, bin_width).select(
             F.lit(int(batch_id)).cast("long").alias(run_col),
             "n_a",
             "n_b",
@@ -1015,10 +930,5 @@ def stream_mannwhitney_drift(
             "u_b_x2",
             "z",
         )
-        out.write.mode("overwrite").parquet(stats_dst)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
+    return _commit_batches(stream, f"{root}/stats", checkpoint_path, stats)

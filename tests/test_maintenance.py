@@ -77,3 +77,20 @@ def test_compaction_manifest_sequential_packing(spark):
         4: (100, 100 * 64, 1),
         5: (10, 10 * 64, 2),
     }
+
+
+def test_input_probe_declines_streams_and_in_memory_frames(spark):
+    """The shared probe answers ``None`` — never raises — for frames with
+    no local files: a streaming source (``inputFiles`` raises
+    ``AnalysisException``) and in-memory relations (it returns ``[]``);
+    ``plan_compaction`` then plans nothing."""
+    from big_data_validator_spark.operators import _local_input_probe
+
+    frames = [
+        spark.readStream.format("rate").load(),
+        spark.range(10),
+        spark.createDataFrame([(1, "a")], "k int, v string"),
+    ]
+    for df in frames:
+        assert _local_input_probe(df) is None
+        assert plan_compaction(df) is None

@@ -271,3 +271,54 @@ def test_observed_metrics_add_no_extra_scan(spark):
         F.sum((F.col("l_quantity") > 50).cast("long")).alias("v"),
     ).collect()[0]
     assert obs.get == {"n": direct["n"], "v": direct["v"]}
+
+
+def _ks_totalprice(spark):
+    """drift_ks_totalprice's operator call, before the entry materializes
+    the one-row result."""
+    from pyspark.sql import functions as F
+
+    from big_data_validator_spark.operators.relational import ks_two_sample
+
+    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    return ks_two_sample(
+        o.filter(urgent), o.filter(~urgent), "o_totalprice", bin_width=10000.0
+    )
+
+
+def _gini_customer_revenue(spark):
+    """agg_gini_customer_revenue's operator call, before materializing."""
+    from big_data_validator_spark.operators.profile import gini_concentration
+
+    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    return gini_concentration(o, "o_custkey", "o_totalprice")
+
+
+@pytest.mark.parametrize(
+    "build, shuffles",
+    [
+        (_ks_totalprice, 13),
+        (_gini_customer_revenue, 9),
+        (lambda spark: q("pack_sequences_docs", spark), 4),
+    ],
+    ids=[
+        "drift_ks_totalprice",
+        "agg_gini_customer_revenue",
+        "pack_sequences_docs",
+    ],
+)
+def test_block_scan_entries_keep_broadcast_and_shuffles(
+    spark, build, shuffles
+):
+    """Entries on ``block_scan`` broadcast the per-block prefix frame
+    back to the rows and hold their exchange counts: the row-bearing
+    window shuffles by block, and only the one-row-per-block totals
+    frame meets the unpartitioned prefix window."""
+    df = build(spark)
+    try:
+        assert has_broadcast_join(df), plan_report(df)
+        assert shuffle_count(df) == shuffles, executed_plan_str(df)
+    finally:
+        for c in getattr(df, "_bdv_pinned", []):
+            c.unpersist()

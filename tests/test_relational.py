@@ -909,6 +909,20 @@ def test_wasserstein_identical_distributions_zero(spark):
     assert row["w1_stat"] == 0.0
 
 
+def test_wasserstein_negative_values_and_single_point(spark):
+    # summation by parts weights each term by v itself: negative values
+    # and a one-point pool (W1 = 0 with real counts) must stay exact
+    av = [-900, -35, -35, 0, 12, 400]
+    bv = [-1200, -36, 7, 7, 7, 950, 951]
+    a = spark.createDataFrame([(v,) for v in av], ["v"])
+    b = spark.createDataFrame([(v,) for v in bv], ["v"])
+    row = R.wasserstein_1d(a, b, "v", bin_width=64).first()
+    assert row["w1_stat"] == _w1_brute(av, bv)
+    one = spark.createDataFrame([(-5,), (-5,)], ["v"])
+    row = R.wasserstein_1d(one, one, "v", bin_width=3).first()
+    assert (row["w1_stat"], row["n_a"], row["n_b"]) == (0.0, 2, 2)
+
+
 def test_wasserstein_rejects_bad_bin_width(spark):
     a = spark.createDataFrame([(1,)], ["v"])
     with pytest.raises(ValueError):

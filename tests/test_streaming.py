@@ -388,22 +388,12 @@ def test_stream_metrics_repository_matches_batch_and_replay(spark, tmp_path):
     # exactly-once: replaying batch 2 must not change the repository...
     batch2 = spark.read.parquet(f"{repo}/batch_id=2")
     n_before = spark.read.parquet(f"{repo}/batch_id=2").count()
-    from big_data_validator_spark.operators.profile import profile_table  # noqa: F401
-
-    # simulate a replay through the same commit gate
     from big_data_validator_spark.streaming import validate_stream as VS
 
-    def replay(batch_df, batch_id):
-        # reuse the inner commit protocol via a fresh query object
-        dst = f"{repo}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(f"{dst}/_SUCCESS")
-        fs = marker.getFileSystem(
-            batch_df.sparkSession._jsc.hadoopConfiguration()
-        )
-        assert fs.exists(marker)  # committed → sink must skip
+    def rebuild(batch_df, batch_id):
+        raise AssertionError("committed batch must skip its build")
 
-    replay(batch2, 2)
+    VS._commit_batch(batch2, 2, repo, rebuild)  # the sinks' own gate
     assert spark.read.parquet(f"{repo}/batch_id=2").count() == n_before
 
     # ...but a TORN dir (marker removed) is rewritten on re-drain
