@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 from typing import Sequence
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
@@ -48,8 +48,8 @@ def rebalance_for_compute(df: DataFrame) -> DataFrame:
     probe = _local_input_probe(df)
     if probe is None:
         return df
-    n_files, total = probe
-    if n_files >= target:
+    paths, total = probe
+    if len(paths) >= target:
         return df
     # One split per core at the default 128 MiB maxPartitionBytes: inputs
     # under this arrive under-parallelized; above it Spark already splits.
@@ -61,28 +61,33 @@ def rebalance_for_compute(df: DataFrame) -> DataFrame:
 
 
 def _local_input_probe(df: DataFrame):
-    """``(n_files, total_bytes)`` of a frame's LOCAL input files, or
+    """``(paths, total_bytes)`` of a frame's LOCAL input files, or
     ``None`` when the probe cannot answer cheaply (no files, non-local
     URIs, unreadable sizes) — the shared driver-side file-metadata
-    device of :func:`rebalance_for_compute` and
-    :func:`adaptive_partitions` (ADVICE r13: the two probes had
-    drifted into near-duplicate code)."""
+    device of :func:`rebalance_for_compute`,
+    :func:`adaptive_partitions` and the validation runner's header read
+    (ADVICE r13: the probes had drifted into near-duplicate code).
+    ``paths`` are filesystem paths: ``inputFiles()`` percent-encodes
+    URIs, so a name with a space or ``%`` is decoded before use."""
     try:
         files = df.inputFiles()
     except AnalysisException:  # streaming frames have no file listing
         return None
     if not files:
         return None
+    paths = []
     total = 0
     for f in files:
         u = urlparse(f)
         if u.scheme not in ("", "file"):
             return None
+        path = unquote(u.path)
         try:
-            total += os.path.getsize(u.path)
+            total += os.path.getsize(path)
         except OSError:
             return None
-    return len(files), total
+        paths.append(path)
+    return paths, total
 
 
 def adaptive_partitions(

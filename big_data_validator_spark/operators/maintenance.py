@@ -29,9 +29,9 @@ def plan_compaction(
     probe = _local_input_probe(df)
     if probe is None:
         return None
-    n_files, total = probe
+    paths, total = probe
     target_count = max(1, math.ceil(total / target_file_bytes))
-    if target_count >= n_files:
+    if target_count >= len(paths):
         return None
     return target_count
 

@@ -74,13 +74,13 @@ def field_count_violation_expr(
     return cnt != F.lit(n)
 
 
-def has_trailing_unnamed_column(df: DataFrame) -> bool:
-    """The reference's "hotfix": if the second-to-last schema field is named
-    ``\"\"`` (an unnamed trailing-delimiter column), field-count mismatches
-    are ignored entirely (``big_data_validator.py:150-158``).  Quirky but
-    real CSV semantics — preserved as an explicit predicate."""
-    names = df.schema.names
-    return len(names) >= 2 and names[-2] == ""
+def has_trailing_unnamed_column(columns: list[str]) -> bool:
+    """The reference's "hotfix": if the second-to-last read-schema field (the
+    last header column, before the corrupt-record column) is named ``\"\"``
+    (an unnamed trailing-delimiter column), field-count mismatches are
+    ignored entirely (``big_data_validator.py:150-158``).  Quirky but real
+    CSV semantics — preserved as an explicit predicate on the header."""
+    return bool(columns) and columns[-1] == ""
 
 
 def corrupt_rows(df: DataFrame) -> DataFrame:
@@ -89,38 +89,24 @@ def corrupt_rows(df: DataFrame) -> DataFrame:
     return df.filter(F.col(CORRUPT_RECORD_COL).isNotNull())
 
 
-def rule_csv_parser_verdict(df: DataFrame) -> tuple[RuleResult, DataFrame]:
+def rule_csv_parser_verdict(corrupt: int, columns: list[str]) -> RuleResult:
     """Escalated check: defer to Spark's quote/multiline-aware CSV parser.
 
     The reference falls back to this when the line-level count mismatches
     (``big_data_validator.py:198-205``), because a raw line split cannot see
-    embedded newlines or separators inside quoted fields.  Returns the rule
-    outcome and the bad-row DataFrame for the failure sink.
-
-    Early-exits via ``take(1)`` (the ``head(1)`` of ``:163``).  ``take``
-    deliberately references every column: Spark refuses queries that prune a
-    raw CSV scan down to only the corrupt-record column
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the same
-    restriction that forced the reference's ``cache()``.  The returned
-    bad-row frame is cached when non-empty so the failure-sink write reuses
-    the probe's scan; the caller must ``unpersist()`` it (the runner does,
-    in a ``finally`` — fixing the reference's cache leak on the failure
-    path, ``big_data_validator.py:161-169``).
+    embedded newlines or separators inside quoted fields.  ``corrupt`` is
+    the parser's corrupt-row count over the whole table, which the runner
+    computes in the same aggregation as its other counters; ``columns`` is
+    the header, for the trailing-unnamed-column hotfix.  The verdict passes
+    when the hotfix applies or no row is corrupt; the runner writes the
+    failure sink only when it fails.
     """
-    if has_trailing_unnamed_column(df):
-        return (
-            RuleResult(
-                rule="csv_parser_verdict",
-                passed=True,
-                details={"note": "trailing unnamed column; mismatch ignored"},
-            ),
-            df.limit(0),
+    if has_trailing_unnamed_column(columns):
+        return RuleResult(
+            rule="csv_parser_verdict",
+            passed=True,
+            details={"note": "trailing unnamed column; mismatch ignored"},
         )
-    bad = corrupt_rows(df).cache()
-    passed = len(bad.take(1)) == 0
-    if passed:
-        bad.unpersist()
-    return (
-        RuleResult(rule="csv_parser_verdict", passed=passed),
-        bad,
+    return RuleResult(
+        rule="csv_parser_verdict", passed=corrupt == 0, violation_count=corrupt
     )

@@ -10,7 +10,7 @@ serializable report.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Optional
 
 
@@ -32,12 +32,31 @@ class RuleResult:
 
 
 @dataclass
+class RunStats:
+    """What one validation run scanned, and the Spark jobs that produced it.
+
+    ``lines`` and ``rows`` come from the run's aggregation (``None`` when it
+    did not scan lines, or did not parse rows); ``input_bytes`` from the
+    driver's file listing (``None`` when the input is not local files);
+    ``job_group`` is the caller's ``spark.jobGroup.id``, under which Spark's
+    event log and status tracker file the run's jobs.
+    """
+
+    lines: Optional[int] = None
+    rows: Optional[int] = None
+    input_bytes: Optional[int] = None
+    wall_s: Optional[float] = None
+    job_group: Optional[str] = None
+
+
+@dataclass
 class ValidationReport:
     """Outcome of a full validation run for one table."""
 
     table: str
     results: list[RuleResult] = field(default_factory=list)
     failure_sink_path: Optional[str] = None
+    run: RunStats = field(default_factory=RunStats)
 
     def add(self, result: RuleResult) -> "ValidationReport":
         self.results.append(result)
@@ -61,6 +80,7 @@ class ValidationReport:
             "table": self.table,
             "ok": self.ok,
             "failure_sink_path": self.failure_sink_path,
+            "run": asdict(self.run),
             "results": [
                 {
                     "rule": r.rule,

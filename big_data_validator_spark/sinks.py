@@ -3,9 +3,10 @@
 The reference writes failing rows as unpartitioned snappy Parquet with
 overwrite (``big_data_validator.py:81-95``).  Kept, with two 100 TB
 upgrades: optional partition columns (rule name / date) so downstream
-triage prunes partitions, and a cache lifecycle that cannot leak (the
-reference returns before ``unpersist`` on the failure path,
-``big_data_validator.py:161-169``).
+triage prunes partitions, and nothing cached to leak (the reference caches
+the parse and returns before ``unpersist`` on the failure path,
+``big_data_validator.py:161-169``; the runner writes the sink only when
+its aggregation counted corrupt rows, straight from the parse).
 """
 
 from __future__ import annotations

@@ -13,6 +13,8 @@ Reference behavior re-expressed Spark-first:
 
 from __future__ import annotations
 
+import re
+from codecs import BOM_UTF8
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,10 +34,9 @@ def scan_text_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def probe_header(
-    spark: SparkSession, path: str, contract: TableContract
-) -> list[str]:
-    """Read the first line and derive the actual column list.
+def header_columns(line: Optional[str], contract: TableContract) -> list[str]:
+    """Derive the actual column list from a header line (``None``: the
+    input has no lines).
 
     Semantics of ``big_data_validator.py:39-47``: split the header on the
     field separator, strip the (raw, possibly multi-char) string-separator
@@ -43,17 +44,62 @@ def probe_header(
     argument as a character *set*, so the reference's 4-char ``\"\"\"\"``
     separator strips the same characters a single quote would — preserved by
     stripping the normalized set.
+    """
+    if line is None:
+        return []
+    strip_chars = contract.string_separator or ""
+    return [c.strip(strip_chars).upper() for c in line.split(contract.field_separator)]
+
+
+def probe_header(
+    spark: SparkSession, path: str, contract: TableContract
+) -> list[str]:
+    """Read the first line through Spark and derive the actual column list
+    (:func:`header_columns`).
 
     This is a one-partition, first-line-only job (``limit(1)``) — constant
-    cost regardless of table size.
+    cost regardless of table size.  It serves every input Spark can read;
+    one local uncompressed file needs no job (:func:`read_local_header`).
     """
     first = spark.read.text(path).limit(1).collect()
-    if not first:
+    return header_columns(first[0][0] if first else None, contract)
+
+
+_LINE_END = re.compile(rb"[\r\n]")
+
+
+def read_local_header(
+    spark: SparkSession, paths: list[str], contract: TableContract
+) -> Optional[list[str]]:
+    """The actual column list of one local uncompressed file, with its
+    first line read on the driver exactly as ``spark.read.text`` yields it;
+    ``None`` when the input is not one such file and Spark must read it
+    (:func:`probe_header`).
+
+    ``paths`` are the input's local files (``_local_input_probe``).  A name
+    whose suffix maps to a Hadoop codec (``.gz``, ``.bz2``, …) is left to
+    Spark, which decompresses it.  Like Hadoop's line reader, the line ends
+    at ``\n``, ``\r\n`` or ``\r``, a leading UTF-8 byte-order mark is
+    dropped, and invalid UTF-8 decodes to U+FFFD.  A file that is empty, or
+    holds only the mark, has no header (``[]``).
+    """
+    if len(paths) != 1:
+        return None
+    jvm = spark.sparkContext._jvm
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    if codecs.getCodec(jvm.org.apache.hadoop.fs.Path(paths[0])) is not None:
+        return None
+    head = b""
+    with open(paths[0], "rb") as fh:
+        while not _LINE_END.search(head) and (chunk := fh.read(1 << 16)):
+            head += chunk
+    head = head.removeprefix(BOM_UTF8)
+    if not head:
         return []
-    line = first[0][0]
-    cells = line.split(contract.field_separator)
-    strip_chars = contract.string_separator or ""
-    return [c.strip(strip_chars).upper() for c in cells]
+    line = _LINE_END.split(head, 1)[0]
+    return header_columns(line.decode("utf-8", "replace"), contract)
 
 
 def scan_csv_permissive(
