@@ -35,9 +35,6 @@ from pyspark.sql.types import StringType, StructField, StructType
 #: that do not fit the schema (reference ``base_data_validation.py:16``).
 CORRUPT_RECORD_COL = "CorruptRecCol"
 
-#: Oracle-flavored declared types the reference metadata uses.
-KNOWN_SOURCE_TYPES = ("VARCHAR2", "NUMBER", "DATE")
-
 
 def normalize_quote(raw: Optional[str]) -> Optional[str]:
     """Normalize a contract ``StringSeparator`` to a usable quote char.
@@ -231,69 +228,6 @@ class TableContract:
         fields = [StructField(c, StringType(), True) for c in actual_columns]
         fields.append(StructField(CORRUPT_RECORD_COL, StringType(), True))
         return StructType(fields)
-
-
-def schema_drift(old: StructType, new: StructType) -> list[dict]:
-    """Schema-compatibility report between two table schemas (e.g. two
-    parquet snapshot dirs): one entry per difference —
-    ``{"column", "change", "old_type", "new_type"}`` with ``change`` in
-    ``added`` / ``removed`` / ``type_changed`` / ``nullability_changed``.
-    Empty list = drift-free.
-
-    Driver-side metadata only (parquet footers, no Spark job) — the
-    pre-flight gate an evolving-ingest pipeline runs BEFORE pointing a
-    mergeSchema read (sources/readers.py:scan_parquet_evolving) at a
-    directory: `added` is the benign evolution mergeSchema handles,
-    `type_changed` is the one it would turn into a read-time failure.
-
-    Name matching is case-sensitive (Spark's resolution default is
-    case-insensitive but preserves case; a rename-by-case shows up as
-    removed+added, which IS a drift worth flagging).
-    """
-    old_f = {f.name: f for f in old.fields}
-    new_f = {f.name: f for f in new.fields}
-    report: list[dict] = []
-    for name in old_f:
-        if name not in new_f:
-            report.append(
-                {
-                    "column": name,
-                    "change": "removed",
-                    "old_type": old_f[name].dataType.simpleString(),
-                    "new_type": None,
-                }
-            )
-        else:
-            o, n = old_f[name], new_f[name]
-            if o.dataType != n.dataType:
-                report.append(
-                    {
-                        "column": name,
-                        "change": "type_changed",
-                        "old_type": o.dataType.simpleString(),
-                        "new_type": n.dataType.simpleString(),
-                    }
-                )
-            elif o.nullable != n.nullable:
-                report.append(
-                    {
-                        "column": name,
-                        "change": "nullability_changed",
-                        "old_type": o.dataType.simpleString(),
-                        "new_type": n.dataType.simpleString(),
-                    }
-                )
-    for name in new_f:
-        if name not in old_f:
-            report.append(
-                {
-                    "column": name,
-                    "change": "added",
-                    "old_type": None,
-                    "new_type": new_f[name].dataType.simpleString(),
-                }
-            )
-    return sorted(report, key=lambda r: (r["change"], r["column"]))
 
 
 def suggest_contract(

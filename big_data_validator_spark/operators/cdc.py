@@ -18,9 +18,7 @@ Scale design
   shuffling ~50 B/row and ~2 KB/row.
 - The join is a plain key-equi full outer join: Catalyst plans a
   sort-merge join, AQE splits skewed keys.  When both snapshots are
-  bucketed on the key (operators/bucketing.py) the Exchange disappears
-  entirely — the nightly-diff shape at 100 TB is bucketed-write then
-  zero-shuffle diff.
+  bucketed tables on the key the Exchange disappears entirely.
 - Fingerprints compare within ONE engine only (current fp vs incoming
   fp); cross-engine float rendering never touches the result, so the
   changeset itself is oracle-checkable even though md5-of-double-string
@@ -255,8 +253,8 @@ def apply_changeset(
 
     Plan shape at 100 TB: ONE left-anti join of the base against the
     touched keys (delete ∪ update — shuffles the base on its key once;
-    zero-Exchange when base and changeset are bucketed on the key,
-    operators/bucketing.py) plus a union with the insert/update rows.
+    zero-Exchange when base and changeset are bucketed tables on the
+    key) plus a union with the insert/update rows.
     The base is never rewritten row-by-row and unchanged rows are never
     shuffled wider than their key.  Applying ``snapshot_changeset(current,
     incoming)`` to ``current`` reproduces ``incoming`` exactly — the
@@ -315,15 +313,6 @@ def apply_changeset(
         F.col(change_col).isin("insert", "update")
     ).select(*current.columns)
     return survivors.unionByName(upserts)
-
-
-def changeset_summary(changeset: DataFrame) -> DataFrame:
-    """One row per change_type with its key count — the monitoring view
-    (alert when deletes spike).  Map-side partial aggregation makes this
-    a near-free epilogue to :func:`snapshot_changeset`."""
-    return changeset.groupBy("change_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys")
-    )
 
 
 def changeset_delta_rows(

@@ -425,161 +425,6 @@ def contamination_probe_counts(
     )
 
 
-def _build_aho_corasick(probes: "list[tuple]") -> dict:
-    """Build an Aho-Corasick automaton as plain dicts: goto (node ->
-    {char: node}), fail (node -> node), out (node -> [probe ids]).
-    Pure-Python, built ONCE per task from the broadcast probe list —
-    search is then O(len(text)) regardless of probe count."""
-    goto: list[dict] = [{}]
-    out: list[list] = [[]]
-    for pid, pat in probes:
-        node = 0
-        for ch in pat:
-            nxt = goto[node].get(ch)
-            if nxt is None:
-                goto.append({})
-                out.append([])
-                nxt = len(goto) - 1
-                goto[node][ch] = nxt
-            node = nxt
-        out[node].append(pid)
-    fail = [0] * len(goto)
-    from collections import deque
-
-    q = deque()
-    for ch, nxt in goto[0].items():
-        q.append(nxt)
-    while q:
-        node = q.popleft()
-        for ch, nxt in goto[node].items():
-            q.append(nxt)
-            f = fail[node]
-            while f and ch not in goto[f]:
-                f = fail[f]
-            fail[nxt] = goto[f].get(ch, 0) if goto[f].get(ch, 0) != nxt else 0
-            out[nxt] = out[nxt] + out[fail[nxt]]
-    return {"goto": goto, "fail": fail, "out": out}
-
-
-def _ac_search_ids(auto: dict, text: str) -> set:
-    """Distinct probe ids matching anywhere in ``text``."""
-    goto, fail, out = auto["goto"], auto["fail"], auto["out"]
-    node = 0
-    hits: set = set()
-    for ch in text:
-        while node and ch not in goto[node]:
-            node = fail[node]
-        node = goto[node].get(ch, 0)
-        if out[node]:
-            hits.update(out[node])
-    return hits
-
-
-def contamination_probe_counts_automaton(
-    corpus: DataFrame,
-    probes: DataFrame,
-    text_col: str = "text",
-    probe_col: str = "probe",
-    probe_id_col: str = "probe_id",
-    corpus_id_col: Optional[str] = None,
-) -> DataFrame:
-    """The documented scale upgrade of :func:`contamination_probe_counts`
-    for LARGE probe sets (10^4+): one Aho-Corasick pass per document
-    instead of |probes| substring searches.
-
-    The probe set ships to executors as a Spark broadcast (same
-    smallness contract as the BNLJ's broadcast side); each
-    ``mapInPandas`` task builds the automaton once, then every document
-    costs O(len(text)) — independent of probe count — in an
-    Arrow-batched Python worker.  Semantics are pinned equal to the
-    JVM broadcast-join path in tests; at 10^2-10^3 probes prefer the
-    JVM path (no Python hop).
-
-    Empty probe strings are rejected: an empty pattern would match
-    every document vacuously and, in the automaton, alias the root.
-
-    Probe rows are deduplicated on ``(probe_id, probe)`` (matching the
-    JVM path), and a ``probe_id`` mapped to MULTIPLE distinct strings is
-    rejected — the two paths would legitimately disagree on it (the
-    automaton counts a doc once per id, the broadcast join once per
-    string).  When ``corpus_id_col`` is used it must be an integral
-    column: the Arrow batch schema is pinned ``long`` (ADVICE r5 — a
-    string/UUID id would crash the pandas worker mid-job; fail at plan
-    time with a clear message instead).
-    """
-    import pandas as pd  # noqa: F401 (worker-side)
-
-    spark = corpus.sparkSession
-    probe_rows = sorted(
-        {
-            (r[0], r[1])
-            for r in probes.select(probe_id_col, probe_col).collect()
-        }
-    )
-    if any(not p for _, p in probe_rows):
-        raise ValueError("empty probe strings are not allowed")
-    ids = [pid for pid, _ in probe_rows]
-    if len(set(ids)) != len(ids):
-        raise ValueError(
-            "probe_id mapped to multiple distinct probe strings; "
-            "use one id per probe string (the JVM and automaton paths "
-            "would disagree on such ids)"
-        )
-    bc = spark.sparkContext.broadcast(probe_rows)
-    id_out = corpus_id_col is not None
-    if id_out:
-        id_type = dict(corpus.dtypes).get(corpus_id_col, "")
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"corpus_id_col {corpus_id_col!r} must be an integral "
-                f"column (got {id_type or 'missing'}): the automaton's "
-                "Arrow schema carries ids as long; hash string/UUID ids "
-                "to a long first, or use contamination_probe_counts"
-            )
-    cols = [text_col] + ([corpus_id_col] if id_out else [])
-    src = corpus.select(*cols)
-    if id_out:
-        # match the JVM path, where a null corpus id fails the
-        # `corpus_id != probe_id` predicate and the doc never counts —
-        # AND keep the pandas id column int64 (a null would coerce it
-        # to float64, crashing on NaN and losing precision above 2^53)
-        src = src.filter(F.col(corpus_id_col).isNotNull())
-
-    def scan(batches):
-        auto = _build_aho_corasick(bc.value)
-        import pandas as pd
-
-        for pdf in batches:
-            pids, dids = [], []
-            texts = pdf[text_col]
-            docs = pdf[corpus_id_col] if id_out else None
-            for i in range(len(pdf)):
-                t = texts.iat[i]
-                if t is None:
-                    continue
-                for pid in _ac_search_ids(auto, t):
-                    pids.append(pid)
-                    dids.append(int(docs.iat[i]) if id_out else -1)
-            yield pd.DataFrame({"_pid": pids, "_did": dids})
-
-    pairs = src.mapInPandas(scan, schema="_pid long, _did long")
-    if id_out:
-        pairs = pairs.filter(F.col("_pid") != F.col("_did"))
-    hits = pairs.groupBy(F.col("_pid").alias(probe_id_col)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_contaminated")
-    )
-    return (
-        probes.select(probe_id_col)
-        .join(F.broadcast(hits), probe_id_col, "left")
-        .select(
-            probe_id_col,
-            F.coalesce(F.col("n_contaminated"), F.lit(0))
-            .cast("long")
-            .alias("n_contaminated"),
-        )
-    )
-
-
 def k_anonymity_violations(
     df: DataFrame,
     quasi_cols: Sequence[str],

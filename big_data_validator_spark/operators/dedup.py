@@ -126,21 +126,6 @@ def exact_duplicate_groups(
     )
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep exactly one row (lowest id) per normalized-text fingerprint.
-
-    Window formulation: one shuffle on the fingerprint; full rows move once.
-    """
-    w = Window.partitionBy(fingerprint(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 # ---------------------------------------------------------- shingle helpers
 
 def _shingle_sets(
@@ -421,13 +406,13 @@ def minhash_signatures(
     n: int = 5,
     num_hashes: int = 64,
 ) -> DataFrame:
-    """(id, sig: array<bigint>) MinHash signatures, expression-only.
+    """(id, sig: array<bigint>) MinHash signatures.
 
-    Each shingle is hashed ONCE (``xxhash64``); the ``num_hashes`` hash
-    functions are derived arithmetically as ``a_i * h + b_i`` (multiply-add
-    family, long wraparound ≡ mod 2^64) — ~64× cheaper than hashing the
-    string per function.  The signature slot is the min over the document's
-    shingle hashes (``transform`` + ``array_min`` inside codegen).
+    Each shingle is hashed ONCE (``xxhash64`` folded to 31 bits); the
+    ``num_hashes`` hash functions are derived arithmetically as
+    ``(a_i * h + b_i) mod (2^31 - 1)`` — ~64× cheaper than hashing the
+    string per function.  The signature slot is the min over the
+    document's shingle hashes, computed in an Arrow numpy kernel.
     ``P(sig_a[i]==sig_b[i]) ≈ Jaccard(a,b)``, the classic MinHash estimator
     (Broder 1997).
     """
@@ -437,8 +422,7 @@ def minhash_signatures(
 
 
 def _minhash_signatures_from_sets(
-    sets_df: DataFrame, num_hashes: int, impl: str = "arrow",
-    prehashed: bool = False,
+    sets_df: DataFrame, num_hashes: int, prehashed: bool = False,
 ) -> DataFrame:
     params = _minhash_params(num_hashes)
     if prehashed:
@@ -451,23 +435,6 @@ def _minhash_signatures_from_sets(
             "shingles", lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MERSENNE_31))
         )
     hashed = sets_df.withColumn("_h", base)
-
-    if impl == "expr":
-        # reference formulation, all Catalyst expressions — but HOF lambdas
-        # are interpreted per element, so 64 passes over the shingle array
-        # cost ~6× the arrow kernel; kept for Arrow-less environments
-        def _mul_add(a: int, b: int):
-            # closure factory: keep a 1-arg lambda (PySpark infers HOF arity
-            # from the lambda's parameter count, so default-arg tricks break)
-            return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_31)
-
-        sig = F.array(
-            *[
-                F.array_min(F.transform("_h", _mul_add(a, b)))
-                for a, b in params
-            ]
-        )
-        return hashed.select("id", sig.alias("sig"))
 
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -487,8 +454,7 @@ def _minhash_signatures_from_sets(
                 out.append(empty)
                 continue
             hv = np.asarray(h, dtype=np.int64)
-            # identical arithmetic to the expr path: a,h < 2^31 so the
-            # product fits int64 exactly; % matches Java for positives
+            # a,h < 2^31 so the product fits int64 exactly
             out.append(((hv[:, None] * A[None, :] + B[None, :]) % _MERSENNE_31).min(axis=0))
         return pd.Series(out)
 
@@ -1100,23 +1066,6 @@ def _two_phase_cc(
     )
 
 
-def dedup_keep_representatives(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Drop every near-duplicate except the minimum-id representative of
-    its cluster: anti-join the corpus against the non-representative
-    member ids (a set far smaller than the corpus, broadcast when it
-    fits).  Rows never appearing in ``pairs`` are kept untouched."""
-    clusters = duplicate_clusters(pairs, max_iter=max_iter)
-    losers = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 # ------------------------------------------------------------------ simhash
 
 def simhash_signatures(
@@ -1124,15 +1073,13 @@ def simhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, simhash: bigint) 64-bit SimHash over word tokens.
 
     Classic Charikar scheme: each token hashes to 64 bits (``xxhash64``,
     JVM-side); each bit position accumulates +1/-1 across tokens; the
     signature takes the sign.  The 64-way bit-vote runs in an Arrow numpy
-    kernel (``impl='expr'`` keeps the all-expression formulation, ~6×
-    slower: HOF lambdas are interpreted per element).
+    kernel.
     """
     from big_data_validator_spark.operators import rebalance_for_compute
     from big_data_validator_spark.operators.text import word_tokens
@@ -1140,35 +1087,6 @@ def simhash_signatures(
     df = rebalance_for_compute(df)
     toks = F.array_distinct(word_tokens(F.col(text_col)))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    if impl == "expr":
-        # The Python shiftright/shiftleft wrappers only take int shift
-        # amounts; the SQL functions accept column shifts — call them
-        # directly so the bit index can come from the `sequence` lambda.
-        bit_votes = F.transform(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
-            lambda i: F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc
-                + F.when(
-                    F.call_function("shiftright", h, i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            ),
-        )
-        sig = F.aggregate(
-            F.zip_with(
-                bit_votes,
-                F.sequence(F.lit(0), F.lit(bits - 1)),
-                lambda vote, i: F.when(
-                    vote > 0,
-                    F.call_function("shiftleft", F.lit(1).cast("long"), i),
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, b: acc.bitwiseOR(b),
-        )
-        return df.select(F.col(id_col).alias("id"), sig.alias("simhash"))
 
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -1181,7 +1099,7 @@ def simhash_signatures(
         out = np.zeros(len(hs), dtype=np.int64)
         for i, h in enumerate(hs):
             if h is None or len(h) == 0:
-                continue  # zero votes → all bits 0, same as the expr path
+                continue  # zero votes → all bits 0
             hv = np.asarray(h, dtype=np.int64).view(np.uint64)
             onebits = ((hv[:, None] >> bitpos[None, :]) & 1).sum(axis=0)
             votes = 2 * onebits.astype(np.int64) - len(hv)

@@ -12,9 +12,8 @@ column partial locality.
 This module computes the Morton code as a pure-Catalyst expression
 (shift/mask/or — codegen'd, no UDF) and the per-file min-max manifest
 that quantifies the resulting skipping power.  Repartitioning by Morton
-range + ``sortWithinPartitions`` is then the standard write path
-(:func:`maintenance.compact_parquet` shape); the manifest is what a
-table-format's pruning index would persist.
+range + ``sortWithinPartitions`` is then the standard write path; the
+manifest is what a table-format's pruning index would persist.
 
 Quantization is INTEGER arithmetic end to end (``(v − min) · (2^bits −
 1) div (max − min)``) so the bucket assignment is exactly reproducible
@@ -22,8 +21,6 @@ across engines — the registry oracle replays it in DuckDB.
 """
 
 from __future__ import annotations
-
-from typing import Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -160,43 +157,3 @@ def zorder_file_stats(
             / 1000000.0
         ).alias("y_span_frac"),
     )
-
-
-def zorder_repartition(
-    df: DataFrame, x_col: str, y_col: str, bits: int = 8, n_files: int = 64
-) -> Tuple[DataFrame, str]:
-    """The write path: the input range-partitioned and sorted by Morton
-    code, ready for ``write.parquet`` so each output file covers one
-    compact Z-range.  Returns ``(frame, order_col)``; the caller drops
-    ``order_col`` after writing (kept so downstream can verify order).
-
-    ``repartitionByRange`` samples the code distribution (one extra
-    pass over a sample, not the data) — at 100 TB that beats hash
-    partitioning here because consecutive Morton ranges land in the
-    same file, which is the locality the manifest measures.
-    """
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    bounds = df.agg(
-        F.min(x).alias("_mnx"),
-        F.max(x).alias("_mxx"),
-        F.min(y).alias("_mny"),
-        F.max(y).alias("_mxy"),
-    )
-    out = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("_vx", x)
-        .withColumn("_vy", y)
-        .withColumn(
-            "_zorder",
-            morton_interleave(
-                _quantize("_vx", "_mnx", "_mxx", bits),
-                _quantize("_vy", "_mny", "_mxy", bits),
-                bits,
-            ),
-        )
-        .drop("_vx", "_vy", "_mnx", "_mxx", "_mny", "_mxy")
-        .repartitionByRange(n_files, F.col("_zorder"))
-        .sortWithinPartitions("_zorder")
-    )
-    return out, "_zorder"

@@ -2,18 +2,10 @@
 with typed metadata.
 
 Everything Spark-side is real and tested: schemas, Arrow-batched
-``mapInPandas`` plumbing, batch shapes, partition sizing.  Decoding:
-
-- **images decode for real** via :func:`decode_image` — Pillow when
-  importable, else the built-in pure-stdlib PNG decoder
-  (:func:`decode_png`), exercised end-to-end by
-  :func:`image_decode_features` and its pytest;
-- audio/video decode still needs libav/soundfile (not in this
-  container) and raises ``NotImplementedError`` at the clearly-marked
-  dispatch (:func:`_decode_asset`);
-- the deterministic fake kernels (byte histogram / truncate-tile
-  resize) remain the ORACLE path — byte math the DuckDB oracles can
-  reproduce — and the default for the registry queries.
+``mapInPandas`` plumbing, batch shapes, partition sizing.  No media is
+decoded: the kernels are deterministic stand-ins (byte histogram /
+truncate-tile resize) over the raw payload bytes — byte math the DuckDB
+oracles can reproduce.
 """
 
 from __future__ import annotations
@@ -34,21 +26,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Canonical schema for a multimodal asset column: opaque payload + typed
-#: metadata.  At 100 TB the payload column dominates storage — keep it in
-#: its own parquet column chunk (columnar pruning skips it for
-#: metadata-only queries) and size ``spark.sql.files.maxPartitionBytes``
-#: so a task's payload batch fits executor memory.
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("media_type", StringType(), True),  # image|audio|video
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [
@@ -76,160 +53,6 @@ def assets_from_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
         (F.length(text_col) % 480 + 1).cast("int").alias("height"),
         (F.length(text_col) * 10).cast("int").alias("duration_ms"),
     )
-
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Minimal pure-stdlib PNG decoder: ``(width, height, channels,
-    raw_pixels)`` with pixels in row-major channel-interleaved order.
-
-    Supports the common subset — bit depth 8, color types 0 (grey),
-    2 (RGB), 4 (grey+alpha), 6 (RGBA), no interlace — and all five
-    scanline filters (None/Sub/Up/Average/Paeth, PNG spec §9).  Exists
-    so the real-decode path is exercisable end-to-end in environments
-    without Pillow; :func:`decode_image` prefers Pillow when importable.
-    """
-    if not payload or not payload.startswith(_PNG_MAGIC):
-        raise ValueError("not a PNG payload")
-    import struct
-    import zlib
-
-    pos = len(_PNG_MAGIC)
-    width = height = channels = None
-    idat = b""
-    while pos + 8 <= len(payload):
-        (length,), ctype = struct.unpack(">I", payload[pos : pos + 4]), payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + CRC
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type, _, _, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if bit_depth != 8 or interlace != 0:
-                raise NotImplementedError(
-                    f"PNG bit_depth={bit_depth} interlace={interlace} "
-                    "outside the supported subset"
-                )
-            channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-            if channels is None:
-                raise NotImplementedError(f"PNG color_type={color_type}")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if width is None or not idat:
-        raise ValueError("malformed PNG: missing IHDR or IDAT")
-    raw = zlib.decompress(idat)
-    stride = width * channels
-    out = bytearray()
-    prev = bytearray(stride)
-    for y in range(height):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        line = bytearray(raw[off + 1 : off + 1 + stride])
-        for i in range(stride):
-            a = line[i - channels] if i >= channels else 0  # left
-            b = prev[i]  # up
-            c = prev[i - channels] if i >= channels else 0  # up-left
-            if ftype == 1:  # Sub
-                line[i] = (line[i] + a) & 0xFF
-            elif ftype == 2:  # Up
-                line[i] = (line[i] + b) & 0xFF
-            elif ftype == 3:  # Average
-                line[i] = (line[i] + (a + b) // 2) & 0xFF
-            elif ftype == 4:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-            elif ftype != 0:
-                raise ValueError(f"PNG filter type {ftype}")
-        out += line
-        prev = line
-    return width, height, channels, bytes(out)
-
-
-def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Real image decode — THE swap-in point the stubs document.
-
-    Prefers Pillow when importable (any format PIL reads); falls back to
-    the built-in :func:`decode_png` for PNG payloads so the real-decode
-    path stays testable in this container (no media libs installed).
-    Anything else raises ``NotImplementedError`` — callers that want the
-    always-available deterministic path keep using the fake kernels,
-    which remain the oracle-checked default.
-    """
-    try:
-        import io
-
-        from PIL import Image  # optional dependency
-
-        img = Image.open(io.BytesIO(payload))
-        img.load()
-        channels = len(img.getbands())
-        return img.width, img.height, channels, img.tobytes()
-    except ImportError:
-        pass
-    if payload and payload.startswith(_PNG_MAGIC):
-        return decode_png(payload)
-    raise NotImplementedError(
-        "media decoding beyond PNG requires Pillow/libav; not available "
-        "in this environment — see module docstring"
-    )
-
-
-def _decode_asset(media_type: str, payload: bytes) -> bytes:
-    """Decode dispatch for the feature/resize kernels: images route to
-    :func:`decode_image` (real decode — Pillow or built-in PNG); audio
-    and video still require external libraries and raise."""
-    if media_type == "image":
-        return decode_image(payload)[3]
-    raise NotImplementedError(
-        f"{media_type} decoding requires libav/soundfile; not available "
-        "in this environment — see module docstring"
-    )
-
-
-def image_decode_features(assets: DataFrame) -> DataFrame:
-    """REAL-decode feature extraction for image assets: decode each
-    payload (:func:`decode_image`), emit per-channel pixel means as the
-    feature vector — the same Arrow ``mapInPandas`` shape as
-    :func:`extract_features`, but over decoded pixels instead of raw
-    payload bytes.  Non-image and undecodable payloads yield a null
-    feature rather than failing the batch (at 100 TB a corrupt asset
-    must not kill the stage; the null rows are the failure sink)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for mt, p in zip(pdf["media_type"], pdf["payload"]):
-                try:
-                    if mt != "image":
-                        raise NotImplementedError
-                    w, h, ch, pixels = decode_image(p)
-                    n = w * h
-                    feats.append(
-                        [
-                            sum(pixels[c::ch]) / n / 255.0
-                            for c in range(ch)
-                        ]
-                    )
-                except (NotImplementedError, ValueError):
-                    feats.append(None)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "payload_bytes": pdf["payload"].map(
-                        lambda b: len(b) if b is not None else 0
-                    ),
-                    "feature": feats,
-                }
-            )
-
-    return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 def _fake_feature(payload: bytes, dim: int) -> list[float]:
@@ -403,7 +226,7 @@ def phash_hashes(
     over the payload's first 65 bytes (bit *i* = byte *i* < byte *i+1*).
     With a real decoder the same operator runs over the 8×9 downsampled
     grayscale grid; the bit rule, packing, and banding are identical —
-    only the byte source changes (decode_image's pixel output slots in
+    only the byte source changes (a decoder's pixel output slots in
     behind the same hex device).
 
     Everything is built from JVM-side expressions — hex the payload

@@ -42,23 +42,6 @@ def duplicate_key_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def duplicate_rows(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """All-but-first row per duplicated key, via a ranking window.
-
-    ``row_number`` partitions by key — the shuffle is on the key, same as
-    the groupBy formulation, but retains full rows for triage/removal.
-    A deterministic intra-group order must come from ``order_by``.
-    """
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-        *[F.col(c) for c in df.columns]
-    )
-    return (
-        df.withColumn("row_num", F.row_number().over(w))
-        .filter(F.col("row_num") > 1)
-        .drop("row_num")
-    )
-
-
 def uniqueness_metrics(
     df: DataFrame, cols: Sequence[str], approx: bool = False
 ) -> DataFrame:
@@ -141,33 +124,6 @@ def orphan_rows(
         fact[fk].eqNullSafe(dim_proj[dk]) for fk, dk in zip(fact_keys, dim_keys)
     ]
     return fact.join(dim_proj, cond, "left_anti")
-
-
-# ------------------------------------------------------------ domain / range
-
-def domain_violations(
-    df: DataFrame, col: str, allowed: Sequence[str]
-) -> DataFrame:
-    """Rows whose value is outside the allowed domain (NULL is not a domain
-    violation — completeness owns NULLs)."""
-    c = F.col(col)
-    return df.filter(c.isNotNull() & ~c.isin(list(allowed)))
-
-
-def range_violations(
-    df: DataFrame,
-    col: str,
-    min_value=None,
-    max_value=None,
-) -> DataFrame:
-    """Rows outside [min_value, max_value] (either bound optional)."""
-    c = F.col(col)
-    cond = F.lit(False)
-    if min_value is not None:
-        cond = cond | (c < F.lit(min_value))
-    if max_value is not None:
-        cond = cond | (c > F.lit(max_value))
-    return df.filter(c.isNotNull() & cond)
 
 
 def violation_expr_metrics(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
@@ -395,36 +351,6 @@ def salted_aggregate(
     return phase1.groupBy(*keys).agg(
         *[F.sum(f"_p_{name}").alias(name) for name in aggs]
     )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-proof fact-dim equi-join: salt the fact side with a random
-    bucket, explode the dim side across all buckets, join on (key, salt).
-
-    A hot fact key's rows land on ``salt_buckets`` different reducers,
-    each holding its own copy of the dim row.  Dim-side replication costs
-    ``salt_buckets``× the dim size — use for moderate dims too big to
-    broadcast but small enough to replicate; with AQE's
-    ``skewJoin.enabled`` this is only needed when runtime splitting is
-    unavailable (e.g. bucketed tables or forced sort-merge plans)."""
-    salted_fact = fact.withColumn(
-        "_salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    exploded_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    out = salted_fact.join(
-        exploded_dim,
-        (salted_fact[fact_key] == exploded_dim[dim_key])
-        & (salted_fact["_salt"] == exploded_dim["_salt"]),
-    )
-    return out.drop("_salt")
 
 
 # ------------------------------------------------------- temporal joins

@@ -34,7 +34,10 @@ def rule_column_names(
     - **superset-tolerant**: extra actual columns pass silently, missing
       expected columns fail (``set.issuperset`` at ``:53``) — observable
       behavior, kept per SURVEY.md §7 hard-list item 3;
-    - both set differences are reported for diagnostics (``:60-61,71-72``).
+    - both set differences are reported for diagnostics (``:60-61,71-72``);
+    - a name the header repeats also fails, listed under ``duplicates``:
+      Spark resolves columns case-insensitively, so such a header cannot
+      be a parse schema.
 
     Driver-side by design: it compares schema name lists, not data.
     """
@@ -42,16 +45,20 @@ def rule_column_names(
     expected = contract.expected_columns_upper
     missing = sorted(set(expected).difference(actual))
     additional = sorted(set(actual).difference(expected))
+    duplicates = sorted({c for c in actual if actual.count(c) > 1})
+    details = {
+        "expected": expected,
+        "actual": actual,
+        "missing": missing,
+        "additional": additional,
+    }
+    if duplicates:
+        details["duplicates"] = duplicates
     return RuleResult(
         rule="column_names",
-        passed=not missing,
-        violation_count=len(missing),
-        details={
-            "expected": expected,
-            "actual": actual,
-            "missing": missing,
-            "additional": additional,
-        },
+        passed=not missing and not duplicates,
+        violation_count=len(missing) + len(duplicates),
+        details=details,
     )
 
 

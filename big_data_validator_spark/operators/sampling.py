@@ -36,20 +36,6 @@ def _hash_bucket(key: Column, seed: int) -> Column:
     return F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(_BUCKETS))
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, seed: int = 42
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep rows whose key hashes below
-    ``fraction``.  Repeated runs (and overlapping pipelines using the same
-    seed) select the SAME rows — the property corpus subsampling needs and
-    ``df.sample()`` does not give across repartitionings."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(
-        _hash_bucket(F.col(key_col), seed) < int(round(fraction * _BUCKETS))
-    )
-
-
 def hash_split(
     df: DataFrame,
     key_col: str,

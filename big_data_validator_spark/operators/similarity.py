@@ -78,28 +78,6 @@ def _random_hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float
     ]
 
 
-def lsh_bucket_expr(vec_col: str, planes: Sequence[Sequence[float]]):
-    """Bucket id = bit pattern of sign(v·p) over the hyperplanes — a pure
-    expression: dot products via ``zip_with``+``aggregate``, packed into a
-    long with shift/or.  Interpreted per element (HOF lambdas don't
-    codegen) — kept as the Arrow-less reference; the hot path is
-    :func:`lsh_buckets_kernel`, one matmul for every table at once."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket.bitwiseOR(
-            F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return bucket
-
-
 def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
     """Arrow-batched kernel computing EVERY table's bucket id in one
     ``V @ P.T`` matmul: stack all tables' hyperplanes into a single
@@ -107,9 +85,9 @@ def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
     into a long.  Returns a pandas_udf column: ``array<bigint>`` of
     ``len(tables)`` bucket ids per row.
 
-    Versus :func:`lsh_bucket_expr` this collapses tables×planes
-    interpreted array passes per row into one BLAS call per Arrow batch —
-    the same ~6× win measured on the MinHash/SimHash kernels."""
+    One BLAS call per Arrow batch in place of tables×planes interpreted
+    array passes per row — the same ~6× win measured on the
+    MinHash/SimHash kernels."""
     import numpy as np
 
     from pyspark.sql.pandas.functions import pandas_udf
@@ -134,7 +112,7 @@ def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
                 for v, m in zip(vs, null_mask)
             ]
         )
-        signs = (V @ P.T) >= 0.0  # same >= 0 rule as the expr path
+        signs = (V @ P.T) >= 0.0
         buckets = (
             signs.reshape(len(vs), num_tables, num_planes).astype(np.int64)
             * weights
@@ -554,62 +532,6 @@ def pq_ann_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    num_planes: int = 10,
-    num_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: Optional[int] = 1000,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (LSH-bucketed): pairs sharing a
-    bucket in any table, verified by exact cosine ≥ threshold.
-    Returns ``(id_a, id_b, cosine)`` with ``id_a < id_b``.
-
-    The per-bucket self-join goes through
-    :func:`~big_data_validator_spark.operators.dedup.capped_bucket_pairs`
-    — the same skew guard every text-dedup LSH self-join here uses: a
-    degenerate corpus (thousands of identical embeddings) collapses into
-    one (table, bucket) key and an uncapped join would emit O(size²)
-    shuffle rows; oversized buckets degrade to O(size) leader edges,
-    which keeps the candidate graph connected for downstream clustering.
-    ``max_bucket_size=None`` restores exact all-pairs enumeration.
-    """
-    from big_data_validator_spark.operators import rebalance_for_compute
-    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
-
-    df = rebalance_for_compute(df)
-    tables = [
-        _random_hyperplanes(dim, num_planes, seed + 1000 * t)
-        for t in range(num_tables)
-    ]
-    kernel = lsh_buckets_kernel(tables)
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.posexplode(kernel(vec_col)).alias("table", "bucket"),
-    )
-    pairs = capped_bucket_pairs(
-        b, ["table", "bucket"], max_bucket_size, payload_cols=["vec"]
-    )
-    out = (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine_similarity(F.col("vec_a"), F.col("vec_b")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    from big_data_validator_spark.operators.dedup import pinned_caches
-
-    out._bdv_pinned = pinned_caches(pairs)
-    return out
-
-
 # ----------------------------------------------- exact-integer near-dup
 
 def quantized_hyperplanes(
@@ -709,8 +631,8 @@ def embedding_near_dup_pairs_exactint(
     max_bucket_size: Optional[int] = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs with EXACT integer
-    semantics end-to-end — the oracle-checkable twin of
-    :func:`embedding_near_dup_pairs` (VERDICT r6 item 1).
+    semantics end-to-end, so the result is oracle-checkable (VERDICT r6
+    item 1).
 
     Every step after the one driver-side hyperplane quantization is
     integer arithmetic, so ANY engine reproduces the output bit-exactly
@@ -719,8 +641,8 @@ def embedding_near_dup_pairs_exactint(
     1. quantize: ``q[i] = floor(embedding[i] * quant_scale)`` (int64);
     2. bucket:   sign pattern of ``q · plane_int`` per table — int64
        matmul in an Arrow kernel (:func:`int_lsh_buckets_kernel`);
-    3. candidates: per-(table, bucket) self-join (same
-       ``capped_bucket_pairs`` skew guard as the float path);
+    3. candidates: per-(table, bucket) self-join with the
+       ``capped_bucket_pairs`` skew guard;
     4. verify: ``cos(a, b) >= threshold_ppm / 1e6`` decided WITHOUT
        sqrt or division: ``dot > 0  AND  dot² · 10¹²  >=
        threshold_ppm² · |a|² · |b|²`` in DECIMAL(38,0) — with
@@ -731,12 +653,11 @@ def embedding_near_dup_pairs_exactint(
     all exact integers (the cosine itself is irrational; consumers
     needing it compute ``dot_q / sqrt(na2 * nb2)``).
 
-    Scale shape is identical to the float path: one projection + one
-    shuffle on the bucket key, capped per-bucket self-join, no
-    all-pairs work.  The quantization wobble (~1e-5 per component)
-    only moves pairs whose true cosine sits within ~1e-4 of the
-    threshold — and moves them identically in every engine, which is
-    the point.
+    Scale shape: one projection + one shuffle on the bucket key,
+    capped per-bucket self-join, no all-pairs work.  The quantization
+    wobble (~1e-5 per component) only moves pairs whose true cosine sits
+    within ~1e-4 of the threshold — and moves them identically in every
+    engine, which is the point.
     """
     from big_data_validator_spark.operators import rebalance_for_compute
     from big_data_validator_spark.operators.dedup import (

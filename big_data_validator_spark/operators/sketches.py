@@ -77,21 +77,11 @@ def _compact_level(sk: dict, i: int) -> None:
     levels[i] = []
 
 
-def kll_add(sk: dict, value: int) -> None:
-    sk["levels"][0].append(int(value))
-    sk["n"] += 1
-    i = 0
-    while i < len(sk["levels"]) and len(sk["levels"][i]) > sk["k"]:
-        _compact_level(sk, i)
-        i += 1
-
-
 def kll_add_many(sk: dict, values: Iterable[int]) -> None:
-    """Bulk add with IDENTICAL state evolution to per-value
-    :func:`kll_add` (compaction still fires exactly when level 0
-    reaches ``k+1`` items), but amortizing the python loop: level 0 is
-    extended in chunks up to its trigger point instead of one append +
-    one capacity check per value."""
+    """Add ``values`` in order; compaction fires exactly when level 0
+    reaches ``k+1`` items, as a per-value add would, but the python loop
+    is amortized: level 0 is extended in chunks up to its trigger point
+    instead of one append + one capacity check per value."""
     vals = [int(v) for v in values]
     k = sk["k"]
     n = len(vals)
@@ -136,10 +126,6 @@ def kll_merge(a: dict, b: dict) -> dict:
             _compact_level(out, i)
         i += 1
     return out
-
-
-def kll_total_weight(sk: dict) -> int:
-    return sum(len(lvl) << i for i, lvl in enumerate(sk["levels"]))
 
 
 def kll_quantiles(sk: dict, fractions: Sequence[float]) -> list:

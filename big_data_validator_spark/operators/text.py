@@ -38,26 +38,6 @@ def word_tokens(col: Column) -> Column:
     )
 
 
-#: GPT-2-family pre-tokenizer pattern (the public regex from the GPT-2 /
-#: RoBERTa BPE vocab files): contraction suffixes, optionally-space-prefixed
-#: letter runs, digit runs, punctuation runs, then residual whitespace.
-#: Java regex supports the \p{L}/\p{N} classes and the lookahead verbatim.
-_BPE_PRETOKEN_PATTERN = (
-    r"'s|'t|'re|'ve|'m|'ll|'d"
-    r"| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
-    r"|\s+(?!\S)|\s+"
-)
-
-
-def bpe_pretoken_count(col: Column) -> Column:
-    """Pre-token count under the GPT-2 BPE pre-tokenizer regex — the
-    standard first-cut estimate of LLM token cost (every BPE token is a
-    piece of exactly one pre-token, so this lower-bounds the true token
-    count and tracks it closely on natural text).  Pure ``regexp_count``
-    expression: codegen'd, no vocab file, no Python."""
-    return F.regexp_count(col, F.lit(_BPE_PRETOKEN_PATTERN))
-
-
 def char_ngrams(col: Column, n: int, lowered: bool = False) -> Column:
     """Array of character n-grams (shingles) of the lowercased text.
     Expression-only sliding window: substring positions generated with
@@ -205,21 +185,6 @@ def tfidf_top_terms(
         .filter(F.col("rank") <= k)
         .select("id", "term", "tf", "df", "score", "rank")
     )
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience profile: all quality features + fingerprint + language
-    guess in a single projection (one scan, codegen end-to-end)."""
-    feats = quality_features(F.col(text_col))
-    cols = [df["*"]]
-    for name, expr in feats.items():
-        if name in df.columns:  # don't shadow source columns (e.g. n_chars)
-            continue
-        cols.append(expr.alias(name))
-    cols.append(quality_score(F.col(text_col)).alias("quality"))
-    cols.append(fingerprint(F.col(text_col)).alias("fingerprint"))
-    cols.append(lang_guess(F.col(text_col)).alias("lang_guess"))
-    return df.select(*cols)
 
 
 def unigram_lm_scores(

@@ -3010,9 +3010,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel makes byte counts and feature dimensionality pure functions
     of the source text, so DuckDB recomputes what the Python worker
     must produce — a schema/batch-shape regression in the Arrow path
-    flips the hash even though the "features" themselves are fakes.
-    Real decode runs through the same kernel (multimodal.decode_image,
-    pytest-pinned on real PNG bytes)."""
+    flips the hash even though the "features" themselves are fakes."""
     docs = _t(spark, sf_dir, "documents")
     assets = M.assets_from_documents(docs)
     feats = M.extract_features(assets, dim=16)
@@ -6219,7 +6217,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_encode_tokens): every word token segmented by the rank-ordered
     merge table into BPE symbols, mapped to deterministic token ids,
     and histogrammed — the actual token-cost / packing input an LLM
-    pipeline needs (bpe_pretoken_count only counted pre-tokens;
+    pipeline needs (a pre-token count is only a lower bound;
     VERDICT r5 #3).  The merge loop is a pure Catalyst replace-
     expression chain (codegen, no Python) and the DuckDB oracle is
     GENERATED from the same merge table, so both engines run the
@@ -7322,9 +7320,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction output file whose task would read it (cum_rows_before
     div 15000).  The oracle re-derives the inventory relationally —
     row counts are the engine-portable planning currency (real byte
-    sizes are encoding-dependent; the byte-based planner
-    plan_compaction/compact_parquet stays pytest-covered in
-    tests/test_maintenance.py).  Scale: the manifest is file-count
+    sizes are encoding-dependent).  Scale: the manifest is file-count
     metadata (~400k rows for 100 TB at 256 MB files), so the global
     cumulative window is bounded by file count, never data."""
     from big_data_validator_spark.operators.maintenance import (

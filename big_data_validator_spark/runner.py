@@ -90,6 +90,9 @@ class ValidationRunner:
             actual_columns = probe_header(self.spark, csv_path, contract)
         name_result = R.rule_column_names(actual_columns, contract)
         report.add(name_result)
+        # A repeated header name cannot be a parse schema column, so such a
+        # table gets the line-level rule only: no parse, type check or sink.
+        parseable = "duplicates" not in name_result.details
 
         # 2. ONE action for the line-level field-count rule and, when types
         #    are enforced (the names rule passed, so the columns exist), the
@@ -102,7 +105,10 @@ class ValidationRunner:
             F.col("value"), contract, expected_arity=len(actual_columns)
         )
         line_leg = lines.select(mismatch.alias("_line_bad"))
-        parsed = scan_csv_permissive(self.spark, csv_path, contract, actual_columns)
+        parsed = (
+            scan_csv_permissive(self.spark, csv_path, contract, actual_columns)
+            if parseable else None
+        )
         hotfix = R.has_trailing_unnamed_column(actual_columns)
         enforce = self.config.enforce_types and name_result.passed and contract.columns
         checks = contract_violation_sql(contract, actual_columns) if enforce else {}
@@ -119,7 +125,7 @@ class ValidationRunner:
             )
         else:
             n_lines, n_mismatch = _aggregate(line_leg, _LINE_AGGS)
-            if n_mismatch and not hotfix:
+            if n_mismatch and parseable and not hotfix:
                 rows, corrupt, _ = _aggregate(
                     _parse_leg(parsed, actual_columns, []), _PARSE_AGGS
                 )
@@ -131,7 +137,7 @@ class ValidationRunner:
             details={"lines": n_lines, "expected_arity": len(actual_columns)},
         )
 
-        if n_mismatch:
+        if n_mismatch and parseable:
             # 3. escalation: the raw line count is quote/newline-blind, so
             #    defer to the full CSV parser (reference fallback,
             #    big_data_validator.py:198-205).  The sink is written only

@@ -2,8 +2,10 @@
 
     python scripts/capture_plans.py <tag> [names...]
 
-Writes ``plans/r14/<query>_<tag>.txt`` at the repo root for each entry
-(default: the whole registry).  Entries routed through
+Writes ``<query>_<tag>.txt`` for each entry (default: the whole
+registry) into a fresh ``tempfile.mkdtemp(prefix="bdv_plans_")``
+directory, or into the directory ``SPARK_GRAFT_PLAN_DIR`` names, and
+prints that directory's path first.  Entries routed through
 ``materialize_release`` return a LocalRelation (the collected rows), so
 the real distributed plan is captured by intercepting the helper and
 dumping the pre-collect plan(s) alongside the returned frame's plan.
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -32,13 +35,13 @@ from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.plans.inspect import formatted_explain, plan_report
 from big_data_validator_spark.queries import REGISTRY
 
-OUT_DIR = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r14"))
-
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR") or tempfile.mkdtemp(prefix="bdv_plans_")
+    os.makedirs(out_dir, exist_ok=True)
+    print(out_dir, flush=True)
     spark = session("bdv-plan-capture")
     warm_up(spark)
 
@@ -114,7 +117,7 @@ def main() -> None:
                 body = "\n\n".join(parts)
             except Exception as exc:  # record, keep going
                 body = f"ERROR capturing plan: {exc!r}"
-            with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as fh:
+            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(f"query: {name}\nsf_dir: {SF_DIR}\ntag: {tag}\n\n{body}\n")
             print(name, flush=True)
     finally:

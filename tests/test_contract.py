@@ -47,65 +47,6 @@ def test_read_schema_uses_actual_columns_plus_corrupt_col(person_metadata_csv):
     assert all(f.dataType.typeName() == "string" for f in schema.fields)
 
 
-def test_schema_drift_report():
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from big_data_validator_spark.contract import schema_drift
-
-    old = StructType(
-        [
-            StructField("a", LongType(), True),
-            StructField("b", StringType(), True),
-            StructField("c", IntegerType(), True),
-            StructField("d", StringType(), True),
-        ]
-    )
-    new = StructType(
-        [
-            StructField("a", LongType(), True),  # unchanged
-            StructField("b", LongType(), True),  # type change
-            StructField("c", IntegerType(), False),  # nullability
-            StructField("e", StringType(), True),  # added (d removed)
-        ]
-    )
-    got = schema_drift(old, new)
-    by_col = {r["column"]: r for r in got}
-    assert by_col["b"]["change"] == "type_changed"
-    assert by_col["b"]["old_type"] == "string"
-    assert by_col["b"]["new_type"] == "bigint"
-    assert by_col["c"]["change"] == "nullability_changed"
-    assert by_col["d"]["change"] == "removed"
-    assert by_col["e"]["change"] == "added"
-    assert "a" not in by_col
-    assert schema_drift(old, old) == []
-
-
-def test_schema_drift_on_real_snapshots(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from big_data_validator_spark.contract import schema_drift
-
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    p1, p2 = str(tmp_path / "v1"), str(tmp_path / "v2")
-    o.write.parquet(p1)
-    o.withColumn("late_col", F.lit(1)).drop("o_orderstatus").write.parquet(
-        p2
-    )
-    got = schema_drift(
-        spark.read.parquet(p1).schema, spark.read.parquet(p2).schema
-    )
-    changes = {(r["column"], r["change"]) for r in got}
-    assert ("late_col", "added") in changes
-    assert ("o_orderstatus", "removed") in changes
-    assert len(got) == 2
-
-
 def test_suggest_contract_from_data(spark):
     """Profiler→contract loop: nullability from observed nulls,
     candidate keys, capped string domains, numeric ranges — one pass."""

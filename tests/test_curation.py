@@ -147,6 +147,26 @@ def test_contamination_probe_plan_broadcasts(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+def test_contamination_duplicate_probe_rows_count_once(spark):
+    """ADVICE r5: an exactly-duplicated probe row must not double-count
+    its hits."""
+    corpus = spark.createDataFrame(
+        [(1, "needle in a haystack"), (2, "no match here")],
+        "doc_id long, text string",
+    )
+    probes = spark.createDataFrame(
+        [(10, "needle"), (10, "needle"), (11, "haystack")],
+        "probe_id long, probe string",
+    )
+    got = {
+        r["probe_id"]: r["n_contaminated"]
+        for r in contamination_probe_counts(
+            corpus, probes, corpus_id_col="doc_id"
+        ).collect()
+    }
+    assert got == {10: 1, 11: 1}
+
+
 # ---------------------------------------------------------------- oracle
 
 

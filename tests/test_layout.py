@@ -7,7 +7,6 @@ from big_data_validator_spark.operators.layout import (
     morton_interleave,
     morton_sql,
     zorder_file_stats,
-    zorder_repartition,
 )
 
 
@@ -65,23 +64,6 @@ def test_file_stats_beat_single_column_sort_locality(spark):
     avg_y_span = sum(r["y_span_frac"] for r in stats) / len(stats)
     # single-column sort on `a` would give avg y-span ~= 1.0
     assert avg_y_span < 0.6
-
-
-def test_zorder_repartition_sorted_within_partitions(spark):
-    rows = [((i * 37) % 500, (i * 101) % 500) for i in range(2000)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    out, order_col = zorder_repartition(df, "a", "b", bits=8, n_files=8)
-
-    def check(it):
-        prev = None
-        for row in it:
-            assert prev is None or row[order_col] >= prev
-            prev = row[order_col]
-            yield row
-
-    assert out.rdd.mapPartitions(
-        lambda it: check(it)
-    ).count() == len(rows)
 
 
 def test_invalid_params_raise(spark):

@@ -1,54 +1,6 @@
-"""Small-file compaction: fewer, right-sized files, identical data."""
+"""Small-file compaction plan and the shared local-input probe."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from big_data_validator_spark.operators.maintenance import (
-    compact_parquet,
-    plan_compaction,
-)
-
-
-def test_compaction_merges_small_files(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    # 64 tiny files
-    spark.range(10_000).select(
-        "id", F.concat(F.lit("row-"), F.col("id").cast("string")).alias("v")
-    ).repartition(64).write.parquet(src)
-    before = spark.read.parquet(src)
-    assert len(before.inputFiles()) == 64
-
-    n_files = compact_parquet(spark, src, dst, target_file_bytes=1 << 20)
-    after = spark.read.parquet(dst)
-    assert n_files == len(after.inputFiles())
-    assert n_files < 64
-    # identical data
-    assert after.count() == 10_000
-    assert before.exceptAll(after).count() == 0
-    assert after.exceptAll(before).count() == 0
-
-
-def test_compaction_noop_when_already_compact(spark, tmp_path):
-    src = str(tmp_path / "one")
-    spark.range(100).coalesce(1).write.parquet(src)
-    df = spark.read.parquet(src)
-    # a single file is already at/under any sane target → no plan
-    assert plan_compaction(df, target_file_bytes=256 << 20) is None
-
-
-def test_compaction_sort_improves_rowgroup_stats(spark, tmp_path):
-    src, dst = str(tmp_path / "s2"), str(tmp_path / "d2")
-    # keys scattered across files → min/max spans everything per file
-    spark.range(50_000).select(
-        (F.col("id") * 7919 % 50_000).alias("k"),
-        F.col("id").alias("v"),
-    ).repartition(32).write.parquet(src)
-    compact_parquet(spark, src, dst, target_file_bytes=1 << 30, sort_cols=["k"])
-    # 7919 is coprime to 50000 → k values are a permutation: exactly one hit,
-    # and the point lookup works against the sorted, compacted layout
-    got = spark.read.parquet(dst).filter(F.col("k") == 123).collect()
-    assert len(got) == 1 and got[0]["k"] == 123
 
 
 def test_compaction_manifest_sequential_packing(spark):
@@ -82,8 +34,7 @@ def test_compaction_manifest_sequential_packing(spark):
 def test_input_probe_declines_streams_and_in_memory_frames(spark):
     """The shared probe answers ``None`` — never raises — for frames with
     no local files: a streaming source (``inputFiles`` raises
-    ``AnalysisException``) and in-memory relations (it returns ``[]``);
-    ``plan_compaction`` then plans nothing."""
+    ``AnalysisException``) and in-memory relations (it returns ``[]``)."""
     from big_data_validator_spark.operators import _local_input_probe
 
     frames = [
@@ -93,4 +44,3 @@ def test_input_probe_declines_streams_and_in_memory_frames(spark):
     ]
     for df in frames:
         assert _local_input_probe(df) is None
-        assert plan_compaction(df) is None

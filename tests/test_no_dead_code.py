@@ -1,0 +1,153 @@
+"""Every top-level definition in the package is reached from code outside
+``tests/``.
+
+A definition is reached when its name appears in non-test code (the
+package, ``scripts/``, ``bench.py``, ``perfbench/`` and
+``__spark_entry__.py``) outside any definition, or inside a definition that
+is itself reached.  Names count in code, in f-string fields and in string
+literals that spell an identifier or a dotted name (``perfbench`` patches
+the runner by ``getattr`` with such strings, ``__all__`` lists names the
+same way).  Docstrings, comments and import lines do not count.  The scan
+is by name, not by module: a name used anywhere keeps every definition of
+that name.  Only ``ast`` and ``tokenize``; no Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+import io
+import re
+import tokenize
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "big_data_validator_spark"
+NON_TEST_SOURCES = (
+    sorted(PACKAGE.rglob("*.py"))
+    + sorted((ROOT / "scripts").glob("*.py"))
+    + sorted(p for p in (ROOT / "perfbench").rglob("*.py") if not p.name.startswith("test_"))
+    + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+)
+
+# Reference implementations that tests compare a kept kernel against.
+TEST_REFERENCES = {
+    "winnow_py",  # operators/dedup.py: reference for the winnowing kernel
+    "_word_ngrams_expr",  # operators/curation.py: reference for _word_ngram_rows
+    "distribution_drift_psi",  # operators/relational.py: reference for distribution_drift_psi_split
+}
+
+_DOTTED = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
+
+
+def _docstring_starts(tree: ast.Module) -> set[tuple[int, int]]:
+    starts = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant) \
+                    and isinstance(body[0].value.value, str):
+                starts.add((body[0].lineno, body[0].col_offset))
+    return starts
+
+
+def _string_names(token: str) -> set[str]:
+    """Names a string literal refers to: the fields of an f-string, or the
+    parts of a plain string that spells a dotted name."""
+    node = ast.parse(token, mode="eval").body
+    if isinstance(node, ast.JoinedStr):
+        return {n.id if isinstance(n, ast.Name) else n.attr
+                for n in ast.walk(node) if isinstance(n, (ast.Name, ast.Attribute))}
+    if isinstance(node, ast.Constant) and isinstance(node.value, str) \
+            and _DOTTED.fullmatch(node.value):
+        return set(node.value.split("."))
+    return set()
+
+
+def _is_query_entry(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", ()):
+        func = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(func, ast.Name) and func.id == "query":
+            return True
+    return False
+
+
+def _definitions(tree: ast.Module):
+    """``(name, first line, last line, binder, node)`` per top-level
+    definition; ``binder`` is the position of the token that binds an
+    assigned name (``None`` for ``def`` and ``class``)."""
+    for node in tree.body:
+        first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", ())])
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name, first, node.end_lineno, None, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name):
+                        yield n.id, first, node.end_lineno, (n.lineno, n.col_offset), node
+
+
+def scan():
+    """Return ``{(module, name)}`` of package definitions that nothing
+    outside ``tests/`` reaches."""
+    defs: dict[tuple[str, str], set[str]] = {}  # (module, name) -> names its body uses
+    roots: set[str] = set(TEST_REFERENCES)
+    for path in NON_TEST_SOURCES:
+        source = path.read_text()
+        tree = ast.parse(source)
+        docstrings = _docstring_starts(tree)
+        module = path.relative_to(ROOT).as_posix()
+        in_package = path.is_relative_to(PACKAGE)
+        spans, binders = [], set()
+        for name, first, last, binder, node in _definitions(tree) if in_package else ():
+            if name.startswith("__") and name.endswith("__") or _is_query_entry(node):
+                roots.add(name)
+            spans.append((first, last, (module, name)))
+            defs.setdefault((module, name), set())
+            if binder:
+                binders.add(binder)
+        imports = set()
+        aliases: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                imports.update(range(node.lineno, node.end_lineno + 1))
+                for a in node.names:
+                    if a.asname:
+                        aliases[a.asname] = a.name.rsplit(".", 1)[-1]
+        previous = None
+        for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+            line = tok.start[0]
+            if tok.type == tokenize.NAME:
+                names = set() if previous in ("def", "class") or tok.start in binders else {tok.string}
+                previous = tok.string
+            elif tok.type == tokenize.STRING and tok.start not in docstrings:
+                names = _string_names(tok.string)
+            else:
+                continue
+            if line in imports or not names:
+                continue
+            names |= {aliases[n] for n in names if n in aliases}
+            owners = [key for first, last, key in spans if first <= line <= last]
+            for key in owners:
+                defs[key] |= names - {key[1]}
+            if not owners:
+                roots |= names
+    live, frontier = set(), set(roots)
+    while frontier:
+        live |= frontier
+        frontier = {n for (_, name), uses in defs.items() if name in live for n in uses} - live
+    return {key for key in defs if key[1] not in live}
+
+
+def test_every_package_definition_is_reached_outside_tests():
+    dead = sorted(f"{module}:{name}" for module, name in scan())
+    assert dead == [], f"{len(dead)} definitions reached only from tests: {dead}"
+
+
+def test_exempt_references_are_still_defined():
+    defined = {
+        name
+        for path in PACKAGE.rglob("*.py")
+        for name, *_ in _definitions(ast.parse(path.read_text()))
+    }
+    assert TEST_REFERENCES <= defined

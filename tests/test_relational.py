@@ -15,13 +15,6 @@ def test_duplicate_key_groups(spark):
     assert got == {1: 2, 3: 3}
 
 
-def test_duplicate_rows_keeps_one_per_key(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], ["k", "v"])
-    dupes = R.duplicate_rows(df, ["k"])
-    assert dupes.count() == 1
-    assert dupes.first()["k"] == 1
-
-
 def test_uniqueness_metrics_exact_and_approx(spark):
     df = spark.createDataFrame([(i % 10, i) for i in range(100)], ["k", "v"])
     exact = {
@@ -57,15 +50,6 @@ def test_orphan_rows_broadcast(spark):
     # the dim side must actually be broadcast in the physical plan
     plan = orphans._jdf.queryExecution().executedPlan().toString()
     assert "Broadcast" in plan
-
-
-def test_domain_and_range_violations(spark):
-    df = spark.createDataFrame(
-        [("A", 5), ("N", 60), ("X", 10), (None, -1)], ["flag", "qty"]
-    )
-    assert R.domain_violations(df, "flag", ["A", "N", "R"]).count() == 1
-    got = R.range_violations(df, "qty", 0, 50).collect()
-    assert sorted(r["qty"] for r in got) == [-1, 60]
 
 
 def test_violation_expr_metrics_single_pass(spark):
@@ -175,17 +159,6 @@ def test_salted_aggregate_matches_plain(spark):
     }
     assert got["hot"] == (sum(range(500)), 500)
     assert got["cold"] == (3.0, 2)
-
-
-def test_salted_join_matches_plain(spark):
-    fact = spark.createDataFrame(
-        [(1, i) for i in range(300)] + [(2, 0), (3, 9)], ["fk", "payload"]
-    )
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], ["pk", "name"])
-    out = R.salted_join(fact, dim, "fk", "pk", salt_buckets=4)
-    assert out.count() == 301  # fk=3 has no dim match
-    by_name = out.groupBy("name").count().collect()
-    assert {r["name"]: r["count"] for r in by_name} == {"a": 300, "b": 1}
 
 
 def test_bucketed_join_is_co_located(spark, tmp_path):

@@ -296,6 +296,10 @@ DEGENERATE = {
         ("field_count_naive", True, 0, _ESCALATED),
         ("type_enforcement", True, 0, _TYPES_OK),
     ], None),
+    "repeated_name": ("D.csv", b"A|A|B\n1|2|3\n4|5\n", [
+        ("column_names", False, 1, {"expected": ["A", "B"], "actual": ["A", "A", "B"], "missing": [], "additional": [], "duplicates": ["A"]}),
+        ("field_count_naive", False, 1, {"lines": 3, "expected_arity": 3}),
+    ], None),
     "gzip": ("T.csv.gz", b"A|B\n1|2\n3\nx|4\n", [
         ("column_names", True, 0, {"expected": ["A", "B"], "actual": ["A", "B"], "missing": [], "additional": []}),
         ("field_count_naive", False, 1, {**_ESCALATED, "expected_arity": 2}),
@@ -307,8 +311,8 @@ DEGENERATE = {
 @pytest.mark.parametrize("enforce_types", [True, False])
 @pytest.mark.parametrize("case", sorted(DEGENERATE))
 def test_degenerate_inputs(spark, tmp_path, monkeypatch, case, enforce_types):
-    """Empty, header-only, trailing-separator and gzip inputs give the
-    reference runner's results without raising.  Only the gzip file's
+    """Empty, header-only, trailing-separator, repeated-name and gzip
+    inputs give the reference runner's results without raising.  Only the gzip file's
     header goes through Spark's reader; the others are read on the driver."""
     name, data, expected, sink_rows = DEGENERATE[case]
     path = tmp_path / name
