@@ -67,15 +67,14 @@ def snapshot_changeset(
     incoming: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Optional[Sequence[str]] = None,
-    include_unchanged: bool = False,
     include_payload: bool = False,
 ) -> DataFrame:
-    """Classify every key present in either snapshot.
+    """Classify every key whose row differs between the snapshots.
 
     Returns ``key_cols… + change_type`` where ``change_type`` is one of
     ``insert`` (key only in ``incoming``), ``delete`` (key only in
-    ``current``), ``update`` (key in both, fingerprints differ), or —
-    only when ``include_unchanged`` — ``unchanged``.
+    ``current``) or ``update`` (key in both, fingerprints differ); keys
+    whose fingerprints match produce no row.
 
     ``compare_cols`` defaults to every shared non-key column (in
     ``current``'s column order, so the fingerprint is deterministic).
@@ -121,17 +120,13 @@ def snapshot_changeset(
         .otherwise(F.lit("unchanged"))
     )
     out = joined.select(*keys, change.alias("change_type"), *payload)
-    if not include_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
-    return out
+    return out.filter(F.col("change_type") != "unchanged")
 
 
 def snapshot_changeset_evolving(
     current: DataFrame,
     incoming: DataFrame,
     key_cols: Sequence[str],
-    allow_drops: bool = False,
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """Schema-evolution-aware snapshot diff (VERDICT r8 item 6):
     :func:`snapshot_changeset` fingerprints SHARED columns only, so a
@@ -148,22 +143,19 @@ def snapshot_changeset_evolving(
       arrived for it, so downstream revalidation must touch it.  An
       all-NULL added tuple stays ``unchanged`` (the column exists but
       said nothing about this key).
-    - **dropped columns** (current-only, non-key): mirroring the
-      reference's ONE-WAY superset tolerance, drops RAISE by default —
-      an incoming snapshot that lost columns is the intolerable
-      direction.  With ``allow_drops=True`` the classification is the
-      symmetric ``schema_drop``: shared-unchanged keys that HAD
-      non-NULL data in a dropped column are flagged (information was
-      lost for them), all-NULL ones stay unchanged.
+    - **dropped columns** (current-only, non-key): the symmetric
+      ``schema_drop``: shared-unchanged keys that HAD non-NULL data in
+      a dropped column are flagged (information was lost for them),
+      all-NULL ones stay unchanged.
     - rows that differ on shared columns stay plain ``update``
       (data change dominates the schema note); insert/delete are
       untouched.
 
     Precedence: ``delete``/``insert`` > ``update`` > ``schema_add`` >
-    ``schema_drop`` > ``unchanged``.  The output also ships the
-    table-level ``added_cols`` / ``dropped_cols`` (comma-joined, ''
-    when none) so the schema delta is visible on every row without a
-    side channel.
+    ``schema_drop``; ``unchanged`` keys produce no row.  The output
+    also ships the table-level ``added_cols`` / ``dropped_cols``
+    (comma-joined, '' when none) so the schema delta is visible on
+    every row without a side channel.
 
     Scale shape is :func:`snapshot_changeset`'s: both sides reduce to
     ``(key…, fingerprint, 1-byte flags)`` BEFORE the full-outer join —
@@ -183,13 +175,6 @@ def snapshot_changeset_evolving(
         raise ValueError(
             "snapshots share no non-key columns; a changeset across a "
             "total schema replacement has no defined row semantics"
-        )
-    if dropped and not allow_drops:
-        raise ValueError(
-            f"incoming snapshot dropped columns {dropped}; the "
-            "reference's superset tolerance is one-way (extra incoming "
-            "columns ok, missing ones are a contract break) — pass "
-            "allow_drops=True for explicit schema_drop classification"
         )
 
     def any_non_null(cols: Sequence[str]) -> Column:
@@ -229,23 +214,20 @@ def snapshot_changeset_evolving(
         F.lit(",".join(added)).alias("added_cols"),
         F.lit(",".join(dropped)).alias("dropped_cols"),
     )
-    if not include_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
-    return out
+    return out.filter(F.col("change_type") != "unchanged")
 
 
 def apply_changeset(
     current: DataFrame,
     changeset: DataFrame,
     key_cols: Sequence[str],
-    change_col: str = "change_type",
 ) -> DataFrame:
     """MERGE a changeset into ``current``, producing the next snapshot —
     the apply half of the CDC loop :func:`snapshot_changeset` opens
     (``MERGE INTO current USING changeset``: delete removes the key,
     update replaces the row, insert adds it).
 
-    ``changeset`` must carry ``key_cols``, ``change_col``, and every
+    ``changeset`` must carry ``key_cols``, ``change_type``, and every
     non-key column of ``current`` (insert/update rows supply the new
     values; delete rows may hold NULLs) — i.e. the
     ``include_payload=True`` output of :func:`snapshot_changeset`, or
@@ -275,11 +257,11 @@ def apply_changeset(
             "snapshot schema"
         )
     types = {n: t for n, t in changeset.dtypes}
-    if types.get(change_col) != "string":
+    if types.get("change_type") != "string":
         raise ValueError(
-            f"changeset column {change_col!r} must be a string column "
+            "changeset column 'change_type' must be a string column "
             f"of insert/update/delete (got "
-            f"{types.get(change_col) or 'missing'})"
+            f"{types.get('change_type') or 'missing'})"
         )
     # Unknown change types must FAIL, not silently no-op (a typo'd
     # 'upsert' feed would otherwise drop every such row).  The guard
@@ -291,26 +273,23 @@ def apply_changeset(
     # ``otherwise`` — silently dropping NULL-typed rows from both the
     # anti-join and upsert legs (reachable via external CDC feeds;
     # snapshot_changeset never emits NULL change types).
-    known = F.col(change_col).isin("insert", "update", "delete")
+    change = F.col("change_type")
+    known = change.isin("insert", "update", "delete")
     bad = F.when(
-        F.col(change_col).isNull() | ~known,
+        change.isNull() | ~known,
         F.raise_error(
             F.concat(
-                F.lit(
-                    f"apply_changeset: unknown {change_col} value "
-                ),
-                F.coalesce(
-                    F.col(change_col).cast("string"), F.lit("NULL")
-                ),
+                F.lit("apply_changeset: unknown change_type value "),
+                F.coalesce(change.cast("string"), F.lit("NULL")),
             )
         ).cast("boolean"),
     ).otherwise(F.lit(False))
     touched = changeset.filter(
-        F.col(change_col).isin("delete", "update") | bad
+        change.isin("delete", "update") | bad
     ).select(*keys)
     survivors = current.join(touched, on=keys, how="left_anti")
     upserts = changeset.filter(
-        F.col(change_col).isin("insert", "update")
+        change.isin("insert", "update")
     ).select(*current.columns)
     return survivors.unionByName(upserts)
 

@@ -11,7 +11,7 @@ joins anything, and its probe side is a broadcast.
 
 from __future__ import annotations
 
-from typing import Mapping, Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 #: Gopher-style repetition/length gates (Rae et al. 2021, "Scaling
 #: Language Models: ...Gopher", §A1.1 data pipeline) re-parameterized:
-#: the paper's thresholds assume web prose; callers tune per corpus.
-DEFAULT_QUALITY_THRESHOLDS = {
+#: the paper's thresholds assume web prose.
+QUALITY_THRESHOLDS = {
     "min_words": 20,
     "max_words": 100_000,
     "min_mean_word_len": 3.0,
@@ -101,15 +101,10 @@ def word_quality_metrics(
     )
 
 
-def gopher_quality_flags(
-    metrics: DataFrame,
-    thresholds: Optional[Mapping[str, float]] = None,
-) -> DataFrame:
+def gopher_quality_flags(metrics: DataFrame) -> DataFrame:
     """Per-rule boolean gates + the conjunctive ``quality_pass`` over a
     :func:`word_quality_metrics` frame.  One more codegen projection."""
-    t = dict(DEFAULT_QUALITY_THRESHOLDS)
-    if thresholds:
-        t.update(thresholds)
+    t = QUALITY_THRESHOLDS
     flags = {
         "pass_n_words": (F.col("n_words") >= t["min_words"])
         & (F.col("n_words") <= t["max_words"]),
@@ -327,20 +322,15 @@ def repetition_metrics(
 #: Engine-portable patterns: every construct here (classes, {m,},
 #: alternation) means the same thing in Java regex (Spark) and RE2
 #: (DuckDB oracle) — no lookaround, no backreferences.
-DEFAULT_PII_PATTERNS = {
+PII_PATTERNS = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
     "phone": r"\+?[0-9][0-9 -]{7,}[0-9]",
 }
 
 
-def pii_scan(
-    df: DataFrame,
-    text_col: str = "text",
-    patterns: Optional[Mapping[str, str]] = None,
-    redact: bool = True,
-) -> DataFrame:
-    """Append ``n_<name>`` match counts per pattern and (optionally) a
-    ``redacted`` text column where each match is replaced by
+def pii_scan(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append ``n_<name>`` match counts per :data:`PII_PATTERNS`
+    pattern and a ``redacted`` text column where each match is replaced by
     ``<NAME>``.  Patterns apply in dict order — order matters when
     patterns overlap (an email's digit run could also match a phone
     pattern), so BOTH the counts and the redaction run against the
@@ -350,17 +340,12 @@ def pii_scan(
     Pure ``regexp_count`` / ``regexp_replace`` projections: row-local,
     codegen'd, one scan at any corpus size.
     """
-    pats = dict(patterns if patterns is not None else DEFAULT_PII_PATTERNS)
-    if not pats:
-        raise ValueError("patterns must be non-empty")
     out = df
     red = F.col(text_col)
-    for name, pat in pats.items():
+    for name, pat in PII_PATTERNS.items():
         out = out.withColumn(f"n_{name}", F.regexp_count(red, F.lit(pat)))
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
-    if redact:
-        out = out.withColumn("redacted", red)
-    return out
+    return out.withColumn("redacted", red)
 
 
 # --------------------------------------------------------- contamination
@@ -369,10 +354,10 @@ def pii_scan(
 def contamination_probe_counts(
     corpus: DataFrame,
     probes: DataFrame,
+    corpus_id_col: str,
     text_col: str = "text",
     probe_col: str = "probe",
     probe_id_col: str = "probe_id",
-    corpus_id_col: Optional[str] = None,
 ) -> DataFrame:
     """For each probe string (e.g. a benchmark question / answer
     snippet), count corpus documents containing it as an EXACT
@@ -382,29 +367,24 @@ def contamination_probe_counts(
     ``instr(text, probe) > 0`` — a broadcast nested-loop join, which is
     the right plan when probes are a benchmark suite (10^2–10^4
     strings) and the corpus is 100 TB: no shuffle of the corpus, cost
-    is scan × |probes| substring searches, all JVM-side.  Beyond ~10^4
-    probes, move the probe set into an Aho-Corasick automaton inside
-    ``mapInPandas`` (one pass, all probes simultaneously); the
-    broadcast-join formulation stays the oracle.
+    is scan × |probes| substring searches, all JVM-side.
 
-    When ``corpus_id_col`` is given, a document whose id equals the
-    probe's ``probe_id_col`` is excluded (a probe drawn from the corpus
-    should not count itself).  Returns one row per probe:
+    A document whose ``corpus_id_col`` equals the probe's
+    ``probe_id_col`` is excluded (a probe drawn from the corpus should
+    not count itself).  Returns one row per probe:
     ``(probe_id_col, n_contaminated)`` — probes with zero hits
     included, so the output size is always ``|distinct probes|``.
 
     Probe rows are deduplicated on ``(probe_id, probe)`` first: a
-    repeated probe row must not double-count its hits, and the automaton
-    path inherently dedups — both paths agree by construction
-    (ADVICE r5).
+    repeated probe row must not double-count its hits (ADVICE r5).
     """
     probes = probes.select(probe_id_col, probe_col).dropDuplicates(
         [probe_id_col, probe_col]
     )
     p = F.broadcast(probes)
-    cond = F.instr(F.col(text_col), F.col(probe_col)) > 0
-    if corpus_id_col is not None:
-        cond = cond & (F.col(corpus_id_col) != F.col(probe_id_col))
+    cond = (F.instr(F.col(text_col), F.col(probe_col)) > 0) & (
+        F.col(corpus_id_col) != F.col(probe_id_col)
+    )
     hits = (
         corpus.crossJoin(p)
         .filter(cond)
@@ -429,15 +409,15 @@ def k_anonymity_violations(
     df: DataFrame,
     quasi_cols: Sequence[str],
     k: int,
-    sensitive_col: Optional[str] = None,
-    l: Optional[int] = None,
+    sensitive_col: str,
+    l: int,
 ) -> DataFrame:
     """Privacy audit for training-data release: quasi-identifier groups
     smaller than ``k`` (re-identification risk — Sweeney's k-anonymity)
-    and, when ``sensitive_col``/``l`` are given, groups whose sensitive
-    attribute takes fewer than ``l`` distinct values (attribute
-    disclosure — Machanavajjhala's l-diversity; a 10-member group that
-    all share one diagnosis is k-anonymous and still leaks it).
+    and groups whose ``sensitive_col`` takes fewer than ``l`` distinct
+    values (attribute disclosure — Machanavajjhala's l-diversity; a
+    10-member group that all share one diagnosis is k-anonymous and
+    still leaks it).
 
     One aggregation pass: groupBy the quasi-identifiers with map-side
     partial counts; the shuffle carries (QI, count, distinct-sensitive)
@@ -446,25 +426,16 @@ def k_anonymity_violations(
     where ``violations`` is the sorted array of failed rules — so the
     releasing pipeline can suppress or generalize exactly those groups.
     """
-    aggs = [F.count(F.lit(1)).cast("long").alias("group_size")]
-    if sensitive_col is not None:
-        aggs.append(
-            F.count_distinct(F.col(sensitive_col))
-            .cast("long")
-            .alias("sensitive_diversity")
-        )
-    g = df.groupBy(*[F.col(c) for c in quasi_cols]).agg(*aggs)
+    g = df.groupBy(*[F.col(c) for c in quasi_cols]).agg(
+        F.count(F.lit(1)).cast("long").alias("group_size"),
+        F.count_distinct(F.col(sensitive_col))
+        .cast("long")
+        .alias("sensitive_diversity"),
+    )
     checks = [
         F.when(F.col("group_size") < k, F.lit("k_anonymity")),
+        F.when(F.col("sensitive_diversity") < l, F.lit("l_diversity")),
     ]
-    if sensitive_col is not None and l is not None:
-        checks.append(
-            F.when(
-                F.col("sensitive_diversity") < l, F.lit("l_diversity")
-            )
-        )
-    if sensitive_col is None:
-        g = g.withColumn("sensitive_diversity", F.lit(None).cast("long"))
     out = g.withColumn(
         "violations",
         F.array_sort(
@@ -704,7 +675,6 @@ def linear_quality_train(
     label_pred,
     n_buckets: int,
     steps: int = 2,
-    lr_div: Optional[int] = None,
     label_scale: int = 1_000_000,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -726,12 +696,12 @@ def linear_quality_train(
     - score_d  = Σ_b c_{d,b}·w_b               (exact int sum)
     - resid_d  = (score_d div n_d) − y_d·label_scale
     - grad_b   = Σ_d ((resid_d · c_{d,b}) div n_d)   (per-term div)
-    - w_b     ← w_b − (grad_b div lr_div)      (truncating, both signs)
+    - w_b     ← w_b − (grad_b div N)           (truncating, both signs)
 
-    with w ≡ 0 at init (no RNG), the portable md5 bucket hash, and
-    ``lr_div`` defaulting to the training-document count (the 1/N step
-    size that keeps full-batch squared loss stable when per-doc
-    features sum to ~1, as normalized bag-of-buckets features do).
+    with w ≡ 0 at init (no RNG), the portable md5 bucket hash, and N
+    the training-document count (the 1/N step size that keeps
+    full-batch squared loss stable when per-doc features sum to ~1, as
+    normalized bag-of-buckets features do).
 
     Scale: the per-(doc, bucket) count frame builds once (one explode
     + one partial-agg shuffle, bounded by corpus token count) and
@@ -750,8 +720,6 @@ def linear_quality_train(
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     if steps < 1:
         raise ValueError(f"steps must be >= 1, got {steps}")
-    if lr_div is not None and lr_div < 1:
-        raise ValueError(f"lr_div must be positive, got {lr_div}")
     spark = docs.sparkSession
 
     def bucket(tok):
@@ -796,7 +764,7 @@ def linear_quality_train(
                 "linear_quality_train: no training documents with "
                 "tokens"
             )
-        div = int(lr_div) if lr_div is not None else int(n_docs)
+        div = int(n_docs)
         wvec = [0] * n_buckets
         for _ in range(steps):
             wtab = spark.createDataFrame(

@@ -143,7 +143,7 @@ def _shingle_sets(
         F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("_lt")
     ).select(
         "id",
-        F.array_distinct(char_ngrams(F.col("_lt"), n, lowered=True)).alias(
+        F.array_distinct(char_ngrams(F.col("_lt"), n)).alias(
             "shingles"
         ),
     )
@@ -249,7 +249,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.8,
-    max_doc_freq: Optional[int] = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs via an inverted shingle
     index: explode shingles, self-join on the shingle, count common shingles
@@ -259,25 +258,11 @@ def ngram_jaccard_pairs(
     — already far sparser than a cross join — but is still quadratic in
     pathological corpora; at 100 TB use :func:`minhash_lsh_candidates` to
     pre-bucket and feed candidates here for exact verification.
-    ``max_doc_freq`` (default off, preserving exact Jaccard) drops
-    stop-shingles — those appearing in more than that many documents —
-    before the self-join, the same inverted-index skew control as
-    :func:`winnowing_near_dup_pairs`; with it on, the reported Jaccard is
-    a lower bound (common counts lose the dropped shingles while set
-    sizes keep them).
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
     """
     sets_df = _shingle_sets(df, text_col, id_col, n).cache()
     sizes = sets_df.select("id", F.size("shingles").alias("set_size"))
     inv = sets_df.select("id", F.explode("shingles").alias("shingle"))
-    if max_doc_freq is not None:
-        rare = (
-            inv.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        inv = inv.join(rare, "shingle")
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -305,7 +290,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.8,
-    max_doc_freq: Optional[int] = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT near-duplicate pairs — the asymmetric
     complement of :func:`ngram_jaccard_pairs` for SUBSET duplication:
@@ -318,11 +302,9 @@ def ngram_containment_pairs(
 
     Same inverted-index plan as Jaccard (explode shingles, equi-join on
     the shingle, count common per pair, join back the two set sizes) —
-    candidates come only from shared shingles, never a cross join, and
-    ``max_doc_freq`` applies the identical stop-shingle skew cap (with
-    it on, reported containment is a lower bound).  A pair is emitted
-    when EITHER direction clears ``threshold``.  At 100 TB, prefix
-    filtering also transfers: if ``|∩|/|A| ≥ t`` then any
+    candidates come only from shared shingles, never a cross join.  A
+    pair is emitted when EITHER direction clears ``threshold``.  At
+    100 TB, prefix filtering also transfers: if ``|∩|/|A| ≥ t`` then any
     ``⌊(1−t)·|A|⌋+1`` shingles of A must hit B, so the
     ``dedup_ssjoin_prefix`` device bounds candidates here too.
 
@@ -332,14 +314,6 @@ def ngram_containment_pairs(
     sets_df = _shingle_sets(df, text_col, id_col, n).cache()
     sizes = sets_df.select("id", F.size("shingles").alias("set_size"))
     inv = sets_df.select("id", F.explode("shingles").alias("shingle"))
-    if max_doc_freq is not None:
-        rare = (
-            inv.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        inv = inv.join(rare, "shingle")
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -798,21 +772,14 @@ def winnowing_near_dup_pairs(
     window: int = 6,
     min_common: int = 5,
     min_overlap: float = 0.5,
-    max_doc_freq: Optional[int] = None,
 ) -> DataFrame:
     """Near-dup pairs via shared winnowing fingerprints: inverted index on
     the sketch, pairs kept when they share ≥ ``min_common`` fingerprints
     AND their overlap coefficient |∩| / min(|A|, |B|) ≥ ``min_overlap``.
 
-    ``max_doc_freq`` drops *stop-fingerprints* — hashes appearing in more
-    than that many documents — before the self-join.  This is the standard
-    inverted-index skew control: a fingerprint shared by f documents
-    contributes O(f²) candidate pairs, so a handful of corpus-common
-    k-grams (boilerplate, common phrases) otherwise dominates the shuffle;
-    rare fingerprints carry all the near-dup signal.  True duplicates
-    still share their many rare fingerprints.  Right for Zipfian corpora;
-    for uniformly dense text prefer longer k (the default k=10 keeps the
-    median posting list short) — measured on the testdata corpus: k=5
+    A fingerprint shared by f documents contributes O(f²) candidate
+    pairs, so ``k`` is the skew control: the default k=10 keeps the
+    median posting list short — measured on the testdata corpus: k=5
     posting lists had median df 29/500 docs and the pair join exploded
     10⁷×, k=10 median df 9/5000 with the same true pairs found."""
     # NOT partition-collapsed before caching (r13 audit): the posting
@@ -823,14 +790,6 @@ def winnowing_near_dup_pairs(
     fps = winnowing_fingerprints(df, text_col, id_col, k, window).cache()
     sizes = fps.select("id", F.size("fingerprints").alias("sz"))
     inv = fps.select("id", F.explode("fingerprints").alias("fp"))
-    if max_doc_freq is not None:
-        rare = (
-            inv.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("fp")
-        )
-        inv = inv.join(rare, "fp")
     a, b = inv.alias("a"), inv.alias("b")
     common = (
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
@@ -1426,7 +1385,6 @@ def shared_substring_pairs(
     id_col: str = "doc_id",
     gram_len: int = 40,
     max_gram_docs: Optional[int] = 50,
-    gram_keys: str = "fingerprint",
 ) -> DataFrame:
     """EXACT shared-substring detection — the dedup tier between
     exact-document fingerprints and probabilistic near-dup (MinHash/
@@ -1445,7 +1403,7 @@ def shared_substring_pairs(
 
     ``max_gram_docs`` drops grams present in more than that many
     documents BEFORE pair generation — the stop-fingerprint discipline
-    (winnowing's document-frequency cap): a boilerplate header in 10⁵
+    of inverted-index dedup: a boilerplate header in 10⁵
     docs would otherwise create 10¹⁰ pairs.  Dropped grams are
     boilerplate by definition; pairs that share ONLY boilerplate
     disappear, which is the curation-intended reading.  Pair
@@ -1466,25 +1424,20 @@ def shared_substring_pairs(
     the three-exchange shape the registry entry audits — no cache, no
     self-join.
 
-    ``gram_keys`` (VERDICT r10 item 6 — the shuffle-VOLUME cut):
-
-    - ``'fingerprint'`` (default): gram text never crosses the wire —
-      each gram maps to a 128-bit key (two independent-seed
-      ``xxhash64`` BIGINTs) in the same map-side stage that explodes
-      it, so the gram exchange carries 16 fixed-width bytes per
-      position instead of ``gram_len`` string chars (2.5× less wire
-      at the default 40, and integer instead of string comparisons in
-      every downstream sort/agg).  Two distinct grams collide only if
-      BOTH 64-bit hashes collide: < 2⁻¹²⁸ per pair, ~3·10⁻¹¹ summed
-      over a 100 TB corpus's ~10¹⁴ distinct grams — not
-      information-theoretic exactness, but far below any operational
-      noise floor.  (The suffix-distinct alternative was measured
-      first: the corpus has ZERO within-doc gram repetition and ~5%
-      cross-doc, so deduping grams before the shuffle saves nothing —
-      the per-position volume is the lever, not the multiplicity.)
-    - ``'text'``: the verbatim-gram key — information-theoretically
-      exact, for corpora where a provable zero-collision contract
-      matters more than wire volume.
+    Gram text never crosses the wire (VERDICT r10 item 6 — the
+    shuffle-VOLUME cut): each gram maps to a 128-bit key (two
+    independent-seed ``xxhash64`` BIGINTs) in the same map-side stage
+    that explodes it, so the gram exchange carries 16 fixed-width bytes
+    per position instead of ``gram_len`` string chars (2.5× less wire
+    at the default 40, and integer instead of string comparisons in
+    every downstream sort/agg).  Two distinct grams collide only if
+    BOTH 64-bit hashes collide: < 2⁻¹²⁸ per pair, ~3·10⁻¹¹ summed over
+    a 100 TB corpus's ~10¹⁴ distinct grams — not information-theoretic
+    exactness, but far below any operational noise floor.  (The
+    suffix-distinct alternative was measured first: the corpus has
+    ZERO within-doc gram repetition and ~5% cross-doc, so deduping
+    grams before the shuffle saves nothing — the per-position volume
+    is the lever, not the multiplicity.)
 
     Returns ``(doc_a, doc_b, n_shared_positions, n_shared_grams)``
     with ``doc_a < doc_b``.
@@ -1502,10 +1455,6 @@ def shared_substring_pairs(
             "bounds per-gram work by the document-frequency cap; "
             "an uncapped gram list is a single-task OOM risk"
         )
-    if gram_keys not in ("fingerprint", "text"):
-        raise ValueError(
-            f"gram_keys must be 'fingerprint' or 'text', got {gram_keys!r}"
-        )
     from big_data_validator_spark.operators import rebalance_for_compute
 
     t = F.col(text_col)
@@ -1520,18 +1469,14 @@ def shared_substring_pairs(
     # rows and hashes every one — compute that must not inherit a
     # small scan's single partition (no-op at scale, guide §2)
     base = rebalance_for_compute(df.filter(F.length(t) >= gram_len))
-    if gram_keys == "fingerprint":
-        # map to the 128-bit key in the SAME stage that explodes the
-        # gram — the string never reaches the exchange
-        grams = base.select(F.col(id_col).alias("_id"), gram).select(
-            "_id",
-            F.xxhash64("_gram").alias("_g1"),
-            F.xxhash64("_gram", F.lit(982_451_653)).alias("_g2"),
-        )
-        keys = ["_g1", "_g2"]
-    else:
-        grams = base.select(F.col(id_col).alias("_id"), gram)
-        keys = ["_gram"]
+    # map to the 128-bit key in the SAME stage that explodes the gram —
+    # the string never reaches the exchange
+    grams = base.select(F.col(id_col).alias("_id"), gram).select(
+        "_id",
+        F.xxhash64("_gram").alias("_g1"),
+        F.xxhash64("_gram", F.lit(982_451_653)).alias("_g2"),
+    )
+    keys = ["_g1", "_g2"]
     from pyspark.sql import Window
 
     # the ONLY gram-keyed exchange: everything downstream — the
@@ -1546,11 +1491,9 @@ def shared_substring_pairs(
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     nd = F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    lo, hi = 2, max_gram_docs
-    cond = nd >= lo
-    if hi is not None:
-        cond = cond & (nd <= hi)
-    eligible = counts.withColumn("_keep", cond).filter("_keep")
+    eligible = counts.withColumn(
+        "_keep", (nd >= 2) & (nd <= max_gram_docs)
+    ).filter("_keep")
     # one row per eligible gram carrying its (doc, count) list — ids
     # are distinct within a gram, so sort_array orders by id and the
     # i<j expansion below yields doc_a < doc_b for free; the collect

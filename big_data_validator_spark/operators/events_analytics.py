@@ -81,32 +81,28 @@ def cohort_retention(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    period: str = "week",
 ) -> DataFrame:
-    """Cohort retention matrix: users grouped by the period of their FIRST
-    event; for each (cohort, offset) cell, how many of them were active.
+    """Weekly cohort retention matrix: users grouped by the week
+    (Monday-aligned) of their FIRST event; for each (cohort, offset)
+    cell, how many of them were active.
 
     Returns ``(cohort_period, period_offset, active_users, cohort_size,
     retention_rate)`` — ``cohort_period`` formatted ``yyyy-MM-dd`` so the
-    result is engine-portable, ``period_offset`` in whole periods.
+    result is engine-portable, ``period_offset`` in whole weeks.
 
     Two aggregations: per-user first-activity (shuffle on user), then
-    distinct (user, period) activity joined to the cohort assignment and
+    distinct (user, week) activity joined to the cohort assignment and
     rolled up to cells.  The cohort frame has one row per user — at
     extreme scale swap the equi-join for a broadcast of the per-cohort
     SIZES only and recompute the assignment expression on the activity
     side (same one-scan shape).
     """
-    days = {"week": 7, "day": 1}
-    if period not in days:
-        raise ValueError(f"period must be one of {sorted(days)}")
-    per_days = days[period]
     cohort = events.groupBy(user_col).agg(
-        F.date_trunc(period, F.min(ts_col)).cast("date").alias("_cohort")
+        F.date_trunc("week", F.min(ts_col)).cast("date").alias("_cohort")
     )
     active = events.select(
         user_col,
-        F.date_trunc(period, F.col(ts_col)).cast("date").alias("_period"),
+        F.date_trunc("week", F.col(ts_col)).cast("date").alias("_period"),
     ).distinct()
     sizes = cohort.groupBy("_cohort").agg(
         F.count(F.lit(1)).alias("cohort_size")
@@ -115,7 +111,7 @@ def cohort_retention(
         active.join(cohort, user_col)
         .groupBy(
             "_cohort",
-            (F.datediff(F.col("_period"), F.col("_cohort")) / per_days)
+            (F.datediff(F.col("_period"), F.col("_cohort")) / 7)
             .cast("int")
             .alias("period_offset"),
         )

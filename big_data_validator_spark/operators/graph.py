@@ -127,11 +127,12 @@ def label_propagation_min(
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    symmetrized: bool = False,
 ) -> DataFrame:
     """Synchronous min-label propagation (HashMin): every node starts
     labeled with its own id; each round it takes the minimum of its
-    label and its neighbors' labels over the SYMMETRIZED edge set.
+    label and its neighbors' labels.  ``edges`` must already be the
+    SYMMETRIZED, distinct edge set (both directions of every edge, no
+    repeats) — the caller symmetrizes once.
     After ``iters`` rounds a node's label is the minimum id within its
     ``iters``-hop neighborhood; run to the graph's diameter and labels
     are connected components — the relational fixed-point the
@@ -142,9 +143,8 @@ def label_propagation_min(
 
     Scale shape matches :func:`pagerank_integer`: per round, one
     (labels ⋈ edges) key join + one ``dst`` min-aggregation, both
-    map-side combinable; the symmetrized distinct edge relation is
-    reused every round (callers persist it — the registry entry pins
-    it via materialize_release).  Labels are compared with ``least``,
+    map-side combinable; the edge relation is reused every round.
+    Labels are compared with ``least``,
     which for STRING ids is lexicographic in both Spark and DuckDB
     (ASCII ids only — mind collation for anything fancier).
 
@@ -157,20 +157,13 @@ def label_propagation_min(
     label re-join then ride that one partitioning, so the only
     Exchange per round is the inherent neighbor-min aggregation on
     ``_b`` (guide §2.4; the r13 before-plan carried 68 Exchanges for 3
-    rounds because every round re-derived the symmetrized relation).
+    rounds because every round re-derived the edge relation).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    e0 = edges.select(
+    und = edges.select(
         F.col(src).alias("_a"), F.col(dst).alias("_b")
-    )
-    if symmetrized:
-        # caller vouches the relation is already undirected + distinct
-        und = e0
-    else:
-        e0 = e0.distinct()
-        und = e0.union(e0.select(F.col("_b"), F.col("_a"))).distinct()
-    und = und.repartition(_invariant_partitions(edges), "_a").persist()
+    ).repartition(_invariant_partitions(edges), "_a").persist()
     # _a-partitioning satisfies the node-keyed aggregate below, so the
     # distinct is exchange-free off the cache.
     nodes = und.select(F.col("_a").alias("node")).distinct()

@@ -10,7 +10,7 @@ oracles can reproduce.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Optional
+from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -68,17 +68,14 @@ def _fake_feature(payload: bytes, dim: int) -> list[float]:
 def extract_features(
     assets: DataFrame,
     dim: int = 16,
-    batch_decoder: Callable[[str, bytes], list[float]] | None = None,
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas`` streams Arrow record batches into Python — the payload
     bytes cross the JVM↔Python boundary once per batch, vectorized, never
     per-row (pickled-row UDFs would be ~10-100× slower at this width).
-    The default kernel is the deterministic fake; pass ``batch_decoder``
-    to plug a real one in.
+    The kernel is the deterministic fake :func:`_fake_feature`.
     """
-    kernel = batch_decoder or (lambda mt, p: _fake_feature(p, dim))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -89,8 +86,8 @@ def extract_features(
                     "payload_bytes": pdf["payload"].map(
                         lambda b: len(b) if b is not None else 0
                     ),
-                    "feature": pdf.apply(
-                        lambda r: kernel(r["media_type"], r["payload"]), axis=1
+                    "feature": pdf["payload"].map(
+                        lambda p: _fake_feature(p, dim)
                     ),
                 }
             )
@@ -132,18 +129,13 @@ def resize_assets(
     assets: DataFrame,
     width: int,
     height: int,
-    batch_resizer: Callable[[str, bytes, int, int], bytes] | None = None,
 ) -> DataFrame:
     """Resize every image/video payload to ``width``×``height``.
 
     Same Arrow-batched ``mapInPandas`` shape as :func:`extract_features`:
     payloads cross the JVM↔Python boundary once per record batch.  The
-    default kernel is the deterministic stub (no media libs in this
-    container); pass ``batch_resizer`` for a real one.  Audio assets pass
-    through unchanged (no spatial dims)."""
-    kernel = batch_resizer or (
-        lambda mt, p, w, h: _fake_resize(p, w, h)
-    )
+    kernel is the deterministic stub :func:`_fake_resize` (no media
+    libs).  Audio assets pass through unchanged (no spatial dims)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -153,10 +145,8 @@ def resize_assets(
                     "asset_id": pdf["asset_id"],
                     "media_type": pdf["media_type"],
                     "payload": [
-                        kernel(mt, p, width, height) if sp else p
-                        for mt, p, sp in zip(
-                            pdf["media_type"], pdf["payload"], spatial
-                        )
+                        _fake_resize(p, width, height) if sp else p
+                        for p, sp in zip(pdf["payload"], spatial)
                     ],
                     "width": [
                         width if sp else w

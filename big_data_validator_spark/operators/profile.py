@@ -234,10 +234,8 @@ def benford_first_digit(
     )
 
 
-def candidate_key_rule(
-    df: DataFrame, columns: Optional[Sequence[str]] = None
-) -> DataFrame:
-    """Candidate-key discovery: for each column, exact row / distinct /
+def candidate_key_rule(df: DataFrame) -> DataFrame:
+    """Candidate-key discovery: for each non-nested column, exact row / distinct /
     null counts and whether the column is a candidate key (unique and
     never null) — the uniqueness-contract suggestion a validator emits
     before anyone has declared keys.
@@ -248,8 +246,7 @@ def candidate_key_rule(
     100 TB swap ``approx_count_distinct`` in via the profiler when a
     ±2% screen is enough; this exact form is the hash-checkable rule.
     """
-    if columns is None:
-        columns = [c for c, t in df.dtypes if not t.startswith(("array", "map", "struct"))]
+    columns = [c for c, t in df.dtypes if not t.startswith(("array", "map", "struct"))]
     if not columns:
         raise ValueError("no columns to profile")
     aggs = [F.count(F.lit(1)).alias("__rows")]
@@ -498,10 +495,10 @@ def join_cardinality_profile(
     a: DataFrame,
     b: DataFrame,
     key_col: str,
-    key_col_b: Optional[str] = None,
+    key_col_b: str,
 ) -> DataFrame:
     """Pre-join cardinality advisor: the EXACT output size of
-    ``a JOIN b`` on the key, computed from per-key counts WITHOUT
+    ``a JOIN b ON a.key_col = b.key_col_b``, computed from per-key counts WITHOUT
     running the join — Σ over shared keys of cntA·cntB.  Together with
     :func:`key_skew_profile` this is the pre-shuffle checklist: skew
     says whether the join needs salting/AQE, this says whether its
@@ -519,15 +516,14 @@ def join_cardinality_profile(
     everything after is O(shared keys).  NULL keys are excluded (they
     never match in an equi-join).
     """
-    kb = key_col_b or key_col
     ca = (
         a.filter(F.col(key_col).isNotNull())
         .groupBy(F.col(key_col).alias("_k"))
         .agg(F.count(F.lit(1)).alias("_na"))
     )
     cb = (
-        b.filter(F.col(kb).isNotNull())
-        .groupBy(F.col(kb).alias("_k"))
+        b.filter(F.col(key_col_b).isNotNull())
+        .groupBy(F.col(key_col_b).alias("_k"))
         .agg(F.count(F.lit(1)).alias("_nb"))
     )
     j = ca.join(cb, "_k", "full_outer").select(

@@ -42,16 +42,12 @@ def duplicate_key_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def uniqueness_metrics(
-    df: DataFrame, cols: Sequence[str], approx: bool = False
-) -> DataFrame:
-    """One row per column: total count, (approx) distinct count, uniqueness
-    ratio.  ``approx=True`` switches to the HLL sketch — the 100 TB path
-    (SURVEY.md §2g): one pass, no distinct-value shuffle."""
-    distinct = F.approx_count_distinct if approx else F.count_distinct
+def uniqueness_metrics(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """One row per column: total count, exact distinct count, uniqueness
+    ratio, in one aggregation over all ``cols``."""
     aggs = [F.count(F.lit(1)).alias("row_count")]
     for c in cols:
-        aggs.append(distinct(F.col(c)).alias(f"{c}_distinct"))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"{c}_distinct"))
     row = df.agg(*aggs)
     out = []
     for c in cols:
@@ -107,19 +103,16 @@ def orphan_rows(
     dim: DataFrame,
     fact_keys: Sequence[str],
     dim_keys: Optional[Sequence[str]] = None,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Fact rows whose key has no match in the dimension (LEFT ANTI join).
 
-    ``broadcast_dim=True`` (default) broadcasts the dimension's key
-    projection — at 100 TB the fact side streams through each executor with
-    zero shuffle.  Only disable for dimensions too large to broadcast, in
-    which case AQE picks a sort-merge join on the keys.
+    The dimension's key projection is broadcast — at 100 TB the fact side
+    streams through each executor with zero shuffle.
     """
     dim_keys = list(dim_keys or fact_keys)
-    dim_proj = dim.select(*[F.col(k) for k in dim_keys]).dropDuplicates()
-    if broadcast_dim:
-        dim_proj = F.broadcast(dim_proj)
+    dim_proj = F.broadcast(
+        dim.select(*[F.col(k) for k in dim_keys]).dropDuplicates()
+    )
     cond = [
         fact[fk].eqNullSafe(dim_proj[dk]) for fk, dk in zip(fact_keys, dim_keys)
     ]
@@ -138,13 +131,13 @@ def violation_expr_metrics(df: DataFrame, exprs: dict[str, Column]) -> DataFrame
 # -------------------------------------------------------------------- drift
 
 def snapshot_drift(
-    old: DataFrame, new: DataFrame, cols: Optional[Sequence[str]] = None
+    old: DataFrame, new: DataFrame, cols: Sequence[str]
 ) -> DataFrame:
-    """Row-level drift between two snapshots: rows added minus rows removed,
-    labeled.  ``exceptAll`` keeps duplicate multiplicity (bag semantics)."""
-    if cols:
-        old = old.select(*cols)
-        new = new.select(*cols)
+    """Row-level drift between two snapshots projected to ``cols``: rows
+    added minus rows removed, labeled.  ``exceptAll`` keeps duplicate
+    multiplicity (bag semantics)."""
+    old = old.select(*cols)
+    new = new.select(*cols)
     added = new.exceptAll(old).withColumn("drift_kind", F.lit("added"))
     removed = old.exceptAll(new).withColumn("drift_kind", F.lit("removed"))
     return added.unionByName(removed)
@@ -274,7 +267,7 @@ def distribution_drift_psi_split(
 # ------------------------------------------------------------- distribution
 
 def distribution_stats(
-    df: DataFrame, value_col: str, group_cols: Optional[Sequence[str]] = None
+    df: DataFrame, value_col: str, group_cols: Sequence[str]
 ) -> DataFrame:
     """min/max/avg/stddev/count per group — the profile a drift monitor
     compares across runs.  Partial aggregation map-side; the shuffle moves
@@ -287,9 +280,7 @@ def distribution_stats(
         F.avg(c).alias("avg_value"),
         F.stddev_samp(c).alias("stddev_value"),
     ]
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs)
-    return df.agg(*aggs)
+    return df.groupBy(*group_cols).agg(*aggs)
 
 
 def outlier_zscore_violations(
@@ -577,17 +568,16 @@ def point_in_time_join(
     feature_ts: str,
     feature_cols: Sequence[str],
     ttl_seconds: Optional[float] = None,
-    feature_key: Optional[str] = None,
     age_col: str = "feature_age_us",
 ) -> DataFrame:
     """Feature-store POINT-IN-TIME-CORRECT join: each fact row picks up
     ``feature_cols`` from the LATEST feature row at-or-before its
-    timestamp for the same key — never a future one.  This is the
-    training-set construction rule that prevents feature LEAKAGE /
-    training-serving skew (Feast's get_historical_features, Databricks
-    feature-store point-in-time semantics): a model trained with
-    features the serving system could not have known yet looks great
-    offline and fails online.
+    timestamp for the same ``key`` (named alike on both sides) — never a
+    future one.  This is the training-set construction rule that
+    prevents feature LEAKAGE / training-serving skew (Feast's
+    get_historical_features, Databricks feature-store point-in-time
+    semantics): a model trained with features the serving system could
+    not have known yet looks great offline and fails online.
 
     ``ttl_seconds`` expires stale features (a fact farther than the TTL
     from its newest feature gets NULLs, exactly like a serving-side
@@ -604,7 +594,7 @@ def point_in_time_join(
         facts,
         features,
         key,
-        feature_key or key,
+        key,
         fact_ts,
         feature_ts,
         feature_cols,
@@ -676,9 +666,9 @@ def binned_range_join(
     points: DataFrame,
     intervals: DataFrame,
     value_col: str,
+    bin_width: float,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    bin_width: Optional[float] = None,
     max_bins_per_interval: int = 4096,
 ) -> DataFrame:
     """Point-in-interval join for LARGE interval tables: bin both sides
@@ -690,7 +680,8 @@ def binned_range_join(
 
     1. every interval explodes to the grid bins it overlaps
        (``sequence(floor(lo/w), floor(hi/w))`` — contiguous, so the blowup
-       is ``len/width``, chosen ≈ median interval length to keep it ~2×);
+       is ``len/bin_width`` — choose ``bin_width`` ≈ the median interval
+       length to keep it ~2×);
     2. every point maps to exactly ONE bin — ``floor(value/w)``;
     3. hash equi-join on the bin id (shuffle both sides by bin — standard
        partitioned join, AQE-skew-splittable), then the exact
@@ -699,20 +690,7 @@ def binned_range_join(
     Identical output to the nested-loop formulation (pinned by tests);
     shuffle volume O(points + intervals·overlap) instead of
     O(points × intervals) comparisons.
-
-    ``bin_width`` defaults to the median interval length, measured with
-    one tiny aggregate over the interval side (``approx_percentile``) —
-    pass it explicitly in repeated production runs.
     """
-    if bin_width is None:
-        bin_width = float(
-            intervals.select(
-                F.percentile_approx(
-                    F.col(hi_col) - F.col(lo_col), 0.5
-                ).alias("m")
-            ).first()["m"]
-            or 1.0
-        )
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
     w = F.lit(float(bin_width))
@@ -739,18 +717,16 @@ def heavy_hitters(
     df: DataFrame,
     col: str,
     support: float = 0.01,
-    verify_exact: bool = True,
 ) -> DataFrame:
-    """Frequent values of ``col`` in one pass: every value occurring in
-    more than ``support`` fraction of rows (plus possible false
-    positives — the one-sided guarantee of the Karp/Misra-Gries sketch
-    behind ``DataFrame.stat.freqItems``).
-
-    ``verify_exact=True`` (default) re-counts the candidates exactly and
-    removes the sketch's false positives, so the result is EXACT with the
-    sketch serving only as the scan-reducing candidate generator.  The
-    whole operator is exactly TWO passes over the data — the sketch and
-    one verify aggregation that computes candidate counts AND the grand
+    """Frequent values of ``col``: every value occurring in more than
+    ``support`` fraction of rows.  A one-pass sketch (the
+    Karp/Misra-Gries sketch behind ``DataFrame.stat.freqItems``, a
+    one-sided guarantee: every such value plus possible false
+    positives) proposes the candidates; they are re-counted exactly,
+    removing the sketch's false positives, so the result is EXACT with the sketch serving only as
+    the scan-reducing candidate generator.  The whole operator is
+    exactly TWO passes over the data — the sketch and one verify
+    aggregation that computes candidate counts AND the grand
     total together (rows outside the candidate set collapse into a single
     null bucket, so the total needs no separate ``count()`` job).  The
     verify filter compares EXACT counts (``exact_count > support *
@@ -783,11 +759,10 @@ def heavy_hitters(
     # tiny aggregate is a single-partition no-op, not a scale hazard.
     out = counts.withColumn(
         "_total", F.sum("exact_count").over(Window.partitionBy())
-    ).filter(F.col("value").isNotNull())
-    if verify_exact:
-        out = out.filter(
-            F.col("exact_count") > F.col("_total") * F.lit(float(support))
-        )
+    ).filter(
+        F.col("value").isNotNull()
+        & (F.col("exact_count") > F.col("_total") * F.lit(float(support)))
+    )
     return (
         out.withColumn(
             "share", F.round(F.col("exact_count") / F.col("_total"), 6)
@@ -848,18 +823,14 @@ def top_k_by(
     df: DataFrame,
     order_col: str,
     k: int,
-    ascending: bool = False,
-    tiebreak_cols: Optional[Sequence[str]] = None,
+    tiebreak_cols: Sequence[str],
 ) -> DataFrame:
-    """Deterministic top-k: global sort is avoided — Spark's
-    ``orderBy().limit(k)`` compiles to TakeOrderedAndProject, a per-partition
-    top-k plus a k-row driver merge, O(k) memory regardless of input size.
-    Tiebreak columns make results reproducible for oracle comparison."""
-    order = [
-        F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    ]
-    for t in tiebreak_cols or []:
-        order.append(F.col(t).asc())
+    """Deterministic top-k by ``order_col`` descending: global sort is
+    avoided — Spark's ``orderBy().limit(k)`` compiles to
+    TakeOrderedAndProject, a per-partition top-k plus a k-row driver
+    merge, O(k) memory regardless of input size.  Ascending tiebreak
+    columns make results reproducible for oracle comparison."""
+    order = [F.col(order_col).desc()] + [F.col(t).asc() for t in tiebreak_cols]
     return df.orderBy(*order).limit(k)
 
 
@@ -1923,26 +1894,22 @@ def salted_skew_join(
     small: DataFrame,
     key_cols: Sequence[str],
     salt: int = 8,
-    how: str = "inner",
     salt_col: str = "_salt",
-    salt_cols: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Explicit salt-replication equi-join for a SKEWED big side whose
-    small side is too large to broadcast: the classic hot-key device a
+    """Explicit salt-replication INNER equi-join for a SKEWED big side
+    whose small side is too large to broadcast: the classic hot-key device a
     100 TB fact-fact join needs when one key holds a double-digit
     percentage of the rows and a single reducer would own it.
 
     - every big row gets a deterministic salt in ``[0, salt)``:
-      ``xxhash64`` over ``salt_cols`` when given (pick columns that
-      VARY within the hot key — an order id, an event timestamp),
-      otherwise over all columns MIXED WITH ``spark_partition_id()``
+      ``xxhash64`` over all columns MIXED WITH ``spark_partition_id()``
       (ADVICE r8: hashing columns alone sends byte-identical duplicate
       rows — a common real skew shape — to ONE reducer, silently
       no-op'ing the mitigation; the partition id spreads identical
       rows by their physical location while staying deterministic for
       a fixed input partitioning, unlike ``rand``).  Note xxhash64
-      rejects un-hashable column types (e.g. ``MapType``) — pass
-      ``salt_cols`` to skip them;
+      rejects un-hashable column types (e.g. ``MapType``) — project
+      them away first;
     - the small side replicates ``salt`` ways (an ``explode`` of a
       literal array — map-side, no shuffle of its own);
     - the join runs on ``key_cols + [salt]``, splitting each hot key's
@@ -1955,38 +1922,23 @@ def salted_skew_join(
     skew-join split is the runtime alternative — this operator is the
     explicit, plan-stable form for when AQE's thresholds don't fire or
     the engine is pinned to static planning.
-
-    Only ``inner`` and ``left`` joins preserve semantics under
-    replication (the preserved side is the salted one); ``right`` /
-    ``full`` would duplicate unmatched small rows — rejected loudly.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_skew_join: how={how!r} would duplicate unmatched "
-            "small-side rows under replication; use inner or left, or "
-            "swap the sides"
-        )
     if salt < 1:
         raise ValueError("salt must be >= 1")
     keys = list(key_cols)
-    if salt_cols is not None:
-        salt_expr = F.pmod(
-            F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salt)
-        )
-    else:
-        salt_expr = F.pmod(
-            F.xxhash64(
-                F.spark_partition_id(),
-                *[F.col(c) for c in big.columns],
-            ),
-            F.lit(salt),
-        )
+    salt_expr = F.pmod(
+        F.xxhash64(
+            F.spark_partition_id(),
+            *[F.col(c) for c in big.columns],
+        ),
+        F.lit(salt),
+    )
     b = big.withColumn(salt_col, salt_expr)
     s = small.withColumn(
         salt_col,
         F.explode(F.array(*[F.lit(i) for i in range(salt)])),
     )
-    return b.join(s, keys + [salt_col], how).drop(salt_col)
+    return b.join(s, keys + [salt_col]).drop(salt_col)
 
 
 def pareto_frontier_2d(

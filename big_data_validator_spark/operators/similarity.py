@@ -13,7 +13,6 @@ functions) — no Python UDFs on the hot path.  At 100 TB:
 
 from __future__ import annotations
 
-import math
 import random
 from typing import Optional, Sequence
 
@@ -29,10 +28,9 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: Optional[str] = None,
-    query_vec_col: Optional[str] = None,
 ) -> DataFrame:
-    """Exact cosine top-k of each query against the corpus.
+    """Exact cosine top-k of each query against the corpus; both
+    frames carry ``id_col`` and ``vec_col``.
 
     The query side is broadcast (it is the small side by construction), so
     the corpus streams through executors without a shuffle; per-query top-k
@@ -42,12 +40,10 @@ def brute_force_topk(
     from big_data_validator_spark.operators import rebalance_for_compute
 
     corpus = rebalance_for_compute(corpus)
-    query_id_col = query_id_col or id_col
-    query_vec_col = query_vec_col or vec_col
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("_qvec"),
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("_qvec"),
         )
     )
     scored = (
@@ -1292,6 +1288,7 @@ def hybrid_lexical_dense_rrf(
     docs: DataFrame,
     emb: DataFrame,
     query_pred,
+    dense_top_m: int,
     n: int = 5,
     k: int = 10,
     rrf_k: int = 60,
@@ -1299,7 +1296,6 @@ def hybrid_lexical_dense_rrf(
     text_col: str = "text",
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dense_top_m: Optional[int] = None,
 ) -> DataFrame:
     """Hybrid retrieval: fuse a LEXICAL ranking (shared character
     ``n``-gram count between query text and candidate text — exact
@@ -1318,18 +1314,16 @@ def hybrid_lexical_dense_rrf(
       shingle with a query, postings-bounded, never pairwise in the
       corpus;
     - dense: the corpus embeddings stream ONCE against the broadcast
-      query vectors.  With ``dense_top_m=None`` (the default) the FULL
-      exact ranking feeds the fusion — every candidate keeps its
-      1/(rrf_k+rank) contribution, the historical semantics.  Pass an
-      explicit ``dense_top_m`` (e.g. ``max(k*10, 100)``) to truncate
-      the dense list per query — RRF's missing-member convention is
-      exactly what makes truncated candidate lists fusable, so the
-      rank window and the fusion join then carry |queries|·M rows, not
-      |queries|·|corpus|; that is the bound to use at scale (the
-      pytest twin pins that it loses nothing at the fused cutoff on
-      the bench corpus).  Truncation is opt-in (ADVICE r12): a
-      candidate at dense rank M+1 loses its contribution, so the
-      bounded plan can differ from the exact one in general.
+      query vectors, and the dense list is truncated to ``dense_top_m``
+      per query (e.g. ``max(k*10, 100)``) — RRF's missing-member
+      convention is exactly what makes truncated candidate lists
+      fusable, so the rank window and the fusion join carry
+      |queries|·M rows, not |queries|·|corpus| (the pytest twin pins
+      that it loses nothing at the fused cutoff on the bench corpus).
+      A candidate at dense rank M+1 loses its contribution, so the
+      result can differ from the untruncated fusion in general
+      (ADVICE r12); ``dense_top_m`` ≥ the corpus size is the exact
+      full ranking.
 
     Ranks are deterministic: lexical by (common DESC, id), dense by the
     round-6 cosine with id tie-break.  Self-matches are excluded on both
@@ -1374,11 +1368,8 @@ def hybrid_lexical_dense_rrf(
         )
     )
     queries = emb.filter(query_pred(F.col(vec_id_col)))
-    dense_k = (
-        dense_top_m if dense_top_m is not None else (1 << 31) - 1
-    )
     dense = brute_force_topk(
-        emb, queries, k=dense_k, id_col=vec_id_col, vec_col=vec_col
+        emb, queries, k=dense_top_m, id_col=vec_id_col, vec_col=vec_col
     ).select("query_id", vec_id_col, F.col("rank").alias("rank_dense"))
     return rrf_fuse(
         lex,

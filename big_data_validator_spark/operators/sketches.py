@@ -436,10 +436,9 @@ def kll_quantile_monitor(
     k: int = DEFAULT_K,
     tol_ppm: int = 25_000,
     block_width: int = 1_000_000,
-    partial_stage: str = "map_side",
 ) -> DataFrame:
-    """End-to-end sketch-vs-exact monitor, oracle-ready: build per-day
-    mergeable sketches (partials → per-day merge), roll all days up to
+    """End-to-end sketch-vs-exact monitor, oracle-ready: build one
+    mergeable sketch per day, roll all days up to
     global percentile ESTIMATES by merging sketch rows, then verify
     each estimate's RANK against the exact block-scan CDF.
 
@@ -452,32 +451,21 @@ def kll_quantile_monitor(
     sketch table alone.
     """
     pcts = [int(p) for p in quantile_pcts]
-    # Partial-stage cost model: map-side partials emit one sketch row
-    # per (partition × group).  That pays when groups-per-partition ≪
-    # rows-per-partition — the 100 TB layout, where data is
-    # date-partitioned and a task sees one or two days.  Under a
-    # row-random layout with high group cardinality (this bench: 32
-    # partitions × ~2400 days ≈ the row count) the python sketch-object
-    # overhead dominates; "shuffle" repartitions the raw rows on the
-    # group key FIRST so exactly one sketch is built per group
-    # (measured 11.8 s → map-side vs ~2 s shuffled at sf0.1).
-    if partial_stage not in ("map_side", "shuffle"):
-        raise ValueError(f"partial_stage={partial_stage!r}")
-    if partial_stage == "shuffle":
-        # day-locality is guaranteed by the repartition, so the partial
-        # build already emits exactly ONE sketch per day — the merge
-        # stage would be 1-row groups of pure applyInPandas overhead.
-        # Explicit count: see kll_group_quantile_monitor (AQE would
-        # coalesce the CPU-bound python build stage by its tiny bytes).
-        per_day = kll_partial_sketches(
-            df.repartition(_sketch_build_partitions(df), F.col(day_col)),
-            value_col,
-            [day_col],
-            k,
-        )
-    else:
-        partials = kll_partial_sketches(df, value_col, [day_col], k)
-        per_day = kll_merge_groups(partials, [day_col], k)
+    # The raw rows are repartitioned on the day FIRST so exactly one
+    # sketch is built per day.  Map-side partials (one sketch row per
+    # partition × day, then a merge) drown in python sketch-object
+    # overhead under a row-random layout with many days (32 partitions
+    # × ~2400 days ≈ the row count: measured 11.8 s against ~2 s
+    # repartitioned at sf0.1).  With day-locality the merge stage would
+    # be 1-row groups of pure applyInPandas overhead, so there is none.
+    # Explicit count: see kll_group_quantile_monitor (AQE would
+    # coalesce the CPU-bound python build stage by its tiny bytes).
+    per_day = kll_partial_sketches(
+        df.repartition(_sketch_build_partitions(df), F.col(day_col)),
+        value_col,
+        [day_col],
+        k,
+    )
     est = kll_rollup_quantiles(per_day, pcts, k)
     return kll_verify_quantiles(est, df, value_col, tol_ppm, block_width)
 
@@ -596,8 +584,8 @@ def kll_group_quantile_monitor(
     where :func:`kll_quantile_monitor` tracks one global distribution.
 
     Pipeline: repartition the raw rows on (group, day) FIRST so the
-    partial build emits exactly ONE sketch per stored key (the
-    ``partial_stage='shuffle'`` lesson — map-side partials under a
+    partial build emits exactly ONE sketch per stored key (as in
+    :func:`kll_quantile_monitor` — map-side partials under a
     row-random layout build partitions×keys tiny python sketches and
     drown in object overhead; with the grouped key the cardinality is
     groups×days, strictly worse), then merge each group's day rows to

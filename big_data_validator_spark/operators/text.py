@@ -38,18 +38,16 @@ def word_tokens(col: Column) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int, lowered: bool = False) -> Column:
-    """Array of character n-grams (shingles) of the lowercased text.
-    Expression-only sliding window: substring positions generated with
-    ``sequence`` + ``transform`` — no exploding UDF.
+def char_ngrams(s: Column, n: int) -> Column:
+    """Array of character n-grams (shingles) of ``s``, as given: callers
+    lowercase first.  Expression-only sliding window: substring positions
+    generated with ``sequence`` + ``transform`` — no exploding UDF.
 
-    CAUTION: any expression passed as ``col`` is embedded in the transform
+    CAUTION: any expression passed as ``s`` is embedded in the transform
     lambda and re-evaluated PER ELEMENT (Catalyst does not hoist common
     subexpressions out of HOF lambdas — measured ~2× on the dedup path
     from `lower()` alone).  Pass a plain column reference and pre-compute
-    transformations in a prior projection; `lowered=True` skips the
-    internal lowercasing for callers that already did."""
-    s = col if lowered else F.lower(col)
+    transformations, lowercasing included, in a prior projection."""
     return F.when(F.length(s) < n, F.array(s)).otherwise(
         F.transform(
             F.sequence(F.lit(1), F.length(s) - n + 1),
@@ -240,9 +238,8 @@ def unigram_lm_scores(
 
 
 #: Demo BPE merge table, in RANK ORDER (rank = list index): the classic
-#: high-frequency English merges.  Real deployments broadcast a learned
-#: vocabulary (e.g. the GPT-2 merges.txt, ~50k ranks) through the same
-#: code path — the encoder below is rank-table-driven, not hard-coded.
+#: high-frequency English merges.  The encoder, its oracle and the vocab
+#: below are all generated from this one table.
 BPE_DEMO_MERGES: "list[tuple[str, str]]" = [
     ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("e", "r"),
     ("o", "n"), ("r", "e"), ("a", "t"), ("e", "n"), ("o", "r"),
@@ -259,32 +256,28 @@ _BPE_BASE_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789"
 _BPE_SEP = "|"
 
 
-def bpe_vocab(
-    merges: "Optional[list[tuple[str, str]]]" = None,
-) -> "dict[str, int]":
-    """Token→id table implied by a merge list: base chars first (rank
-    order a-z0-9), then one merged symbol per rank.  Deterministic —
-    both engines and every run assign identical ids."""
-    merges = BPE_DEMO_MERGES if merges is None else merges
+def bpe_vocab() -> "dict[str, int]":
+    """Token→id table implied by :data:`BPE_DEMO_MERGES`: base chars
+    first (rank order a-z0-9), then one merged symbol per rank.
+    Deterministic — both engines and every run assign identical ids."""
     vocab = {ch: i for i, ch in enumerate(_BPE_BASE_CHARS)}
-    for a, b in merges:
+    for a, b in BPE_DEMO_MERGES:
         if a + b not in vocab:
             vocab[a + b] = len(vocab)
     return vocab
 
 
-def bpe_encode_tokens(
-    col: Column, merges: "Optional[list[tuple[str, str]]]" = None
-) -> Column:
+def bpe_encode_tokens(col: Column) -> Column:
     """REAL byte-pair encoding of one lowercase word token into its BPE
     symbol array, as a pure Catalyst expression chain (codegen, no
     Python, no UDF).
 
-    Algorithm (Sennrich 2016 encode): apply each merge rule in RANK
-    ORDER, replacing every adjacent occurrence of the pair
-    left-to-right.  The working representation wraps each symbol in
-    separators — ``the`` → ``|t||h||e|`` — so a pair replace is a plain
-    substring replace of ``|A||B|`` with ``|AB|``:
+    Algorithm (Sennrich 2016 encode): apply each
+    :data:`BPE_DEMO_MERGES` rule in RANK ORDER, replacing every
+    adjacent occurrence of the pair left-to-right.  The working
+    representation wraps each symbol in separators — ``the`` →
+    ``|t||h||e|`` — so a pair replace is a plain substring replace of
+    ``|A||B|`` with ``|AB|``:
 
     - the double separator ``||`` occurs exactly at symbol boundaries
       and symbols never contain the separator, so a match can only bind
@@ -298,11 +291,10 @@ def bpe_encode_tokens(
     :func:`bpe_oracle_sql_expr`).  Input must be non-empty ``[a-z0-9]+``
     (what :func:`word_tokens` yields).  Returns the symbol array.
     """
-    merges = BPE_DEMO_MERGES if merges is None else merges
     out = F.regexp_replace(
         col, "(.)", f"{_BPE_SEP}$1{_BPE_SEP}"
     )
-    for a, b in merges:
+    for a, b in BPE_DEMO_MERGES:
         out = F.replace(
             out,
             F.lit(f"{_BPE_SEP}{a}{_BPE_SEP}{_BPE_SEP}{b}{_BPE_SEP}"),
@@ -311,16 +303,13 @@ def bpe_encode_tokens(
     return F.split(F.btrim(out, F.lit(_BPE_SEP)), r"\|\|")
 
 
-def bpe_oracle_sql_expr(
-    word_expr: str, merges: "Optional[list[tuple[str, str]]]" = None
-) -> str:
+def bpe_oracle_sql_expr(word_expr: str) -> str:
     """The DuckDB expression computing EXACTLY
     :func:`bpe_encode_tokens` for ``word_expr`` (a SQL string
     expression), generated from the same merge table so the two
     engines cannot drift.  Returns a VARCHAR[] expression."""
-    merges = BPE_DEMO_MERGES if merges is None else merges
     expr = f"regexp_replace({word_expr}, '(.)', '|\\1|', 'g')"
-    for a, b in merges:
+    for a, b in BPE_DEMO_MERGES:
         expr = f"replace({expr}, '|{a}||{b}|', '|{a}{b}|')"
     return f"string_split(trim({expr}, '|'), '||')"
 
@@ -332,12 +321,12 @@ def bpe_learn_merges(
     count_col: str = "_n",
 ) -> "list[tuple[int, str, str, int]]":
     """LEARN a BPE merge table FROM the corpus — the training half of
-    the tokenizer loop (:func:`bpe_encode_tokens` is the apply half;
-    Sennrich 2016 learn): repeat ``num_merges`` times: count every
-    adjacent symbol pair across the weighted vocabulary, take the most
-    frequent (ties broken count-desc then pair-lexicographic — a
-    deterministic rule both engines share), merge it everywhere, record
-    it.
+    the tokenizer loop (:func:`bpe_encode_tokens` applies a table of
+    this shape, :data:`BPE_DEMO_MERGES`; Sennrich 2016 learn): repeat
+    ``num_merges`` times: count every adjacent symbol pair across the
+    weighted vocabulary, take the most frequent (ties broken count-desc
+    then pair-lexicographic — a deterministic rule both engines share),
+    merge it everywhere, record it.
 
     Scale contract: the corpus is reduced to DISTINCT ``(word, count)``
     BEFORE this runs, so every iteration aggregates over the

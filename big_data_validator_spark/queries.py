@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from big_data_validator_spark.functions.exprs import (
-    cosine_similarity,
     field_count_naive,
     field_count_quoted,
 )
@@ -3546,7 +3545,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    return cohort_retention(ev, period="week")
+    return cohort_retention(ev)
 
 
 @query(
@@ -8040,8 +8039,8 @@ def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE quantile sketches (operators/sketches.py — VERDICT r8
     item 4, the percentile sibling of agg_hll_mergeable): order values
-    in cents flow ONE map-side pass into per-partition KLL partials,
-    merge into a persistable per-day sketch row, and the global
+    in cents are repartitioned by day and flow ONE pass into a
+    persistable per-day KLL sketch row, and the global
     p50/p90/p99 is an N-row MERGE of stored sketches — the rolling-
     percentile-without-rescan architecture a 100 TB monitor needs.
 
@@ -8068,11 +8067,6 @@ def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=200,
         tol_ppm=25_000,
         block_width=1_000_000,
-        # the testdata is row-random with ~2400 distinct days, so
-        # map-side partials would build partitions×days tiny sketches;
-        # at 100 TB the table is date-partitioned and "map_side" is
-        # the right setting (see the operator's cost-model note)
-        partial_stage="shuffle",
     )
     out = res.orderBy("quantile_pct")
     out._bdv_pinned = D.pinned_caches(res)
@@ -8111,8 +8105,8 @@ def agg_kll_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch rows — the shape real monitors need (p99 latency per
     customer segment), where agg_kll_mergeable tracks one global
     distribution.  The raw rows are repartitioned on (segment, day)
-    BEFORE the partial build (the partial_stage='shuffle' lesson: one
-    python sketch per stored key, not per partition×key), each
+    BEFORE the partial build (as in agg_kll_mergeable: one python
+    sketch per stored key, not per partition×key), each
     segment's day rows merge to its estimates, and every estimate is
     verified against the exact PER-GROUP block-scan CDF (windows
     partitioned by segment — no global sort, no cross-group window).
@@ -8469,11 +8463,9 @@ def cdc_schema_changeset(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCHEMA (gains ``priority_code``, loses ``legacy_note``).  Plain
     snapshot_changeset fingerprints shared columns only and is blind to
     the schema delta; the evolving variant classifies shared-unchanged
-    keys that RECEIVED non-NULL added data as ``schema_add`` and (under
-    explicit ``allow_drops=True`` — drops raise by default, mirroring
-    the reference's one-way superset tolerance,
-    big_data_validator.py:53-74) keys that LOST non-NULL dropped data
-    as ``schema_drop``; data updates dominate both.  The shuffle still
+    keys that RECEIVED non-NULL added data as ``schema_add`` and keys
+    that LOST non-NULL dropped data as ``schema_drop``; data updates
+    dominate both.  The shuffle still
     moves only (key, fingerprint, two 1-byte flags)."""
     from big_data_validator_spark.operators.cdc import (
         snapshot_changeset_evolving,
@@ -8513,7 +8505,6 @@ def cdc_schema_changeset(spark: SparkSession, sf_dir: str) -> DataFrame:
         current,
         base.unionAll(inserts),
         key_cols=["o_orderkey"],
-        allow_drops=True,
     )
 
 
@@ -8741,7 +8732,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = directed.union(
         directed.select(F.col("dst"), F.col("src"))
     ).distinct()
-    labels = label_propagation_min(und, iters=3, symmetrized=True)
+    labels = label_propagation_min(und, iters=3)
     out = labels.orderBy("node")
     out._bdv_pinned = D.pinned_caches(labels)
     return D.materialize_release(out)
@@ -8921,7 +8912,7 @@ def dedup_shared_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width bytes per position instead of 40 string chars; the
     measured suffix-distinct alternative saves nothing on a corpus
     with zero within-doc gram repetition), grams in >50 docs drop
-    BEFORE pair generation (the winnowing stop-fingerprint cap —
+    BEFORE pair generation (a stop-fingerprint cap —
     per-gram pair work is cap²-bounded, never corpus²), pairs expand
     from each gram's collected (doc, count) list with higher-order
     array functions map-side (three exchanges incl. the output sort,
@@ -10100,9 +10091,8 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     long one, exactly the pair a Jaccard threshold ships twice because
     the union is dominated by the long side.  Same inverted-index plan
     (shared-shingle candidates only, never pairwise in the corpus);
-    the ``max_doc_freq`` stop-shingle cap and the prefix-filter device
-    (any ⌊(1−t)·|A|⌋+1 shingles of A must hit B) carry it to corpus
-    scale."""
+    the prefix-filter device (any ⌊(1−t)·|A|⌋+1 shingles of A must hit
+    B) carries it to corpus scale."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     return D.materialize_release(
         D.ngram_containment_pairs(docs, n=5, threshold=0.5)
@@ -10164,10 +10154,9 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses rare exact tokens).  Both scoring passes broadcast the tiny
     query side and stream the corpus ONCE; lexical candidates are
     postings-bounded (docs sharing ≥1 shingle), never corpus-pairwise;
-    the DENSE list is truncated to the top-100 per query via the
-    EXPLICIT ``dense_top_m=100`` opt-in (the operator default is the
-    exact full ranking, ADVICE r12; the missing-member convention
-    makes truncated lists fusable — the downstream fusion/rank frames
+    the DENSE list is truncated to the top-100 per query
+    (``dense_top_m=100``; the missing-member convention makes
+    truncated lists fusable — the downstream fusion/rank frames
     carry |queries|·100 rows, not |queries|·|corpus|; the oracle
     applies the identical bound, and
     tests/test_similarity_multimodal.py pins that the bounded plan

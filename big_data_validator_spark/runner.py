@@ -55,7 +55,6 @@ _PARSE_AGGS = ["count(_corrupt)", "count_if(_corrupt)", "count(_anchor)"]
 @dataclass
 class RunnerConfig:
     enforce_types: bool = True  # SURVEY §7 P2 (reference declares, never checks)
-    write_failures: bool = True
     failure_base_dir: Optional[str] = None  # default: alongside the input
     # 100 TB sink hygiene (SURVEY §4): partition the failure sink by these
     # contract columns (e.g. a date column) so downstream triage prunes
@@ -146,7 +145,7 @@ class ValidationRunner:
             verdict = R.rule_csv_parser_verdict(corrupt or 0, actual_columns)
             if verdict.passed:
                 line_result.passed, line_result.violation_count = True, 0
-            elif self.config.write_failures:
+            else:
                 sink = default_failure_path(
                     self.config.failure_base_dir or csv_path.rsplit("/", 1)[0],
                     table,

@@ -15,10 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,

@@ -25,7 +25,6 @@ Design:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,8 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter
 class StreamingRuleConfig:
     event_time_col: str = "ts"
     watermark: str = "10 minutes"
-    window: str = "5 minutes"
-    slide: Optional[str] = None  # None → tumbling
+    window: str = "5 minutes"  # tumbling
 
 
 def windowed_violation_counts(
@@ -45,19 +43,15 @@ def windowed_violation_counts(
     rules: dict[str, Column],
     config: StreamingRuleConfig = StreamingRuleConfig(),
 ) -> DataFrame:
-    """Per-window, per-rule violation counts over an unbounded stream.
+    """Per-tumbling-window, per-rule violation counts over an unbounded
+    stream.
 
     One ``groupBy(window)`` aggregation evaluates EVERY rule expression in
     the same pass (the batch runner's single-pass trick, streaming
     edition).  Output schema: (window_start, window_end, total_rows,
     <rule>_violations...).
     """
-    ts = F.col(config.event_time_col)
-    win = (
-        F.window(ts, config.window, config.slide)
-        if config.slide
-        else F.window(ts, config.window)
-    )
+    win = F.window(F.col(config.event_time_col), config.window)
     aggs = [F.count(F.lit(1)).alias("total_rows")]
     for name, expr in rules.items():
         aggs.append(F.sum(expr.cast("long")).alias(f"{name}_violations"))
@@ -653,8 +647,9 @@ def stream_kll_group_sketches(
 
     Each micro-batch costs one distributed pass: the batch rows
     repartition on the group key so the partial build emits exactly
-    one sketch per group (the ``partial_stage='shuffle'`` lesson —
-    no merge stage needed).  NULL group keys are excluded, matching
+    one sketch per group (as in
+    :func:`~big_data_validator_spark.operators.sketches.kll_quantile_monitor`
+    — no merge stage needed).  NULL group keys are excluded, matching
     the batch monitor's join-on-key convention.
     """
     from big_data_validator_spark.operators.sketches import (

@@ -7,8 +7,7 @@
    with delta_b's non-key payload (incl. a column literally named
    "sign") instead of emitting duplicate columns.
 4. salted_skew_join must spread byte-identical duplicate hot-key rows
-   across salts (via salt_cols or the partition-id mix) and accept
-   un-hashable column types when salt_cols skips them.
+   across salts (via the partition-id mix).
 5. link_entity_pairs must not pair entities through a NULL block value
    (the pre-capped_bucket_pairs join semantics).
 """
@@ -123,27 +122,10 @@ def test_delta_join_view_sign_collision_raises(spark):
         delta_join_view_rows(a_old, delta_a, b_new, delta_b, "k", "k")
 
 
-def test_salted_skew_join_identical_rows_spread_and_maptype(spark):
-    # 200 byte-identical hot-key rows; salt_cols over a varying column
-    # must fan them across >1 salt even though every other column is
-    # identical.
-    big = spark.createDataFrame(
-        [("hot", i % 7, i) for i in range(200)], "k string, pay int, uid int"
-    )
+def test_salted_skew_join_identical_rows_spread(spark):
+    # partition-id mix: byte-identical hot-key rows across partitions
+    # get spread; correctness (row count) is salt-invariant regardless.
     small = spark.createDataFrame([("hot", 99)], "k string, dim int")
-    out = salted_skew_join(big, small, ["k"], salt=8, salt_cols=["uid"])
-    assert out.count() == 200
-    salted = big.withColumn(
-        "_s", F.pmod(F.xxhash64(F.col("uid")), F.lit(8))
-    )
-    assert salted.select("_s").distinct().count() > 1
-    # MapType column on the big side: default all-column hash would
-    # reject it; salt_cols skips it.
-    bigm = big.withColumn("m", F.create_map(F.lit("a"), F.col("pay")))
-    outm = salted_skew_join(bigm, small, ["k"], salt=4, salt_cols=["uid"])
-    assert outm.count() == 200
-    # partition-id mix path: byte-identical rows across partitions get
-    # spread; correctness (row count) is salt-invariant regardless.
     dup = spark.createDataFrame(
         [("hot", 1)] * 64, "k string, pay int"
     ).repartition(8)

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-from collections import Counter
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,23 +39,6 @@ def test_classification(spark, snapshots):
     out = snapshot_changeset(current, incoming, ["k"])
     got = {r["k"]: r["change_type"] for r in out.collect()}
     assert got == {2: "update", 3: "update", 5: "delete", 6: "insert"}
-
-
-def test_include_unchanged_and_summary(spark, snapshots):
-    current, incoming = snapshots
-    out = snapshot_changeset(
-        current, incoming, ["k"], include_unchanged=True
-    )
-    rows = out.collect()
-    got = {r["k"]: r["change_type"] for r in rows}
-    assert got[1] == "unchanged" and got[4] == "unchanged"
-    assert len(got) == 6
-    assert Counter(r["change_type"] for r in rows) == {
-        "unchanged": 2,
-        "update": 2,
-        "delete": 1,
-        "insert": 1,
-    }
 
 
 def test_default_compare_cols_are_shared_non_key(spark):
@@ -513,14 +494,14 @@ def test_delta_join_view_group_vanishes(spark):
 
 # -------------------------------------------- schema-evolution changeset
 
-def _evolving(spark, cur_rows, cur_schema, inc_rows, inc_schema, **kw):
+def _evolving(spark, cur_rows, cur_schema, inc_rows, inc_schema):
     from big_data_validator_spark.operators.cdc import (
         snapshot_changeset_evolving,
     )
 
     cur = spark.createDataFrame(cur_rows, cur_schema)
     inc = spark.createDataFrame(inc_rows, inc_schema)
-    out = snapshot_changeset_evolving(cur, inc, ["k"], **kw)
+    out = snapshot_changeset_evolving(cur, inc, ["k"])
     return {r["k"]: r["change_type"] for r in out.collect()}, out
 
 
@@ -541,9 +522,8 @@ def test_evolving_changeset_add_grid(spark):
 
 
 def test_evolving_changeset_drop_grid(spark):
-    """Column DROP raises by default (one-way superset tolerance);
-    with allow_drops=True, lost non-null data -> schema_drop, lost
-    all-null data -> unchanged."""
+    """Column DROP: lost non-null data -> schema_drop, lost all-null
+    data -> unchanged."""
     from big_data_validator_spark.operators.cdc import (
         snapshot_changeset_evolving,
     )
@@ -552,9 +532,7 @@ def test_evolving_changeset_drop_grid(spark):
         [(1, "a", "HAD"), (2, "b", None)], "k long, v string, legacy string"
     )
     inc = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    with pytest.raises(ValueError, match="dropped columns"):
-        snapshot_changeset_evolving(cur, inc, ["k"])
-    out = snapshot_changeset_evolving(cur, inc, ["k"], allow_drops=True)
+    out = snapshot_changeset_evolving(cur, inc, ["k"])
     got = {r["k"]: r["change_type"] for r in out.collect()}
     assert got == {1: "schema_drop"}
     assert out.collect()[0]["dropped_cols"] == "legacy"
@@ -563,7 +541,7 @@ def test_evolving_changeset_drop_grid(spark):
 def test_evolving_changeset_add_drop_and_data_on_same_key(spark):
     """The full grid on one snapshot pair: insert/delete untouched,
     update dominates schema_add, schema_add dominates schema_drop,
-    include_unchanged surfaces the quiet keys."""
+    quiet keys produce no row."""
     got, _ = _evolving(
         spark,
         [
@@ -580,13 +558,10 @@ def test_evolving_changeset_add_drop_and_data_on_same_key(spark):
             (5, "e", "NEW"),   # inserted
         ],
         "k long, v string, extra string",
-        allow_drops=True,
-        include_unchanged=True,
     )
     assert got == {
         1: "schema_add",   # add dominates drop
         2: "update",       # data change dominates schema notes
-        3: "unchanged",
         4: "delete",
         5: "insert",
     }
@@ -600,7 +575,7 @@ def test_evolving_changeset_requires_shared_columns(spark):
     cur = spark.createDataFrame([(1, "x")], "k long, old string")
     inc = spark.createDataFrame([(1, "y")], "k long, new string")
     with pytest.raises(ValueError, match="share no non-key"):
-        snapshot_changeset_evolving(cur, inc, ["k"], allow_drops=True)
+        snapshot_changeset_evolving(cur, inc, ["k"])
 
 
 def test_scd2_history_hand_grid(spark):

@@ -95,12 +95,6 @@ def test_pii_scan_overlapping_patterns_count_sequentially(spark):
     assert got["redacted"].count("<PHONE>") == got["n_phone"]
 
 
-def test_pii_scan_empty_patterns_raise(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        pii_scan(df, patterns={})
-
-
 # ---------------------------------------------------------- contamination
 
 
@@ -126,12 +120,6 @@ def test_contamination_counts_and_self_exclusion(spark):
     }
     # probe 1 matches docs 2 and 4 (doc 1 = self, excluded); probe 3: none
     assert got == {1: 2, 3: 0}
-    # without self-exclusion doc 1 counts too
-    got2 = {
-        r["probe_id"]: r["n_contaminated"]
-        for r in contamination_probe_counts(corpus, probes).collect()
-    }
-    assert got2 == {1: 3, 3: 0}
 
 
 def test_contamination_probe_plan_broadcasts(spark):
@@ -265,13 +253,6 @@ def test_k_anonymity_and_l_diversity_violations(spark):
     assert got[("uk", 1)] == (4, 1, ["k_anonymity", "l_diversity"])
     assert got[("fr", 2)] == (6, 1, ["l_diversity"])
     assert got[("de", 3)] == (2, 2, ["k_anonymity"])
-
-    # k-only mode: no sensitive column required
-    konly = {
-        (r["region"], r["band"])
-        for r in k_anonymity_violations(df, ["region", "band"], k=5).collect()
-    }
-    assert konly == {("uk", 1), ("de", 3)}
 
 
 # -------------------------------------------- n-gram overlap contamination

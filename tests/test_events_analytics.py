@@ -103,11 +103,6 @@ class TestRetention:
         assert cells[("2024-01-08", 0)]["active_users"] == 1
         assert ("2024-01-08", 1) not in cells
 
-    def test_rejects_unknown_period(self, spark):
-        ev = _ev(spark, [(1, 1, 9, 0, "view")])
-        with pytest.raises(ValueError):
-            cohort_retention(ev, period="month")
-
 
 class TestRollingZscore:
     def _daily(self, spark, counts):

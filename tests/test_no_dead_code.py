@@ -1,5 +1,6 @@
 """Every top-level definition in the package is reached from code outside
-``tests/``.
+``tests/``; every switch parameter is set to more than one value outside
+``tests/``; every module-level import is used by its module.
 
 A definition is reached when its name appears in non-test code (the
 package, ``scripts/``, ``bench.py``, ``perfbench/`` and
@@ -151,3 +152,136 @@ def test_exempt_references_are_still_defined():
         for name, *_ in _definitions(ast.parse(path.read_text()))
     }
     assert TEST_REFERENCES <= defined
+
+
+# --- settable values no caller varies ---------------------------------------
+# A switch is a parameter whose ``None``/``bool``/``str`` default its function
+# reads in a branch test.  When every call outside ``tests/`` binds it to the
+# same literal, the other paths are reached only from tests.  Calls match by
+# name, as in the definition scan; a non-literal argument, ``*args`` or
+# ``**kwargs`` counts as a varied value.  ``main(argv)`` takes the command line.
+
+MODE_EXEMPT = {("big_data_validator_spark/__main__.py", "main", "argv")}
+
+
+def _functions(tree: ast.Module):
+    """``(callee name, node)`` per function in ``tree``; a class's
+    ``__init__`` is called by the class name."""
+    for node in ast.walk(tree):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                init = isinstance(node, ast.ClassDef) and child.name == "__init__"
+                yield (node.name if init else child.name), child
+
+
+def _switches(fn) -> dict[str, ast.Constant]:
+    """Parameters with a ``None``, ``bool`` or ``str`` default that ``fn``
+    reads in an ``if``/``IfExp`` test or as the left operand of ``or``."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    defaults = dict(zip(positional[len(positional) - len(args.defaults):], args.defaults))
+    defaults.update((a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None)
+    tests = []
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.IfExp)):
+            tests.append(node.test)
+        elif isinstance(node, ast.BoolOp) and isinstance(node.op, ast.Or):
+            tests.append(node.values[0])
+    read = {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+    return {
+        a.arg: d for a, d in defaults.items()
+        if a.arg in read and isinstance(d, ast.Constant)
+        and (d.value is None or isinstance(d.value, (bool, str)))
+    }
+
+
+_VARIED = object()
+
+
+def _literal(node: ast.expr):
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _VARIED
+
+
+def _passed(call: ast.Call, fn, name: str, default: ast.Constant):
+    """The literal ``call`` binds to parameter ``name`` (``repr`` of it), or
+    ``_VARIED`` for anything that is not a literal."""
+    for kw in call.keywords:
+        if kw.arg == name:
+            return _literal(kw.value)
+    positional = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    if positional[:1] in (["self"], ["cls"]):
+        positional = positional[1:]
+    index = positional.index(name) if name in positional else len(call.args)
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return _VARIED
+        if i == index:
+            return _literal(arg)
+    if any(kw.arg is None for kw in call.keywords):
+        return _VARIED
+    return repr(default.value)
+
+
+def mode_scan():
+    """``module:function(parameter)`` for each switch that every call site
+    outside ``tests/`` sets to the same literal, or leaves out."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in NON_TEST_SOURCES:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+                calls.setdefault(name, []).append(node)
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(ROOT).as_posix()
+        for callee, fn in _functions(ast.parse(path.read_text())):
+            for name, default in _switches(fn).items():
+                if (module, fn.name, name) in MODE_EXEMPT:
+                    continue
+                values = {_passed(c, fn, name, default) for c in calls.get(callee, ())}
+                if _VARIED not in values and len(values) <= 1:
+                    hits.append(f"{module}:{fn.name}({name})")
+    return hits
+
+
+def test_every_switch_is_varied_by_a_caller_outside_tests():
+    hits = mode_scan()
+    assert hits == [], f"{len(hits)} parameters no caller outside tests varies: {hits}"
+
+
+# --- module imports ---------------------------------------------------------
+
+
+def unused_imports():
+    """``module:name`` for each module-level import its own module never
+    uses.  ``__init__.py`` re-exports and ``from __future__`` are exempt."""
+    hits = []
+    for path in NON_TEST_SOURCES:
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        bound = {}
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                bound.update(((a.asname or a.name.split(".")[0]), node.lineno) for a in node.names)
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound.update(((a.asname or a.name), node.lineno) for a in node.names)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= {
+            part
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and _DOTTED.fullmatch(n.value)
+            for part in n.value.split(".")
+        }
+        module = path.relative_to(ROOT).as_posix()
+        hits += [f"{module}:{line}:{name}" for name, line in bound.items() if name not in used]
+    return sorted(hits)
+
+
+def test_every_module_import_is_used():
+    hits = unused_imports()
+    assert hits == [], f"{len(hits)} module imports their module never uses: {hits}"

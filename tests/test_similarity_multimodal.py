@@ -582,7 +582,7 @@ def test_hybrid_rrf_finds_lexical_match_dense_misses(spark):
     rows = {
         r["vec_id"]: r
         for r in hybrid_lexical_dense_rrf(
-            docs, emb, lambda c: c < 1, n=5, k=3
+            docs, emb, lambda c: c < 1, dense_top_m=100, n=5, k=3
         ).collect()
     }
     assert rows[1]["rank_lex"] == 1
@@ -592,13 +592,12 @@ def test_hybrid_rrf_finds_lexical_match_dense_misses(spark):
 
 
 def test_hybrid_rrf_bounded_dense_matches_full_at_cutoff(spark):
-    """The opt-in dense_top_m=100 truncation (the scale path:
-    |queries|·M downstream rows, not |queries|·|corpus|) loses
-    nothing at the fused cutoff — same members, same order, same
-    scores for every candidate the bounded dense list still covers —
-    on a corpus LARGER than the bound, so the truncation is real.
-    The default (dense_top_m=None) is the exact full ranking
-    (ADVICE r12: truncation must not silently change semantics)."""
+    """The dense_top_m=100 truncation (the scale path: |queries|·M
+    downstream rows, not |queries|·|corpus|) loses nothing at the fused
+    cutoff — same members, same order, same scores for every candidate
+    the bounded dense list still covers — on a corpus LARGER than the
+    bound, so the truncation is real.  dense_top_m=150 (the corpus
+    size) is the exact full ranking."""
     from big_data_validator_spark.operators.similarity import (
         hybrid_lexical_dense_rrf,
     )
@@ -662,8 +661,8 @@ def test_hybrid_rrf_bounded_dense_matches_full_at_cutoff(spark):
             .collect()
         ]
 
-    bounded = fused(100)  # opt-in bound, 100 < corpus size
-    full = fused(None)  # default: exact full ranking
+    bounded = fused(100)  # 100 < corpus size
+    full = fused(150)  # the whole corpus: exact full ranking
     assert bounded == full
 
 

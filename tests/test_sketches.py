@@ -218,11 +218,11 @@ def test_grouped_cdf_and_per_segment_monitor(spark):
 
 
 def test_grouped_monitor_repartitions_before_partial_build(spark):
-    """The partial_stage='shuffle' lesson, plan-pinned for the grouped
-    monitor: the raw rows must hit an Exchange on (group, day) BEFORE
-    the mapInPandas partial build, so exactly one python sketch exists
-    per stored key (map-side partials under a row-random layout build
-    partitions × keys of them)."""
+    """kll_quantile_monitor's repartition-first build, plan-pinned for
+    the grouped monitor: the raw rows must hit an Exchange on (group,
+    day) BEFORE the mapInPandas partial build, so exactly one python
+    sketch exists per stored key (map-side partials under a row-random
+    layout build partitions × keys of them)."""
     from big_data_validator_spark.operators.sketches import (
         kll_partial_sketches,
     )

@@ -474,14 +474,10 @@ def test_bpe_learn_matches_textbook(spark):
     """bpe_learn_merges == the textbook Sennrich learn loop (overlapping
     pair counts, left-to-right non-overlapping merge application,
     count-desc/pair-lexicographic ties) on a corpus with planted
-    frequency structure; and the learned table drives the encoder
-    (learn→encode loop closes)."""
+    frequency structure."""
     from collections import Counter
 
-    from big_data_validator_spark.operators.text import (
-        bpe_encode_tokens,
-        bpe_learn_merges,
-    )
+    from big_data_validator_spark.operators.text import bpe_learn_merges
 
     words = ["lower"] * 5 + ["lowest"] * 4 + ["newer"] * 6 + ["wider"] * 3 + ["aaa"] * 2
     wc = Counter(words)
@@ -511,14 +507,6 @@ def test_bpe_learn_matches_textbook(spark):
             nv[tuple(out)] = nv.get(tuple(out), 0) + c
         vocab = nv
     assert got == want
-
-    # the learned table plugs straight into the encoder
-    learned = [(a, b) for _, a, b, _ in got]
-    enc = spark.createDataFrame([("newer",)], ["w"]).select(
-        bpe_encode_tokens(F.col("w"), merges=learned).alias("toks")
-    ).collect()[0]["toks"]
-    flat = "".join(enc)
-    assert flat == "newer" and len(enc) < 5  # merges actually applied
 
 
 # ------------------------------------------- exact set-similarity join
@@ -839,40 +827,6 @@ def test_unigram_learn_excludes_long_words_and_bounds(spark):
     assert all(c > 0 for _, c in got)
 
 
-def test_shared_substrings_fingerprint_equals_text_mode(spark):
-    """VERDICT-r10 item 6: the 128-bit fingerprint key (gram text
-    never shuffled) must reproduce the verbatim-text key exactly on a
-    corpus with real shared spans and within-doc repetition."""
-    from big_data_validator_spark.operators.dedup import (
-        shared_substring_pairs,
-    )
-
-    boiler = "this header is repeated boilerplate across documents! "
-    rows = [
-        (1, boiler * 2 + "unique tail one"),
-        (2, boiler + "middle" + boiler),
-        (3, "no shared content here at all, totally different text"),
-        (4, boiler + "another distinct suffix for doc four"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(mode):
-        return sorted(
-            tuple(r)
-            for r in shared_substring_pairs(
-                df, gram_len=20, max_gram_docs=10, gram_keys=mode
-            ).collect()
-        )
-
-    fp, tx = run("fingerprint"), run("text")
-    assert fp == tx
-    assert fp  # the corpus is live
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="gram_keys"):
-        shared_substring_pairs(df, gram_keys="bogus")
-
-
 # --------------------------------------------------- containment pairs
 
 def test_containment_flags_subset_that_jaccard_misses(spark):
@@ -918,32 +872,6 @@ def test_containment_matches_set_arithmetic(spark):
     assert len(rows) == 1
     assert rows[0]["cont_a_in_b"] == expect_ab
     assert rows[0]["cont_b_in_a"] == expect_ba
-
-
-def test_containment_doc_freq_cap_lower_bounds(spark):
-    from big_data_validator_spark.operators.dedup import (
-        ngram_containment_pairs,
-    )
-
-    # a boilerplate shingle shared by all docs is dropped by the cap;
-    # the reported containment becomes a lower bound of the exact one
-    boiler = "common header line "
-    df = spark.createDataFrame(
-        [(i, boiler + f"unique body {i} " + boiler) for i in range(6)],
-        ["doc_id", "text"],
-    )
-    exact = {
-        (r["id_a"], r["id_b"]): r["cont_a_in_b"]
-        for r in ngram_containment_pairs(df, n=5, threshold=0.01).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"]): r["cont_a_in_b"]
-        for r in ngram_containment_pairs(
-            df, n=5, threshold=0.01, max_doc_freq=2
-        ).collect()
-    }
-    for pair, c in capped.items():
-        assert c <= exact[pair] + 1e-9
 
 
 # --------------------------------------------------- PMI collocations
