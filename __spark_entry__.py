@@ -5,8 +5,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-Implementation lives in :mod:`big_data_validator_spark.queries`; one
-registry entry per operator from SURVEY.md §2 / §7 (P0-P4).  Queries whose
+Implementation lives in the :mod:`big_data_validator_spark.queries`
+package: its ``__init__`` holds the registry, and one module per operator
+family (``queries/rules.py``, ``queries/relational.py``, …) holds one
+entry per operator from SURVEY.md §2 / §7 (P0-P4).  Queries whose
 semantics are hash-dependent (MinHash/SimHash/LSH) deliberately omit the
 oracle — the driver records the weaker rows-only check and pytest pins
 their behavior against exact algorithms.
@@ -24,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 # both on the driver (sys.path) and in Python workers: local-mode workers
 # are forked by the JVM with the JVM's PYTHONPATH, so exporting it before
 # the SparkSession is built covers Arrow UDF deserialization too.  For a
-# session created elsewhere/earlier, queries.py additionally ships the
-# package via ``addPyFile`` on first use.
+# session created elsewhere/earlier, ``queries/loader.py`` additionally
+# ships the package via ``addPyFile`` on first use.
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
@@ -35,9 +37,8 @@ if _REPO_ROOT not in _pp.split(os.pathsep):
         f"{_REPO_ROOT}{os.pathsep}{_pp}" if _pp else _REPO_ROOT
     )
 
-from big_data_validator_spark.queries import (  # noqa: E402
-    all_oracles,
-    all_queries,
+from big_data_validator_spark.queries import all_oracles, all_queries  # noqa: E402
+from big_data_validator_spark.queries.rules import (  # noqa: E402
     validation_summary_lineitem,
 )
 

@@ -1384,7 +1384,7 @@ def shared_substring_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     gram_len: int = 40,
-    max_gram_docs: Optional[int] = 50,
+    max_gram_docs: int = 50,
 ) -> DataFrame:
     """EXACT shared-substring detection — the dedup tier between
     exact-document fingerprints and probabilistic near-dup (MinHash/
@@ -1444,17 +1444,11 @@ def shared_substring_pairs(
     """
     if gram_len < 1:
         raise ValueError(f"gram_len must be >= 1, got {gram_len}")
-    if max_gram_docs is None:
-        # The per-gram collect below is bounded ONLY by the df cap: a
-        # corpus-wide boilerplate gram would otherwise collect every
-        # (doc, count) into one task's array and expand its quadratic
-        # pairs there.  The cap is the explicit guard, as everywhere
-        # else in this module (capped_bucket_pairs): require it.
-        raise ValueError(
-            "max_gram_docs is required: the single-exchange plan "
-            "bounds per-gram work by the document-frequency cap; "
-            "an uncapped gram list is a single-task OOM risk"
-        )
+    if max_gram_docs < 2:
+        # The per-gram collect below is bounded ONLY by this df cap, and
+        # a gram must sit in at least 2 documents to form a pair: a cap
+        # under 2 keeps no gram at all.
+        raise ValueError(f"max_gram_docs must be >= 2, got {max_gram_docs}")
     from big_data_validator_spark.operators import rebalance_for_compute
 
     t = F.col(text_col)

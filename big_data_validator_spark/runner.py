@@ -166,24 +166,6 @@ class ValidationRunner:
         report.run = self._run_stats(t0, local, lines=n_lines, rows=rows)
         return report
 
-    def validate_dataframe(
-        self, table: str, df: DataFrame, contract: TableContract
-    ) -> ValidationReport:
-        """Validate an already-parsed DataFrame (parquet/json path): name
-        conformance + declared-type enforcement; no line-level rules."""
-        t0 = time.perf_counter()
-        report = ValidationReport(table=table)
-        name_result = R.rule_column_names(df.columns, contract)
-        report.add(name_result)
-        rows = None
-        if self.config.enforce_types and name_result.passed and contract.columns:
-            checks = contract_violation_sql(contract, df.columns)
-            flags, check_aggs = _type_flags(checks)
-            rows, *violations = _aggregate(df.selectExpr(*flags), ["count(1)"] + check_aggs)
-            report.add(self._type_enforcement_result(dict(zip(checks, violations))))
-        report.run = self._run_stats(t0, _local_input_probe(df), rows=rows)
-        return report
-
     # ------------------------------------------------------------- internal
 
     def _type_enforcement_result(self, per_column: dict[str, int]) -> RuleResult:

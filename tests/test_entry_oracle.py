@@ -111,7 +111,7 @@ def _stage_streaming_inputs(spark):
     """Mint the session-memoised staged sources of the streaming entries.
     They are input data by design and outlive a call, so they are staged
     before the temp-root leak check below starts watching."""
-    from big_data_validator_spark import queries as Q
+    from big_data_validator_spark.queries import streaming as Q
 
     for stage in (
         Q._mv_delta_stream_source, Q._metrics_stream_source,
@@ -199,6 +199,17 @@ def test_driver_order_follows_last_counting_record():
     assert order[-5:] == [a, c, b, rows_old, rows_new]
     for name in (never, weak_only, rows_failed, rows_never):
         assert order.index(name) < len(order) - 5, name
+
+
+def test_registering_a_name_twice_raises():
+    """A copied entry cannot silently replace the one it copied."""
+    from big_data_validator_spark.queries import REGISTRY, query
+
+    name = next(iter(REGISTRY))
+    spec = REGISTRY[name]
+    with pytest.raises(ValueError, match=name):
+        query(name)(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is spec
 
 
 def test_every_oracled_entry_reaches_the_driver_window():

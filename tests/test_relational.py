@@ -674,7 +674,10 @@ def test_point_in_time_join_no_future_leakage(spark):
 
 def test_salted_skew_join_equals_plain_and_fans_hot_key(spark):
     """Salt-invariance: the salted join's result equals the plain inner
-    join; the hot key's rows really are spread across all salt values."""
+    join.  Fan-out: with a shuffle join, the hot key's joined rows land
+    in more than one reducer even when every hot row is byte-identical,
+    because the salt mixes in the input partition (8 here); a constant
+    salt would put them all in one."""
     from big_data_validator_spark.operators.relational import (
         salted_skew_join,
     )
@@ -699,15 +702,27 @@ def test_salted_skew_join_equals_plain_and_fans_hot_key(spark):
     )
     assert got == want
 
-    # the hot key's 80 rows hash across every salt bucket
-    b = big.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(4)),
-    )
-    salts = {
-        r["_salt"] for r in b.filter("k = 0").select("_salt").collect()
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    assert salts == {0, 1, 2, 3}
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        hot = spark.createDataFrame(
+            spark.sparkContext.parallelize([(0, 7)] * 160, 8), "k long, v long"
+        )
+        joined = salted_skew_join(hot, small, ["k"], salt=8)
+        parts = [
+            r["p"]
+            for r in joined.select(F.spark_partition_id().alias("p")).collect()
+        ]
+        assert len(parts) == 160
+        assert len(set(parts)) >= 2, parts
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_salted_skew_join_no_broadcast_shape(spark):

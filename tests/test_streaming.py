@@ -813,7 +813,7 @@ def test_bounded_drain_failure_cleans_up(spark, tmp_path, monkeypatch):
 
     from pyspark.errors import StreamingQueryException
 
-    from big_data_validator_spark.queries import _bounded_drain
+    from big_data_validator_spark.queries.drain import _bounded_drain
 
     src = str(tmp_path / "src")
     spark.range(3).write.parquet(src)

@@ -713,11 +713,10 @@ def test_shared_substring_plan_two_shuffles_no_join(spark):
     assert plan.count("RepartitionByExpression") == 1
 
 
-def test_shared_substrings_uncapped_rejected(spark):
-    """ADVICE-r10: the single-exchange plan bounds per-gram work by
-    the df cap — with max_gram_docs=None a corpus-wide boilerplate
-    gram would collect every doc into ONE task's array; the cap is
-    the explicit guard, so None must raise."""
+def test_shared_substrings_gram_cap_range(spark):
+    """The document-frequency cap bounds per-gram work, and a pair
+    needs a gram in at least 2 documents: a cap under 2 raises, a cap
+    of 2 keeps exactly the grams two documents share."""
     import pytest as _pytest
 
     from big_data_validator_spark.operators.dedup import (
@@ -725,10 +724,18 @@ def test_shared_substrings_uncapped_rejected(spark):
     )
 
     df = spark.createDataFrame(
-        [(1, "x" * 50)], "doc_id long, text string"
+        [(i, "a" * 50) for i in (1, 2, 3)] + [(i, "b" * 45) for i in (4, 5)],
+        "doc_id long, text string",
     )
-    with _pytest.raises(ValueError, match="max_gram_docs"):
-        shared_substring_pairs(df, max_gram_docs=None)
+    for cap in (1, 0, -3):
+        with _pytest.raises(ValueError, match="max_gram_docs must be >= 2"):
+            shared_substring_pairs(df, gram_len=40, max_gram_docs=cap)
+    pairs = shared_substring_pairs(df, gram_len=40, max_gram_docs=2).collect()
+    assert [(r["doc_a"], r["doc_b"]) for r in pairs] == [(4, 5)]
+    pairs = shared_substring_pairs(df, gram_len=40, max_gram_docs=3).collect()
+    assert sorted((r["doc_a"], r["doc_b"]) for r in pairs) == [
+        (1, 2), (1, 3), (2, 3), (4, 5)
+    ]
 
 
 # ---------------------------------------------- unigram-LM tokenizer

@@ -6,7 +6,7 @@ Round 3 regressed because the loader assumed one era's layout: the
 testdata regenerated ``events.ts`` from timestamp[ns] to timestamp[us]
 and three queries (sessionize + both streaming legs) broke or silently
 answered wrong (VERDICT r3).  This pins the normalization in
-``queries._t`` / ``queries._events_stream`` against all three layouts so
+``queries.loader._t`` / ``queries.loader._events_stream`` against all three layouts so
 a future regeneration fails HERE, in seconds, not in the driver window.
 """
 
@@ -18,7 +18,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from big_data_validator_spark.queries import REGISTRY, _t
+from big_data_validator_spark.queries import REGISTRY
+from big_data_validator_spark.queries.loader import _t
 
 BASE = dt.datetime(2024, 3, 1, 12, 0, 0)
 
