@@ -42,6 +42,18 @@ import shutil
 import sys
 
 
+def _session(master: str, app: str):
+    """The CLI's Spark session: ``master``, app name ``app``, UTC."""
+    from pyspark.sql import SparkSession
+
+    return (
+        SparkSession.builder.master(master)
+        .appName(app)
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+    )
+
+
 def stage(argv: list[str]) -> int:
     parser = argparse.ArgumentParser(prog="big_data_validator_spark stage")
     parser.add_argument("table", help="table name the files are staged under")
@@ -115,14 +127,7 @@ def query_cmd(argv: list[str]) -> int:
         print(f"unknown query: {args.name}", file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName(f"bdv-query-{args.name}")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = _session(args.master, f"bdv-query-{args.name}")
     try:
         df = REGISTRY[args.name].fn(spark, args.sf_dir)
         if args.output:
@@ -184,16 +189,9 @@ def suggest_cmd(argv: list[str]) -> int:
         )
         return 2
 
-    from pyspark.sql import SparkSession
-
     from big_data_validator_spark.contract import suggest_contract
 
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("bdv-suggest")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = _session(args.master, "bdv-suggest")
     try:
         if args.csv:
             df = (
@@ -209,20 +207,7 @@ def suggest_cmd(argv: list[str]) -> int:
             max_domain_values=args.max_domain_values,
         )
         if args.metadata_out:
-            with open(args.metadata_out, "w") as fh:
-                fh.write(
-                    "COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;"
-                    "FIELD_SEPARATOR;DECIMAL_SEPARATOR;NULLABLE;"
-                    "DATA_FORMAT\n"
-                )
-                for c in contract.columns:
-                    nullable = "TRUE" if c.nullable else "FALSE"
-                    quad = '"' * 4  # the reference's quirky quote cell
-                    fh.write(
-                        f"{c.name};{c.source_type};{quad};"
-                        f"{contract.field_separator};.;{nullable};"
-                        f"{c.source_format}\n"
-                    )
+            contract.to_metadata_csv(args.metadata_out)
             sug["metadata_out"] = args.metadata_out
         print(json.dumps(sug, default=str))
         return 0
@@ -254,8 +239,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from big_data_validator_spark.contract import TableContract
     from big_data_validator_spark.runner import RunnerConfig, ValidationRunner
 
@@ -275,12 +258,7 @@ def main(argv: list[str] | None = None) -> int:
         os.path.join(json_dir, f"{args.table}_metadata.json")
     )
 
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("big-data-validator-spark")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = _session(args.master, "big-data-validator-spark")
     try:
         runner = ValidationRunner(
             spark,

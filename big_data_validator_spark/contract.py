@@ -49,15 +49,11 @@ def normalize_quote(raw: Optional[str]) -> Optional[str]:
       ``None`` (= no quoting) which is what the data actually means.
     - empty string → ``None``.
     """
-    if raw is None:
+    if not raw or raw == "nan":
         return None
-    if raw == "" or raw == "nan":
-        return None
-    chars = set(raw)
-    if len(chars) == 1:
-        return raw[0]
-    # Heterogeneous multi-char separator: take the first char and let the
-    # caller log; nothing in the reference corpus produces this.
+    # Repeated copies of one char collapse to it; a heterogeneous
+    # multi-char separator also keeps its first char (nothing in the
+    # reference corpus produces one).
     return raw[0]
 
 
@@ -130,6 +126,27 @@ class TableContract:
                 )
         return contract
 
+    def to_metadata_csv(self, path: str) -> None:
+        """Write the reference's semicolon-CSV descriptor that
+        :meth:`from_metadata_csv` parses: the header, then one row per
+        column, every row repeating the table-level separators.  A
+        contract without a string separator records the reference's
+        quadruple-quote cell."""
+        quote = self.string_separator
+        if quote is None:
+            quote = '"' * 4
+        with open(path, "w") as fh:
+            fh.write(
+                "COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;FIELD_SEPARATOR;"
+                "DECIMAL_SEPARATOR;NULLABLE;DATA_FORMAT\n"
+            )
+            for c in self.columns:
+                nullable = "TRUE" if c.nullable else "FALSE"
+                fh.write(
+                    f"{c.name};{c.source_type};{quote};{self.field_separator};"
+                    f"{self.decimal_separator};{nullable};{c.source_format}\n"
+                )
+
     @classmethod
     def from_json_dict(cls, meta: dict) -> "TableContract":
         """Load the compiled-JSON shape the reference round-trips through
@@ -170,24 +187,6 @@ class TableContract:
         with open(path) as fh:
             return cls.from_json_dict(json.load(fh))
 
-    @classmethod
-    def from_spark_schema(cls, schema: StructType, **seps) -> "TableContract":
-        """Derive a contract from an existing Spark schema (used to validate
-        parquet tables that have no sidecar metadata)."""
-        type_map = {
-            "string": ("VARCHAR2", ""),
-            "date": ("DATE", "yyyy-MM-dd"),
-            "timestamp": ("DATE", "yyyy-MM-dd HH:mm:ss"),
-        }
-        cols = []
-        for f in schema.fields:
-            tn = f.dataType.typeName()
-            src, fmt = type_map.get(tn, ("NUMBER", ""))
-            cols.append(
-                ColumnSpec(f.name, source_type=src, source_format=fmt, nullable=f.nullable)
-            )
-        return cls(columns=cols, **seps)
-
     # ------------------------------------------------------- derived config
 
     @property
@@ -197,9 +196,9 @@ class TableContract:
 
     @property
     def escape_char(self) -> Optional[str]:
-        """The reference duplicates the quote char as the escape char
-        (FIXME at ``big_data_validator.py:126-127``) — preserved, but it is
-        configurable here."""
+        """The escape char, derived from the quote char: the reference
+        duplicates the quote char as the escape char (FIXME at
+        ``big_data_validator.py:126-127``), and this preserves it."""
         return self.quote_char
 
     @property

@@ -16,6 +16,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import pin
+
 # --------------------------------------------------------------- quality
 
 #: Gopher-style repetition/length gates (Rae et al. 2021, "Scaling
@@ -189,7 +191,7 @@ def repetition_metrics(
             ).alias("_tchars"),
         )
     )
-    base.persist()
+    pin(base)
 
     # ---- line leg
     lines = (
@@ -290,7 +292,7 @@ def repetition_metrics(
     )
 
     ppm = lambda num, den: F.expr(f"({num} * 1000000L) div greatest({den}, 1L)")
-    out = (
+    return (
         base.select("id", "n_tokens", "_tchars")
         .join(lstats, "id", "left")
         .join(topg, "id", "left")
@@ -313,8 +315,6 @@ def repetition_metrics(
             ),
         )
     )
-    out._bdv_pinned = [base]
-    return out
 
 
 # ------------------------------------------------------------------- PII
@@ -492,7 +492,7 @@ def contamination_ngram_overlap(
     # codegen row-form grams (see _word_ngram_rows); pinned because
     # BOTH the per-doc sizes and the collision counts consume it
     doc_grams = _word_ngram_rows(docs, text_col, id_col, n_words)
-    doc_grams.persist()
+    pin(doc_grams)
     sizes = doc_grams.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_grams")
     )
@@ -502,7 +502,7 @@ def contamination_ngram_overlap(
         .agg(F.count(F.lit(1)).alias("n_dirty"))
     )
     frac = F.coalesce(F.col("n_dirty"), F.lit(0)) / F.col("n_grams")
-    out = sizes.join(hits, "id", "left").select(
+    return sizes.join(hits, "id", "left").select(
         "id",
         F.col("n_grams").cast("long").alias("n_grams"),
         F.coalesce(F.col("n_dirty"), F.lit(0))
@@ -511,8 +511,6 @@ def contamination_ngram_overlap(
         F.round(frac, 6).alias("dirty_frac"),
         (frac >= F.lit(float(flag_threshold))).alias("flagged"),
     )
-    out._bdv_pinned = [doc_grams]
-    return out
 
 
 def _word_ngrams_expr(col, n_words: int):
@@ -753,49 +751,45 @@ def linear_quality_train(
     # even for a tiny corpus (guide §2: scale-adaptive partitioning)
     from big_data_validator_spark.operators import adaptive_partitions
 
-    feats = feats.repartition(adaptive_partitions(docs), "_id")
-    feats.persist()
-    try:
-        n_docs = feats.select(
-            F.countDistinct("_id").alias("_nd")
-        ).first()["_nd"]
-        if n_docs == 0:
-            raise ValueError(
-                "linear_quality_train: no training documents with "
-                "tokens"
+    feats = pin(feats.repartition(adaptive_partitions(docs), "_id"))
+    n_docs = feats.select(
+        F.countDistinct("_id").alias("_nd")
+    ).first()["_nd"]
+    if n_docs == 0:
+        raise ValueError(
+            "linear_quality_train: no training documents with "
+            "tokens"
+        )
+    div = int(n_docs)
+    wvec = [0] * n_buckets
+    for _ in range(steps):
+        wtab = spark.createDataFrame(
+            [(b, w) for b, w in enumerate(wvec) if w != 0],
+            "_b long, _w long",
+        )
+        resid = (
+            feats.join(F.broadcast(wtab), "_b", "left")
+            .groupBy("_id", "_y", "_n")
+            .agg(
+                F.sum(
+                    F.col("_c") * F.coalesce(F.col("_w"), F.lit(0))
+                ).alias("_sw")
             )
-        div = int(n_docs)
-        wvec = [0] * n_buckets
-        for _ in range(steps):
-            wtab = spark.createDataFrame(
-                [(b, w) for b, w in enumerate(wvec) if w != 0],
-                "_b long, _w long",
+            .select(
+                "_id",
+                F.expr(
+                    f"(_sw div _n) - _y * {int(label_scale)}L"
+                ).alias("_r"),
             )
-            resid = (
-                feats.join(F.broadcast(wtab), "_b", "left")
-                .groupBy("_id", "_y", "_n")
-                .agg(
-                    F.sum(
-                        F.col("_c") * F.coalesce(F.col("_w"), F.lit(0))
-                    ).alias("_sw")
-                )
-                .select(
-                    "_id",
-                    F.expr(
-                        f"(_sw div _n) - _y * {int(label_scale)}L"
-                    ).alias("_r"),
-                )
-            )
-            grad = (
-                feats.join(resid, "_id")
-                .groupBy("_b")
-                .agg(F.sum(F.expr("(_r * _c) div _n")).alias("_g"))
-                .collect()
-            )
-            for row in grad:
-                wvec[int(row["_b"])] -= _tdiv(int(row["_g"]), div)
-    finally:
-        feats.unpersist()
+        )
+        grad = (
+            feats.join(resid, "_id")
+            .groupBy("_b")
+            .agg(F.sum(F.expr("(_r * _c) div _n")).alias("_g"))
+            .collect()
+        )
+        for row in grad:
+            wvec[int(row["_b"])] -= _tdiv(int(row["_g"]), div)
     return spark.createDataFrame(
         [(b, w) for b, w in enumerate(wvec) if w != 0],
         "bucket long, weight long",
@@ -881,7 +875,7 @@ def dsir_importance_weights(
         .withColumn("_b", bucket)
         .drop("_f")
     )
-    feats.persist()
+    pin(feats)
     counts = feats.groupBy("_b").agg(
         F.sum(F.when(F.col("_is_target"), 1).otherwise(0)).alias("_ct"),
         F.sum(F.when(F.col("_is_target"), 0).otherwise(1)).alias("_cr"),
@@ -891,7 +885,7 @@ def dsir_importance_weights(
     # deriving them here removes one of the exploded frame's three
     # full-cache scans (r14, guide §1.2 — don't recompute what a
     # bounded intermediate already holds)
-    counts = counts.persist()
+    counts = pin(counts)
     totals = counts.agg(
         F.sum("_ct").alias("_nt"),
         F.sum("_cr").alias("_nr"),
@@ -901,7 +895,7 @@ def dsir_importance_weights(
     ) - F.log(
         (F.coalesce(F.col("_cr"), F.lit(0)) + F.lit(0.5)) / F.col("_nr")
     )
-    out = (
+    return (
         feats.filter(~F.col("_is_target"))
         .join(F.broadcast(counts), "_b", "left")
         .crossJoin(F.broadcast(totals))
@@ -911,8 +905,6 @@ def dsir_importance_weights(
             F.round(F.avg(ratio), 4).alias("dsir_score"),
         )
     )
-    out._bdv_pinned = [feats, counts]
-    return out
 
 
 def _bloom_params(n: int, fpp: float) -> tuple[int, int]:
@@ -1026,26 +1018,23 @@ def contamination_ngram_bloom(
         "_bid",
         n_words,
     ).select("_g")
-    bench_grams.persist()
+    pin(bench_grams)
     n_bench = bench_grams.count()
     # codegen row-form grams (see _word_ngram_rows), pinned: consumed
     # by the per-doc sizes AND the bitmap prefilter
     doc_grams = _word_ngram_rows(docs, text_col, id_col, n_words)
-    doc_grams.persist()
+    pin(doc_grams)
     sizes = doc_grams.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_grams")
     )
     if n_bench == 0:
-        bench_grams.unpersist()
-        out = sizes.select(
+        return sizes.select(
             "id",
             F.col("n_grams").cast("long").alias("n_grams"),
             F.lit(0).cast("long").alias("n_dirty"),
             F.lit(0.0).alias("dirty_frac"),
             F.lit(False).alias("flagged"),
         )
-        out._bdv_pinned = [doc_grams]
-        return out
     m, k = _bloom_params(n_bench, fpp)
     bitmap_df = _bloom_bitmap_df(bench_grams, "_g", m, k)
     survivors = (
@@ -1059,7 +1048,7 @@ def contamination_ngram_bloom(
         .agg(F.count(F.lit(1)).alias("n_dirty"))
     )
     frac = F.coalesce(F.col("n_dirty"), F.lit(0)) / F.col("n_grams")
-    out = sizes.join(hits, "id", "left").select(
+    return sizes.join(hits, "id", "left").select(
         "id",
         F.col("n_grams").cast("long").alias("n_grams"),
         F.coalesce(F.col("n_dirty"), F.lit(0))
@@ -1068,5 +1057,3 @@ def contamination_ngram_bloom(
         F.round(frac, 6).alias("dirty_frac"),
         (frac >= F.lit(float(flag_threshold))).alias("flagged"),
     )
-    out._bdv_pinned = [bench_grams, doc_grams]
-    return out

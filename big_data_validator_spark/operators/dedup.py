@@ -25,85 +25,13 @@ Scale design (the whole point — SURVEY.md §2g / north star):
 
 from __future__ import annotations
 
-import logging
 from typing import Optional, Sequence
 
-import pyarrow as pa
-from pyspark.errors import PySparkException
-from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import adaptive_partitions
+from big_data_validator_spark.operators import adaptive_partitions, pin
 from big_data_validator_spark.operators.text import char_ngrams, fingerprint
-
-_log = logging.getLogger(__name__)
-_row_fallback_logged = False
-
-
-# ------------------------------------------------------------ cache hygiene
-
-def pinned_caches(df: DataFrame) -> list:
-    """Caches a plan pinned for its own lifetime, attached by the
-    operators below as ``df._bdv_pinned`` (a list; a bare frame is
-    accepted for back-compat)."""
-    p = getattr(df, "_bdv_pinned", None)
-    if p is None:
-        return []
-    return list(p) if isinstance(p, (list, tuple)) else [p]
-
-
-def release_pinned(*dfs: DataFrame) -> None:
-    """Unpersist every cache pinned by the given frames' plans."""
-    for df in dfs:
-        for c in pinned_caches(df):
-            c.unpersist()
-
-
-def materialize_release(df: DataFrame, *sources: DataFrame) -> DataFrame:
-    """Eagerly materialize a SMALL result (pair lists, cluster
-    summaries — outputs already reduced to O(duplicates) rows), then
-    unpersist every cache its plan — and any extra ``sources`` feeding
-    it — pinned.
-
-    Long-lived driver sessions (the 50-query correctness driver, a
-    notebook) would otherwise accumulate one pinned cache per dedup
-    call (ADVICE r4); the oracle-checked registry entry points route
-    their returns through this so the caches live exactly as long as
-    the computation that needs them.  Collect-and-recreate rather than
-    ``localCheckpoint``: a checkpoint is itself a persistent RDD that
-    lives until GC, i.e. exactly the lingering state this helper
-    removes.  Only for results that fit the driver comfortably — the
-    full-corpus serving path manages cache lifetime itself.
-    """
-    global _row_fallback_logged
-    try:
-        # Arrow round-trip (r14, guide §6 — Arrow for driver
-        # transfers): exact for every engine type incl. NULLs,
-        # decimals and arrays (Spark 4's toArrow / fromArrow pair),
-        # measured 5x faster than pickled Rows on a 100k-row result —
-        # entries with pair-list-sized outputs paid ~1.5s per pass in
-        # driver (de)serialization on the row path.
-        tbl = df.toArrow()
-        release_pinned(df, *sources)
-        return df.sparkSession.createDataFrame(tbl, schema=df.schema)
-    except (pa.ArrowException, PySparkException) as exc:
-        # A failure of the query itself (a CapturedException from the
-        # JVM) must raise once, not re-run on the Row path; only a
-        # driver-side Arrow conversion failure falls back.
-        if isinstance(exc, CapturedException):
-            raise
-        if not _row_fallback_logged:
-            _row_fallback_logged = True
-            _log.warning(
-                "materialize_release: Arrow conversion failed (%s); "
-                "collecting Rows instead",
-                exc,
-            )
-        rows = df.collect()
-        release_pinned(df, *sources)
-        return df.sparkSession.createDataFrame(rows, df.schema)
-
 
 # -------------------------------------------------------------- exact dedup
 
@@ -260,7 +188,7 @@ def ngram_jaccard_pairs(
     pre-bucket and feed candidates here for exact verification.
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
     """
-    sets_df = _shingle_sets(df, text_col, id_col, n).cache()
+    sets_df = pin(_shingle_sets(df, text_col, id_col, n))
     sizes = sets_df.select("id", F.size("shingles").alias("set_size"))
     inv = sets_df.select("id", F.explode("shingles").alias("shingle"))
     a = inv.alias("a")
@@ -270,7 +198,7 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    out = (
+    return (
         common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
         .withColumn(
@@ -280,8 +208,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    out._bdv_pinned = [sets_df]
-    return out
 
 
 def ngram_containment_pairs(
@@ -311,7 +237,7 @@ def ngram_containment_pairs(
     Returns ``(id_a, id_b, cont_a_in_b, cont_b_in_a)`` with
     ``id_a < id_b``, containments rounded to 6.
     """
-    sets_df = _shingle_sets(df, text_col, id_col, n).cache()
+    sets_df = pin(_shingle_sets(df, text_col, id_col, n))
     sizes = sets_df.select("id", F.size("shingles").alias("set_size"))
     inv = sets_df.select("id", F.explode("shingles").alias("shingle"))
     a = inv.alias("a")
@@ -325,7 +251,7 @@ def ngram_containment_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    out = (
+    return (
         common.join(
             sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
                 "set_size", "size_a"
@@ -350,8 +276,6 @@ def ngram_containment_pairs(
             F.round("_cba", 6).alias("cont_b_in_a"),
         )
     )
-    out._bdv_pinned = [sets_df]
-    return out
 
 
 # -------------------------------------------------------------- minhash lsh
@@ -467,12 +391,10 @@ def capped_bucket_pairs(
     key-equi-join against it, both co-partitioned with the pair join's own
     shuffle.  Pass ``max_bucket_size=None`` to disable the guard.
 
-    The capped path pins a narrow ``(id, keys, payload)`` cache for the
-    lifetime of the returned plan (rationale in the inline comment),
-    recorded on the returned frame as ``_bdv_pinned``; callers release it
-    once downstream results are materialized via
-    :func:`release_pinned` / :func:`materialize_release` — the
-    oracle-checked registry entry points all do (ADVICE r3/r4).
+    The capped path pins a narrow ``(id, keys, payload)`` cache
+    (:func:`~big_data_validator_spark.operators.pin`; rationale in the
+    inline comment) that the returned plan reads until its resource
+    scope closes.
     """
     keys = list(key_cols)
     if max_bucket_size is None:
@@ -494,7 +416,7 @@ def capped_bucket_pairs(
     # O(n·bands) longs, a small fraction of corpus bytes — so pinning it
     # is the cheap side of the trade at any scale (MEMORY_AND_DISK spills
     # rather than OOMs).
-    bucketed = bucketed.cache()
+    bucketed = pin(bucketed)
     sizes = bucketed.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_bsz"),
         F.min("id").alias("_leader"),
@@ -523,9 +445,7 @@ def capped_bucket_pairs(
             *[F.col(c).alias(f"{c}_b") for c in payload_cols],
         )
     )
-    out = small_pairs.unionByName(big_pairs)
-    out._bdv_pinned = [bucketed]
-    return out
+    return small_pairs.unionByName(big_pairs)
 
 
 def minhash_lsh_candidates(
@@ -570,9 +490,7 @@ def minhash_lsh_candidates(
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     pairs = capped_bucket_pairs(banded, ["band", "bucket"], max_bucket_size)
-    out = pairs.dropDuplicates()
-    out._bdv_pinned = pinned_caches(pairs)
-    return out
+    return pairs.dropDuplicates()
 
 
 def minhash_dedup_pairs(
@@ -611,10 +529,9 @@ def minhash_dedup_pairs(
         adaptive_partitions(df),
         df.sparkSession.sparkContext.defaultParallelism,
     )
-    sets_df = (
+    sets_df = pin(
         hashed_shingle_sets(df, text_col, id_col, n)
         .repartition(sets_parts, "id")
-        .cache()
     )
     sigs = _minhash_signatures_from_sets(sets_df, num_hashes, prehashed=True)
     cands = minhash_lsh_candidates(
@@ -623,7 +540,7 @@ def minhash_dedup_pairs(
     )
     sa = sets_df.withColumnRenamed("id", "id_a").withColumnRenamed("shingles", "sh_a")
     sb = sets_df.withColumnRenamed("id", "id_b").withColumnRenamed("shingles", "sh_b")
-    out = (
+    return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
@@ -634,8 +551,6 @@ def minhash_dedup_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    out._bdv_pinned = [sets_df] + pinned_caches(cands)
-    return out
 
 
 # --------------------------------------------------------------- winnowing
@@ -787,7 +702,7 @@ def winnowing_near_dup_pairs(
     # input-bytes-sized cache (1 partition at sf0.1) serializes that
     # join — measured 3.1s -> 17s.  The rebalanced width is the right
     # width for this cache's consumers.
-    fps = winnowing_fingerprints(df, text_col, id_col, k, window).cache()
+    fps = pin(winnowing_fingerprints(df, text_col, id_col, k, window))
     sizes = fps.select("id", F.size("fingerprints").alias("sz"))
     inv = fps.select("id", F.explode("fingerprints").alias("fp"))
     a, b = inv.alias("a"), inv.alias("b")
@@ -797,7 +712,7 @@ def winnowing_near_dup_pairs(
         .agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= min_common)
     )
-    out = (
+    return (
         common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .withColumn(
@@ -807,8 +722,6 @@ def winnowing_near_dup_pairs(
         .filter(F.col("overlap") >= min_overlap)
         .select("id_a", "id_b", "common", "overlap")
     )
-    out._bdv_pinned = [fps]
-    return out
 
 
 # ----------------------------------------------------------- dedup clusters
@@ -898,29 +811,24 @@ def duplicate_clusters(
     distributed path.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = e.unionByName(
+    edges = pin(e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition(adaptive_partitions(pairs), "src").cache()
+    ).repartition(adaptive_partitions(pairs), "src"))
     if driver_edge_limit is not None:
         # edges.count() also materializes the cache the iterative path
         # would fill anyway, so the probe is not wasted work either way
         if edges.count() <= 2 * driver_edge_limit:
-            try:
-                return _driver_union_find(pairs.sparkSession, e, edges)
-            finally:
-                edges.unpersist()
+            return _driver_union_find(pairs.sparkSession, e, edges)
     # eager checkpoint, not cache: the labels frame returned below joins
-    # against vertices lazily, after this function already unpersisted
-    # `edges` — a cached-but-unmaterialized frame would silently recompute
-    # from the pairs lineage, a checkpointed one cannot
+    # against vertices lazily, possibly after the pinned `edges` is
+    # released — a cached-but-unmaterialized frame would silently
+    # recompute from the pairs lineage, a checkpointed one cannot
     vertices = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = _two_phase_cc(edges, vertices, max_iter)
-    edges.unpersist()
-    return labels
+    return _two_phase_cc(edges, vertices, max_iter)
 
 
 def _edge_fingerprint(E: DataFrame) -> tuple:
@@ -1110,7 +1018,7 @@ def simhash_near_dup_pairs(
     pairs = capped_bucket_pairs(
         blocked, ["chunk", "key"], max_bucket_size, payload_cols=["simhash"]
     )
-    out = (
+    return (
         pairs.select(
             "id_a",
             "id_b",
@@ -1124,8 +1032,6 @@ def simhash_near_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    out._bdv_pinned = pinned_caches(pairs)
-    return out
 
 
 def levenshtein_pairs_banded(
@@ -1273,9 +1179,7 @@ def set_similarity_join(
     # the ranked prefix, and both verification legs); caching the
     # PRE-explosion sets keeps the corpus scan + shingling single —
     # each branch re-explodes from the cached arrays, which is pure
-    # CPU.  Pinned on the result as _bdv_pinned; the registry entry
-    # releases it after materialization (the repo's cache-hygiene
-    # device).
+    # CPU.
     # r14 A/B (kept as measured): the plan consumes this cache from six
     # broadcast subqueries Spark launches concurrently, which at sf0.1
     # RACE the unfilled single-partition cache (six duplicate 1-task
@@ -1285,7 +1189,7 @@ def set_similarity_join(
     # (extra exchange).  The racing jobs overlap so their wall cost is
     # one shingling, and at scale the many-partition block manager
     # dedups racers per partition — leave the lazy single cache.
-    sets_df = word_shingle_sets(df, text_col, id_col, n_words).cache()
+    sets_df = pin(word_shingle_sets(df, text_col, id_col, n_words))
     tok = sets_df.select(
         "id",
         F.size("shingles").alias("m"),
@@ -1357,7 +1261,7 @@ def set_similarity_join(
             ).cast("long").alias("inter"),
         )
     )
-    out = (
+    return (
         inter.filter(
             e6 * F.col("inter")
             >= t * (F.col("size_a") + F.col("size_b") - F.col("inter"))
@@ -1373,8 +1277,6 @@ def set_similarity_join(
             ).alias("jacc_e6"),
         )
     )
-    out._bdv_pinned = [sets_df]
-    return out
 
 
 # ------------------------------------------- exact shared-substring dedup
@@ -1553,8 +1455,7 @@ def excise_duplicate_spans(
 
     Returns ``(id, n_tokens, n_removed, clean_text)`` for every doc
     with ≥1 token; fully-excised docs ship ``clean_text = ''``.
-    Pins the tokenized base frame on the result as ``_bdv_pinned``;
-    registry entries release it via :func:`materialize_release`.
+    Pins the tokenized base frame.
     """
     from big_data_validator_spark.operators import rebalance_for_compute
     from big_data_validator_spark.operators.text import word_tokens
@@ -1581,7 +1482,7 @@ def excise_duplicate_spans(
         ),
         "id",
     )
-    base.persist()
+    pin(base)
     grams = (
         base.filter(F.size("_t") >= n_words)
         .select(
@@ -1635,7 +1536,7 @@ def excise_duplicate_spans(
             ),
         ).alias("_ct"),
     )
-    out = (
+    return (
         base.select("id", F.size("_t").cast("long").alias("n_tokens"))
         .join(kept_agg, "id", "left")
         .select(
@@ -1647,5 +1548,3 @@ def excise_duplicate_spans(
             F.coalesce(F.col("_ct"), F.lit("")).alias("clean_text"),
         )
     )
-    out._bdv_pinned = [base]
-    return out

@@ -12,10 +12,10 @@ Scale design
 - Edges are a DataFrame, never an adjacency structure on the driver;
   each iteration is one (rank ⋈ edges) key join + one ``dst``
   aggregation — the standard vertex-centric shape, AQE-planned.
-- The ``(src, dst, out_degree)`` relation is reused every iteration —
-  callers should persist it (the registry entry pins it via the
-  ``_bdv_pinned``/materialize_release device); iteration count is a
-  small constant (monitoring-grade centrality, not convergence runs).
+- The ``(src, dst, out_degree)`` relation is reused every iteration, so
+  it is pinned (:func:`~big_data_validator_spark.operators.pin`);
+  iteration count is a small constant (monitoring-grade centrality,
+  not convergence runs).
 - All arithmetic is BIGINT: ranks are fixed-point integers, per-edge
   contributions are floor divisions, damping is a rational
   ``num/den`` applied as ``(num·Σ) div den``.  Integer sums are
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from big_data_validator_spark.operators import (
     adaptive_partitions as _invariant_partitions,
+    pin,
 )
 
 
@@ -62,9 +63,7 @@ def pagerank_integer(
 
     The two iteration-invariant relations — ``ew`` (edge + out-degree,
     hash-partitioned by ``_src``) and ``nodes`` (hash-partitioned by
-    ``node``) — are PERSISTED here and pinned on the returned frame
-    (``_bdv_pinned``; callers release them via
-    ``dedup.materialize_release`` after materializing).  Before this,
+    ``node``) — are PINNED here.  Before this,
     every iteration's plan re-derived distinct-edges, the out-degree
     aggregate, and the node union from the raw input (the r13 before-
     plan shows 42 Exchanges for 3 iterations, zero reuse); with the
@@ -80,18 +79,17 @@ def pagerank_integer(
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).distinct()
-    nodes = (
+    nodes = pin(
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
         .repartition(n_parts, "node")
-        .persist()
     )
     outd = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_od"))
     # cached hash-partitioned by _src — exactly the key every
     # iteration's contribution join needs, so the cache serves it back
     # without a new Exchange.
-    ew = e.join(outd, "_src").repartition(n_parts, "_src").persist()
+    ew = pin(e.join(outd, "_src").repartition(n_parts, "_src"))
     base = ((damping_den - damping_num) * init) // damping_den
     r = nodes.select("node", F.lit(init).cast("long").alias("rank_q"))
     for _ in range(iters):
@@ -118,7 +116,6 @@ def pagerank_integer(
             .cast("long")
             .alias("rank_q"),
         )
-    r._bdv_pinned = [ew, nodes]
     return r
 
 
@@ -150,20 +147,19 @@ def label_propagation_min(
 
     Returns ``(node, label)`` for every node.
 
-    The undirected edge relation is PERSISTED here hash-partitioned by
-    ``_a`` — the key every round's neighbor join consumes — and pinned
-    on the returned frame (``_bdv_pinned``, released by callers via
-    ``materialize_release``).  The node derivation and each round's
-    label re-join then ride that one partitioning, so the only
+    The undirected edge relation is PINNED here hash-partitioned by
+    ``_a`` — the key every round's neighbor join consumes.  The node
+    derivation and each round's label re-join then ride that one
+    partitioning, so the only
     Exchange per round is the inherent neighbor-min aggregation on
     ``_b`` (guide §2.4; the r13 before-plan carried 68 Exchanges for 3
     rounds because every round re-derived the edge relation).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    und = edges.select(
+    und = pin(edges.select(
         F.col(src).alias("_a"), F.col(dst).alias("_b")
-    ).repartition(_invariant_partitions(edges), "_a").persist()
+    ).repartition(_invariant_partitions(edges), "_a"))
     # _a-partitioning satisfies the node-keyed aggregate below, so the
     # distinct is exchange-free off the cache.
     nodes = und.select(F.col("_a").alias("node")).distinct()
@@ -182,7 +178,6 @@ def label_propagation_min(
                 F.col("label"), F.coalesce(F.col("_nl"), F.col("label"))
             ).alias("label"),
         )
-    lbl._bdv_pinned = [und]
     return lbl
 
 
@@ -223,15 +218,13 @@ def triangle_counts(
     # before-plan re-derived the oriented relation three times — 48
     # Exchanges).  ``oriented`` is cached hash-partitioned on ``lo``:
     # both wedge legs join on it, so the self-join is exchange-free off
-    # the cache (guide §2.4).  Pinned via ``_bdv_pinned`` for the
-    # caller to release after materialization.
+    # the cache (guide §2.4).
     n_parts = _invariant_partitions(edges)
-    e = (
+    e = pin(
         edges.select(a, b)
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
         .repartition(n_parts, "_a")
-        .persist()
     )
     deg = (
         e.select(F.col("_a").alias("n"))
@@ -245,11 +238,11 @@ def triangle_counts(
     a_first = (F.col("_da") < F.col("_db")) | (
         (F.col("_da") == F.col("_db")) & (F.col("_a") < F.col("_b"))
     )
-    oriented = ranked.select(
+    oriented = pin(ranked.select(
         F.when(a_first, F.col("_a")).otherwise(F.col("_b")).alias("lo"),
         F.when(a_first, F.col("_b")).otherwise(F.col("_a")).alias("hi"),
         F.when(a_first, F.col("_db")).otherwise(F.col("_da")).alias("dhi"),
-    ).repartition(n_parts, "lo").persist()
+    ).repartition(n_parts, "lo"))
     o1 = oriented.select(
         F.col("lo").alias("u"), F.col("hi").alias("v"), F.col("dhi").alias("dv")
     )
@@ -266,12 +259,10 @@ def triangle_counts(
         F.col("lo").alias("v"), F.col("hi").alias("w")
     )
     tri = wedges.join(closing, ["v", "w"]).select("u", "v", "w")
-    out = (
+    return (
         tri.select(
             F.explode(F.array("u", "v", "w")).alias("node")
         )
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
-    out._bdv_pinned = [e, oriented]
-    return out

@@ -62,10 +62,7 @@ def link_entity_pairs(
     reviewer (or a downstream trained model) can re-weight without
     re-running the join.
     """
-    from big_data_validator_spark.operators.dedup import (
-        capped_bucket_pairs,
-        pinned_caches,
-    )
+    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
 
     toks = F.array_distinct(F.split(F.col(name_col), " "))
     p = df.select(
@@ -124,11 +121,9 @@ def link_entity_pairs(
     score = F.expr(f"({int(name_weight)} * inter) div uni")
     for c in eq_cols:
         score = score + F.lit(int(eq_weight)) * F.col(f"{c}_eq")
-    out = scored.withColumn("score", score.cast("long")).filter(
+    return scored.withColumn("score", score.cast("long")).filter(
         F.col("score") >= threshold
     )
-    out._bdv_pinned = pinned_caches(raw_pairs)
-    return out
 
 
 def fs_em_weights(

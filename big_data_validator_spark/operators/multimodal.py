@@ -280,10 +280,7 @@ def phash_near_dup_pairs(
     bucket cap (a degenerate corpus — all-black thumbnails — caps into
     leader edges instead of exploding).
     """
-    from big_data_validator_spark.operators.dedup import (
-        capped_bucket_pairs,
-        pinned_caches,
-    )
+    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
 
     if not 0 <= max_hamming <= 16:
         raise ValueError(f"max_hamming must be in [0, 16], got {max_hamming}")
@@ -325,7 +322,7 @@ def phash_near_dup_pairs(
         payload_cols=["lo", "hi"],
     )
     ham = F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")
-    out = (
+    return (
         raw.dropDuplicates(["id_a", "id_b"])
         .withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
@@ -335,5 +332,3 @@ def phash_near_dup_pairs(
             "hamming",
         )
     )
-    out._bdv_pinned = pinned_caches(raw)
-    return out

@@ -25,7 +25,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import block_scan
+from big_data_validator_spark.operators import block_scan, pin
 
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
 _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
@@ -743,10 +743,7 @@ def robust_outlier_mad(
     Plan: THREE base passes — the exact minimum for a grouped exact
     MAD (median first, then the deviation distribution's median, then
     the flags).  The per-group ``median``/``MAD`` relations are
-    |groups|-row tiny, CACHED (pinned on the result as
-    ``_bdv_pinned``; callers release via
-    :func:`big_data_validator_spark.operators.dedup.
-    materialize_release`) and broadcast back, so neither median
+    |groups|-row tiny, PINNED and broadcast back, so neither median
     subtree ever recomputes and the final pass folds the flag count,
     row count, and both statistics into ONE aggregation — no final
     multi-join.  At 100 TB with huge groups, swap the exact
@@ -754,16 +751,16 @@ def robust_outlier_mad(
     (operators/sampling.py) — the rule's contract is the flag
     predicate, not the percentile algorithm.
     """
-    med = df.groupBy(group_col).agg(
+    med = pin(df.groupBy(group_col).agg(
         F.expr(f"percentile({value_col}, 0.5)").alias("_med"),
         F.count(F.lit(1)).cast("long").alias("n_rows"),
-    ).cache()
+    ))
     dev = df.join(F.broadcast(med), group_col).withColumn(
         "_adev", F.abs(F.col(value_col) - F.col("_med"))
     )
-    mad = dev.groupBy(group_col).agg(
+    mad = pin(dev.groupBy(group_col).agg(
         F.expr("percentile(_adev, 0.5)").alias("_mad")
-    ).cache()
+    ))
     # Enforce (not just document) the exactness precondition (ADVICE
     # r8): beyond these bounds the double products misround relative
     # to the oracle SILENTLY.  2^53 is exact in a double, and both
@@ -786,7 +783,7 @@ def robust_outlier_mad(
         (F.col("_adev") * 10_000 * 10_000)
         > (F.lit(k_e4) * F.lit(scale_e4) * F.col("_mad"))
     )
-    out = (
+    return (
         dev.join(F.broadcast(mad), group_col)
         .withColumn("_is_out", flag)
         .groupBy(group_col)
@@ -802,8 +799,6 @@ def robust_outlier_mad(
             group_col, "n_rows", "median_x2", "mad_x4", "n_outliers"
         )
     )
-    out._bdv_pinned = [med, mad]
-    return out
 
 
 def spearman_rank_corr(
@@ -853,7 +848,7 @@ def spearman_rank_corr(
         )
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_c"))
     )
-    pairs = pairs.persist()
+    pairs = pin(pairs)
 
     def marginal(col: str, out: str) -> DataFrame:
         w = (
@@ -891,7 +886,7 @@ def spearman_rank_corr(
         F.sum(F.expr("_c * _my * _my")).alias("_syy"),
         F.sum(F.expr("_c * _mx * _my")).alias("_sxy"),
     )
-    out = s.select(
+    return s.select(
         F.col("_g").alias(group_col),
         F.col("_n").cast("long").alias("n_rows"),
         F.when(
@@ -909,8 +904,6 @@ def spearman_rank_corr(
             ),
         ).alias("spearman_rho"),
     )
-    out._bdv_pinned = [pairs]  # released by materialize_release
-    return out
 
 
 def gini_concentration(
@@ -954,10 +947,9 @@ def gini_concentration(
             .alias("_x")
         )
     )
-    cnts = (
+    cnts = pin(
         perkey.groupBy("_x")
         .agg(F.count(F.lit(1)).alias("_t"))
-        .cache()
     )
     blk = F.floor(F.col("_x") / F.lit(float(bin_width))).cast("long")
     scanned = block_scan(cnts, blk, ["_x"], ["_t"])
@@ -977,7 +969,7 @@ def gini_concentration(
         F.sum("_s").alias("_stot"),
         F.sum("_rw").alias("_rwtot"),
     )
-    out = agg.select(
+    return agg.select(
         "n_keys",
         F.col("_stot").cast("long").alias("total_cents"),
         F.when(
@@ -989,8 +981,6 @@ def gini_concentration(
             ),
         ).alias("gini_ppm"),
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def hhi_by_group(
@@ -1091,9 +1081,8 @@ def kendall_tau_b(
     roots and the final quotient (round-6, IEEE-identical across
     engines).
 
-    Scale shape: ONE data shuffle (the pair-count agg, pinned +
-    released by the caller via materialize_release); the self-join
-    and marginals run on the |X|·|Y| distinct-pair frame — built for
+    Scale shape: ONE data shuffle (the pair-count agg, pinned); the
+    self-join and marginals run on the |X|·|Y| distinct-pair frame — built for
     LOW-CARDINALITY or pre-bucketed columns (the equidepth device
     first for dense ones): cost is Σ_g k_g², e.g. 550² ≈ 3·10⁵ row
     pairs for quantity × discount, regardless of corpus size.
@@ -1108,7 +1097,7 @@ def kendall_tau_b(
         )
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_c"))
     )
-    pairs = pairs.persist()
+    pairs = pin(pairs)
 
     a = pairs.select(
         F.col("_g"), F.col("_x").alias("_x1"),
@@ -1165,7 +1154,7 @@ def kendall_tau_b(
             "_n2x2",
         )
     )
-    out = s.select(
+    return s.select(
         F.col("_g").alias(group_col),
         F.col("_n").cast("long").alias("n_rows"),
         F.expr("CAST(2 * _cc AS DECIMAL(38,0))")
@@ -1186,8 +1175,6 @@ def kendall_tau_b(
             ),
         ).alias("tau_b"),
     )
-    out._bdv_pinned = [pairs]
-    return out
 
 
 def cramers_v_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import adaptive_partitions, block_scan
+from big_data_validator_spark.operators import adaptive_partitions, block_scan, pin
 
 
 # --------------------------------------------------------------- uniqueness
@@ -884,13 +884,11 @@ def ks_two_sample(
     # per-block totals AND the grand total — three consumers; without a
     # pin the pooled scan recomputes for each (6 base-table scans in
     # the physical plan).  The frame is the value domain (already
-    # shrunken), so the pin is cheap; entries release it via
-    # materialize_release (the result is one row).
-    cnts = (
+    # shrunken), so the pin is cheap.
+    cnts = pin(
         pooled.groupBy("_v")
         .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
         .repartition(adaptive_partitions(pooled), "_v")
-        .cache()
     )
     cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"]).select(
         (F.col("_na_before") + F.col("_na")).alias("_cuma"),
@@ -899,7 +897,7 @@ def ks_two_sample(
     grand = cnts.agg(
         F.sum("_na").alias("_n_a"), F.sum("_nb").alias("_n_b")
     )
-    out = (
+    return (
         cum.join(F.broadcast(grand))
         .agg(
             F.round(
@@ -915,8 +913,6 @@ def ks_two_sample(
             F.first("_n_b").alias("n_b"),
         )
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def wasserstein_1d(
@@ -971,11 +967,10 @@ def wasserstein_1d(
     )
     # Same three-consumer shape as ks_two_sample: pin the shrunken
     # per-value counts so the base relation is scanned once.
-    cnts = (
+    cnts = pin(
         pooled.groupBy("_v")
         .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
         .repartition(adaptive_partitions(pooled), "_v")
-        .cache()
     )
     cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"])
     grand = cnts.agg(
@@ -994,7 +989,7 @@ def wasserstein_1d(
         - cdf_gap(before_a + F.col("_na"), before_b + F.col("_nb"))
     )
     termsum = cum.join(F.broadcast(grand)).agg(F.sum(term).alias("_ts"))
-    out = grand.join(F.broadcast(termsum)).select(
+    return grand.join(F.broadcast(termsum)).select(
         F.round(
             F.col("_ts").cast("double")
             / (
@@ -1007,8 +1002,6 @@ def wasserstein_1d(
         F.col("_n_a").alias("n_a"),
         F.col("_n_b").alias("n_b"),
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def winsorized_group_stats(
@@ -1058,7 +1051,7 @@ def winsorized_group_stats(
     # the clamped sum joins on _g, so a (_g,_v)-keyed cache fed every
     # consumer through an extra Exchange.
     cnts = cnts.repartition(adaptive_partitions(df), "_g")
-    cnts.persist()
+    pin(cnts)
     w = Window.partitionBy("_g").orderBy("_v")
     cum = cnts.withColumn(
         "_cum", F.sum("_c").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -1092,7 +1085,7 @@ def winsorized_group_stats(
         .groupBy("_g", "n_rows", "lo_cut", "hi_cut")
         .agg(F.sum("_wv").alias("_ws"))
     )
-    out = clamped.select(
+    return clamped.select(
         F.col("_g").alias(group_col),
         F.col("n_rows").cast("long").alias("n_rows"),
         F.col("lo_cut").cast("long").alias("lo_cut"),
@@ -1102,8 +1095,6 @@ def winsorized_group_stats(
         .alias("winsorized_mean_scaled"),
         F.lit(1_000_000).cast("long").alias("scale"),
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def mannwhitney_u(
@@ -1148,15 +1139,12 @@ def mannwhitney_u(
             F.lit(1).alias("_cb"),
         )
     )
-    cnts = (
+    cnts = pin(
         pooled.groupBy("_v")
         .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
         .repartition(adaptive_partitions(pooled), "_v")
-        .cache()
     )
-    out = mwu_from_value_counts(cnts, bin_width)
-    out._bdv_pinned = [cnts]
-    return out
+    return mwu_from_value_counts(cnts, bin_width)
 
 
 def mwu_from_value_counts(
@@ -1280,11 +1268,10 @@ def cramer_von_mises(
             F.lit(1).alias("_cb"),
         )
     )
-    cnts = (
+    cnts = pin(
         pooled.groupBy("_v")
         .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
         .repartition(adaptive_partitions(pooled), "_v")
-        .cache()
     )
     scanned = _value_block_scan(
         cnts.withColumn("_t", F.col("_na") + F.col("_nb")),
@@ -1328,7 +1315,7 @@ def cramer_von_mises(
     n_b = F.col("n_b").cast(dec)
     n = n_a + n_b
     u12 = n_a * F.col("_sa") + n_b * F.col("_sb")
-    out = agg.select(
+    return agg.select(
         "n_a",
         "n_b",
         F.when(
@@ -1346,8 +1333,6 @@ def cramer_von_mises(
             ),
         ).alias("cvm_t"),
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def _one_vs_rest_rank_frames(
@@ -1363,7 +1348,7 @@ def _one_vs_rest_rank_frames(
     row per segment ``(segment, _ng, _r2)`` in DECIMAL(38,0), ``glob``
     is a broadcast 1-row frame ``(_N, _ties)`` with the pool size and
     the Σ(t³−t) tie correction, and ``cnts`` is the pinned pair-count
-    frame the caller must expose via ``_bdv_pinned``."""
+    frame."""
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
     v = F.col(value_col)
@@ -1374,11 +1359,10 @@ def _one_vs_rest_rank_frames(
     # partitioned on _v ALONE (ADVICE r13): the distinct-value rollup
     # aggregates by _v and the per-segment rank sum joins on _v, so a
     # (segment,_v)-keyed cache fed both consumers through an Exchange.
-    cnts = (
+    cnts = pin(
         base.groupBy("segment", "_v")
         .agg(F.count(F.lit(1)).alias("_c"))
         .repartition(adaptive_partitions(df), "_v")
-        .cache()
     )
     vals = cnts.groupBy("_v").agg(F.sum("_c").alias("_t"))
     dec = "decimal(38,0)"
@@ -1439,7 +1423,7 @@ def mannwhitney_by_segment(
     rounded 6; NULL when the pool is degenerate).
 
     Scale shape: ONE data shuffle (the (segment, value) pair-count
-    agg, pinned + released by the caller via materialize_release);
+    agg, pinned);
     the global cumulative is a :func:`block_scan` of the
     DISTINCT-value frame, and the value-stats join back to the pair
     counts is a counts-frame join, not a data join.  ``bin_width``
@@ -1463,7 +1447,7 @@ def mannwhitney_by_segment(
             / (n_n.cast("double") * (n_n - F.lit(1)).cast("double"))
         )
     )
-    out = (
+    return (
         per.crossJoin(glob)
         .withColumn("u_seg_x2", (F.col("_r2") - n_g * (n_g + F.lit(1))).cast("long"))
         .withColumn(
@@ -1488,8 +1472,6 @@ def mannwhitney_by_segment(
             "z",
         )
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def mannwhitney_bh_scan(
@@ -1617,7 +1599,7 @@ def mannwhitney_bh_scan(
         F.col("p_cheby_ppm").cast(dec) * F.col("_m")
         <= F.lit(alpha_ppm).cast(dec) * F.col("p_rank").cast(dec)
     )
-    out = ranked.select(
+    return ranked.select(
         "*",
         F.max(F.when(cond, F.col("p_rank"))).over(wall).alias("_k"),
     ).select(
@@ -1634,8 +1616,6 @@ def mannwhitney_bh_scan(
             ),
         ).alias("bh_reject"),
     )
-    out._bdv_pinned = [cnts]
-    return out
 
 
 def order_inversions(

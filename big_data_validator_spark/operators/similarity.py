@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.functions.exprs import cosine_similarity
+from big_data_validator_spark.operators import pin
 
 
 def brute_force_topk(
@@ -656,10 +657,7 @@ def embedding_near_dup_pairs_exactint(
     engine, which is the point.
     """
     from big_data_validator_spark.operators import rebalance_for_compute
-    from big_data_validator_spark.operators.dedup import (
-        capped_bucket_pairs,
-        pinned_caches,
-    )
+    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
 
     # ADVICE r7: both verify-predicate extremes — dot²·10¹² and
     # t_ppm²·na²·nb² — are bounded by (dim·quant_scale²)²·10¹² for
@@ -698,7 +696,7 @@ def embedding_near_dup_pairs_exactint(
     na2 = _int_dot(F.col("qv_a"), F.col("qv_a"))
     nb2 = _int_dot(F.col("qv_b"), F.col("qv_b"))
     t2 = F.lit(threshold_ppm * threshold_ppm).cast("decimal(13,0)")
-    out = (
+    return (
         pairs.dropDuplicates(["id_a", "id_b"])
         .select(
             "id_a",
@@ -722,8 +720,6 @@ def embedding_near_dup_pairs_exactint(
             F.col("nb2").cast("long").alias("nb2"),
         )
     )
-    out._bdv_pinned = pinned_caches(pairs)
-    return out
 
 
 def ann_topk_exactint(
@@ -1109,10 +1105,7 @@ def semantic_dedup_exactint(
     is unchanged.
     """
     from big_data_validator_spark.operators import rebalance_for_compute
-    from big_data_validator_spark.operators.dedup import (
-        capped_bucket_pairs,
-        pinned_caches,
-    )
+    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
 
     if (dim * quant_scale * quant_scale) ** 2 * 10**12 >= 10**38:
         raise ValueError(
@@ -1181,10 +1174,9 @@ def semantic_dedup_exactint(
     cell_parts = max(
         1, min(df.sparkSession.sparkContext.defaultParallelism, len(cents))
     )
-    assign = (
+    assign = pin(
         q.select("id", "qv", assigner(F.col("qv")).alias("cell"))
         .repartition(cell_parts, "cell")
-        .persist()
     )
     pairs = capped_bucket_pairs(
         assign.select("id", "qv", "cell"),
@@ -1218,7 +1210,7 @@ def semantic_dedup_exactint(
     # of the corpus, so the pruned set scales with the data — let AQE
     # pick broadcast only when runtime stats say it fits.
     pruned = dup.select(F.col("id_b").alias("_pruned_id")).distinct()
-    out = (
+    return (
         assign.join(
             pruned,
             assign["id"] == pruned["_pruned_id"],
@@ -1230,8 +1222,6 @@ def semantic_dedup_exactint(
             F.col("_pruned_id").isNull().alias("keep"),
         )
     )
-    out._bdv_pinned = pinned_caches(pairs) + [assign]
-    return out
 
 
 # ------------------------------------------------------------ rank fusion
@@ -1431,10 +1421,9 @@ def kcenter_coreset(
         F.col(id_col).alias("id"),
         quantize_vec(F.col(vec_col), quant_scale).alias("_qv"),
     )
-    q.persist()
+    pin(q)
     seed = q.orderBy("id").first()
     if seed is None:
-        q.unpersist()
         raise ValueError(
             "kcenter_coreset: input is empty — no seed point to start "
             "the greedy traversal from"
@@ -1455,7 +1444,6 @@ def kcenter_coreset(
             or 0
         )
         if dim * (2 * max_abs) ** 2 >= 2**62:
-            q.unpersist()
             raise ValueError(
                 f"kcenter_coreset: dim*(2*max|q|)^2 = "
                 f"{dim * (2 * max_abs) ** 2} overflows the int64 "
@@ -1489,7 +1477,7 @@ def kcenter_coreset(
                     "_mind"
                 ),
             )
-        nxt.persist()
+        pin(nxt)
         far = (
             nxt.orderBy(F.col("_mind").desc(), F.col("id").asc())
             .limit(1)
@@ -1501,9 +1489,6 @@ def kcenter_coreset(
         centers.append(
             (int(far["id"]), list(far["_qv"]), int(far["_mind"]))
         )
-    if cur is not None:
-        cur.unpersist()
-    q.unpersist()
     spark = emb.sparkSession
     return spark.createDataFrame(
         [
@@ -1612,14 +1597,14 @@ def sq8_recall(
         ),
         6,
     ).alias("_dot_full")
-    scored = (
+    scored = pin(
         corpus.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("_cvec"),
         )
         .join(q, F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col, full_dot, int_dot)
-    ).cache()
+    )
 
     def topk(score_col):
         w = Window.partitionBy("query_id").orderBy(
@@ -1631,14 +1616,14 @@ def sq8_recall(
             .select("query_id", id_col)
         )
 
-    truth = topk("_dot_full").cache()
+    truth = pin(topk("_dot_full"))
     hits = (
         topk("_dot_sq")
         .join(truth, ["query_id", id_col], "left_semi")
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    out = (
+    return (
         truth.select("query_id")
         .distinct()
         .join(hits, "query_id", "left")
@@ -1651,8 +1636,6 @@ def sq8_recall(
         )
         .orderBy("query_id")
     )
-    out._bdv_pinned = [scored, truth]
-    return out
 
 
 def matryoshka_recall(
@@ -1717,16 +1700,15 @@ def matryoshka_recall(
     # scored feeds the truth ranking plus one window per prefix, and
     # truth is consumed twice per prefix — unpinned, Spark re-executes
     # the corpus-scoring join once per reference (the ks_two_sample
-    # recompute shape).  Both frames are pinned; callers release via
-    # materialize_release (the result is |prefixes|x|queries| rows).
-    scored = (
+    # recompute shape).  Both frames are pinned.
+    scored = pin(
         corpus.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("_cvec"),
         )
         .join(q, F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col, full_dot, *dot_prefix.values())
-    ).cache()
+    )
 
     def topk(score_col):
         w = Window.partitionBy("query_id").orderBy(
@@ -1738,7 +1720,7 @@ def matryoshka_recall(
             .select("query_id", id_col)
         )
 
-    truth = topk("_dot_full").cache()
+    truth = pin(topk("_dot_full"))
     out = None
     for d in prefix_dims:
         hits = (
@@ -1758,6 +1740,4 @@ def matryoshka_recall(
             ).alias("recall"),
         )
         out = row if out is None else out.unionByName(row)
-    result = out.orderBy("prefix_dim", "query_id")
-    result._bdv_pinned = [scored, truth]
-    return result
+    return out.orderBy("prefix_dim", "query_id")

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from big_data_validator_spark.operators import block_scan
+from big_data_validator_spark.operators import block_scan, pin
 
 DEFAULT_K = 200
 
@@ -485,11 +485,10 @@ def kll_verify_quantiles(
 
     Both relations feed MULTIPLE joins and Spark shares no subplans:
     uncached, the whole estimate pipeline would re-run per consumer
-    (measured: 47 shuffles vs ~10), so both are cached and pinned as
-    ``_bdv_pinned`` — registry entries release them via
-    materialize_release."""
-    est = est.cache()
-    cdf = exact_rank_cdf(df, value_col, block_width).cache()
+    (measured: 47 shuffles vs ~10), so both are pinned
+    (:func:`~big_data_validator_spark.operators.pin`)."""
+    est = pin(est)
+    cdf = pin(exact_rank_cdf(df, value_col, block_width))
     targets = est.select(
         "quantile_pct",
         "est",
@@ -509,7 +508,7 @@ def kll_verify_quantiles(
         .groupBy("quantile_pct")
         .agg(F.max("cum_le").alias("_est_rank"))
     )
-    out = (
+    return (
         targets.join(exact, "quantile_pct")
         .join(est_rank, "quantile_pct", "left")
         .select(
@@ -522,8 +521,6 @@ def kll_verify_quantiles(
             ).alias("est_ok"),
         )
     )
-    out._bdv_pinned = [est, cdf]
-    return out
 
 
 def kll_group_rollup_quantiles(
@@ -640,15 +637,14 @@ def kll_group_verify_quantiles(
     each group's exact percentile at integer rank
     ``(pct·n_g + 99) div 100`` from the grouped block-scan CDF of
     ``df`` plus the ±``tol_ppm`` rank verdict.  Both relations feed
-    multiple joins (Spark shares no subplans), so both are cached and
-    pinned — callers release via materialize_release.  NULL group keys
-    are excluded on both legs."""
+    multiple joins (Spark shares no subplans), so both are pinned.
+    NULL group keys are excluded on both legs."""
     gcols = list(group_cols)
     src = df
     for c in gcols:
         src = src.filter(F.col(c).isNotNull())
-    est = est.cache()
-    cdf = exact_rank_cdf(src, value_col, block_width, gcols).cache()
+    est = pin(est)
+    cdf = pin(exact_rank_cdf(src, value_col, block_width, gcols))
     targets = est.select(
         *gcols,
         "quantile_pct",
@@ -670,7 +666,7 @@ def kll_group_verify_quantiles(
         .groupBy(*gcols, "quantile_pct")
         .agg(F.max("cum_le").alias("_est_rank"))
     )
-    out = (
+    return (
         targets.join(exact, [*gcols, "quantile_pct"])
         .join(est_rank, [*gcols, "quantile_pct"], "left")
         .select(
@@ -684,8 +680,6 @@ def kll_group_verify_quantiles(
             ).alias("est_ok"),
         )
     )
-    out._bdv_pinned = [est, cdf]
-    return out
 
 
 def kll_rolling_monitor(
@@ -721,9 +715,9 @@ def kll_rolling_monitor(
         [day_col],
         k,
     )
-    est = kll_rolling_quantiles(
+    est = pin(kll_rolling_quantiles(
         per_day, day_col, pct, window_days, report_from, report_to, k
-    ).cache()
+    ))
 
     rd = F.col("_rd")
     dist = (
@@ -750,14 +744,14 @@ def kll_rolling_monitor(
         .groupBy("_rd", "_v")
         .agg(F.sum("_n").alias("_w"))
     )
-    cum = dist.withColumn(
+    cum = pin(dist.withColumn(
         "_cum",
         F.sum("_w").over(
             Window.partitionBy("_rd")
             .orderBy("_v")
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
-    ).cache()
+    ))
     targets = est.select(
         F.col(day_col).alias("_td"),
         "est",
@@ -777,7 +771,7 @@ def kll_rolling_monitor(
         .groupBy("_td")
         .agg(F.max("_cum").alias("_est_rank"))
     )
-    out = (
+    return (
         targets.join(exact, "_td")
         .join(est_rank, "_td", "left")
         .select(
@@ -790,5 +784,3 @@ def kll_rolling_monitor(
             ).alias("est_ok"),
         )
     )
-    out._bdv_pinned = [est, cum]
-    return out

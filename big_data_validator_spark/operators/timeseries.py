@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import pin
 from big_data_validator_spark.operators.cdc import null_safe_semi_anti
 
 
@@ -223,9 +224,8 @@ def cascade_rollup_refresh(
     hour_of = F.date_trunc("hour", F.col(ts_col)).alias("hour")
     # Both dirty relations are consumed twice (semi + anti legs) and
     # are change-rate-sized; caching them keeps the late scan single
-    # and the two legs co-consistent.  Pinned on the returned daily
-    # frame as _bdv_pinned; callers release after materializing.
-    dirty_hours = late.select(hour_of, *keys).distinct().cache()
+    # and the two legs co-consistent.
+    dirty_hours = pin(late.select(hour_of, *keys).distinct())
     hourly_aggs = [F.count(F.lit(1)).cast("long").alias(count_col)] + [
         F.sum(c).cast("long").alias(c) for c in sums
     ]
@@ -248,9 +248,9 @@ def cascade_rollup_refresh(
     ).select("hour", *keys, count_col, *sums)
     hourly_new = untouched_h.unionByName(recomputed_h)
 
-    dirty_days = dirty_hours.select(
+    dirty_days = pin(dirty_hours.select(
         F.date_trunc("day", F.col("hour")).alias("day"), *keys
-    ).distinct().cache()
+    ).distinct())
     daily_aggs = [F.sum(count_col).cast("long").alias(count_col)] + [
         F.sum(c).cast("long").alias(c) for c in sums
     ]
@@ -273,7 +273,6 @@ def cascade_rollup_refresh(
         daily_old, dirty_days, ["day", *keys], "left_anti"
     ).select("day", *keys, count_col, *sums)
     daily_new = untouched_d.unionByName(recomputed_d)
-    daily_new._bdv_pinned = [dirty_hours, dirty_days]
     return hourly_new, daily_new
 
 
@@ -324,34 +323,23 @@ def theilsen_trend(
     # selection) — persist each once; before this the daily aggregation
     # re-ran per consumer and the O(days²) pair join was computed TWICE
     # (once for the stats pass, once to fill the old `blocked` cache).
-    d = daily.select(
+    d = pin(daily.select(
         F.col(x_col).cast("long").alias("x"),
         F.col(y_col).cast("long").alias("y"),
-    ).persist()
+    ))
     a = d.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = d.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
     pairs = a.join(b, F.col("xa") < F.col("xb")).select(
         (F.col("yb") - F.col("ya")).alias("num"),
         (F.col("xb") - F.col("xa")).alias("den"),
     )
-    slopes = pairs.select(
+    slopes = pin(pairs.select(
         "num",
         "den",
         (F.col("num").cast("double") / F.col("den").cast("double")).alias(
             "_qd"
         ),
-    ).persist()
-    # try/finally (ADVICE r13): the eager collects below — and the
-    # n_pairs==0 ValueError — would otherwise leak both pinned caches
-    # into a long-lived driver session on any failure path.
-    try:
-        return _theilsen_trend_body(daily, d, slopes, scale)
-    finally:
-        slopes.unpersist()
-        d.unpersist()
-
-
-def _theilsen_trend_body(daily, d, slopes, scale):
+    ))
     # ONE action over the tiny daily frame yields the day count AND the
     # slope-range bound: day gaps are integers >= 1, so every pair slope
     # satisfies |num/den| <= max(y) - min(y).  The old code instead ran
@@ -544,9 +532,8 @@ def binseg_changepoints(
     self-describing.  A segment with <2 days yields no row, so the
     output has ≤ 2^depth − 1 rows, ordered (level, split_date).
 
-    Scale shape: ONE data shuffle (the per-day cents agg), cached and
-    recorded in ``_bdv_pinned`` because every level's lineage re-reads
-    it — release via ``dataset.materialize_release``.  All segmentation
+    Scale shape: ONE data shuffle (the per-day cents agg), pinned
+    because every level's lineage re-reads it.  All segmentation
     runs on the calendar-bounded daily frame: per-segment windows
     (partitioned by segment id — never wider than the level-0 global
     window the calendar already bounds), a per-level broadcast join of
@@ -557,14 +544,13 @@ def binseg_changepoints(
     """
     if depth < 1 or depth > 4:
         raise ValueError(f"depth must be in [1, 4], got {depth}")
-    daily = (
+    daily = pin(
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
             F.round(F.sum(value_col) * value_scale)
             .cast("decimal(38,0)")
             .alias("_v")
         )
-        .cache()
     )
     tagged = daily.withColumn("_seg", F.lit(0).cast("long"))
     level_bests: list[DataFrame] = []
@@ -641,9 +627,7 @@ def binseg_changepoints(
     out = level_bests[0]
     for b in level_bests[1:]:
         out = out.unionAll(b)
-    out = out.drop("_seg").orderBy("level", "split_date")
-    out._bdv_pinned = [daily]
-    return out
+    return out.drop("_seg").orderBy("level", "split_date")
 
 
 def acf_daily(
@@ -1080,9 +1064,8 @@ def mann_kendall_trend(
     normal ``z = (S ∓ 1)/√(var_s_x18/18)`` (0 when S = 0, NULL when
     the variance is degenerate).
 
-    Scale shape: ONE data shuffle (the per-day cents agg, pinned +
-    released by the caller via materialize_release); the sign
-    self-join (every unordered day pair once, ``d₂ > d₁``) and the
+    Scale shape: ONE data shuffle (the per-day cents agg, pinned); the
+    sign self-join (every unordered day pair once, ``d₂ > d₁``) and the
     tie-group agg run on the calendar-bounded daily frame (thousands
     of rows — ~3·10⁶ broadcast-NLJ pairs at a 7-year calendar,
     corpus-size-independent).  Returns exactly one row ``(n_days,
@@ -1097,7 +1080,7 @@ def mann_kendall_trend(
             .alias("_v")
         )
     )
-    daily = daily.cache()
+    daily = pin(daily)
     dec = "decimal(38,0)"
     b = daily.select(F.col("d").alias("d2"), F.col("_v").alias("_v2"))
     s_agg = (
@@ -1139,7 +1122,7 @@ def mann_kendall_trend(
         ((n0x2 - F.col("_n1x2")) / F.lit(2)).cast("double")
     ) * F.sqrt((n0x2 / F.lit(2)).cast("double"))
     s = F.col("_s")
-    out = (
+    return (
         s_agg.crossJoin(F.broadcast(ties))
         .withColumn("_var18", var18)
         .select(
@@ -1167,8 +1150,6 @@ def mann_kendall_trend(
             ).alias("z"),
         )
     )
-    out._bdv_pinned = [daily]
-    return out
 
 
 def ols_trend_by_group(

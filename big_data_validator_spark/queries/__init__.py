@@ -28,6 +28,7 @@ is pinned by pytest against exact algorithms instead.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -37,6 +38,8 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from big_data_validator_spark.operators import materialize, resource_scope
 
 
 @dataclass
@@ -50,13 +53,27 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def query(name: str, oracle: Optional[str] = None):
     """Register the decorated ``(spark, sf_dir)`` callable as entry
-    ``name``; a name registered twice raises instead of replacing."""
+    ``name``; a name registered twice raises instead of replacing.
+
+    The registered callable, which the decorator also returns, runs the
+    entry in one :func:`~big_data_validator_spark.operators.resource_scope`:
+    every cache and scratch directory the call makes is released when
+    it returns or raises.  A result whose call held any of them is
+    collected first (:func:`~big_data_validator_spark.operators
+    .materialize`), so it never reads what the scope releases."""
 
     def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"registry entry {name!r} is defined twice")
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle)
-        return fn
+
+        @functools.wraps(fn)
+        def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with resource_scope() as held:
+                out = fn(spark, sf_dir)
+                return materialize(out) if held else out
+
+        REGISTRY[name] = QuerySpec(fn=scoped, oracle=oracle)
+        return scoped
 
     return deco
 

@@ -8,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.operators import curation as C
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import packing as P
 from big_data_validator_spark.operators import rebalance_for_compute as _rb
 from big_data_validator_spark.operators import text as T
@@ -556,13 +555,11 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     set broadcasts (benchmarks are small by construction) and the
     corpus streams ONCE through a one-sided join."""
     docs = _rb(_t(spark, sf_dir, "documents"))
-    return D.materialize_release(
-        C.contamination_ngram_overlap(
-            docs.filter(F.col("doc_id") >= 20),
-            docs.filter(F.col("doc_id") < 20),
-            n_words=13,
-            flag_threshold=0.1,
-        )
+    return C.contamination_ngram_overlap(
+        docs.filter(F.col("doc_id") >= 20),
+        docs.filter(F.col("doc_id") < 20),
+        n_words=13,
+        flag_threshold=0.1,
     )
 
 
@@ -585,14 +582,12 @@ def contamination_ngram_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     path and shares its oracle; what changes at scale is the join
     input: survivors, not the corpus."""
     docs = _rb(_t(spark, sf_dir, "documents"))
-    return D.materialize_release(
-        C.contamination_ngram_bloom(
-            docs.filter(F.col("doc_id") >= 20),
-            docs.filter(F.col("doc_id") < 20),
-            n_words=13,
-            flag_threshold=0.1,
-            fpp=0.01,
-        )
+    return C.contamination_ngram_bloom(
+        docs.filter(F.col("doc_id") >= 20),
+        docs.filter(F.col("doc_id") < 20),
+        n_words=13,
+        flag_threshold=0.1,
+        fpp=0.01,
     )
 
 
@@ -783,6 +778,4 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _rb(_t(spark, sf_dir, "documents"))
     # The operator pins the exploded unigram+bigram occurrence frame;
     # release it with the other oracle-checked entries (ADVICE r12).
-    return D.materialize_release(
-        dsir_importance_weights(docs, lambda c: c < 20, n_buckets=4096)
-    )
+    return dsir_importance_weights(docs, lambda c: c < 20, n_buckets=4096)

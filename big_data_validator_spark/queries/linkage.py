@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import pin
 from big_data_validator_spark.operators import dedup as D
-from big_data_validator_spark.operators.dedup import release_pinned
 from big_data_validator_spark.operators.linkage import (
     fs_classify_pairs,
     fs_em_weights,
@@ -98,7 +98,7 @@ def link_part_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     # cap inert at every test sf (blocks are (token × size × brand),
     # far under 1000 members) — pinned by the _cap_inert test
-    return D.materialize_release(_part_matches(part))
+    return _part_matches(part)
 
 
 def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
@@ -300,15 +300,11 @@ def link_fs_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-quantized ppm BIGINTs.  Scale: the only join is the blocking
     equi-join through the capped bucket guard; the shuffle carries
     3-bit patterns."""
-    pairs = _fs_candidates(spark, sf_dir)
-    try:
-        params = fs_em_weights(
-            pairs,
-            ["p_brand_eq", "p_type_eq", "band_eq"],
-            iters=3,
-        )
-    finally:
-        release_pinned(pairs)
+    params = fs_em_weights(
+        _fs_candidates(spark, sf_dir),
+        ["p_brand_eq", "p_type_eq", "band_eq"],
+        iters=3,
+    )
     return spark.createDataFrame(params, "param string, value_ppm long")
 
 
@@ -329,26 +325,19 @@ def link_fs_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking join + one pattern aggregation (bounded collect); the
     posterior stamp and threshold filter are map-side — no second
     shuffle."""
-    pairs = _fs_candidates(spark, sf_dir).cache()
-    try:
-        out = fs_classify_pairs(
-            pairs,
-            ["p_brand_eq", "p_type_eq", "band_eq"],
-            iters=3,
-        ).filter(F.col("verdict") != "non_match").select(
-            "id_a",
-            "id_b",
-            "p_brand_eq",
-            "p_type_eq",
-            "band_eq",
-            "posterior_ppm",
-            "verdict",
-        )
-        res = D.materialize_release(out, pairs)
-    finally:
-        release_pinned(pairs)
-        pairs.unpersist()
-    return res
+    return fs_classify_pairs(
+        pin(_fs_candidates(spark, sf_dir)),
+        ["p_brand_eq", "p_type_eq", "band_eq"],
+        iters=3,
+    ).filter(F.col("verdict") != "non_match").select(
+        "id_a",
+        "id_b",
+        "p_brand_eq",
+        "p_type_eq",
+        "band_eq",
+        "posterior_ppm",
+        "verdict",
+    )
 
 
 @query(
@@ -424,11 +413,9 @@ def link_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle exactly once.  Oracle: the linkage SQL + recursive
     transitive-closure CTE + the same vote/tie-break windows."""
     part = _t(spark, sf_dir, "part")
-    # Keep a handle on the RAW pairs frame: .select() returns a new
-    # DataFrame without the _bdv_pinned attribute, so the projection
-    # must not be what materialize_release sees (ADVICE r12).
-    raw_pairs = _part_matches(part).cache()
-    pairs = raw_pairs.select("id_a", "id_b")
+    # pinned: the count probe, the closure edges and the cluster join
+    # all consume the pairs, so the blocking join runs once
+    pairs = pin(_part_matches(part)).select("id_a", "id_b")
     clusters = D.duplicate_clusters(pairs)
     clustered = clusters.join(
         part.select(
@@ -436,15 +423,9 @@ def link_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "id",
     )
-    gold = golden_records(
+    return golden_records(
         clustered, "cluster_id", "id", ["p_name", "p_type"]
     )
-    # release both the operator's inner pinned cache AND the pairs
-    # cache itself (raw_pairs is consumed by the count probe, the
-    # closure edges, and the cluster join — cached so the blocking
-    # join runs once)
-    gold._bdv_pinned = D.pinned_caches(raw_pairs) + [raw_pairs]
-    return D.materialize_release(gold)
 
 
 @query(

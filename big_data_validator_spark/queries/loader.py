@@ -8,11 +8,12 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-import tempfile
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from big_data_validator_spark.operators import session_dir
 
 _log = logging.getLogger(__name__)
 
@@ -28,6 +29,9 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     kernels at unpickle time with ``ModuleNotFoundError``.  ``addPyFile``
     of a package zip makes the kernels importable regardless of launcher
     layout; it is a no-op burden (<100 KB) when PYTHONPATH already works.
+    The zip lives in a session-lived directory
+    (:func:`~big_data_validator_spark.operators.session_dir`), removed
+    when the process exits.
     """
     # applicationId is stable and unique per session; a memo on id(spark)
     # could collide when a stopped session's id() is reused by a new one
@@ -41,7 +45,7 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     try:
         zip_path = shutil.make_archive(
-            os.path.join(tempfile.mkdtemp(prefix="bdv_pyfiles_"), "bdv_pkg"),
+            os.path.join(session_dir("bdv_pyfiles_"), "bdv_pkg"),
             "zip",
             root_dir=os.path.dirname(pkg_dir),
             base_dir=os.path.basename(pkg_dir),
@@ -115,12 +119,14 @@ def _events_stream(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     construction instead of hard-coding one storage era's schema.
 
     The file source watches a DIRECTORY; testdata is a flat dir of tables,
-    so the one table is exposed through a symlink in a fresh directory
-    under the drain's ``root`` — zero copy, removed with the root, and in
-    production the source dir is already per-table.
+    so the one table is exposed through a symlink in ``root/events`` —
+    zero copy, removed with the drain's root, and in production the
+    source dir is already per-table.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="events_", dir=root)
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = f"{root}/events"
+    if not os.path.isdir(src_dir):  # a stream-stream join reads it twice
+        os.mkdir(src_dir)
+        os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
     return _normalize_ts(spark.readStream.schema(raw_schema).parquet(src_dir))

@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import multimodal as M
 from big_data_validator_spark.queries import query
 from big_data_validator_spark.queries.loader import _t
@@ -96,9 +95,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     assets = M.assets_from_documents(docs)
     out = M.phash_near_dup_pairs(assets, max_hamming=3)
-    res = out.orderBy("asset_a", "asset_b")
-    res._bdv_pinned = D.pinned_caches(out)
-    return D.materialize_release(res)
+    return out.orderBy("asset_a", "asset_b")
 
 
 @query(

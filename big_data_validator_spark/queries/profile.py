@@ -10,7 +10,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
+from big_data_validator_spark.operators import pin
 from big_data_validator_spark.operators import relational as R
 from big_data_validator_spark.operators.profile import (
     fd_discovery,
@@ -215,10 +215,8 @@ def drift_ks_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     the textbook single-task global window; the block width only sets
     granularity, the statistic is exact for any choice
     (pytest-pinned)."""
-    return D.materialize_release(
-        R.ks_two_sample(
-            *_urgent_normal(spark, sf_dir), "o_totalprice", bin_width=10000.0
-        )
+    return R.ks_two_sample(
+        *_urgent_normal(spark, sf_dir), "o_totalprice", bin_width=10000.0
     )
 
 
@@ -299,13 +297,12 @@ def drift_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-side combine means the single shuffle carries distinct words;
     the statistic is O(vocab).  The per-word count relation is pinned
     while the totals and the statistic both read it (Spark shares no
-    subplans — uncached, the totals leg would re-scan the corpus),
-    then released via materialize_release on the 1-row result; at
+    subplans — uncached, the totals leg would re-scan the corpus); at
     100 TB that caches vocab-sized counts, never corpus rows.  Laplace
     smoothing keeps every term finite on one-sided words; log ratios
     are transcendental, so round-6 has no exact tie class."""
     d = _t(spark, sf_dir, "documents")
-    j = (
+    j = pin(
         d.select(
             (F.col("doc_id") % 2 == 0).alias("_a"),
             F.explode(
@@ -318,7 +315,6 @@ def drift_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(~F.col("_a"), 1).otherwise(0)).alias("nb"),
         )
         .select("na", "nb")
-        .persist()
     )
     t = j.agg(
         F.sum("na").cast("double").alias("ta"),
@@ -332,7 +328,7 @@ def drift_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tb",
         "v",
     )
-    result = cells.agg(
+    return cells.agg(
         F.round(
             F.sum(F.col("pa") * F.log2(F.col("pa") / F.col("pb"))), 6
         ).alias("kl_bits"),
@@ -340,8 +336,6 @@ def drift_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ta").cast("long").alias("n_words_a"),
         F.max("tb").cast("long").alias("n_words_b"),
     )
-    result._bdv_pinned = [j]  # the convention release_pinned honors
-    return D.materialize_release(result)
 
 
 @query(
@@ -646,11 +640,9 @@ def drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summing by parts removes each value's successor — never a
     single-task global window; bin_width only sets block granularity
     (pytest-pinned invariant)."""
-    return D.materialize_release(
-        R.wasserstein_1d(
-            *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000,
-            unit_scale=100.0,
-        )
+    return R.wasserstein_1d(
+        *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000,
+        unit_scale=100.0,
     )
 
 
@@ -707,10 +699,8 @@ def drift_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only float, round-6.  Same ``operators.block_scan`` over
     per-value counts as the KS/W1 siblings; never a single-task global
     window."""
-    return D.materialize_release(
-        R.mannwhitney_u(
-            *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000
-        )
+    return R.mannwhitney_u(
+        *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000
     )
 
 
@@ -771,10 +761,8 @@ def drift_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, round-6).  Same ``operators.block_scan`` over per-value
     counts as the KS/W1/U siblings — never a single-task global
     window."""
-    return D.materialize_release(
-        R.cramer_von_mises(
-            *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000
-        )
+    return R.cramer_von_mises(
+        *_urgent_normal(spark, sf_dir), "cents", bin_width=1_000_000
     )
 
 
@@ -886,10 +874,8 @@ def drift_mannwhitney_by_segment(
     c = _t(spark, sf_dir, "customer").withColumn(
         "cents", F.round(F.col("c_acctbal") * 100, 0).cast("long")
     )
-    return D.materialize_release(
-        R.mannwhitney_by_segment(
-            c, "c_mktsegment", "cents", bin_width=1_000_000
-        )
+    return R.mannwhitney_by_segment(
+        c, "c_mktsegment", "cents", bin_width=1_000_000
     )
 
 
@@ -975,9 +961,7 @@ def drift_segment_bh_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").withColumn(
         "cents", F.round(F.col("c_acctbal") * 100, 0).cast("long")
     ).withColumn("c_nationkey", F.col("c_nationkey").cast("int"))
-    return D.materialize_release(
-        R.mannwhitney_bh_scan(
-            c, "c_nationkey", "cents",
-            alpha_ppm=50_000, bin_width=1_000_000,
-        )
+    return R.mannwhitney_bh_scan(
+        c, "c_nationkey", "cents",
+        alpha_ppm=50_000, bin_width=1_000_000,
     )

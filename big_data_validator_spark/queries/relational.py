@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.functions.udafs import trimmed_mean
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import relational as R
 from big_data_validator_spark.operators.cdc import (
     apply_delta_to_group_minmax,
@@ -1879,9 +1878,7 @@ def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         tol_ppm=25_000,
         block_width=1_000_000,
     )
-    out = res.orderBy("quantile_pct")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
+    return res.orderBy("quantile_pct")
 
 
 @query(
@@ -1939,9 +1936,7 @@ def agg_kll_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         tol_ppm=25_000,
         block_width=1_000_000,
     )
-    out = res.orderBy("o_orderpriority", "quantile_pct")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
+    return res.orderBy("o_orderpriority", "quantile_pct")
 
 
 @query(
@@ -2003,14 +1998,12 @@ def agg_kll_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=200,
         tol_ppm=25_000,
     )
-    out = res.select(
+    return res.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "exact",
         "n_rows",
         "est_ok",
     ).orderBy("day")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
 
 
 @query(
@@ -2070,11 +2063,9 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    return D.materialize_release(
-        R.winsorized_group_stats(
-            cents, "o_orderpriority", "cents",
-            lo_ppm=10_000, hi_ppm=990_000,
-        )
+    return R.winsorized_group_stats(
+        cents, "o_orderpriority", "cents",
+        lo_ppm=10_000, hi_ppm=990_000,
     )
 
 
@@ -2181,9 +2172,7 @@ def agg_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    return D.materialize_release(
-        spearman_rank_corr(li, "ship_year", "l_quantity", "l_discount")
-    )
+    return spearman_rank_corr(li, "ship_year", "l_quantity", "l_discount")
 
 
 @query(
@@ -2224,9 +2213,7 @@ def agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.block_scan`` — never a single-task global window, so
     millions of distinct customers rank in parallel."""
     orders = _t(spark, sf_dir, "orders")
-    return D.materialize_release(
-        gini_concentration(orders, "o_custkey", "o_totalprice")
-    )
+    return gini_concentration(orders, "o_custkey", "o_totalprice")
 
 
 @query(
@@ -2323,9 +2310,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    return D.materialize_release(
-        kendall_tau_b(li, "ship_year", "l_quantity", "l_discount")
-    )
+    return kendall_tau_b(li, "ship_year", "l_quantity", "l_discount")
 
 
 def _cramers_oracle_sql() -> str:

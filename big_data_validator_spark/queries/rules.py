@@ -14,7 +14,6 @@ from big_data_validator_spark.functions.exprs import (
     field_count_naive,
     field_count_quoted,
 )
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import rebalance_for_compute as _rb
 from big_data_validator_spark.operators import relational as R
 from big_data_validator_spark.operators.curation import k_anonymity_violations
@@ -878,9 +877,7 @@ def rule_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = robust_outlier_mad(
         o, group_col="o_orderpriority", value_col="cents"
     )
-    out = res.orderBy("o_orderpriority")
-    out._bdv_pinned = D.pinned_caches(res)
-    return D.materialize_release(out)
+    return res.orderBy("o_orderpriority")
 
 
 @query(

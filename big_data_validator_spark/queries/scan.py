@@ -5,8 +5,6 @@ pruning."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -18,6 +16,7 @@ from pyspark.sql.types import (
 )
 
 from big_data_validator_spark.contract import ColumnSpec, TableContract
+from big_data_validator_spark.operators import scratch_dir
 from big_data_validator_spark.queries import query
 from big_data_validator_spark.queries.loader import _t
 from big_data_validator_spark.sources.csv_source import scan_csv_permissive
@@ -90,7 +89,7 @@ def _csv_roundtrip_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     header = spark.createDataFrame(
         [(0, 'P_PARTKEY|"P_NAME"|P_BRAND|P_SIZE')], ["ord", "value"]
     )
-    csv_dir = tempfile.mkdtemp(prefix="bdv_csv_scan_")
+    csv_dir = scratch_dir("bdv_csv_scan_")
     (
         part.select((F.col("p_partkey") + 1).alias("ord"), line.alias("value"))
         .unionByName(header)
@@ -133,7 +132,7 @@ def _json_roundtrip_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = F.concat(F.lit('{"event_id": '), F.col("event_id").cast("string"),
                    F.lit(', "event_type": "tru'))
     line = F.when(F.col("event_id") % 101 == 0, bad).otherwise(good)
-    json_dir = tempfile.mkdtemp(prefix="bdv_json_scan_")
+    json_dir = scratch_dir("bdv_json_scan_")
     ev.select(line.alias("value")).write.mode("overwrite").text(json_dir)
     schema = StructType([
         StructField("event_id", LongType()),
@@ -200,7 +199,7 @@ def scan_parquet_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
     as NULL, so ``priority_nulls`` must equal the even-key count and the
     numeric checksums must survive the round trip."""
     orders = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="bdv_evolving_")
+    base = scratch_dir("bdv_evolving_")
     old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -240,7 +239,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stripe level (plan pinned in tests/test_sources.py), then
     aggregated for the oracle hash."""
     orders = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="bdv_orc_")
+    base = scratch_dir("bdv_orc_")
     orders.write.mode("overwrite").orc(f"{base}/orders")
     o = _scan_orc(spark, f"{base}/orders")
     return (
@@ -327,7 +326,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     even listed.  Aggregates are hash-matched against the unpartitioned
     oracle, proving the partitioned rewrite loses nothing."""
     o = _t(spark, sf_dir, "orders")
-    out_dir = tempfile.mkdtemp(prefix="bdv_part_")
+    out_dir = scratch_dir("bdv_part_")
     o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(
         out_dir
     )

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import adaptive_partitions
+from big_data_validator_spark.operators import adaptive_partitions, pin
 from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import rebalance_for_compute as _rb
 from big_data_validator_spark.operators import similarity as S
@@ -113,13 +113,9 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a 2000-row table), so: the IVF quantizer trains and assigns ONCE
     # for both probe settings, the three candidate sets union under a
     # method tag, and every hit count comes out of ONE aggregation job.
-    # That job runs eagerly (3-row collect) so the try/finally can
-    # unpersist the cache before returning — a registry function must not
-    # leave caches pinned for the rest of a 50-query driver session
-    # (VERDICT r2).
 
     emb_src = _t(spark, sf_dir, "embeddings")
-    emb = (
+    emb = pin(
         _rb(
             emb_src.withColumn(
                 "embedding", F.col("embedding").cast("array<double>")
@@ -129,36 +125,32 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partition count to the input, not the session constant
         # (operators.adaptive_partitions rationale)
         .repartition(adaptive_partitions(emb_src), "vec_id")
-        .cache()
     )
     k, n_queries = 10, 5
-    try:
-        q = emb.filter(F.col("vec_id") < 5)
-        truth = S.brute_force_topk(emb, q, k=k).select("query_id", "vec_id")
-        centroids = S.ivf_train(emb, num_centroids=16)
-        cells = S.ivf_assign_cells(emb, centroids)
-        ann_union = None
-        for name, ann in [
-            ("ivf_full_probe", S.ivf_probe_topk(cells, q, centroids, nprobe=16, k=k)),
-            ("ivf_nprobe4", S.ivf_probe_topk(cells, q, centroids, nprobe=4, k=k)),
-            ("lsh", S.lsh_ann_topk(emb, q, dim=64, k=k, num_planes=4, num_tables=8)),
-        ]:
-            tagged = ann.select(
-                F.lit(name).alias("method"), "query_id", "vec_id"
-            )
-            ann_union = tagged if ann_union is None else ann_union.unionByName(tagged)
-        # top-k outputs are unique per (query_id, vec_id) within a method,
-        # so inner-join counts equal the per-method semi-join counts
-        hit_counts = {
-            r["method"]: r["hits"]
-            for r in truth.join(ann_union, ["query_id", "vec_id"])
-            .groupBy("method")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .collect()
-        }
-    finally:
-        emb.unpersist()
-    out = spark.createDataFrame(
+    q = emb.filter(F.col("vec_id") < 5)
+    truth = S.brute_force_topk(emb, q, k=k).select("query_id", "vec_id")
+    centroids = S.ivf_train(emb, num_centroids=16)
+    cells = S.ivf_assign_cells(emb, centroids)
+    ann_union = None
+    for name, ann in [
+        ("ivf_full_probe", S.ivf_probe_topk(cells, q, centroids, nprobe=16, k=k)),
+        ("ivf_nprobe4", S.ivf_probe_topk(cells, q, centroids, nprobe=4, k=k)),
+        ("lsh", S.lsh_ann_topk(emb, q, dim=64, k=k, num_planes=4, num_tables=8)),
+    ]:
+        tagged = ann.select(
+            F.lit(name).alias("method"), "query_id", "vec_id"
+        )
+        ann_union = tagged if ann_union is None else ann_union.unionByName(tagged)
+    # top-k outputs are unique per (query_id, vec_id) within a method,
+    # so inner-join counts equal the per-method semi-join counts
+    hit_counts = {
+        r["method"]: r["hits"]
+        for r in truth.join(ann_union, ["query_id", "vec_id"])
+        .groupBy("method")
+        .agg(F.count(F.lit(1)).alias("hits"))
+        .collect()
+    }
+    return spark.createDataFrame(
         [
             (name, k, n_queries, int(hits), round(hits / (k * n_queries), 4))
             for name, hits in (
@@ -168,7 +160,6 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         schema="method string, k int, n_queries int, hits int, recall double",
     )
-    return out
 
 
 @query("sim_ann_lsh")  # hash-dependent buckets: recall oracled via sim_ann_recall
@@ -404,9 +395,7 @@ def emb_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_bucket_size=None,
     )
     clusters = D.duplicate_clusters(pairs)
-    return D.materialize_release(
-        clusters.select("id", "cluster_id"), pairs
-    )
+    return clusters.select("id", "cluster_id")
 
 
 @query(
@@ -431,14 +420,12 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.51, so the production 0.95 would gate zero rows and prove
     nothing); production callers pass their own threshold_ppm."""
     emb = _t(spark, sf_dir, "embeddings")
-    return D.materialize_release(
-        S.embedding_near_dup_pairs_exactint(
-            emb,
-            dim=64,
-            threshold_ppm=350_000,
-            num_planes=8,
-            max_bucket_size=None,
-        )
+    return S.embedding_near_dup_pairs_exactint(
+        emb,
+        dim=64,
+        threshold_ppm=350_000,
+        num_planes=8,
+        max_bucket_size=None,
     )
 
 
@@ -621,10 +608,8 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams once for all prefixes; each ranking is round-6 with id
     tie-breaks (the rank-determinism device)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return D.materialize_release(
-        S.matryoshka_recall(
-            emb, lambda c: c < 5, prefix_dims=[8, 16, 32], k=10
-        )
+    return S.matryoshka_recall(
+        emb, lambda c: c < 5, prefix_dims=[8, 16, 32], k=10
     )
 
 
@@ -741,6 +726,4 @@ def sim_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus streams once; integer dots make the quantized ranks
     engine-portable with id tie-breaks."""
     emb = _t(spark, sf_dir, "embeddings")
-    return D.materialize_release(
-        S.sq8_recall(emb, lambda c: c < 5, dim=64, k=10)
-    )
+    return S.sq8_recall(emb, lambda c: c < 5, dim=64, k=10)

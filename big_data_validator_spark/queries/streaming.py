@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators.cdc import changeset_delta_rows
 from big_data_validator_spark.operators.profile import profile_trend_anomalies
 from big_data_validator_spark.operators.sketches import (
@@ -900,9 +899,7 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = kll_verify_quantiles(
             est, drained, "c", tol_ppm=25_000, block_width=1_000_000
         )
-        out = res.orderBy("quantile_pct")
-        out._bdv_pinned = D.pinned_caches(res)
-        return out
+        return res.orderBy("quantile_pct")
 
     return _bounded_drain(
         spark,
@@ -989,9 +986,7 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             est, drained, "c", ["event_type"], tol_ppm=25_000,
             block_width=1_000_000,
         )
-        out = res.orderBy("event_type", "quantile_pct")
-        out._bdv_pinned = D.pinned_caches(res)
-        return out
+        return res.orderBy("event_type", "quantile_pct")
 
     return _bounded_drain(
         spark,

@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators import rebalance_for_compute as _rb
 from big_data_validator_spark.operators import text as T
 from big_data_validator_spark.operators.curation import repetition_metrics
@@ -774,6 +773,4 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is bounded by corpus token/line count.  Oracle: DuckDB
     recomputes every metric from the same deterministic relations."""
     docs = _rb(_t(spark, sf_dir, "documents"))
-    return D.materialize_release(
-        repetition_metrics(docs, top_ngram=2, dup_ngram=5)
-    )
+    return repetition_metrics(docs, top_ngram=2, dup_ngram=5)

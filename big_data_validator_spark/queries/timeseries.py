@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import dedup as D
+from big_data_validator_spark.operators import pin
 from big_data_validator_spark.operators.timeseries import (
     acf_daily,
     binseg_changepoints,
@@ -191,10 +191,9 @@ def ts_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The stored rollups are small (hours × types); caching them keeps
     # this simulation of "stored MV" at one base scan per layer and the
-    # anti/semi legs co-consistent.  Released below with the operator's
-    # own pinned dirty relations after materialization.
-    hourly_old = hourly_old.cache()
-    daily_old = daily_old.cache()
+    # anti/semi legs co-consistent.
+    hourly_old = pin(hourly_old)
+    daily_old = pin(daily_old)
     _, daily_new = cascade_rollup_refresh(
         base_new=ev,
         hourly_old=hourly_old,
@@ -205,14 +204,12 @@ def ts_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum_cols=["val_cents"],
         count_col="n_rows",
     )
-    out = daily_new.select(
+    return daily_new.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "event_type",
         "n_rows",
         "val_cents",
     ).orderBy("day", "event_type")
-    out._bdv_pinned = D.pinned_caches(daily_new) + [hourly_old, daily_old]
-    return D.materialize_release(out)
 
 
 @query(
@@ -390,9 +387,7 @@ def ts_binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut frame — no driver collect.  Oracle: the recursion UNROLLED as
     CTEs (the EM/k-means/GD device)."""
     orders = _t(spark, sf_dir, "orders")
-    return D.materialize_release(
-        binseg_changepoints(orders, "o_orderdate", "o_totalprice", depth=2)
-    )
+    return binseg_changepoints(orders, "o_orderdate", "o_totalprice", depth=2)
 
 
 @query(
@@ -644,15 +639,12 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer var_s_x18 = n(n−1)(2n+5) − Σt(t−1)(2t+5), and
     floats appear only in the round-6 tau_b (the kendall_tau_b ×2
     device, time untied) and continuity-corrected z.  ONE data
-    shuffle (the per-day cents agg, pinned + released on
-    materialize); the sign self-join runs every unordered day pair
+    shuffle (the per-day cents agg, pinned); the sign self-join runs
+    every unordered day pair
     once on the calendar-bounded daily frame — broadcast-NLJ,
     corpus-size-independent."""
     o = _t(spark, sf_dir, "orders")
-    return D.materialize_release(
-        mann_kendall_trend(o, "o_orderdate", "o_totalprice",
-                           value_scale=100)
-    )
+    return mann_kendall_trend(o, "o_orderdate", "o_totalprice", value_scale=100)
 
 
 @query(

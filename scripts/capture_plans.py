@@ -5,10 +5,11 @@
 Writes ``<query>_<tag>.txt`` for each entry (default: the whole
 registry) into a fresh ``tempfile.mkdtemp(prefix="bdv_plans_")``
 directory, or into the directory ``SPARK_GRAFT_PLAN_DIR`` names, and
-prints that directory's path first.  Entries routed through
-``materialize_release`` return a LocalRelation (the collected rows), so
-the real distributed plan is captured by intercepting the helper and
-dumping the pre-collect plan(s) alongside the returned frame's plan.
+prints that directory's path first.  An entry whose call pinned a cache
+or made a scratch directory returns a LocalRelation (the collected rows,
+see ``queries.query``), so the real distributed plan is captured by
+intercepting the registry wrapper's ``materialize`` call and dumping the
+pre-collect plan(s) alongside the returned frame's plan.
 Each returned-frame section opens with ``plan_report``'s facts (pushed
 filters, read schema, broadcast/take-ordered flags, shuffle and codegen
 span counts — the ones ``tests/test_plans.py`` pins).
@@ -31,7 +32,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from bench import SF_DIR, session, warm_up
-from big_data_validator_spark.operators import dedup as D
+import big_data_validator_spark.queries as Q
 from big_data_validator_spark.plans.inspect import formatted_explain, plan_report
 from big_data_validator_spark.queries import REGISTRY
 
@@ -45,22 +46,22 @@ def main() -> None:
     spark = session("bdv-plan-capture")
     warm_up(spark)
 
-    # Intercept materialize_release: the distributed plan is the frame
-    # passed IN, not the LocalRelation handed back.
+    # Intercept the registry wrapper's materialize: the distributed plan
+    # is the frame passed IN, not the LocalRelation handed back.
     captured: list[tuple[str, str]] = []
-    real_mr = D.materialize_release
+    real_materialize = Q.materialize
 
-    def spying_mr(df, *sources):
+    def spying_materialize(df):
         captured.append(("materialized (pre-collect)", formatted_explain(df)))
-        return real_mr(df, *sources)
+        return real_materialize(df)
 
-    D.materialize_release = spying_mr
+    Q.materialize = spying_materialize
 
     # Intercept every eager action an operator body fires while the
     # entry builds (VERDICT r13 item 9): a local-result entry's real
     # distributed plans are the ones its collect/count/first/take
     # calls execute, not the LocalRelation it returns.  A LocalRelation
-    # source itself is skipped (noise).  materialize_release's own
+    # source itself is skipped (noise).  materialize's own
     # collect is already captured above with a better label.
     # Spark 4: pyspark.sql.DataFrame is the abstract base; sessions
     # hand out pyspark.sql.classic.dataframe.DataFrame, whose own
@@ -123,7 +124,7 @@ def main() -> None:
     finally:
         for n, real in _real_actions.items():
             setattr(_DF, n, real)
-        D.materialize_release = real_mr
+        Q.materialize = real_materialize
         spark.stop()
 
 

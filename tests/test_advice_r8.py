@@ -19,6 +19,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import resource_scope
 from big_data_validator_spark.operators.cdc import (
     apply_delta_to_group_minmax,
     delta_join_view_rows,
@@ -92,23 +93,22 @@ def test_cascade_rollup_null_key_and_null_ts_dirty(spark):
     daily_old = full(
         base_old, lambda c: F.date_trunc("day", c), "ts"
     ).withColumnRenamed("b", "day")
-    hourly_new, daily_new = cascade_rollup_refresh(
-        base_new, hourly_old, daily_old, late, "ts", ["key"], ["v"]
-    )
-    exp_h = full(
-        base_new, lambda c: F.date_trunc("hour", c), "ts"
-    ).withColumnRenamed("b", "hour")
-    exp_d = full(
-        base_new, lambda c: F.date_trunc("day", c), "ts"
-    ).withColumnRenamed("b", "day")
-    assert _rows(hourly_new, "hour", "key", "n_rows", "v") == _rows(
-        exp_h, "hour", "key", "n_rows", "v"
-    )
-    assert _rows(daily_new, "day", "key", "n_rows", "v") == _rows(
-        exp_d, "day", "key", "n_rows", "v"
-    )
-    for c in getattr(daily_new, "_bdv_pinned", []):
-        c.unpersist()
+    with resource_scope():
+        hourly_new, daily_new = cascade_rollup_refresh(
+            base_new, hourly_old, daily_old, late, "ts", ["key"], ["v"]
+        )
+        exp_h = full(
+            base_new, lambda c: F.date_trunc("hour", c), "ts"
+        ).withColumnRenamed("b", "hour")
+        exp_d = full(
+            base_new, lambda c: F.date_trunc("day", c), "ts"
+        ).withColumnRenamed("b", "day")
+        assert _rows(hourly_new, "hour", "key", "n_rows", "v") == _rows(
+            exp_h, "hour", "key", "n_rows", "v"
+        )
+        assert _rows(daily_new, "day", "key", "n_rows", "v") == _rows(
+            exp_d, "day", "key", "n_rows", "v"
+        )
 
 
 def test_delta_join_view_sign_collision_raises(spark):

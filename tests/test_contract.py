@@ -2,6 +2,7 @@ from __future__ import annotations
 
 from big_data_validator_spark.contract import (
     CORRUPT_RECORD_COL,
+    ColumnSpec,
     TableContract,
     normalize_quote,
 )
@@ -28,6 +29,26 @@ def test_json_round_trip(person_metadata_csv, tmp_path):
     c2 = TableContract.from_json_file(str(p))
     assert c2.to_json_dict() == c.to_json_dict()
     assert [s.name for s in c2.columns] == [s.name for s in c.columns]
+
+
+def test_metadata_csv_round_trip(tmp_path):
+    """``to_metadata_csv`` writes what ``from_metadata_csv`` reads back:
+    names, types, formats, nullability and the table separators."""
+    c = TableContract(
+        columns=[
+            ColumnSpec("ID", "NUMBER", nullable=False),
+            ColumnSpec("NAME", "VARCHAR2"),
+            ColumnSpec("BIRTH_DATE", "DATE", "dd/M/yyyy"),
+        ],
+        field_separator="|",
+    )
+    p = str(tmp_path / "T_metadata.csv")
+    c.to_metadata_csv(p)
+    back = TableContract.from_metadata_csv(p)
+    assert back.columns == c.columns
+    assert back.field_separator == "|"
+    assert back.decimal_separator == "."
+    assert back.string_separator == '""""' and back.quote_char == '"'
 
 
 def test_normalize_quote():

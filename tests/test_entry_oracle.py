@@ -107,41 +107,41 @@ def _assert_no_decimal_output(name, schema):
     )
 
 
-def _stage_streaming_inputs(spark):
-    """Mint the session-memoised staged sources of the streaming entries.
-    They are input data by design and outlive a call, so they are staged
-    before the temp-root leak check below starts watching."""
-    from big_data_validator_spark.queries import streaming as Q
+@pytest.fixture()
+def run_scoped(spark, tmp_path, monkeypatch):
+    """Run an entry and read its rows, then check that the call left no
+    temp entry and no cached Dataset behind.  The session-lived root
+    (staged sources, the worker package zip) is made before the watch
+    starts; the rows are read after the entry returned, so a result
+    still reading a removed scratch dir fails here."""
+    from big_data_validator_spark.operators import session_root
 
-    for stage in (
-        Q._mv_delta_stream_source, Q._metrics_stream_source,
-        Q._drift_stream_source, Q._scd2_stream_source,
-        Q._kll_group_stream_source, Q._markov_stream_source,
-        Q._lo_attrib_sources,
-    ):
-        stage(spark, SF_DIR)
+    session_root()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def run(name):
+        spark.catalog.clearCache()
+        sdf = ALL_QUERIES[name](spark, SF_DIR)
+        rows = sdf.collect()
+        assert os.listdir(tmp_path) == [], f"{name} left temp entries"
+        assert cache.isEmpty(), f"{name} left a cached Dataset"
+        return sdf, rows
+
+    return run
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, duck, name, tmp_path, monkeypatch):
+def test_query_matches_oracle(duck, name, run_scoped):
+    sdf, spark_rows = run_scoped(name)
     if name in SF_PINNED and not SF_DIR.rstrip("/").endswith("sf0.01"):
-        rows = {r["method"]: r for r in ALL_QUERIES[name](spark, SF_DIR).collect()}
+        rows = {r["method"]: r for r in spark_rows}
         assert rows["ivf_full_probe"]["recall"] == 1.0, rows
         assert rows["ivf_full_probe"]["hits"] == 50, rows
         assert set(rows) == {"ivf_full_probe", "ivf_nprobe4", "lsh"}
         return
-    streaming = name.startswith("streaming_")
-    if streaming:
-        # a bounded drain deletes its temp root, and it must collect its
-        # result first: the rows below are read after the root is gone
-        _stage_streaming_inputs(spark)
-        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    sdf = ALL_QUERIES[name](spark, SF_DIR)
     _assert_no_decimal_output(name, sdf.schema)
-    spark_rows = sdf.collect()
     spark_cols = sdf.columns
-    if streaming:
-        assert os.listdir(tmp_path) == [], f"{name} left temp entries"
 
     res = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]
@@ -162,11 +162,11 @@ def test_query_matches_oracle(spark, duck, name, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("name", sorted(set(ALL_QUERIES) - set(ORACLES)))
-def test_oracle_less_query_runs(spark, name):
+def test_oracle_less_query_runs(name, run_scoped):
     """Rows-only check for non-SQL-expressible queries (same as driver)."""
-    sdf = ALL_QUERIES[name](spark, SF_DIR)
+    sdf, rows = run_scoped(name)
     assert len(sdf.columns) > 0
-    assert sdf.count() >= 0
+    assert len(rows) >= 0
 
 
 def test_driver_order_follows_last_counting_record():

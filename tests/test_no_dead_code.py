@@ -285,3 +285,42 @@ def unused_imports():
 def test_every_module_import_is_used():
     hits = unused_imports()
     assert hits == [], f"{len(hits)} module imports their module never uses: {hits}"
+
+
+# --- resource owners --------------------------------------------------------
+# Every cache and temp directory the package makes has one owner: ``pin``
+# caches, the scratch helpers make directories (operators/__init__.py).  A
+# ``.cache()``, ``.persist()`` or ``mkdtemp`` anywhere else would be a
+# resource no scope releases.
+
+RESOURCE_MAKERS = {
+    "cache": {"pin"},
+    "persist": {"pin"},
+    "mkdtemp": {"scratch_dir", "session_root", "session_dir"},
+}
+
+
+def unowned_resources():
+    """``module:line:call`` for each cache/persist/mkdtemp call in the
+    package outside the function allowed to make that resource."""
+    hits = []
+
+    def visit(node, module, owner):
+        for child in ast.iter_child_nodes(node):
+            inner = owner
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            elif isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                allowed = RESOURCE_MAKERS.get(child.func.attr)
+                if allowed is not None and owner not in allowed:
+                    hits.append(f"{module}:{child.lineno}:{child.func.attr}")
+            visit(child, module, inner)
+
+    for path in sorted(PACKAGE.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(ROOT).as_posix(), None)
+    return hits
+
+
+def test_caches_and_temp_dirs_are_made_only_by_their_owners():
+    hits = unowned_resources()
+    assert hits == [], f"{len(hits)} unowned cache/temp-dir calls: {hits}"

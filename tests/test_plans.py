@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from big_data_validator_spark.operators import resource_scope
 from big_data_validator_spark.plans import (
     has_broadcast_join,
     has_take_ordered,
@@ -191,7 +192,7 @@ def test_drift_text_kl_single_corpus_scan(spark):
     """VERDICT r5 #2: same-table snapshots use conditional aggregation
     over ONE scan; the pinned wordcount relation feeds both the totals
     and the statistic, and is released after materialization."""
-    # materialize_release returns a local-relation frame; assert THIS
+    # the entry returns a materialized local-relation frame; assert THIS
     # query leaves no new pinned caches behind (hygiene).  Relative, not
     # absolute: earlier tests' eagerly-localCheckpointed frames (two-phase
     # CC, BPE learn, FD discovery) sit in the cache manager until the
@@ -315,10 +316,7 @@ def test_block_scan_entries_keep_broadcast_and_shuffles(
     back to the rows and hold their exchange counts: the row-bearing
     window shuffles by block, and only the one-row-per-block totals
     frame meets the unpartitioned prefix window."""
-    df = build(spark)
-    try:
+    with resource_scope():
+        df = build(spark)
         assert has_broadcast_join(df), plan_report(df)
         assert shuffle_count(df) == shuffles, executed_plan_str(df)
-    finally:
-        for c in getattr(df, "_bdv_pinned", []):
-            c.unpersist()

@@ -252,22 +252,22 @@ def test_monitor_plan_is_single_pipeline_per_leg(spark):
     the CDF each feed multiple joins; uncached, the whole sketch
     pipeline re-ran per consumer (measured 47 shuffles).  With the
     pinned caches the monitor stays bounded."""
-    from big_data_validator_spark.operators.dedup import release_pinned
+    from big_data_validator_spark.operators import resource_scope
     from big_data_validator_spark.plans.inspect import shuffle_count
 
     df = spark.createDataFrame(
         [(i % 3, i * 7 % 1000) for i in range(500)], "day int, v long"
     )
-    res = kll_quantile_monitor(
-        df, "v", "day", [50, 90], k=64, block_width=100
-    )
-    # shuffle_count is a TEXT count and the cached subtree's plan text
-    # reprints under every InMemoryRelation reference, so the number
-    # overstates executed shuffles; the regression signal is the gap:
-    # cached plan ~23 text-exchanges, uncached (the bug) 47.
-    n = shuffle_count(res)
+    with resource_scope():
+        res = kll_quantile_monitor(
+            df, "v", "day", [50, 90], k=64, block_width=100
+        )
+        # shuffle_count is a TEXT count and the cached subtree's plan text
+        # reprints under every InMemoryRelation reference, so the number
+        # overstates executed shuffles; the regression signal is the gap:
+        # cached plan ~23 text-exchanges, uncached (the bug) 47.
+        n = shuffle_count(res)
     assert n <= 30, f"sketch monitor plan re-runs subplans: {n} shuffles"
-    release_pinned(res)
 
 
 def test_rolling_monitor_matches_brute_force(spark):
@@ -283,17 +283,17 @@ def test_rolling_monitor_matches_brute_force(spark):
         for i in range(12_000)
     ]
     df = spark.createDataFrame(rows, "day date, v long")
-    from big_data_validator_spark.operators.dedup import release_pinned
+    from big_data_validator_spark.operators import resource_scope
     from big_data_validator_spark.operators.sketches import (
         kll_rolling_monitor,
     )
 
-    res = kll_rolling_monitor(
-        df, "v", "day", pct=90, window_days=7,
-        report_from="2024-01-20", report_to="2024-01-26", k=100,
-    )
-    got = {r["day"].isoformat(): r for r in res.collect()}
-    release_pinned(res)
+    with resource_scope():
+        res = kll_rolling_monitor(
+            df, "v", "day", pct=90, window_days=7,
+            report_from="2024-01-20", report_to="2024-01-26", k=100,
+        )
+        got = {r["day"].isoformat(): r for r in res.collect()}
     assert len(got) == 7
     for off in range(19, 26):
         rd = d0 + dt.timedelta(days=off)

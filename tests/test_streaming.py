@@ -806,13 +806,15 @@ def test_stream_mannwhitney_drift_matches_batch_on_prefixes(spark, tmp_path):
 
 def test_bounded_drain_failure_cleans_up(spark, tmp_path, monkeypatch):
     """A drain whose batch function raises re-raises the query's failure,
-    removes its temp root, restores the session's shuffle partitions and
-    leaves no active query behind; the read-back never runs."""
+    restores the session's shuffle partitions and leaves no active query
+    behind; the read-back never runs, and the enclosing scope removes
+    the drain's temp root."""
     import os
     import tempfile
 
     from pyspark.errors import StreamingQueryException
 
+    from big_data_validator_spark.operators import resource_scope
     from big_data_validator_spark.queries.drain import _bounded_drain
 
     src = str(tmp_path / "src")
@@ -835,7 +837,8 @@ def test_bounded_drain_failure_cleans_up(spark, tmp_path, monkeypatch):
         raise AssertionError("read-back ran after a failed drain")
 
     with pytest.raises(StreamingQueryException, match="batch function failed"):
-        _bounded_drain(spark, "streaming_failing", writer, read_back)
+        with resource_scope():
+            _bounded_drain(spark, "streaming_failing", writer, read_back)
     assert seen == ["2"]
     assert os.listdir(tmp) == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -200,47 +200,6 @@ def test_duplicate_clusters_transitive_closure(spark, limit):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_pinned_cache_handle_propagates_and_releases(spark):
-    """The capped path's narrow cache is reachable (and releasable) from
-    the frames the public pair functions return (ADVICE r3)."""
-    docs = spark.createDataFrame(
-        [(i, f"some shared text body {i % 3}") for i in range(30)],
-        ["doc_id", "text"],
-    )
-    pairs = D.minhash_lsh_candidates(docs)
-    pinned = D.pinned_caches(pairs)
-    assert pinned
-    pairs.count()
-    for c in pinned:
-        assert c.storageLevel.useMemory  # cached while the plan lives
-    D.release_pinned(pairs)
-    for c in pinned:
-        assert not c.storageLevel.useMemory
-
-
-def test_registry_dedup_entries_leave_no_pinned_caches(spark):
-    """The oracle-checked entry points must not leak pinned caches into a
-    long driver session (ADVICE r4): after each returns, the JVM's
-    persistent-RDD registry is back to its starting size."""
-    import __spark_entry__ as E
-
-    sf = "/root/testdata/sf0.001"
-    queries = E.queries()
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    for name in (
-        "dedup_minhash_lsh",
-        "dedup_simhash",
-        "dedup_winnowing",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_clusters",
-        "emb_near_dup_pairs",
-    ):
-        out = queries[name](spark, sf)
-        out.count()
-        after = spark.sparkContext._jsc.getPersistentRDDs().size()
-        assert after <= before, f"{name} leaked {after - before} pinned cache(s)"
-
-
 def test_duplicate_clusters_regimes_agree(spark):
     """Union-find and distributed propagation must label identically:
     chains (worst diameter), a star, a cycle, reversed-order edges, and
@@ -693,6 +652,7 @@ def test_shared_substring_plan_two_shuffles_no_join(spark):
     plan.  (History: the agg+join formulation re-ran the explode
     pipeline three times — 22 text-exchanges; the window+self-join
     form needed a pinned cache and moved gram text four times.)"""
+    from big_data_validator_spark.operators import resource_scope
     from big_data_validator_spark.operators.dedup import (
         shared_substring_pairs,
     )
@@ -702,12 +662,13 @@ def test_shared_substring_plan_two_shuffles_no_join(spark):
         [(i, f"some shared prefix text payload {i % 3}") for i in range(30)],
         "doc_id long, text string",
     )
-    res = shared_substring_pairs(df, gram_len=10, max_gram_docs=50)
+    with resource_scope() as held:
+        res = shared_substring_pairs(df, gram_len=10, max_gram_docs=50)
+    assert held == []
     assert shuffle_count(res) == 2, shuffle_count(res)
     plan = res._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
     assert "InMemoryRelation" not in plan
-    assert not getattr(res, "_bdv_pinned", None)
     # the single gram exchange feeds agg + window + collect: exactly
     # one RepartitionByExpression and no other gram-keyed exchange
     assert plan.count("RepartitionByExpression") == 1
@@ -1010,39 +971,3 @@ def test_excise_duplicate_spans_removes_planted_boilerplate(spark):
         excise_duplicate_spans(docs, n_words=0)
     with pytest.raises(ValueError, match=">= 2"):
         excise_duplicate_spans(docs, n_words=6, min_docs=1)
-
-
-def test_materialize_release_query_failure_raises_once(spark, monkeypatch):
-    """A failing query raises from the Arrow path; the Row fallback
-    never re-runs it."""
-    from pyspark.errors import PySparkException
-
-    bad = spark.range(3).select(
-        (F.col("id") + F.raise_error(F.lit("boom")).cast("long")).alias("x")
-    )
-    calls = []
-    monkeypatch.setattr(type(bad), "collect", lambda self: calls.append(1))
-    with pytest.raises(PySparkException, match="boom"):
-        D.materialize_release(bad)
-    assert calls == []
-
-
-def test_materialize_release_arrow_conversion_falls_back(
-    spark, monkeypatch, caplog
-):
-    """An Arrow conversion failure falls back to Rows, and says so once."""
-    import pyarrow as pa
-
-    def no_arrow(self):
-        raise pa.ArrowInvalid("unconvertible")
-
-    df = spark.range(3).select((F.col("id") * 2).alias("x"))
-    monkeypatch.setattr(type(df), "toArrow", no_arrow)
-    monkeypatch.setattr(D, "_row_fallback_logged", False)
-    with caplog.at_level("WARNING", logger=D.__name__):
-        first = D.materialize_release(df)
-        second = D.materialize_release(df)
-    assert sorted(r.x for r in first.collect()) == [0, 2, 4]
-    assert second.count() == 3
-    logged = [r.getMessage() for r in caplog.records]
-    assert len(logged) == 1 and "Arrow conversion failed" in logged[0]
