@@ -24,7 +24,8 @@ _row_fallback_logged = False
 # -------------------------------------------------------- resource lifetime
 
 #: The open :func:`resource_scope` blocks, innermost last; each list holds
-#: the cached frames and directories made while it is innermost.  A plain
+#: the cached frames, checkpoint RDDs and directories made while it is
+#: innermost.  A plain
 #: module list, not a ``contextvar``: ``foreachBatch`` bodies run on py4j's
 #: callback thread while the calling entry's scope is open.
 _SCOPES: list[list] = []
@@ -40,6 +41,21 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df`` (truncating its lineage) for the
+    innermost open :func:`resource_scope`, which unpersists the RDDs the
+    checkpoint registered on exit.  Outside any scope this is a plain
+    ``localCheckpoint`` and its blocks live until the driver GCs them."""
+    if not _SCOPES:
+        return df.localCheckpoint(eager=True)
+    jsc = df.sparkSession.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = df.localCheckpoint(eager=True)
+    after = jsc.getPersistentRDDs()
+    _SCOPES[-1].extend(after.get(i) for i in set(after.keySet()) - before)
+    return out
+
+
 def scratch_dir(prefix: str) -> str:
     """A fresh temp directory for the innermost open
     :func:`resource_scope`, which removes it on exit.  Outside any scope
@@ -52,9 +68,10 @@ def scratch_dir(prefix: str) -> str:
 
 @contextmanager
 def resource_scope() -> Iterator[list]:
-    """Own every cache :func:`pin` and every directory :func:`scratch_dir`
-    makes inside the block: on exit, whether the block returned or
-    raised, unpersist the caches and remove the directories.  Yields the
+    """Own every cache :func:`pin`, every RDD :func:`checkpoint` and every
+    directory :func:`scratch_dir` makes inside the block: on exit,
+    whether the block returned or raised, unpersist the caches and RDDs
+    and remove the directories.  Yields the
     list of what the block holds so far, so ``if held:`` tells whether
     the block made anything a lazy result could still read."""
     held: list = []

@@ -124,13 +124,15 @@ def gopher_quality_flags(metrics: DataFrame) -> DataFrame:
     return out.withColumn("quality_pass", conj)
 
 
+_LINE_SEP = r"[.!?]+\s+|\n+"
+_DUP_NGRAM = 5
+
+
 def repetition_metrics(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    line_sep: str = r"[.!?]+\s+|\n+",
     top_ngram: int = 2,
-    dup_ngram: int = 5,
 ) -> DataFrame:
     """The FULL Gopher repetition suite (Rae et al. 2021 §A1.1) —
     :func:`word_quality_metrics` ships the word-level analogs; these
@@ -138,14 +140,14 @@ def repetition_metrics(
     on, per document:
 
     - ``n_lines`` / ``dup_line_frac_ppm`` / ``dup_line_char_frac_ppm``
-      — lines (``line_sep`` regex split, trimmed, empties dropped; the
+      — lines (``_LINE_SEP`` regex split, trimmed, empties dropped; the
       default splits sentences and newlines) belonging to a
       within-document duplicate group, by count and by characters;
     - ``top{n}gram_char_frac_ppm`` — characters claimed by the single
       most frequent word ``top_ngram``-gram (count × token chars of
       the gram; ties break to the lexicographically smallest gram);
     - ``dup{n}gram_char_frac_ppm`` — characters COVERED by word
-      ``dup_ngram``-grams occurring ≥2 times in the document —
+      ``_DUP_NGRAM``-grams occurring ≥2 times in the document —
       overlap-once coverage semantics (the union of [p, p+n−1] token
       positions), not a double-counting sum.
 
@@ -164,11 +166,8 @@ def repetition_metrics(
     from big_data_validator_spark.operators import rebalance_for_compute
     from big_data_validator_spark.operators.text import word_tokens
 
-    if top_ngram < 1 or dup_ngram < 1:
-        raise ValueError(
-            f"ngram sizes must be >= 1, got top={top_ngram} "
-            f"dup={dup_ngram}"
-        )
+    if top_ngram < 1:
+        raise ValueError(f"ngram sizes must be >= 1, got top={top_ngram}")
     from pyspark.sql import Window as W
 
     base = (
@@ -196,7 +195,7 @@ def repetition_metrics(
     # ---- line leg
     lines = (
         base.select(
-            "id", F.explode(F.split("_txt", line_sep)).alias("_l0")
+            "id", F.explode(F.split("_txt", _LINE_SEP)).alias("_l0")
         )
         .select("id", F.trim(F.col("_l0")).alias("_l"))
         .filter(F.col("_l") != "")
@@ -263,7 +262,7 @@ def repetition_metrics(
     )
 
     # ---- dup n-gram coverage leg (the excision coverage device)
-    dg = grams(dup_ngram)
+    dg = grams(_DUP_NGRAM)
     ddup = (
         dg.groupBy("id", "_g")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -276,7 +275,7 @@ def repetition_metrics(
             "id",
             F.explode(
                 F.sequence(
-                    F.col("_p"), F.col("_p") + F.lit(dup_ngram - 1)
+                    F.col("_p"), F.col("_p") + F.lit(_DUP_NGRAM - 1)
                 )
             ).alias("_i"),
         )
@@ -311,7 +310,7 @@ def repetition_metrics(
                 f"top{int(top_ngram)}gram_char_frac_ppm"
             ),
             ppm("coalesce(_covch, 0L)", "_tchars").alias(
-                f"dup{int(dup_ngram)}gram_char_frac_ppm"
+                f"dup{_DUP_NGRAM}gram_char_frac_ppm"
             ),
         )
     )
@@ -668,12 +667,14 @@ def linear_quality_scores(
     )
 
 
+_LABEL_SCALE = 1_000_000
+
+
 def linear_quality_train(
     docs: DataFrame,
     label_pred,
     n_buckets: int,
     steps: int = 2,
-    label_scale: int = 1_000_000,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -778,7 +779,7 @@ def linear_quality_train(
             .select(
                 "_id",
                 F.expr(
-                    f"(_sw div _n) - _y * {int(label_scale)}L"
+                    f"(_sw div _n) - _y * {_LABEL_SCALE}L"
                 ).alias("_r"),
             )
         )
@@ -977,6 +978,9 @@ def _bloom_member_expr(gram_col: str, m: int, k: int):
     return F.expr(" AND ".join(conds))
 
 
+_FLAG_THRESHOLD = 0.1
+
+
 def contamination_ngram_bloom(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -984,7 +988,6 @@ def contamination_ngram_bloom(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    flag_threshold: float = 0.1,
     fpp: float = 0.01,
 ) -> DataFrame:
     """:func:`contamination_ngram_overlap` for 10⁶+-gram benchmarks —
@@ -1055,5 +1058,5 @@ def contamination_ngram_bloom(
         .cast("long")
         .alias("n_dirty"),
         F.round(frac, 6).alias("dirty_frac"),
-        (frac >= F.lit(float(flag_threshold))).alias("flagged"),
+        (frac >= F.lit(_FLAG_THRESHOLD)).alias("flagged"),
     )

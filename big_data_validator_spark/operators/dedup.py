@@ -30,7 +30,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import adaptive_partitions, pin
+from big_data_validator_spark.operators import adaptive_partitions, checkpoint, pin
 from big_data_validator_spark.operators.text import char_ngrams, fingerprint
 
 # -------------------------------------------------------------- exact dedup
@@ -171,11 +171,13 @@ def hashed_shingle_sets(
 
 # ------------------------------------------------------------ ngram jaccard
 
+_NGRAM_N = 5
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs via an inverted shingle
@@ -188,7 +190,7 @@ def ngram_jaccard_pairs(
     pre-bucket and feed candidates here for exact verification.
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
     """
-    sets_df = pin(_shingle_sets(df, text_col, id_col, n))
+    sets_df = pin(_shingle_sets(df, text_col, id_col, _NGRAM_N))
     sizes = sets_df.select("id", F.size("shingles").alias("set_size"))
     inv = sets_df.select("id", F.explode("shingles").alias("shingle"))
     a = inv.alias("a")
@@ -283,31 +285,36 @@ def ngram_containment_pairs(
 _MERSENNE_31 = (1 << 31) - 1
 
 
-def _minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+_MINHASH_SEED = 42
+
+
+def _minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic multiply-add constants for the MinHash universal hash
     family ``(a*h + b) mod (2^31-1)``.  Constants stay below 2^31 so the
     product fits a long — ANSI mode (Spark 4 default) raises on long
     overflow, ruling out wraparound tricks."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(_MINHASH_SEED)
     return [
         (rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31))
         for _ in range(num_hashes)
     ]
 
 
+_MINHASH_N = 5
+_MINHASH_HASHES = 64
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
-    num_hashes: int = 64,
 ) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signatures.
 
     Each shingle is hashed ONCE (``xxhash64`` folded to 31 bits); the
-    ``num_hashes`` hash functions are derived arithmetically as
+    ``_MINHASH_HASHES`` hash functions are derived arithmetically as
     ``(a_i * h + b_i) mod (2^31 - 1)`` — ~64× cheaper than hashing the
     string per function.  The signature slot is the min over the
     document's shingle hashes, computed in an Arrow numpy kernel.
@@ -315,7 +322,7 @@ def minhash_signatures(
     (Broder 1997).
     """
     return _minhash_signatures_from_sets(
-        _shingle_sets(df, text_col, id_col, n), num_hashes
+        _shingle_sets(df, text_col, id_col, _MINHASH_N), _MINHASH_HASHES
     )
 
 
@@ -448,20 +455,21 @@ def capped_bucket_pairs(
     return small_pairs.unionByName(big_pairs)
 
 
+_MINHASH_BANDS = 8
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
-    num_hashes: int = 64,
-    bands: int = 8,
     sigs: Optional[DataFrame] = None,
     max_bucket_size: Optional[int] = 1000,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded LSH over MinHash
     signatures.
 
-    The signature is cut into ``bands`` bands of ``num_hashes/bands`` rows;
+    The signature is cut into ``_MINHASH_BANDS`` bands of
+    ``_MINHASH_HASHES/_MINHASH_BANDS`` rows;
     two docs are candidates if any band hashes identically.  Shuffle volume
     is O(n·bands) small (band_id, band_hash, id) tuples; the per-bucket
     self-join only compares docs that collided, and oversized buckets
@@ -472,14 +480,14 @@ def minhash_lsh_candidates(
     drown r=4 banding in false candidates.
     Returns distinct ``(id_a, id_b)`` with ``id_a < id_b``.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _MINHASH_HASHES // _MINHASH_BANDS
     if sigs is None:
-        sigs = minhash_signatures(df, text_col, id_col, n, num_hashes)
+        sigs = minhash_signatures(df, text_col, id_col)
     banded = sigs.select(
         "id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(_MINHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.xxhash64(
@@ -493,14 +501,13 @@ def minhash_lsh_candidates(
     return pairs.dropDuplicates()
 
 
+_MINHASH_THRESHOLD = 0.8
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
-    num_hashes: int = 64,
-    bands: int = 8,
-    threshold: float = 0.8,
     max_bucket_size: Optional[int] = 1000,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: LSH candidates → exact Jaccard
@@ -530,13 +537,12 @@ def minhash_dedup_pairs(
         df.sparkSession.sparkContext.defaultParallelism,
     )
     sets_df = pin(
-        hashed_shingle_sets(df, text_col, id_col, n)
+        hashed_shingle_sets(df, text_col, id_col, _MINHASH_N)
         .repartition(sets_parts, "id")
     )
-    sigs = _minhash_signatures_from_sets(sets_df, num_hashes, prehashed=True)
+    sigs = _minhash_signatures_from_sets(sets_df, _MINHASH_HASHES, prehashed=True)
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, n, num_hashes, bands, sigs=sigs,
-        max_bucket_size=max_bucket_size,
+        df, text_col, id_col, sigs=sigs, max_bucket_size=max_bucket_size
     )
     sa = sets_df.withColumnRenamed("id", "id_a").withColumnRenamed("shingles", "sh_a")
     sb = sets_df.withColumnRenamed("id", "id_b").withColumnRenamed("shingles", "sh_b")
@@ -548,7 +554,7 @@ def minhash_dedup_pairs(
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= _MINHASH_THRESHOLD)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
@@ -679,18 +685,20 @@ def _np_poly(codes) -> int:
     return h
 
 
+_WINNOW_MIN_COMMON = 5
+_WINNOW_MIN_OVERLAP = 0.5
+
+
 def winnowing_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 10,
     window: int = 6,
-    min_common: int = 5,
-    min_overlap: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs via shared winnowing fingerprints: inverted index on
-    the sketch, pairs kept when they share ≥ ``min_common`` fingerprints
-    AND their overlap coefficient |∩| / min(|A|, |B|) ≥ ``min_overlap``.
+    the sketch, pairs kept when they share ≥ ``_WINNOW_MIN_COMMON`` fingerprints
+    AND their overlap coefficient |∩| / min(|A|, |B|) ≥ ``_WINNOW_MIN_OVERLAP``.
 
     A fingerprint shared by f documents contributes O(f²) candidate
     pairs, so ``k`` is the skew control: the default k=10 keeps the
@@ -710,7 +718,7 @@ def winnowing_near_dup_pairs(
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("common"))
-        .filter(F.col("common") >= min_common)
+        .filter(F.col("common") >= _WINNOW_MIN_COMMON)
     )
     return (
         common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
@@ -719,7 +727,7 @@ def winnowing_near_dup_pairs(
             "overlap",
             F.round(F.col("common") / F.least("sz_a", "sz_b"), 6),
         )
-        .filter(F.col("overlap") >= min_overlap)
+        .filter(F.col("overlap") >= _WINNOW_MIN_OVERLAP)
         .select("id_a", "id_b", "common", "overlap")
     )
 
@@ -764,11 +772,13 @@ def _driver_union_find(spark, e: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+_CLUSTER_MAX_ITER = 20
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
     driver_edge_limit: Optional[int] = 1_000_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list: the endpoint
@@ -823,12 +833,8 @@ def duplicate_clusters(
     # against vertices lazily, possibly after the pinned `edges` is
     # released — a cached-but-unmaterialized frame would silently
     # recompute from the pairs lineage, a checkpointed one cannot
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    return _two_phase_cc(edges, vertices, max_iter)
+    vertices = checkpoint(edges.select(F.col("src").alias("id")).distinct())
+    return _two_phase_cc(edges, vertices, _CLUSTER_MAX_ITER)
 
 
 def _edge_fingerprint(E: DataFrame) -> tuple:
@@ -873,11 +879,8 @@ def _two_phase_cc(
     iterative hygiene): the lineage would otherwise chain two joins per
     round and analysis time would creep.
     """
-    E = (
-        edges.filter(F.col("src") > F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
+    E = checkpoint(
+        edges.filter(F.col("src") > F.col("dst")).select("src", "dst").distinct()
     )
     prev = _edge_fingerprint(E)
     for _ in range(max_iter):
@@ -906,14 +909,11 @@ def _two_phase_cc(
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         hooks = smin.select("src", F.col("m").alias("dst"))
-        E_next = (
-            repointed.unionByName(hooks).distinct().localCheckpoint(eager=True)
-        )
+        E_next = checkpoint(repointed.unionByName(hooks).distinct())
         cur = _edge_fingerprint(E_next)
-        # dropping the prior checkpointed frame's reference is the
-        # cleanup — checkpoint blocks are freed by the ContextCleaner
-        # when the driver GCs the RDD (they are not in the cache
-        # manager, so unpersist() would be a silent no-op; ADVICE r3)
+        # every round's checkpoint RDD belongs to the open resource
+        # scope, which unpersists them all on exit (outside a scope the
+        # driver's GC frees them once the reference below is dropped)
         E = E_next
         if cur == prev:
             break
@@ -935,11 +935,13 @@ def _two_phase_cc(
 
 # ------------------------------------------------------------------ simhash
 
+_SIMHASH_BITS = 64
+
+
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
 ) -> DataFrame:
     """(id, simhash: bigint) 64-bit SimHash over word tokens.
 
@@ -962,7 +964,7 @@ def simhash_signatures(
         import numpy as np
         import pandas as pd
 
-        bitpos = np.arange(bits, dtype=np.uint64)
+        bitpos = np.arange(_SIMHASH_BITS, dtype=np.uint64)
         out = np.zeros(len(hs), dtype=np.int64)
         for i, h in enumerate(hs):
             if h is None or len(h) == 0:
@@ -980,25 +982,27 @@ def simhash_signatures(
     )
 
 
+_SIMHASH_MAX_HAMMING = 3
+
+
 def simhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_hamming: int = 3,
     max_bucket_size: Optional[int] = 1000,
 ) -> DataFrame:
-    """Near-dup pairs with Hamming distance ≤ ``max_hamming`` between
+    """Near-dup pairs with Hamming distance ≤ ``_SIMHASH_MAX_HAMMING`` between
     64-bit SimHashes.
 
     Pigeonhole blocking: split the signature into ``max_hamming+1`` chunks;
-    any pair within distance ``max_hamming`` must agree exactly on ≥1 chunk
+    any pair within distance ``_SIMHASH_MAX_HAMMING`` must agree exactly on ≥1 chunk
     → self-join per chunk bucket (shuffle O(n·chunks)) with oversized
     buckets degraded to leader edges (:func:`capped_bucket_pairs` — a
     corpus of near-identical documents shares every chunk key and would
     otherwise go quadratic), then verify the true Hamming distance with
     ``bit_count(xor)``.
     """
-    chunks = max_hamming + 1
+    chunks = _SIMHASH_MAX_HAMMING + 1
     chunk_bits = 64 // chunks
     sigs = simhash_signatures(df, text_col, id_col)
     chunk_structs = [
@@ -1029,7 +1033,7 @@ def simhash_near_dup_pairs(
         # filter BEFORE the dedup shuffle: hamming is deterministic per
         # pair, so dropping non-matches first shrinks the exchange (Catalyst
         # can't push a non-key predicate through the aggregate itself)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -1091,12 +1095,15 @@ def levenshtein_pairs_banded(
 
 # ------------------------------------------- exact set-similarity join
 
+_SHINGLE_WORDS = 3
+
+
 def word_shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """(id, shingles: array<string>) — DISTINCT word n-gram shingles of
     the lowercased, single-space-tokenized text; documents shorter than
-    ``n`` words produce an EMPTY set (they cannot meet any positive
+    ``_SHINGLE_WORDS`` words produce an EMPTY set (they cannot meet any positive
     Jaccard threshold against a non-identical document, and an empty
     set keeps the size arithmetic total).
 
@@ -1114,13 +1121,13 @@ def word_shingle_sets(
     # empty list), so the short-document case needs an explicit guard
     # or element_at walks past the array.
     slid = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - (n - 1)),
+        F.sequence(F.lit(1), F.size("_w") - (_SHINGLE_WORDS - 1)),
         lambda i: F.concat_ws(
-            "_", *[F.element_at("_w", i + j) for j in range(n)]
+            "_", *[F.element_at("_w", i + j) for j in range(_SHINGLE_WORDS)]
         ),
     )
     shingles = F.when(
-        F.size("_w") < n, F.array().cast("array<string>")
+        F.size("_w") < _SHINGLE_WORDS, F.array().cast("array<string>")
     ).otherwise(F.array_distinct(slid))
     return df.select(
         F.col(id_col).alias("id"), words.alias("_w")
@@ -1131,7 +1138,6 @@ def set_similarity_join(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_words: int = 3,
     threshold_e6: int = 500_000,
 ) -> DataFrame:
     """EXACT Jaccard threshold self-join with PPJoin-style prefix +
@@ -1189,7 +1195,7 @@ def set_similarity_join(
     # (extra exchange).  The racing jobs overlap so their wall cost is
     # one shingling, and at scale the many-partition block manager
     # dedups racers per partition — leave the lazy single cache.
-    sets_df = pin(word_shingle_sets(df, text_col, id_col, n_words))
+    sets_df = pin(word_shingle_sets(df, text_col, id_col))
     tok = sets_df.select(
         "id",
         F.size("shingles").alias("m"),

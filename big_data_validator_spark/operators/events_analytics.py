@@ -131,17 +131,19 @@ def cohort_retention(
     )
 
 
+_ZSCORE_TRAILING = 7
+_Z_THRESHOLD = 2.0
+
+
 def rolling_zscore_anomalies(
     events: DataFrame,
     ts_col: str = "ts",
-    trailing: int = 7,
-    z_threshold: float = 2.0,
 ) -> DataFrame:
     """Volume anomaly detection: daily event counts flagged against a
     trailing-window z-score (the standard freshness/volume monitor a
     validation deployment runs on every feed).
 
-    For each day: the count, the mean/stddev of the PRECEDING ``trailing``
+    For each day: the count, the mean/stddev of the PRECEDING ``_ZSCORE_TRAILING``
     days (current day excluded — the monitored value must not contaminate
     its own baseline), the z-score, and ``is_anomaly``.  Days with fewer
     than 2 preceding observations (or zero variance) have a null z and
@@ -155,7 +157,7 @@ def rolling_zscore_anomalies(
     daily = events.groupBy(
         F.col(ts_col).cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.orderBy("day").rowsBetween(-trailing, -1)
+    w = Window.orderBy("day").rowsBetween(-_ZSCORE_TRAILING, -1)
     base = daily.select(
         "day",
         "n",
@@ -173,19 +175,20 @@ def rolling_zscore_anomalies(
         F.round("_std", 6).alias("trailing_std"),
         F.round(z, 6).alias("z_score"),
         F.coalesce(
-            F.abs(z) > F.lit(float(z_threshold)), F.lit(False)
+            F.abs(z) > F.lit(_Z_THRESHOLD), F.lit(False)
         ).alias("is_anomaly"),
     )
+
+
+_WEEKDAY_TRAILING = 4
 
 
 def weekday_seasonal_anomalies(
     events: DataFrame,
     ts_col: str = "ts",
-    trailing: int = 4,
-    z_threshold: float = 2.0,
 ) -> DataFrame:
     """Seasonality-aware volume anomaly detection: each day's event
-    count z-scored against the trailing ``trailing`` occurrences of the
+    count z-scored against the trailing ``_WEEKDAY_TRAILING`` occurrences of the
     SAME WEEKDAY — the monitor for feeds with weekly rhythm, where the
     plain rolling z-score (:func:`rolling_zscore_anomalies`) either
     fires every weekend or misses a broken Sunday batch because Sundays
@@ -208,7 +211,7 @@ def weekday_seasonal_anomalies(
     w = (
         Window.partitionBy("dow")
         .orderBy("day")
-        .rowsBetween(-trailing, -1)
+        .rowsBetween(-_WEEKDAY_TRAILING, -1)
     )
     base = dowed.select(
         "day",
@@ -232,7 +235,7 @@ def weekday_seasonal_anomalies(
         F.round("_std", 6).alias("baseline_std"),
         F.round(z, 4).alias("z_score"),
         F.coalesce(
-            F.abs(z) > F.lit(float(z_threshold)), F.lit(False)
+            F.abs(z) > F.lit(_Z_THRESHOLD), F.lit(False)
         ).alias("is_anomaly"),
     )
 
@@ -393,11 +396,13 @@ def survival_km(
     )
 
 
+ATTRIBUTION_CONVERSION = "purchase"
+ATTRIBUTION_HORIZON = 8
+
+
 def removal_attribution(
     events: DataFrame,
     channels: Sequence[str],
-    conversion: str = "purchase",
-    horizon: int = 8,
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
@@ -405,14 +410,14 @@ def removal_attribution(
 ) -> DataFrame:
     """Markov removal-effect attribution (Anderl et al. 2014): which
     channel actually DRIVES conversion?  Journeys are per-user event
-    sequences truncated at the first ``conversion``; a first-order
-    chain with absorbing states ``conversion`` (value 1) and END
+    sequences truncated at the first ``ATTRIBUTION_CONVERSION``; a first-order
+    chain with absorbing states ``ATTRIBUTION_CONVERSION`` (value 1) and END
     (value 0) gives the conversion probability from START; removing a
     channel (its inbound edges redirect to END, its outbound edges
     drop) and re-solving measures that channel's causal share —
     last-touch attribution's principled replacement.
 
-    Absorption probabilities are computed at a FIXED ``horizon`` of
+    Absorption probabilities are computed at a FIXED ``ATTRIBUTION_HORIZON`` of
     value-iteration steps — ``p^(k)(s) = Σ_t T(s,t)·p^(k−1)(t)`` —
     not a matrix solve: the unrolled iteration is the same arithmetic
     on any engine (the text_bpe_learn oracle-unrolling device), and
@@ -443,7 +448,7 @@ def removal_attribution(
         seq.withColumn(
             "_ppos",
             F.min(
-                F.when(F.col("_e") == conversion, F.col("_pos"))
+                F.when(F.col("_e") == ATTRIBUTION_CONVERSION, F.col("_pos"))
             ).over(wp),
         )
         .filter(
@@ -466,7 +471,7 @@ def removal_attribution(
         )
         .unionAll(
             trans.filter(
-                F.col("dst").isNull() & (F.col("src") != conversion)
+                F.col("dst").isNull() & (F.col("src") != ATTRIBUTION_CONVERSION)
             ).select("src", F.lit("END").alias("dst"))
         )
     )
@@ -490,9 +495,9 @@ def removal_attribution(
         for (s, _), n in cells.items():
             row_tot[s] = row_tot.get(s, 0) + n
         # fixed-horizon value iteration; deterministic summation order
-        v = {conversion: 1.0}
-        for _ in range(horizon):
-            nxt = {conversion: 1.0}
+        v = {ATTRIBUTION_CONVERSION: 1.0}
+        for _ in range(ATTRIBUTION_HORIZON):
+            nxt = {ATTRIBUTION_CONVERSION: 1.0}
             for s in sorted(row_tot):
                 total = 0.0
                 for d in sorted(v):

@@ -42,13 +42,15 @@ from big_data_validator_spark.operators import (
 )
 
 
+_DAMPING_NUM = 85
+_DAMPING_DEN = 100
+
+
 def pagerank_integer(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
     init: int = 10**12,
 ) -> DataFrame:
     """Fixed-point integer PageRank: ``iters`` synchronous iterations
@@ -90,7 +92,7 @@ def pagerank_integer(
     # iteration's contribution join needs, so the cache serves it back
     # without a new Exchange.
     ew = pin(e.join(outd, "_src").repartition(n_parts, "_src"))
-    base = ((damping_den - damping_num) * init) // damping_den
+    base = ((_DAMPING_DEN - _DAMPING_NUM) * init) // _DAMPING_DEN
     r = nodes.select("node", F.lit(init).cast("long").alias("rank_q"))
     for _ in range(iters):
         contrib = ew.join(
@@ -110,7 +112,7 @@ def pagerank_integer(
             (
                 F.lit(base)
                 + F.expr(
-                    f"({damping_num} * coalesce(_m, 0L)) div {damping_den}"
+                    f"({_DAMPING_NUM} * coalesce(_m, 0L)) div {_DAMPING_DEN}"
                 )
             )
             .cast("long")

@@ -126,13 +126,17 @@ def link_entity_pairs(
     )
 
 
+#: EM starting point: per-field agreement probability under match (m)
+#: and non-match (u), and the match prevalence λ.
+INIT_M = 0.9
+INIT_U = 0.1
+INIT_LAMBDA = 0.5
+
+
 def fs_em_weights(
     pairs: DataFrame,
     agree_cols: Sequence[str],
     iters: int = 3,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    init_lambda: float = 0.5,
 ) -> "list[tuple[str, int]]":
     """LEARN Fellegi–Sunter match/non-match weights by EM over the
     candidate pairs' agreement patterns — the probabilistic-linkage
@@ -183,7 +187,7 @@ def fs_em_weights(
         n_total += x
     if n_total == 0:
         raise ValueError("no candidate pairs — nothing to estimate")
-    lam, m, u = _fs_em_core(ns, k, iters, init_m, init_u, init_lambda)
+    lam, m, u = _fs_em_core(ns, k, iters)
     out = [("lambda", int(math.floor(lam * 1000000.0)))]
     for i, c in enumerate(cols):
         out.append((f"m_{c}", int(math.floor(m[i] * 1000000.0))))
@@ -217,9 +221,6 @@ def _fs_em_core(
     ns: "list[int]",
     k: int,
     iters: int,
-    init_m: float,
-    init_u: float,
-    init_lambda: float,
 ) -> "tuple[float, list[float], list[float]]":
     """The EM loop over pattern counts (see :func:`fs_em_weights` for
     the exactness contract) — shared by the weight-estimation and the
@@ -228,9 +229,9 @@ def _fs_em_core(
     for x in ns:
         n_total += x
     nf = float(n_total)
-    lam = float(init_lambda)
-    m = [float(init_m)] * k
-    u = [float(init_u)] * k
+    lam = INIT_LAMBDA
+    m = [INIT_M] * k
+    u = [INIT_U] * k
     for _ in range(iters):
         w = _fs_posteriors(k, lam, m, u)
         sm = 0.0
@@ -262,15 +263,16 @@ def _fs_em_core(
     return lam, m, u
 
 
+#: Verdict thresholds on the floor-quantized posterior (ppm):
+#: match >= MATCH_PPM > possible >= POSSIBLE_PPM > non-match.
+MATCH_PPM = 900_000
+POSSIBLE_PPM = 100_000
+
+
 def fs_classify_pairs(
     pairs: DataFrame,
     agree_cols: Sequence[str],
     iters: int = 3,
-    match_ppm: int = 900_000,
-    possible_ppm: int = 100_000,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    init_lambda: float = 0.5,
 ) -> DataFrame:
     """CLASSIFY candidate pairs by Fellegi–Sunter posterior match
     probability — the decision step that completes the linkage loop
@@ -292,8 +294,6 @@ def fs_classify_pairs(
     k = len(cols)
     if not 1 <= k <= 8:
         raise ValueError(f"need 1..8 agreement columns, got {k}")
-    if not 0 <= possible_ppm <= match_ppm <= 1_000_000:
-        raise ValueError("need 0 <= possible_ppm <= match_ppm <= 1e6")
     rows = (
         pairs.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -308,7 +308,7 @@ def fs_classify_pairs(
     ]
     if sum(ns) == 0:
         raise ValueError("no candidate pairs — nothing to classify")
-    lam, m, u = _fs_em_core(ns, k, iters, init_m, init_u, init_lambda)
+    lam, m, u = _fs_em_core(ns, k, iters)
     w = _fs_posteriors(k, lam, m, u)
     import math
 
@@ -322,9 +322,9 @@ def fs_classify_pairs(
     out = pairs.withColumn("posterior_ppm", post.cast("long"))
     return out.withColumn(
         "verdict",
-        F.when(F.col("posterior_ppm") >= match_ppm, F.lit("match"))
+        F.when(F.col("posterior_ppm") >= MATCH_PPM, F.lit("match"))
         .when(
-            F.col("posterior_ppm") >= possible_ppm, F.lit("possible")
+            F.col("posterior_ppm") >= POSSIBLE_PPM, F.lit("possible")
         )
         .otherwise(F.lit("non_match")),
     )

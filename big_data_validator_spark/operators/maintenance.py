@@ -10,12 +10,14 @@ the rewrite into fewer, sanely-sized files from the fragment inventory.
 from __future__ import annotations
 
 
+_EST_ROW_BYTES = 64
+
+
 def compaction_manifest(
     frags,
     target_rows: int,
     frag_col: str = "frag",
     rows_col: str = "n_rows",
-    est_row_bytes: int = 64,
 ):
     """Greedy sequential bin-packing of a fragment inventory into
     compaction output files: fragments are laid end-to-end in
@@ -28,7 +30,7 @@ def compaction_manifest(
     single global cumulative-sum window here is bounded by the file
     count, never by the data; the plan is pure arithmetic over the
     inventory and any engine reproduces it exactly.  ``est_bytes`` is
-    a rows × ``est_row_bytes`` planning estimate (real byte sizes are
+    a rows × ``_EST_ROW_BYTES`` planning estimate (real byte sizes are
     engine/encoding-dependent; row counts are the portable currency).
 
     Returns ``(frag, n_rows, est_bytes, out_file)``.
@@ -52,7 +54,7 @@ def compaction_manifest(
         .select(
             frag_col,
             rows_col,
-            (F.col(rows_col) * F.lit(est_row_bytes))
+            (F.col(rows_col) * F.lit(_EST_ROW_BYTES))
             .cast("long")
             .alias("est_bytes"),
             F.expr(f"_cum_before div {int(target_rows)}").alias(

@@ -10,7 +10,7 @@ oracles can reproduce.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -163,14 +163,17 @@ def resize_assets(
     return assets.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-def sample_frames(assets: DataFrame, num_frames: int = 4) -> DataFrame:
-    """Sample ``num_frames`` evenly-spaced frames from each video asset —
+_NUM_FRAMES = 4
+
+
+def sample_frames(assets: DataFrame) -> DataFrame:
+    """Sample ``_NUM_FRAMES`` evenly-spaced frames from each video asset —
     a one-to-many ``mapInPandas`` (each input row yields multiple output
     rows; Arrow batches amortize the fan-out).  Frame payloads are
     deterministic byte slices standing in for decoded frames; ``ts_ms``
     spaces frames evenly across the asset's duration.
 
-    Scale note: the output is ``num_frames``× the video row count but each
+    Scale note: the output is ``_NUM_FRAMES``× the video row count but each
     frame row is payload/num_frames wide — total bytes stay ~constant and
     the exploded rows inherit the input partitioning (no shuffle)."""
 
@@ -180,11 +183,11 @@ def sample_frames(assets: DataFrame, num_frames: int = 4) -> DataFrame:
             for _, r in pdf[pdf["media_type"] == "video"].iterrows():
                 payload = r["payload"] or b""
                 dur = r["duration_ms"] or 0
-                step = max(len(payload) // num_frames, 1)
-                for i in range(num_frames):
+                step = max(len(payload) // _NUM_FRAMES, 1)
+                for i in range(_NUM_FRAMES):
                     rows["asset_id"].append(r["asset_id"])
                     rows["frame_index"].append(i)
-                    rows["ts_ms"].append(int(dur * i / num_frames))
+                    rows["ts_ms"].append(int(dur * i / _NUM_FRAMES))
                     rows["frame_payload"].append(
                         payload[i * step : (i + 1) * step]
                     )
@@ -253,12 +256,14 @@ def phash_hashes(
     return out
 
 
+_PHASH_MAX_BUCKET = 1000
+
+
 def phash_near_dup_pairs(
     assets: DataFrame,
     max_hamming: int = 3,
     id_col: str = "asset_id",
     payload_col: str = "payload",
-    max_bucket_size: Optional[int] = 1000,
 ) -> DataFrame:
     """Perceptual-hash NEAR-DUP pairs over binary assets — the
     multimodal dedup tier (image/frame near-dup by dHash), completing
@@ -318,7 +323,7 @@ def phash_near_dup_pairs(
     raw = capped_bucket_pairs(
         bands.select("id", "_band_idx", "_band_val", "lo", "hi"),
         ["_band_idx", "_band_val"],
-        max_bucket_size,
+        _PHASH_MAX_BUCKET,
         payload_cols=["lo", "hi"],
     )
     ham = F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")

@@ -12,10 +12,9 @@ no matter which columns are profiled, so sinks/dashboards don't churn.
 The wide→long pivot happens on the single aggregate row via ``stack``,
 never on data rows.
 
-``exact_distinct=True`` uses ``COUNT(DISTINCT)`` (one extra expand of
-the agg, still one scan; oracle-exact).  At 100 TB flip it to
-``False`` for HLL ``approx_count_distinct`` — the standard profiling
-trade-off.
+Distinct counts are exact ``COUNT(DISTINCT)`` (one extra expand of the
+agg, still one scan; oracle-exact).  ``operators/sketches.py`` holds the
+mergeable sketches for where an exact count is too dear.
 """
 
 from __future__ import annotations
@@ -25,7 +24,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_validator_spark.operators import block_scan, pin
+from big_data_validator_spark.operators import block_scan, checkpoint, pin
 
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
 _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
@@ -34,12 +33,12 @@ _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
 def profile_table(
     df: DataFrame,
     columns: Optional[Sequence[str]] = None,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """Profile ``columns`` (default: all non-complex columns) in one
     aggregation pass.  Returns ``(column, metric, value)`` with metrics:
 
     - every column: ``row_count``, ``null_count``, ``distinct_count``
+      (exact)
     - numeric: ``min``, ``max``, ``mean``, ``stddev`` (sample)
     - string: ``min_length``, ``max_length``, ``avg_length``
     - date / timestamp (incl. NTZ): ``min_epoch_s``, ``max_epoch_s`` —
@@ -69,12 +68,7 @@ def profile_table(
     for c in columns:
         t = dtypes[c]
         add(c, "null_count", F.sum(F.col(c).isNull().cast("long")).cast("double"))
-        distinct = (
-            F.count_distinct(F.col(c))
-            if exact_distinct
-            else F.approx_count_distinct(c)
-        )
-        add(c, "distinct_count", distinct.cast("double"))
+        add(c, "distinct_count", F.count_distinct(F.col(c)).cast("double"))
         if t in _NUMERIC or t.startswith("decimal"):
             add(c, "min", F.min(c).cast("double"))
             add(c, "max", F.max(c).cast("double"))
@@ -171,10 +165,12 @@ def functional_dependency_profile(
     )
 
 
+_BENFORD_DECIMALS = 2
+
+
 def benford_first_digit(
     df: DataFrame,
     col: str,
-    decimals: int = 2,
 ) -> DataFrame:
     """First-significant-digit distribution of a positive numeric column
     against Benford's law — the classic fabricated-data / unit-mixup
@@ -196,7 +192,7 @@ def benford_first_digit(
     import math
 
     spark = df.sparkSession
-    scale = 10 ** decimals
+    scale = 10 ** _BENFORD_DECIMALS
     digit = F.substring(
         F.round(F.col(col) * F.lit(scale)).cast("bigint").cast("string"),
         1,
@@ -280,7 +276,6 @@ def metrics_history(
     runs: Sequence[tuple],
     columns: Optional[Sequence[str]] = None,
     run_col: str = "run_id",
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """Deequ-style metrics repository builder: profile each ``(run_id,
     DataFrame)`` snapshot with :func:`profile_table` and stack the long
@@ -297,9 +292,7 @@ def metrics_history(
     parts = []
     for run_id, df in runs:
         parts.append(
-            profile_table(
-                df, columns=columns, exact_distinct=exact_distinct
-            ).select(F.lit(run_id).alias(run_col), "column", "metric", "value")
+            profile_table(df, columns=columns).select(F.lit(run_id).alias(run_col), "column", "metric", "value")
         )
     out = parts[0]
     for p in parts[1:]:
@@ -307,22 +300,24 @@ def metrics_history(
     return out
 
 
+_TREND_TRAILING = 3
+_TREND_Z = 3.0
+
+
 def profile_trend_anomalies(
     history: DataFrame,
     run_col: str = "run_id",
-    trailing: int = 3,
-    z_threshold: float = 3.0,
 ) -> DataFrame:
     """Trend-based validation over a metrics repository: flag any
     ``(column, metric)`` whose CURRENT value deviates from its own
-    trailing-``trailing``-run history — the "compare this run against
+    trailing-``_TREND_TRAILING``-run history — the "compare this run against
     the last N runs" rule that catches slow drifts and sudden breaks a
     two-snapshot diff can't see (the most common production
     data-quality shape; Deequ's AnomalyDetection-on-repository
     pattern).
 
     Per (column, metric): the value, the mean/stddev of the PRECEDING
-    ``trailing`` runs (current excluded — the monitored value must not
+    ``_TREND_TRAILING`` runs (current excluded — the monitored value must not
     contaminate its own baseline, same discipline as
     events_analytics.rolling_zscore_anomalies), the z-score, and
     ``is_anomaly``.  Fewer than 2 preceding observations or zero
@@ -336,7 +331,7 @@ def profile_trend_anomalies(
     w = (
         Window.partitionBy("column", "metric")
         .orderBy(run_col)
-        .rowsBetween(-trailing, -1)
+        .rowsBetween(-_TREND_TRAILING, -1)
     )
     base = history.select(
         run_col,
@@ -362,7 +357,7 @@ def profile_trend_anomalies(
         F.round("_std", 6).alias("trailing_std"),
         F.round(z, 4).alias("z_score"),
         F.coalesce(
-            F.abs(z) > F.lit(float(z_threshold)), F.lit(False)
+            F.abs(z) > F.lit(_TREND_Z), F.lit(False)
         ).alias("is_anomaly"),
     )
 
@@ -591,10 +586,8 @@ def fd_discovery(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     holds)`` per ordered pair.
     """
     cols = list(cols)
-    combos = (
-        df.groupBy(*[F.col(c) for c in cols])
-        .agg(F.count(F.lit(1)).alias("_rows"))
-        .localCheckpoint(eager=True)
+    combos = checkpoint(
+        df.groupBy(*[F.col(c) for c in cols]).agg(F.count(F.lit(1)).alias("_rows"))
     )
     parts = []
     for a in cols:
@@ -654,10 +647,8 @@ def fd_discovery_composite(
     from itertools import combinations
 
     cols = list(cols)
-    combos = (
-        df.groupBy(*[F.col(c) for c in cols])
-        .agg(F.count(F.lit(1)).alias("_rows"))
-        .localCheckpoint(eager=True)
+    combos = checkpoint(
+        df.groupBy(*[F.col(c) for c in cols]).agg(F.count(F.lit(1)).alias("_rows"))
     )
     # all k·(k-1) level-1 verdicts in ONE job (a union of per-pair
     # two-row aggregations over the checkpointed combos frame), not one
@@ -719,12 +710,14 @@ def fd_discovery_composite(
     return out
 
 
+_MAD_K_E4 = 30_000
+_MAD_SCALE_E4 = 14_826
+
+
 def robust_outlier_mad(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    k_e4: int = 30_000,
-    scale_e4: int = 14_826,
 ) -> DataFrame:
     """Robust per-group outlier screen on median/MAD — the
     heavy-tail-safe sibling of the mean/σ z-score rule (one extreme
@@ -769,7 +762,7 @@ def robust_outlier_mad(
     exact_bound = F.lit(float(2**53))
     overflow = (
         F.col("_adev") * F.lit(100_000_000.0) > exact_bound
-    ) | (F.lit(float(k_e4) * float(scale_e4)) * F.col("_mad") > exact_bound)
+    ) | (F.lit(float(_MAD_K_E4) * float(_MAD_SCALE_E4)) * F.col("_mad") > exact_bound)
     flag = F.when(
         overflow,
         F.raise_error(
@@ -781,7 +774,7 @@ def robust_outlier_mad(
         ).cast("boolean"),
     ).otherwise(
         (F.col("_adev") * 10_000 * 10_000)
-        > (F.lit(k_e4) * F.lit(scale_e4) * F.col("_mad"))
+        > (F.lit(_MAD_K_E4) * F.lit(_MAD_SCALE_E4) * F.col("_mad"))
     )
     return (
         dev.join(F.broadcast(mad), group_col)
@@ -906,11 +899,13 @@ def spearman_rank_corr(
     )
 
 
+_VALUE_SCALE = 100
+
+
 def gini_concentration(
     df: DataFrame,
     key_col: str,
     value_col: str,
-    value_scale: int = 100,
     bin_width: int = 1 << 30,
 ) -> DataFrame:
     """Exact-integer GINI coefficient of a per-key value distribution
@@ -941,7 +936,7 @@ def gini_concentration(
     perkey = (
         df.groupBy(F.col(key_col).alias("_k"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .cast("long")
             .alias("_x")
@@ -988,7 +983,6 @@ def hhi_by_group(
     group_col: str,
     key_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer HERFINDAHL-HIRSCHMAN concentration index per
     group — Σ shareᵢ² of each key's value within its group, the
@@ -1010,7 +1004,7 @@ def hhi_by_group(
             F.col(group_col).alias("_g"), F.col(key_col).alias("_k")
         )
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_x")
         )

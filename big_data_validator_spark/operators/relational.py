@@ -206,13 +206,15 @@ def distribution_drift_psi(
     return out
 
 
+_PSI_EPSILON = 1e-6
+
+
 def distribution_drift_psi_split(
     df: DataFrame,
     value_col: str,
     bin_edges: Sequence[float],
     old_pred: Column,
     new_pred: Column,
-    epsilon: float = 1e-6,
 ) -> DataFrame:
     """:func:`distribution_drift_psi` for the common monitoring case
     where BOTH snapshots are predicates over the SAME table (old = last
@@ -248,7 +250,7 @@ def distribution_drift_psi_split(
     frame = spark.createDataFrame(
         [(bb,) for bb in range(len(edges) + 1)], ["bin_id"]
     )
-    eps = F.lit(epsilon)
+    eps = F.lit(_PSI_EPSILON)
     return (
         frame.join(props, "bin_id", "left")
         .select(
@@ -316,16 +318,18 @@ def outlier_zscore_violations(
 
 # ------------------------------------------------------------ skew handling
 
+_SALT_BUCKETS = 16
+
+
 def salted_aggregate(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, Column],
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
 
     Phase 1 groups on (keys..., salt) — a hot key's rows spread across
-    ``salt_buckets`` reducers instead of melting one; phase 2 merges the
+    ``_SALT_BUCKETS`` reducers instead of melting one; phase 2 merges the
     per-salt partials on the true keys (tiny input: one row per key per
     bucket).  Only SUM/COUNT-decomposable aggregates belong here — pass
     the partial expression in ``aggs`` and the helper sums partials.
@@ -334,7 +338,7 @@ def salted_aggregate(
     pins a key to one task.
     """
     salted = df.withColumn(
-        "_salt", (F.rand(seed=42) * salt_buckets).cast("int")
+        "_salt", (F.rand(seed=42) * _SALT_BUCKETS).cast("int")
     )
     phase1 = salted.groupBy(*keys, "_salt").agg(
         *[expr.alias(f"_p_{name}") for name, expr in aggs.items()]
@@ -414,7 +418,7 @@ def asof_join_nearest(
     left_ts: str,
     right_ts: str,
     value_cols: Sequence[str],
-    tolerance_seconds: Optional[float] = None,
+    tolerance_seconds: float,
     direction: str = "nearest",
 ) -> DataFrame:
     """Directional as-of join: each left row picks up ``value_cols``
@@ -423,9 +427,10 @@ def asof_join_nearest(
     the earlier/backward row), ``'backward'`` (latest right at-or-before,
     inclusive) or ``'forward'`` (earliest right at-or-after, inclusive).
     The sensor-fusion / attribution sibling of :func:`asof_join` (the
-    NULL-preserving backward fill); ``tolerance_seconds`` nulls out
-    matches farther than the horizon, completing the full
-    pandas-``merge_asof(direction=..., tolerance=...)`` surface.
+    NULL-preserving backward fill); ``tolerance_seconds`` (required) nulls
+    out matches farther than the horizon — pandas
+    ``merge_asof(direction=..., tolerance=...)``.  An unbounded horizon
+    is not offered: a match any distance away is not a neighbour.
 
     Same scalable shape for every direction — union-and-fill, ONE
     shuffle on the key.  ``'nearest'`` runs TWO window passes over the
@@ -543,16 +548,13 @@ def asof_join_nearest(
             .otherwise(F.col("_fwd"))
         )
     gap = F.unix_micros(F.col("_chosen._rt")) - F.unix_micros(F.col("_t"))
-    out = both.withColumn("_chosen", chosen)
-    if tolerance_seconds is not None:
-        out = out.withColumn(
-            "_chosen",
-            F.when(
-                F.abs(gap)
-                <= F.lit(int(round(tolerance_seconds * 1_000_000))),
-                F.col("_chosen"),
-            ),
-        )
+    out = both.withColumn("_chosen", chosen).withColumn(
+        "_chosen",
+        F.when(
+            F.abs(gap) <= F.lit(int(round(tolerance_seconds * 1_000_000))),
+            F.col("_chosen"),
+        ),
+    )
     return out.select(
         *[F.col(c) for c in lpay],
         *[F.col(f"_chosen.{c}").alias(c) for c in value_cols],
@@ -567,7 +569,7 @@ def point_in_time_join(
     fact_ts: str,
     feature_ts: str,
     feature_cols: Sequence[str],
-    ttl_seconds: Optional[float] = None,
+    ttl_seconds: float,
     age_col: str = "feature_age_us",
 ) -> DataFrame:
     """Feature-store POINT-IN-TIME-CORRECT join: each fact row picks up
@@ -579,7 +581,7 @@ def point_in_time_join(
     semantics): a model trained with features the serving system could
     not have known yet looks great offline and fails online.
 
-    ``ttl_seconds`` expires stale features (a fact farther than the TTL
+    ``ttl_seconds`` (required) expires stale features (a fact farther than the TTL
     from its newest feature gets NULLs, exactly like a serving-side
     feature TTL); ``age_col`` emits the feature's age at fact time in
     exact integer microseconds (>= 0; NULL when unmatched/expired) —
@@ -772,6 +774,9 @@ def heavy_hitters(
     )
 
 
+_MAX_BINS_PER_INTERVAL = 4096
+
+
 def binned_interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
@@ -780,7 +785,6 @@ def binned_interval_overlap_join(
     right_lo: str,
     right_hi: str,
     bin_width: float,
-    max_bins_per_interval: int = 4096,
 ) -> DataFrame:
     """Interval-overlap join (``l_lo < r_hi AND r_lo < l_hi``) for two
     LARGE interval tables — sessions × incident windows, readings ×
@@ -804,7 +808,7 @@ def binned_interval_overlap_join(
             "_bin",
             F.explode(
                 _guarded_bin_sequence(
-                    F.col(lo), F.col(hi), w, max_bins_per_interval
+                    F.col(lo), F.col(hi), w, _MAX_BINS_PER_INTERVAL
                 )
             ),
         )

@@ -23,17 +23,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Granularity of the hash → [0, 1) mapping used for fractions.
 _BUCKETS = 1_000_000
-
-
-def _hash_bucket(key: Column, seed: int) -> Column:
-    """Uniform pseudo-random bucket in [0, _BUCKETS) derived from the key:
-    ``xxhash64`` is JVM-side, codegen'd, and seed-parameterized."""
-    return F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(_BUCKETS))
 
 
 def hash_split(
@@ -42,20 +36,17 @@ def hash_split(
     weights: Sequence[float],
     seed: int = 42,
     split_col: str = "split",
-    portable: bool = False,
 ) -> DataFrame:
     """Tag every row with a split index (0..len(weights)-1) from contiguous
     hash ranges: splits are DISJOINT and COVER the input exactly — the
     train/val/test contract.  A single projection; filter on ``split_col``
     downstream and the predicate pushes into the scan.
 
-    Bucket device: default ``xxhash64`` (JVM codegen, fastest — the
-    100 TB path).  ``portable=True`` switches to the md5-digit device
-    the other samplers use, so ANY engine can recompute which split a
-    key landed in — the property an external auditor (or the DuckDB
-    oracle) needs to certify that no eval row leaked into train.
-    Splits from the two devices differ; pick one per dataset and
-    persist the choice with the split manifest.
+    Bucket device: the first 8 hex digits of ``md5("<key>:<seed>")``,
+    the device the other samplers use, so ANY engine can recompute
+    which split a key landed in — the property an external auditor (or
+    the DuckDB oracle) needs to certify that no eval row leaked into
+    train.  It is still a single map-side projection at any scale.
 
     NULL keys are REJECTED (raise inside the split expression — the
     same contract as ``shuffle_shards``): every NULL row would hash to
@@ -74,30 +65,27 @@ def hash_split(
             )
         ).cast("long"),
     )
-    if portable:
-        bucket = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.encode(
-                            F.concat_ws(
-                                ":",
-                                F.col(key_col).cast("string"),
-                                F.lit(str(seed)),
-                            ),
-                            "UTF-8",
-                        )
-                    ),
-                    1,
-                    8,
+    bucket = F.pmod(
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.encode(
+                        F.concat_ws(
+                            ":",
+                            F.col(key_col).cast("string"),
+                            F.lit(str(seed)),
+                        ),
+                        "UTF-8",
+                    )
                 ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(_BUCKETS),
-        )
-    else:
-        bucket = _hash_bucket(F.col(key_col), seed)
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long"),
+        F.lit(_BUCKETS),
+    )
     expr = F.lit(len(weights) - 1)
     acc = 0.0
     # build right-to-left so each WHEN tests the cumulative upper bound
@@ -261,9 +249,7 @@ def group_leakage_split(
     df: DataFrame,
     group_col: str,
     weights: Sequence[float],
-    seed: int = 42,
     split_col: str = "split",
-    portable: bool = True,
 ) -> DataFrame:
     """Train/val/test split by GROUP, not by row: the split is a pure
     function of ``group_col``, so every member of a group lands in the
@@ -275,18 +261,11 @@ def group_leakage_split(
     fingerprint, MinHash cluster id, …) produced upstream.
 
     Thin by design over :func:`hash_split` — the contract is where the
-    key COMES FROM; the split device (portable md5, disjoint covering
+    key COMES FROM; the split device (md5, disjoint covering
     ranges, NULL rejection) is shared so the same auditability
     properties hold.
     """
-    return hash_split(
-        df,
-        group_col,
-        weights,
-        seed=seed,
-        split_col=split_col,
-        portable=portable,
-    )
+    return hash_split(df, group_col, weights, split_col=split_col)
 
 
 def split_leakage_audit(

@@ -121,6 +121,9 @@ def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
     return kernel
 
 
+SEED = 42
+
+
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -128,7 +131,6 @@ def lsh_ann_topk(
     k: int = 10,
     num_planes: int = 8,
     num_tables: int = 4,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -145,7 +147,7 @@ def lsh_ann_topk(
 
     corpus = rebalance_for_compute(corpus)
     tables = [
-        _random_hyperplanes(dim, num_planes, seed + 1000 * t)
+        _random_hyperplanes(dim, num_planes, SEED + 1000 * t)
         for t in range(num_tables)
     ]
     kernel = lsh_buckets_kernel(tables)
@@ -187,8 +189,11 @@ def lsh_ann_topk(
     )
 
 
+_KMEANS_ITERS = 8
+
+
 def _train_centroids_kmeans(
-    vectors, num_centroids: int, iters: int = 8, seed: int = 42
+    vectors, num_centroids: int, seed: int = 42
 ):
     """Driver-side mini k-means over a bounded sample (numpy, deterministic
     seed + fixed iterations).  The sample is small by construction — the
@@ -200,7 +205,7 @@ def _train_centroids_kmeans(
     rng = np.random.RandomState(seed)
     idx = rng.choice(len(X), size=min(num_centroids, len(X)), replace=False)
     C = X[idx].copy()
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         for c in range(len(C)):
@@ -239,11 +244,12 @@ def ivf_assign_kernel(centroids, nprobe: int):
     return kernel
 
 
+_TRAIN_SAMPLE = 1024
+
+
 def ivf_train(
     corpus: DataFrame,
     num_centroids: int = 16,
-    train_sample: int = 1024,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
@@ -262,10 +268,10 @@ def ivf_train(
         r[1]
         for r in corpus.select(id_col, vec_col)
         .orderBy(id_col)
-        .limit(train_sample)
+        .limit(_TRAIN_SAMPLE)
         .collect()
     ]
-    return _train_centroids_kmeans(sample, num_centroids, seed=seed)
+    return _train_centroids_kmeans(sample, num_centroids, seed=SEED)
 
 
 def ivf_assign_cells(
@@ -329,8 +335,6 @@ def ivf_ann_topk(
     k: int = 10,
     num_centroids: int = 16,
     nprobe: int = 4,
-    train_sample: int = 1024,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -338,7 +342,7 @@ def ivf_ann_topk(
     corpus into cells; each query scores only the ``nprobe`` nearest cells.
 
     At 100 TB: centroid training reads a bounded sample (driver-side
-    k-means over ≤``train_sample`` vectors), cell assignment is one Arrow
+    k-means over ≤``_TRAIN_SAMPLE`` vectors), cell assignment is one Arrow
     matmul pass, and the probe join is an equi-join on cell id — shuffle
     volume O(n) cell tuples, never O(n²) pairs.  Expected scan fraction is
     ``nprobe/num_centroids`` of the corpus per query, the standard IVF
@@ -353,9 +357,7 @@ def ivf_ann_topk(
     from big_data_validator_spark.operators import rebalance_for_compute
 
     corpus = rebalance_for_compute(corpus)
-    centroids = ivf_train(
-        corpus, num_centroids, train_sample, seed, id_col, vec_col
-    )
+    centroids = ivf_train(corpus, num_centroids, id_col=id_col, vec_col=vec_col)
     cells = ivf_assign_cells(corpus, centroids, id_col, vec_col)
     return ivf_probe_topk(cells, queries, centroids, nprobe, k, id_col, vec_col)
 
@@ -365,8 +367,6 @@ def pq_train(
     dim: int,
     num_subspaces: int = 8,
     codes_per_subspace: int = 16,
-    train_sample: int = 1024,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
@@ -392,7 +392,7 @@ def pq_train(
         r[1]
         for r in corpus.select(id_col, vec_col)
         .orderBy(id_col)
-        .limit(train_sample)
+        .limit(_TRAIN_SAMPLE)
         .collect()
     ]
     X = np.asarray(sample, dtype=np.float64)
@@ -400,7 +400,7 @@ def pq_train(
     dsub = dim // num_subspaces
     books = [
         _train_centroids_kmeans(
-            X[:, s * dsub : (s + 1) * dsub], codes_per_subspace, seed=seed + s
+            X[:, s * dsub : (s + 1) * dsub], codes_per_subspace, seed=SEED + s
         )
         for s in range(num_subspaces)
     ]
@@ -438,15 +438,15 @@ def pq_encode_kernel(codebooks):
     return kernel
 
 
+_PQ_CODES = 16
+
+
 def pq_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
     k: int = 10,
     num_subspaces: int = 8,
-    codes_per_subspace: int = 16,
-    train_sample: int = 1024,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -469,8 +469,7 @@ def pq_ann_topk(
 
     corpus = rebalance_for_compute(corpus)
     books = pq_train(
-        corpus, dim, num_subspaces, codes_per_subspace, train_sample, seed,
-        id_col, vec_col,
+        corpus, dim, num_subspaces, _PQ_CODES, id_col=id_col, vec_col=vec_col
     )
     encode = pq_encode_kernel(books)
     coded = corpus.select(F.col(id_col), encode(vec_col).alias("_codes"))
@@ -729,7 +728,6 @@ def ann_topk_exactint(
     k: int = 10,
     num_planes: int = 8,
     num_tables: int = 4,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant_scale: int = 100_000,
@@ -764,7 +762,7 @@ def ann_topk_exactint(
 
     corpus = rebalance_for_compute(corpus)
     tables = [
-        quantized_hyperplanes(dim, num_planes, seed + 1000 * t, plane_scale)
+        quantized_hyperplanes(dim, num_planes, SEED + 1000 * t, plane_scale)
         for t in range(num_tables)
     ]
     kernel = int_lsh_buckets_kernel(tables)
@@ -1021,17 +1019,19 @@ def two_level_assign_kernel(
     return kernel
 
 
+#: Integer k-means rounds of the SemDeDup quantizer (its oracle reads it).
+SEMDEDUP_KMEANS_ITERS = 2
+
+
 def semantic_dedup_exactint(
     df: DataFrame,
     dim: int,
     num_clusters: int = 8,
     threshold_ppm: int = 300_000,
-    kmeans_iters: int = 2,
     train_sample: int = 1024,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant_scale: int = 100_000,
-    max_cluster_size: Optional[int] = None,
     target_cluster_size: Optional[int] = None,
     train_oversample: int = 4,
     train_sample_cap: int = 65_536,
@@ -1058,8 +1058,9 @@ def semantic_dedup_exactint(
       Arrow int64 matmul, ties to lowest centroid id);
     - within-cluster candidate pairs through
       :func:`~big_data_validator_spark.operators.dedup.capped_bucket_pairs`
-      (the repo-wide skew guard; the within-cluster-only discipline is
-      pinned in tests);
+      with no cap: every within-cluster pair is compared, so the verdict
+      stays exact (the within-cluster-only discipline is pinned in
+      tests);
     - the duplicate verdict is the sqrt-free integer predicate
       ``dot > 0 ∧ dot²·10¹² ≥ t_ppm²·|a|²·|b|²`` in DECIMAL(38,0).
 
@@ -1068,9 +1069,9 @@ def semantic_dedup_exactint(
 
     Scale: training is a bounded deterministic collect (the
     :func:`ivf_train` device); assignment is one Arrow pass; the pair
-    stage shuffles on the cluster id with the per-cluster cap guarding
-    degenerate corpora; at 100 TB raise ``num_clusters`` so clusters
-    stay pair-join-sized (SemDeDup runs k in the tens of thousands).
+    stage shuffles on the cluster id; at 100 TB raise ``num_clusters``
+    (or use ``target_cluster_size``) so clusters stay pair-join-sized
+    (SemDeDup runs k in the tens of thousands).
 
     **Auto-k (VERDICT r9 item 2)**: pass ``target_cluster_size`` to
     make the cluster count scale WITH the corpus instead of the
@@ -1134,7 +1135,7 @@ def semantic_dedup_exactint(
         for r in q.orderBy("id").limit(train_sample).collect()
     ]
     cents = train_centroids_exactint(
-        sample, num_clusters, iters=kmeans_iters
+        sample, num_clusters, iters=SEMDEDUP_KMEANS_ITERS
     )
     if supercell_size is not None:
         # two-level: supercells trained over the CENTROIDS (k tiny
@@ -1143,7 +1144,7 @@ def semantic_dedup_exactint(
         # rules in lockstep with the oracle's sc*/ca/ps CTEs
         m = (len(cents) + supercell_size - 1) // supercell_size
         sups = train_centroids_exactint(
-            list(enumerate(cents)), m, iters=kmeans_iters
+            list(enumerate(cents)), m, iters=SEMDEDUP_KMEANS_ITERS
         )
         c2s = [
             min(
@@ -1181,7 +1182,7 @@ def semantic_dedup_exactint(
     pairs = capped_bucket_pairs(
         assign.select("id", "qv", "cell"),
         ["cell"],
-        max_cluster_size,
+        None,  # uncapped: every within-cluster pair is compared
         payload_cols=["qv"],
     )
     dot = _int_dot(F.col("qv_a"), F.col("qv_b"))
@@ -1226,11 +1227,13 @@ def semantic_dedup_exactint(
 
 # ------------------------------------------------------------ rank fusion
 
+_RRF_K = 60
+
+
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     k: int = 10,
-    rrf_k: int = 60,
     query_col: str = "query_id",
     id_col: str = "vec_id",
     rank_a_col: str = "rank_a",
@@ -1257,10 +1260,10 @@ def rrf_fuse(
         "rrf_score",
         F.round(
             F.coalesce(
-                1.0 / (F.lit(rrf_k) + F.col(rank_a_col)), F.lit(0.0)
+                1.0 / (F.lit(_RRF_K) + F.col(rank_a_col)), F.lit(0.0)
             )
             + F.coalesce(
-                1.0 / (F.lit(rrf_k) + F.col(rank_b_col)), F.lit(0.0)
+                1.0 / (F.lit(_RRF_K) + F.col(rank_b_col)), F.lit(0.0)
             ),
             6,
         ),
@@ -1274,21 +1277,22 @@ def rrf_fuse(
     )
 
 
+_HYBRID_N = 5
+
+
 def hybrid_lexical_dense_rrf(
     docs: DataFrame,
     emb: DataFrame,
     query_pred,
     dense_top_m: int,
-    n: int = 5,
     k: int = 10,
-    rrf_k: int = 60,
     doc_id_col: str = "doc_id",
     text_col: str = "text",
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Hybrid retrieval: fuse a LEXICAL ranking (shared character
-    ``n``-gram count between query text and candidate text — exact
+    ``_HYBRID_N``-gram count between query text and candidate text — exact
     integers, the BM25-shaped signal without corpus statistics) with a
     DENSE ranking (embedding cosine) via :func:`rrf_fuse`.  This is the
     configuration RRF exists for — two signals with disjoint failure
@@ -1329,9 +1333,9 @@ def hybrid_lexical_dense_rrf(
     # Generate) and substring compiles whole-stage, instead of the
     # interpreted array HOF whose output would be exploded anyway —
     # same distinct (id, shingle) relation, ~6x faster extraction
-    inv = _shingle_rows(docs, text_col, doc_id_col, n)
+    inv = _shingle_rows(docs, text_col, doc_id_col, _HYBRID_N)
     qinv = F.broadcast(
-        _shingle_rows(q_ids, text_col, doc_id_col, n).select(
+        _shingle_rows(q_ids, text_col, doc_id_col, _HYBRID_N).select(
             F.col("id").alias("query_id"), "_sh"
         )
     )
@@ -1365,7 +1369,6 @@ def hybrid_lexical_dense_rrf(
         lex,
         dense,
         k=k,
-        rrf_k=rrf_k,
         id_col=vec_id_col,
         rank_a_col="rank_lex",
         rank_b_col="rank_dense",

@@ -428,13 +428,15 @@ def exact_rank_cdf(
     )
 
 
+_TOL_PPM = 25_000
+
+
 def kll_quantile_monitor(
     df: DataFrame,
     value_col: str,
     day_col: str,
     quantile_pcts: Sequence[int],
     k: int = DEFAULT_K,
-    tol_ppm: int = 25_000,
     block_width: int = 1_000_000,
 ) -> DataFrame:
     """End-to-end sketch-vs-exact monitor, oracle-ready: build one
@@ -467,14 +469,13 @@ def kll_quantile_monitor(
         k,
     )
     est = kll_rollup_quantiles(per_day, pcts, k)
-    return kll_verify_quantiles(est, df, value_col, tol_ppm, block_width)
+    return kll_verify_quantiles(est, df, value_col, block_width=block_width)
 
 
 def kll_verify_quantiles(
     est: DataFrame,
     df: DataFrame,
     value_col: str,
-    tol_ppm: int = 25_000,
     block_width: int = 1_000_000,
 ) -> DataFrame:
     """The shared exact-verification leg: given sketch ESTIMATES
@@ -517,7 +518,7 @@ def kll_verify_quantiles(
             "n_rows",
             (
                 F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({int(tol_ppm)} * n_rows) div 1000000")
+                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
             ).alias("est_ok"),
         )
     )
@@ -573,7 +574,6 @@ def kll_group_quantile_monitor(
     day_col: str,
     quantile_pcts: Sequence[int],
     k: int = DEFAULT_K,
-    tol_ppm: int = 25_000,
     block_width: int = 1_000_000,
 ) -> DataFrame:
     """Per-KEY percentile monitor (VERDICT r9 item 4): the shape real
@@ -618,7 +618,7 @@ def kll_group_quantile_monitor(
     )
     est = kll_group_rollup_quantiles(per_key, gcols, pcts, k)
     return kll_group_verify_quantiles(
-        est, src, value_col, gcols, tol_ppm, block_width
+        est, src, value_col, gcols, block_width=block_width
     )
 
 
@@ -627,7 +627,6 @@ def kll_group_verify_quantiles(
     df: DataFrame,
     value_col: str,
     group_cols: Sequence[str],
-    tol_ppm: int = 25_000,
     block_width: int = 1_000_000,
 ) -> DataFrame:
     """Per-GROUP exact-verification leg (the grouped twin of
@@ -636,7 +635,7 @@ def kll_group_verify_quantiles(
     ``(group…, quantile_pct, est, n_rows)`` from ANY builder, compute
     each group's exact percentile at integer rank
     ``(pct·n_g + 99) div 100`` from the grouped block-scan CDF of
-    ``df`` plus the ±``tol_ppm`` rank verdict.  Both relations feed
+    ``df`` plus the ±``_TOL_PPM`` rank verdict.  Both relations feed
     multiple joins (Spark shares no subplans), so both are pinned.
     NULL group keys are excluded on both legs."""
     gcols = list(group_cols)
@@ -676,7 +675,7 @@ def kll_group_verify_quantiles(
             "n_rows",
             (
                 F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({int(tol_ppm)} * n_rows) div 1000000")
+                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
             ).alias("est_ok"),
         )
     )
@@ -691,7 +690,6 @@ def kll_rolling_monitor(
     report_from: str,
     report_to: str,
     k: int = DEFAULT_K,
-    tol_ppm: int = 25_000,
 ) -> DataFrame:
     """Rolling-percentile monitor, oracle-ready: per-day sketches →
     :func:`kll_rolling_quantiles` (sketch-row merges only) per report
@@ -780,7 +778,7 @@ def kll_rolling_monitor(
             "n_rows",
             (
                 F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({int(tol_ppm)} * n_rows) div 1000000")
+                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
             ).alias("est_ok"),
         )
     )

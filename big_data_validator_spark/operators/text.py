@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_validator_spark.operators import checkpoint
+
 # Tiny per-language stopword marker sets for the n-gram/stopword language
 # heuristic.  Chosen to be disjoint across languages so the scoring is
 # well-defined; word-boundary regexes keep matching portable across engines.
@@ -139,13 +141,15 @@ def lang_guess(col: Column) -> Column:
     return expr
 
 
+_TFIDF_K = 3
+
+
 def tfidf_top_terms(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
 ) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document — the classic two-pass corpus
+    """Top-``_TFIDF_K`` TF-IDF terms per document — the classic two-pass corpus
     statistic (keyword extraction / quality signals for curation).
 
     Plan shape at scale: one scan tokenizes and counts term frequencies
@@ -180,7 +184,7 @@ def tfidf_top_terms(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TFIDF_K)
         .select("id", "term", "tf", "df", "score", "rank")
     )
 
@@ -345,11 +349,11 @@ def bpe_learn_merges(
 
     Returns ``[(rank, a, b, pair_count), ...]``.
     """
-    work = words.select(
+    work = checkpoint(words.select(
         F.regexp_replace(F.col(word_col), "(.)", f"{_BPE_SEP}$1{_BPE_SEP}")
         .alias("s"),
         F.col(count_col).cast("long").alias("cnt"),
-    ).localCheckpoint(eager=True)
+    ))
     merges: "list[tuple[int, str, str, int]]" = []
     for rank in range(num_merges):
         syms = F.split(F.btrim(F.col("s"), F.lit(_BPE_SEP)), r"\|\|")
@@ -378,14 +382,14 @@ def bpe_learn_merges(
             break
         a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
         merges.append((rank, a, b, n))
-        work = work.select(
+        work = checkpoint(work.select(
             F.replace(
                 F.col("s"),
                 F.lit(f"{_BPE_SEP}{a}{_BPE_SEP}{_BPE_SEP}{b}{_BPE_SEP}"),
                 F.lit(f"{_BPE_SEP}{a}{b}{_BPE_SEP}"),
             ).alias("s"),
             "cnt",
-        ).localCheckpoint(eager=True)
+        ))
     return merges
 
 
@@ -516,13 +520,11 @@ def unigram_learn_vocab(
     Returns ``[(piece, count), ...]`` for pieces with final count > 0,
     ordered count-desc then piece-asc.
     """
-    work = (
-        words.filter(F.length(F.col(word_col)) <= max_word_len)
-        .select(
+    work = checkpoint(
+        words.filter(F.length(F.col(word_col)) <= max_word_len).select(
             F.col(word_col).alias("w"),
             F.col(count_col).cast("long").alias("cnt"),
         )
-        .localCheckpoint(eager=True)
     )
     cand = unigram_seed_pieces(
         work, num_pieces, max_piece_len, "w", "cnt"

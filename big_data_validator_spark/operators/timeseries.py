@@ -88,13 +88,15 @@ def resample_ffill_daily(
     )
 
 
+_VALUE_SCALE = 100
+
+
 def time_weighted_daily_avg(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     value_col: str,
     order_tiebreak: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Per-key DAILY time-weighted average of an irregularly-sampled
     series (the TWAP every metering / pricing / sensor pipeline needs;
@@ -120,7 +122,7 @@ def time_weighted_daily_avg(
     is safe by construction: per (key, day) the holding times sum to
     at most one day (86_400e6 µs), so |num| ≤ max|vq| · 8.64e10 —
     ~8.6e16 even at vq ~ 1e6 — and a ``raise_error`` guard fires
-    loudly if an extreme ``value_scale``/value range ever pushes the
+    loudly if an extreme ``_VALUE_SCALE``/value range ever pushes the
     exact numerator past 2⁶³.
 
     One shuffle on (key, day) shared by the lead window and the
@@ -138,7 +140,7 @@ def time_weighted_daily_avg(
             day,
             F.col(ts_col),
             F.col(order_tiebreak),
-            F.floor(F.col(value_col) * F.lit(float(value_scale)))
+            F.floor(F.col(value_col) * F.lit(float(_VALUE_SCALE)))
             .cast("long")
             .alias("_vq"),
         )
@@ -421,7 +423,6 @@ def cusum_changepoint(
     df: DataFrame,
     date_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer CUSUM changepoint detection on a daily series —
     the classic "did the level shift, and when" monitor (Page 1954;
@@ -451,7 +452,7 @@ def cusum_changepoint(
     daily = (
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -511,7 +512,6 @@ def binseg_changepoints(
     date_col: str,
     value_col: str,
     depth: int = 2,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer BINARY SEGMENTATION over the CUSUM statistic —
     the multi-changepoint extension of :func:`cusum_changepoint`
@@ -547,7 +547,7 @@ def binseg_changepoints(
     daily = pin(
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -635,7 +635,6 @@ def acf_daily(
     date_col: str,
     value_col: str,
     max_lag: int = 7,
-    value_scale: int = 100,
 ) -> DataFrame:
     """EXACT lag-1..max_lag autocorrelation of a daily series — the
     serial-dependence/seasonality member completing the timeseries
@@ -670,7 +669,7 @@ def acf_daily(
     daily = (
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -734,7 +733,6 @@ def pettitt_changepoint(
     df: DataFrame,
     date_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer PETTITT rank-based changepoint test on a daily
     series (Pettitt 1979) — the nonparametric companion to
@@ -768,7 +766,7 @@ def pettitt_changepoint(
     daily = (
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -826,7 +824,6 @@ def runs_test_daily(
     df: DataFrame,
     date_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer WALD-WOLFOWITZ runs test on the day-over-day
     deltas of a daily series — the randomness monitor completing the
@@ -852,7 +849,7 @@ def runs_test_daily(
     daily = (
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -918,7 +915,6 @@ def xcorr_daily(
     date_b: str,
     value_b: str,
     max_lag: int = 7,
-    scale_a: int = 100,
     scale_b: int = 100,
 ) -> DataFrame:
     """EXACT lagged CROSS-correlation of two daily series — the
@@ -961,7 +957,7 @@ def xcorr_daily(
             )
         )
 
-    joined = daily(df_a, date_a, value_a, scale_a, "_x").join(
+    joined = daily(df_a, date_a, value_a, _VALUE_SCALE, "_x").join(
         daily(df_b, date_b, value_b, scale_b, "_y"), "d"
     )
     w = Window.orderBy("d")
@@ -1043,7 +1039,6 @@ def mann_kendall_trend(
     df: DataFrame,
     date_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Exact-integer MANN-KENDALL trend test on a daily series (Mann
     1945, Kendall 1975) — the SIGNIFICANCE half of the trend question
@@ -1075,7 +1070,7 @@ def mann_kendall_trend(
     daily = (
         df.groupBy(F.col(date_col).cast("date").alias("d"))
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_v")
         )
@@ -1157,7 +1152,6 @@ def ols_trend_by_group(
     group_col: str,
     date_col: str,
     value_col: str,
-    value_scale: int = 100,
 ) -> DataFrame:
     """Per-group ORDINARY-LEAST-SQUARES daily trend — the classical
     fit completing the family's trend question (:func:`theilsen_trend`
@@ -1194,7 +1188,7 @@ def ols_trend_by_group(
             F.col(date_col).cast("date").alias("_d"),
         )
         .agg(
-            F.round(F.sum(value_col) * value_scale)
+            F.round(F.sum(value_col) * _VALUE_SCALE)
             .cast("decimal(38,0)")
             .alias("_y")
         )

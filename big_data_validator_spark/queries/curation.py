@@ -586,7 +586,6 @@ def contamination_ngram_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") >= 20),
         docs.filter(F.col("doc_id") < 20),
         n_words=13,
-        flag_threshold=0.1,
         fpp=0.01,
     )
 

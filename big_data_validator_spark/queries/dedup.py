@@ -77,13 +77,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs (inverted shingle index) on a bounded
     sub-corpus; the unbounded-scale variant is `dedup_minhash_lsh`."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return D.ngram_jaccard_pairs(docs, n=5, threshold=0.5)
+    return D.ngram_jaccard_pairs(docs, threshold=0.5)
 
 
 @query("dedup_minhash_lsh")  # hash-dependent: rows-only check; pytest pins recall
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return D.minhash_dedup_pairs(docs, n=5, num_hashes=64, bands=8, threshold=0.8)
+    return D.minhash_dedup_pairs(docs)
 
 
 @query("dedup_winnowing")  # rolling-hash sketch: rows-only; pytest pins parity
@@ -98,7 +98,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_simhash")  # hash-dependent: rows-only check; pytest pins behavior
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return D.simhash_near_dup_pairs(docs, max_hamming=3)
+    return D.simhash_near_dup_pairs(docs)
 
 
 @query("dedup_minhash_clusters")  # clusters of hash-dependent pairs: rows-only
@@ -108,7 +108,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training pipeline actually consumes (keep one representative per
     CLUSTER, not per pair)."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_dedup_pairs(docs, n=5, num_hashes=64, bands=8, threshold=0.8)
+    pairs = D.minhash_dedup_pairs(docs)
     clusters = D.duplicate_clusters(pairs)
     return (
         clusters.groupBy("cluster_id")
@@ -193,10 +193,19 @@ def dedup_ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         text_col="text",
         id_col="doc_id",
-        n_words=3,
         threshold_e6=500_000,
     )
     return res.orderBy("id_a", "id_b")
+
+
+#: The SemDeDup entries' settings; their oracle builder reads the same.
+_SEMDEDUP_DIM = 64
+_SEMDEDUP_CLUSTERS = 8
+_SEMDEDUP_THRESHOLD_PPM = 300_000
+_SEMDEDUP_TRAIN_SAMPLE = 1024
+_SEMDEDUP_QUANT_SCALE = 100_000
+_SEMDEDUP_OVERSAMPLE = 4
+_SEMDEDUP_SAMPLE_CAP = 65_536
 
 
 def _semantic_dedup(
@@ -207,24 +216,17 @@ def _semantic_dedup(
     clusters; ``clusters`` sets how the clusters are chosen."""
     return S.semantic_dedup_exactint(
         _t(spark, sf_dir, "embeddings"),
-        dim=64,
-        threshold_ppm=300_000,
-        kmeans_iters=2,
-        max_cluster_size=None,
+        dim=_SEMDEDUP_DIM,
+        threshold_ppm=_SEMDEDUP_THRESHOLD_PPM,
+        quant_scale=_SEMDEDUP_QUANT_SCALE,
+        train_oversample=_SEMDEDUP_OVERSAMPLE,
+        train_sample_cap=_SEMDEDUP_SAMPLE_CAP,
         **clusters,
     )
 
 
 def _semantic_dedup_oracle(
-    dim: int = 64,
-    num_clusters: int = 8,
-    threshold_ppm: int = 300_000,
-    kmeans_iters: int = 2,
-    train_sample: int = 1024,
-    quant_scale: int = 100_000,
     target_cluster_size: int | None = None,
-    train_oversample: int = 4,
-    train_sample_cap: int = 65_536,
     supercell_size: int | None = None,
 ) -> str:
     """GENERATE the SemDeDup oracle.  Unlike the hyperplane oracles
@@ -248,7 +250,7 @@ def _semantic_dedup_oracle(
         over the CENTROIDS (two-level mode)."""
         ctes = []
         prv = init
-        for it in range(kmeans_iters):
+        for it in range(S.SEMDEDUP_KMEANS_ITERS):
             a, m, u, c = (
                 f"{pfx}a{it}",
                 f"{pfx}m{it}",
@@ -268,7 +270,7 @@ def _semantic_dedup_oracle(
     {m} AS MATERIALIZED (
       SELECT cid, i, CAST(SUM(qv[i]) AS BIGINT) AS sm,
              CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM {a}, generate_series(1, {dim}) AS g(i)
+      FROM {a}, generate_series(1, {_SEMDEDUP_DIM}) AS g(i)
       GROUP BY 1, 2),
     {u} AS MATERIALIZED (
       SELECT cid, list(sm // cnt ORDER BY i) AS cv FROM {m} GROUP BY 1),
@@ -281,7 +283,7 @@ def _semantic_dedup_oracle(
 
     iter_ctes, prev = kmeans_ctes("s", "c0", "")
     iters_sql = ",\n    ".join(iter_ctes)
-    t2 = threshold_ppm * threshold_ppm
+    t2 = _SEMDEDUP_THRESHOLD_PPM * _SEMDEDUP_THRESHOLD_PPM
     if target_cluster_size is not None:
         # auto-k (VERDICT r9 item 2): k and the sample size are integer
         # functions of COUNT(*) — the oracle recomputes them instead of
@@ -290,8 +292,8 @@ def _semantic_dedup_oracle(
         tgt = target_cluster_size
         kk_cte = f"""kk AS MATERIALIZED (
       SELECT LEAST(k0, sn) AS k, sn FROM (
-        SELECT k0, LEAST(n, {train_oversample} * k0,
-                         {train_sample_cap}) AS sn
+        SELECT k0, LEAST(n, {_SEMDEDUP_OVERSAMPLE} * k0,
+                         {_SEMDEDUP_SAMPLE_CAP}) AS sn
         FROM (SELECT COUNT(*) AS n,
                      (COUNT(*) + {tgt - 1}) // {tgt} AS k0 FROM q))),
     """
@@ -299,8 +301,8 @@ def _semantic_dedup_oracle(
         c0_limit = "(SELECT k FROM kk)"
     else:
         kk_cte = ""
-        s_limit = str(train_sample)
-        c0_limit = str(num_clusters)
+        s_limit = str(_SEMDEDUP_TRAIN_SAMPLE)
+        c0_limit = str(_SEMDEDUP_CLUSTERS)
     if supercell_size is not None:
         # two-level quantizer: retrain the SUPERCELLS over the
         # centroids with the same unrolled trainer (prefix 's_'), map
@@ -369,7 +371,7 @@ def _semantic_dedup_oracle(
     WITH q AS MATERIALIZED (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(floor(x * {quant_scale}.0) AS BIGINT))
+                            x -> CAST(floor(x * {_SEMDEDUP_QUANT_SCALE}.0) AS BIGINT))
                AS qv
       FROM embeddings),
     {kk_cte}s AS MATERIALIZED (
@@ -413,7 +415,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     All verdict arithmetic is the shared exact-integer sqrt-free
     predicate, so every row hashes identically cross-engine."""
     return _semantic_dedup(
-        spark, sf_dir, num_clusters=8, train_sample=1024
+        spark,
+        sf_dir,
+        num_clusters=_SEMDEDUP_CLUSTERS,
+        train_sample=_SEMDEDUP_TRAIN_SAMPLE,
     )
 
 

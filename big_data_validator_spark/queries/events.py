@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from big_data_validator_spark.operators import rebalance_for_compute as _rb
 from big_data_validator_spark.operators.events_analytics import (
+    ATTRIBUTION_CONVERSION,
+    ATTRIBUTION_HORIZON,
     cohort_retention,
     funnel_conversion,
     markov_transitions,
@@ -202,7 +204,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ordered window runs over the per-day AGGREGATE — one row per
     day, a bounded single-partition frame, never over raw events."""
     ev = _t(spark, sf_dir, "events")
-    return rolling_zscore_anomalies(ev, trailing=7, z_threshold=2.0)
+    return rolling_zscore_anomalies(ev)
 
 
 @query(
@@ -290,7 +292,7 @@ def events_anomaly_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered window partitions by weekday over the per-day aggregate
     only (7 × #weeks rows).  Baseline excludes the monitored day."""
     ev = _t(spark, sf_dir, "events")
-    return weekday_seasonal_anomalies(ev, "ts", trailing=4, z_threshold=2.0)
+    return weekday_seasonal_anomalies(ev, "ts")
 
 
 @query(
@@ -437,10 +439,11 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     return survival_km(durs, "t", "obs")
 
 
+#: The channels the attribution entry credits; its oracle lists the same.
+_ATTRIBUTION_CHANNELS = ("click", "error", "signup", "view")
+
+
 def _attribution_oracle(
-    channels: tuple = ("click", "error", "signup", "view"),
-    conversion: str = "purchase",
-    horizon: int = 8,
 ) -> str:
     """Generate the removal-attribution oracle: the same fixed-horizon
     value iteration the Spark operator runs, UNROLLED as one CTE per
@@ -448,18 +451,18 @@ def _attribution_oracle(
     arithmetic on identical transition probabilities, so the two
     engines agree to float noise far below round-6."""
     scen_vals = ", ".join(
-        f"('{c}')" for c in ("__FULL__",) + tuple(channels)
+        f"('{c}')" for c in ("__FULL__",) + _ATTRIBUTION_CHANNELS
     )
     iters = []
     prev = "it0"
-    for k in range(1, horizon + 1):
+    for k in range(1, ATTRIBUTION_HORIZON + 1):
         iters.append(f"""
     it{k} AS (
       SELECT t.scenario, t.src AS state, SUM(t.p * v.vp) AS vp
       FROM t JOIN {prev} v ON v.scenario = t.scenario
                           AND v.state = t.dst
       GROUP BY 1, 2
-      UNION ALL SELECT scenario, '{conversion}' AS state, 1.0 AS vp
+      UNION ALL SELECT scenario, '{ATTRIBUTION_CONVERSION}' AS state, 1.0 AS vp
       FROM scen)""")
         prev = f"it{k}"
     return f"""
@@ -473,7 +476,7 @@ def _attribution_oracle(
       SELECT s.user_id, s.pos, s.e
       FROM seq s LEFT JOIN (
         SELECT user_id, MIN(pos) AS ppos FROM seq
-        WHERE e = '{conversion}' GROUP BY 1) f USING (user_id)
+        WHERE e = '{ATTRIBUTION_CONVERSION}' GROUP BY 1) f USING (user_id)
       WHERE f.ppos IS NULL OR s.pos <= f.ppos),
     trans AS (
       SELECT e AS src,
@@ -485,7 +488,7 @@ def _attribution_oracle(
       SELECT src, dst FROM trans WHERE dst IS NOT NULL
       UNION ALL
       SELECT src, 'END' AS dst FROM trans
-      WHERE dst IS NULL AND src <> '{conversion}'),
+      WHERE dst IS NULL AND src <> '{ATTRIBUTION_CONVERSION}'),
     counts AS (SELECT src, dst, COUNT(*) AS n FROM edges GROUP BY 1, 2),
     scen AS (SELECT * FROM (VALUES {scen_vals}) AS sv(scenario)),
     scc AS (
@@ -498,12 +501,12 @@ def _attribution_oracle(
                  CAST(n AS DOUBLE)
                    / SUM(n) OVER (PARTITION BY scenario, src) AS p
           FROM scc),
-    it0 AS (SELECT scenario, '{conversion}' AS state, 1.0 AS vp
+    it0 AS (SELECT scenario, '{ATTRIBUTION_CONVERSION}' AS state, 1.0 AS vp
             FROM scen),{",".join(iters)[1:]},
     final AS (
       SELECT s.scenario, COALESCE(f.vp, 0.0) AS p
       FROM scen s LEFT JOIN (
-        SELECT scenario, vp FROM it{horizon} WHERE state = 'START') f
+        SELECT scenario, vp FROM it{ATTRIBUTION_HORIZON} WHERE state = 'START') f
       USING (scenario)),
     eff AS (
       SELECT f.scenario AS channel,
@@ -537,6 +540,4 @@ def events_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     latency), so the entry is data-volume-independent past the one
     pass."""
     ev = _t(spark, sf_dir, "events")
-    return removal_attribution(
-        ev, channels=["click", "error", "signup", "view"], horizon=8
-    )
+    return removal_attribution(ev, channels=list(_ATTRIBUTION_CHANNELS))

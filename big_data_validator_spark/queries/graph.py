@@ -98,13 +98,17 @@ def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_propagation_oracle(iters: int = 3) -> str:
+#: Propagation rounds of the label-propagation entry and its oracle.
+_LP_ITERS = 3
+
+
+def _label_propagation_oracle() -> str:
     """Unrolled min-label propagation (the pagerank CTE device): one
     (neighbor-min LEFT JOIN + LEAST) stage per iteration over the
     symmetrized distinct edge set."""
     stages = []
     prev = "lab0"
-    for it in range(1, iters + 1):
+    for it in range(1, _LP_ITERS + 1):
         cur = f"lab{it}"
         stages.append(
             f"""{cur} AS MATERIALIZED (
@@ -133,7 +137,7 @@ def _label_propagation_oracle(iters: int = 3) -> str:
     """
 
 
-@query("graph_label_propagation", oracle=_label_propagation_oracle(3))
+@query("graph_label_propagation", oracle=_label_propagation_oracle())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label propagation over the HIGH-VALUE customer↔supplier
     flow subgraph (operators/graph.py:label_propagation_min — VERDICT
@@ -172,7 +176,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = directed.union(
         directed.select(F.col("dst"), F.col("src"))
     ).distinct()
-    labels = label_propagation_min(und, iters=3)
+    labels = label_propagation_min(und, iters=_LP_ITERS)
     return labels.orderBy("node")
 
 

@@ -9,6 +9,11 @@ from pyspark.sql import functions as F
 from big_data_validator_spark.operators import pin
 from big_data_validator_spark.operators import dedup as D
 from big_data_validator_spark.operators.linkage import (
+    INIT_LAMBDA,
+    INIT_M,
+    INIT_U,
+    MATCH_PPM,
+    POSSIBLE_PPM,
     fs_classify_pairs,
     fs_em_weights,
     golden_records,
@@ -101,11 +106,15 @@ def link_part_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _part_matches(part)
 
 
-def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
+#: EM iterations of both Fellegi–Sunter entries and their oracles.
+_FS_ITERS = 3
+
+
+def _fs_em_ctes(extra_estep: bool = False) -> list:
     """GENERATE the Fellegi–Sunter EM CTE chain: candidate pairs via
     the same (name-token × size) blocking SQL as the linkage entry
     (per-pair agreements in ``pag``), the 8-pattern pivot, then
-    ``iters`` EM iterations UNROLLED — per iteration one
+    ``_FS_ITERS`` EM iterations UNROLLED — per iteration one
     class-likelihood CTE (products ascending field), one
     responsibility CTE (single divisions), one parameter CTE (pattern
     sums folded ascending g, exactly the operator's pinned loop
@@ -149,12 +158,12 @@ def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
         for g in range(8)
     ) + """ AS DOUBLE) AS nf
       FROM pat),
-    it0 AS MATERIALIZED (
-      SELECT CAST(0.5 AS DOUBLE) AS lam,
-             CAST(0.9 AS DOUBLE) AS m1, CAST(0.9 AS DOUBLE) AS m2,
-             CAST(0.9 AS DOUBLE) AS m3,
-             CAST(0.1 AS DOUBLE) AS u1, CAST(0.1 AS DOUBLE) AS u2,
-             CAST(0.1 AS DOUBLE) AS u3)"""]
+    """ + f"""it0 AS MATERIALIZED (
+      SELECT CAST({INIT_LAMBDA} AS DOUBLE) AS lam,
+             CAST({INIT_M} AS DOUBLE) AS m1, CAST({INIT_M} AS DOUBLE) AS m2,
+             CAST({INIT_M} AS DOUBLE) AS m3,
+             CAST({INIT_U} AS DOUBLE) AS u1, CAST({INIT_U} AS DOUBLE) AS u2,
+             CAST({INIT_U} AS DOUBLE) AS u3)"""]
 
     def like(g: int, cls: str) -> str:
         base = "lam" if cls == "m" else "(1.0 - lam)"
@@ -164,7 +173,7 @@ def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
             fac.append(v if (g >> i) & 1 else f"(1.0 - {v})")
         return " * ".join(fac)
 
-    for t in range(1, iters + 1):
+    for t in range(1, _FS_ITERS + 1):
         pm = ",\n             ".join(
             f"{like(g, 'm')} AS pm{g}" for g in range(8)
         )
@@ -215,7 +224,7 @@ def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
              {mu}
       FROM w{t}, s{t}, pv)""")
     if extra_estep:
-        t = iters + 1
+        t = _FS_ITERS + 1
         pm = ",\n             ".join(
             f"{like(g, 'm')} AS pm{g}" for g in range(8)
         )
@@ -236,31 +245,31 @@ def _fs_em_ctes(iters: int = 3, extra_estep: bool = False) -> list:
     return parts
 
 
-def _fs_em_oracle_sql(iters: int = 3) -> str:
-    parts = _fs_em_ctes(iters)
+def _fs_em_oracle_sql() -> str:
+    parts = _fs_em_ctes()
     fin = [
         "SELECT 'lambda' AS param, CAST(FLOOR(lam * 1000000.0) AS "
-        f"BIGINT) AS value_ppm FROM it{iters}"
+        f"BIGINT) AS value_ppm FROM it{_FS_ITERS}"
     ]
     for i, c in enumerate(["p_brand_eq", "p_type_eq", "band_eq"]):
         fin.append(
             f"SELECT 'm_{c}', CAST(FLOOR(m{i + 1} * 1000000.0) AS "
-            f"BIGINT) FROM it{iters}"
+            f"BIGINT) FROM it{_FS_ITERS}"
         )
         fin.append(
             f"SELECT 'u_{c}', CAST(FLOOR(u{i + 1} * 1000000.0) AS "
-            f"BIGINT) FROM it{iters}"
+            f"BIGINT) FROM it{_FS_ITERS}"
         )
     return ",".join(parts) + "\n    " + "\n    UNION ALL\n    ".join(fin)
 
 
-def _fs_classify_oracle_sql(iters: int = 3) -> str:
+def _fs_classify_oracle_sql() -> str:
     """The classify oracle: the EM chain + final E-step, then every
     pair stamped with its pattern's floor-quantized posterior and the
     integer-threshold verdict (match >= 900000 ppm > possible >=
     100000 ppm > non-match)."""
-    parts = _fs_em_ctes(iters, extra_estep=True)
-    t = iters + 1
+    parts = _fs_em_ctes(extra_estep=True)
+    t = _FS_ITERS + 1
     post = "CASE " + " ".join(
         f"WHEN g1 = {g & 1} AND g2 = {(g >> 1) & 1} "
         f"AND g3 = {(g >> 2) & 1} THEN w{g}"
@@ -272,15 +281,15 @@ def _fs_classify_oracle_sql(iters: int = 3) -> str:
     SELECT id_a, id_b,
            g1 AS p_brand_eq, g2 AS p_type_eq, g3 AS band_eq,
            posterior_ppm,
-           CASE WHEN posterior_ppm >= 900000 THEN 'match'
-                WHEN posterior_ppm >= 100000 THEN 'possible'
+           CASE WHEN posterior_ppm >= {MATCH_PPM} THEN 'match'
+                WHEN posterior_ppm >= {POSSIBLE_PPM} THEN 'possible'
                 ELSE 'non_match' END AS verdict
     FROM (
       SELECT pag.*,
              CAST(FLOOR(({post}) * 1000000.0) AS BIGINT)
                AS posterior_ppm
       FROM pag, w{t})
-    WHERE posterior_ppm >= 100000"""
+    WHERE posterior_ppm >= {POSSIBLE_PPM}"""
     )
 
 
@@ -303,7 +312,7 @@ def link_fs_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = fs_em_weights(
         _fs_candidates(spark, sf_dir),
         ["p_brand_eq", "p_type_eq", "band_eq"],
-        iters=3,
+        iters=_FS_ITERS,
     )
     return spark.createDataFrame(params, "param string, value_ppm long")
 
@@ -328,7 +337,7 @@ def link_fs_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fs_classify_pairs(
         pin(_fs_candidates(spark, sf_dir)),
         ["p_brand_eq", "p_type_eq", "band_eq"],
-        iters=3,
+        iters=_FS_ITERS,
     ).filter(F.col("verdict") != "non_match").select(
         "id_a",
         "id_b",

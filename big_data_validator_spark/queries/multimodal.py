@@ -150,7 +150,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable."""
     docs = _t(spark, sf_dir, "documents")
     assets = M.assets_from_documents(docs)
-    frames = M.sample_frames(assets, num_frames=4)
+    frames = M.sample_frames(assets)
     return frames.agg(
         F.count(F.lit(1)).alias("frame_count"),
         F.sum(F.octet_length("frame_payload")).cast("long").alias(

@@ -152,7 +152,6 @@ def agg_salted_skew_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "line_count": F.count(F.lit(1)),
             "total_qty": F.sum("l_quantity"),
         },
-        salt_buckets=16,
     )
     return out.select(
         "l_returnflag",
@@ -1875,7 +1874,6 @@ def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         day_col="day",
         quantile_pcts=[50, 90, 99],
         k=200,
-        tol_ppm=25_000,
         block_width=1_000_000,
     )
     return res.orderBy("quantile_pct")
@@ -1933,7 +1931,6 @@ def agg_kll_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         day_col="day",
         quantile_pcts=[50, 90],
         k=200,
-        tol_ppm=25_000,
         block_width=1_000_000,
     )
     return res.orderBy("o_orderpriority", "quantile_pct")
@@ -1996,7 +1993,6 @@ def agg_kll_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         report_from="1995-01-01",
         report_to="1995-01-31",
         k=200,
-        tol_ppm=25_000,
     )
     return res.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),

@@ -446,7 +446,7 @@ def rule_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scaled, rounded, string head) — engine-stable where float
     log10/pow extraction is not; all 9 digits always present."""
     o = _t(spark, sf_dir, "orders")
-    return benford_first_digit(o, "o_totalprice", decimals=2)
+    return benford_first_digit(o, "o_totalprice")
 
 
 @query(
@@ -691,8 +691,6 @@ def rule_profile_trend_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     return profile_trend_anomalies(
         hist.filter(F.col("metric").isin(keep)),
-        trailing=3,
-        z_threshold=3.0,
     )
 
 

@@ -126,7 +126,7 @@ def train_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split
-    (operators/sampling.py: hash_split, portable md5 device): splits
+    (operators/sampling.py: hash_split, md5 device): splits
     are DISJOINT and COVER the corpus exactly, and because the bucket
     is an engine-portable digest the ORACLE recomputes the exact
     membership — the auditability a leakage claim needs ("prove eval
@@ -134,9 +134,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     split).  Zero shuffles: one projection + the summary aggregation;
     the id checksum per split pins membership, not just sizes."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    tagged = hash_split(
-        docs, "doc_id", [0.8, 0.1, 0.1], seed=42, portable=True
-    )
+    tagged = hash_split(docs, "doc_id", [0.8, 0.1, 0.1], seed=42)
     return tagged.groupBy("split").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("doc_id").cast("long").alias("sum_doc_id"),
@@ -181,7 +179,7 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS test-set contamination), and the shipped ``straddling_groups``
     column is the audited proof it cannot happen here (0 by
     construction, recomputed — not assumed — by both engines).  The
-    portable md5 split device means an external auditor re-derives
+    md5 split device means an external auditor re-derives
     every membership.  One projection + two aggregations; nothing
     joins at row grain."""
     docs = _t(spark, sf_dir, "documents").select(
@@ -189,9 +187,7 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.md5(F.encode(F.col("text"), "UTF-8")).alias("grp"),
     )
-    tagged = group_leakage_split(
-        docs, "grp", [0.8, 0.1, 0.1], seed=42, portable=True
-    )
+    tagged = group_leakage_split(docs, "grp", [0.8, 0.1, 0.1])
     return split_leakage_audit(
         tagged, "grp", sum_cols=["n_chars"]
     )

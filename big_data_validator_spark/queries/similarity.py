@@ -280,15 +280,17 @@ def _emb_near_dup_oracle(
     """
 
 
+#: The exact-integer ANN entry's settings; its oracle reads the same.
+_ANN_DIM = 64
+_ANN_K = 10
+_ANN_PLANES = 8
+_ANN_TABLES = 4
+_ANN_QUANT_SCALE = 100_000
+_ANN_PLANE_SCALE = 10_000
+_ANN_QUERIES = 5
+
+
 def _sim_ann_exactint_oracle(
-    dim: int = 64,
-    k: int = 10,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    seed: int = 42,
-    quant_scale: int = 100_000,
-    plane_scale: int = 10_000,
-    query_max_id: int = 5,
 ) -> str:
     """GENERATE the exact-integer ANN top-k oracle from the same
     quantized hyperplanes the Spark kernel uses.  Buckets and dot/norm
@@ -296,10 +298,15 @@ def _sim_ann_exactint_oracle(
     ops over them, so its ORDER BY (ties by id) and floor(·1e6) score
     are bit-identical cross-engine."""
     buckets = _lsh_bucket_ctes(
-        dim, num_planes, num_tables, seed, quant_scale, plane_scale
+        _ANN_DIM,
+        _ANN_PLANES,
+        _ANN_TABLES,
+        S.SEED,
+        _ANN_QUANT_SCALE,
+        _ANN_PLANE_SCALE,
     )
     return f"""{buckets}
-    bq AS (SELECT * FROM b WHERE vec_id < {query_max_id}),
+    bq AS (SELECT * FROM b WHERE vec_id < {_ANN_QUERIES}),
     cand AS (
       SELECT DISTINCT bq.vec_id AS query_id, bc.vec_id AS cand_id
       FROM bq JOIN b bc
@@ -323,7 +330,7 @@ def _sim_ann_exactint_oracle(
     SELECT query_id, cand_id AS vec_id,
            CAST(floor(cos * 1000000) AS BIGINT) AS cosine_e6,
            CAST(rank AS INT) AS rank
-    FROM r WHERE rank <= {k}
+    FROM r WHERE rank <= {_ANN_K}
     """
 
 
@@ -341,8 +348,17 @@ def sim_ann_exactint(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree with DuckDB exactly.  Query side = vec_id < 5, broadcast;
     corpus bucketed in one Arrow pass + one bucket-key shuffle."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    return S.ann_topk_exactint(emb, q, dim=64, k=10)
+    q = emb.filter(F.col("vec_id") < _ANN_QUERIES)
+    return S.ann_topk_exactint(
+        emb,
+        q,
+        dim=_ANN_DIM,
+        k=_ANN_K,
+        num_planes=_ANN_PLANES,
+        num_tables=_ANN_TABLES,
+        quant_scale=_ANN_QUANT_SCALE,
+        plane_scale=_ANN_PLANE_SCALE,
+    )
 
 
 def _emb_near_dup_clusters_oracle(**kw) -> str:
@@ -535,8 +551,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     out = S.hybrid_lexical_dense_rrf(
-        docs, emb, lambda c: c < 5, n=5, k=10, rrf_k=60,
-        dense_top_m=100,
+        docs, emb, lambda c: c < 5, k=10, dense_top_m=100,
     )
     return out.select(
         "query_id",

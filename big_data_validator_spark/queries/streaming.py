@@ -225,7 +225,6 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     def writer(d: _Drain):
         sessions = sessionize_with_state(
             _events_stream(spark, sf_dir, d.root),
-            gap_seconds=1800,
             watermark="36500 days",
         )
         return _memory_sink(sessions, "append")
@@ -799,8 +798,6 @@ def streaming_metrics_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_metrics_repository(spark, f"{d.root}/repo").filter(
                 F.col("metric").isin(keep)
             ),
-            trailing=3,
-            z_threshold=3.0,
         ),
     )
 
@@ -897,7 +894,7 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(cents)
         )
         res = kll_verify_quantiles(
-            est, drained, "c", tol_ppm=25_000, block_width=1_000_000
+            est, drained, "c", block_width=1_000_000
         )
         return res.orderBy("quantile_pct")
 
@@ -983,8 +980,7 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drained = spark.read.parquet(f"{src}/*")
         res = kll_group_verify_quantiles(
-            est, drained, "c", ["event_type"], tol_ppm=25_000,
-            block_width=1_000_000,
+            est, drained, "c", ["event_type"], block_width=1_000_000,
         )
         return res.orderBy("event_type", "quantile_pct")
 
@@ -1199,7 +1195,6 @@ def streaming_mannwhitney_drift(
             value_col="value",
             repo_path=f"{d.root}/repo",
             checkpoint_path=d.checkpoint,
-            value_scale=100,
         ),
         lambda d: read_metrics_repository(spark, f"{d.root}/repo/stats").select(
             "run_id", "n_a", "n_b", "u_a_x2", "u_b_x2", "z"

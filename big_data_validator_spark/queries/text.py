@@ -259,7 +259,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF keywords over the corpus; tail entry, the
     local mirror verifies the row-exact oracle."""
     docs = _t(spark, sf_dir, "documents")
-    return T.tfidf_top_terms(docs, k=3)
+    return T.tfidf_top_terms(docs)
 
 
 @query(
@@ -320,8 +320,12 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_learn_oracle_sql(num_merges: int = 8) -> str:
-    """GENERATE the unrolled BPE-LEARNING oracle: ``num_merges`` stages
+#: Merges the BPE entry learns; its oracle unrolls as many stages.
+_BPE_MERGES = 8
+
+
+def _bpe_learn_oracle_sql() -> str:
+    """GENERATE the unrolled BPE-LEARNING oracle: ``_BPE_MERGES`` stages
     of (pair-count → argmax → merge-everywhere), each CTE MATERIALIZED —
     without the hint DuckDB inlines every reference and the 3 scalar
     subqueries per stage expand the prefix 3^k times (the first attempt
@@ -332,7 +336,7 @@ def _bpe_learn_oracle_sql(num_merges: int = 8) -> str:
       SELECT regexp_replace(w, '(.)', '|\\1|', 'g') AS s,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM toks GROUP BY 1)"""]
-    for i in range(num_merges):
+    for i in range(_BPE_MERGES):
         parts.append(f"""
     p{i} AS MATERIALIZED (
       SELECT pr[1] AS a, pr[2] AS b, SUM(cnt) AS n
@@ -352,7 +356,7 @@ def _bpe_learn_oracle_sql(num_merges: int = 8) -> str:
                          || (SELECT b FROM m{i}) || '|') AS s, cnt
       FROM w{i})""")
     final = "\n    UNION ALL\n    ".join(
-        f"SELECT * FROM m{i}" for i in range(num_merges)
+        f"SELECT * FROM m{i}" for i in range(_BPE_MERGES)
     )
     return ",".join(parts) + "\n    " + final
 
@@ -372,7 +376,7 @@ def text_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word, count) FIRST; iteration cost is vocabulary-bounded, never
     corpus-bounded."""
     wc = _word_counts(spark, sf_dir)
-    merges = bpe_learn_merges(wc, num_merges=8)
+    merges = bpe_learn_merges(wc, num_merges=_BPE_MERGES)
     return spark.createDataFrame(
         merges, "rank int, a string, b string, pair_count long"
     )
@@ -483,11 +487,14 @@ def _unigram_viterbi_ctes(
     return parts
 
 
+#: The unigram entries' trainer settings; their oracles read the same.
+_UNIGRAM_PIECES = 48
+_UNIGRAM_MAX_PIECE_LEN = 4
+_UNIGRAM_EM_ITERS = 2
+_UNIGRAM_MAX_WORD_LEN = 12
+
+
 def _unigram_learn_ctes(
-    num_pieces: int = 48,
-    max_piece_len: int = 4,
-    em_iters: int = 2,
-    max_word_len: int = 12,
 ) -> list:
     """GENERATE the unrolled unigram-LM TRAINING CTE chain (the
     ``_bpe_learn_oracle_sql`` device applied to hard-EM): seed CTEs,
@@ -498,7 +505,7 @@ def _unigram_learn_ctes(
     IEEE ops over exact integers in pinned order, so DuckDB DOUBLEs
     equal the kernel's Python floats bit-for-bit; only INTEGER counts
     are shipped.  Ends at CTE ``v{em_iters}``."""
-    W, L = max_word_len, max_piece_len
+    W, L = _UNIGRAM_MAX_WORD_LEN, _UNIGRAM_MAX_PIECE_LEN
     parts = [f"""
     WITH toks AS MATERIALIZED ({_doc_words()}),
     w0 AS MATERIALIZED (
@@ -512,14 +519,14 @@ def _unigram_learn_ctes(
       GROUP BY 1),
     top AS MATERIALIZED (
       SELECT piece, freq FROM cand
-      ORDER BY freq DESC, piece ASC LIMIT {num_pieces}),
+      ORDER BY freq DESC, piece ASC LIMIT {_UNIGRAM_PIECES}),
     v0 AS MATERIALIZED (
       SELECT piece, CAST(freq AS BIGINT) AS c FROM top
       UNION ALL
       SELECT piece, CAST(freq AS BIGINT) AS c FROM cand
       WHERE len(piece) = 1
         AND piece NOT IN (SELECT piece FROM top))"""]
-    for r in range(em_iters):
+    for r in range(_UNIGRAM_EM_ITERS):
         parts.append(f"""
     tt{r} AS MATERIALIZED (
       SELECT CAST(SUM(c) AS DOUBLE) AS total FROM v{r}),
@@ -537,25 +544,25 @@ def _unigram_learn_ctes(
     return parts
 
 
-def _unigram_learn_oracle_sql(em_iters: int = 2) -> str:
-    parts = _unigram_learn_ctes(em_iters=em_iters)
+def _unigram_learn_oracle_sql() -> str:
+    parts = _unigram_learn_ctes()
     return (
         ",".join(parts)
         + f"""
     SELECT piece, CAST(c AS BIGINT) AS piece_count
-    FROM v{em_iters} WHERE c > 0"""
+    FROM v{_UNIGRAM_EM_ITERS} WHERE c > 0"""
     )
 
 
-def _unigram_encode_oracle_sql(em_iters: int = 2) -> str:
+def _unigram_encode_oracle_sql() -> str:
     """GENERATE the unigram ENCODE oracle: the full learn chain up to
     ``v{T}``, then one more probability CTE over the FINAL counts and
     one more shared Viterbi block segmenting the weighted vocabulary
     under them (exactly a further E-step), with deterministic piece
     ids assigned by final-count-desc / piece-asc row number — the same
     rule the Spark entry's literal id map encodes."""
-    parts = _unigram_learn_ctes(em_iters=em_iters)
-    T = em_iters
+    parts = _unigram_learn_ctes()
+    T = _UNIGRAM_EM_ITERS
     parts.append(f"""
     tte AS MATERIALIZED (
       SELECT CAST(SUM(c) AS DOUBLE) AS total FROM v{T}),
@@ -596,7 +603,11 @@ def text_unigram_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-bounded, and every collect is piece-vocabulary-sized."""
     wc = _word_counts(spark, sf_dir)
     vocab = unigram_learn_vocab(
-        wc, num_pieces=48, max_piece_len=4, em_iters=2, max_word_len=12
+        wc,
+        num_pieces=_UNIGRAM_PIECES,
+        max_piece_len=_UNIGRAM_MAX_PIECE_LEN,
+        em_iters=_UNIGRAM_EM_ITERS,
+        max_word_len=_UNIGRAM_MAX_WORD_LEN,
     )
     return spark.createDataFrame(vocab, "piece string, piece_count long")
 
@@ -617,7 +628,11 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a literal map, zero extra joins Spark-side."""
     wc = _word_counts(spark, sf_dir)
     vocab = unigram_learn_vocab(
-        wc, num_pieces=48, max_piece_len=4, em_iters=2, max_word_len=12
+        wc,
+        num_pieces=_UNIGRAM_PIECES,
+        max_piece_len=_UNIGRAM_MAX_PIECE_LEN,
+        em_iters=_UNIGRAM_EM_ITERS,
+        max_word_len=_UNIGRAM_MAX_WORD_LEN,
     )
     total = sum(c for _, c in vocab)
     probs = {p: c / total for p, c in vocab}
@@ -773,4 +788,4 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is bounded by corpus token/line count.  Oracle: DuckDB
     recomputes every metric from the same deterministic relations."""
     docs = _rb(_t(spark, sf_dir, "documents"))
-    return repetition_metrics(docs, top_ngram=2, dup_ngram=5)
+    return repetition_metrics(docs, top_ngram=2)

@@ -589,7 +589,7 @@ def ts_xcorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return xcorr_daily(
         orders, "o_orderdate", "o_totalprice",
         li, "l_shipdate", "l_quantity",
-        max_lag=7, scale_a=100, scale_b=1,
+        max_lag=7, scale_b=1,
     )
 
 
@@ -644,7 +644,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on the calendar-bounded daily frame — broadcast-NLJ,
     corpus-size-independent."""
     o = _t(spark, sf_dir, "orders")
-    return mann_kendall_trend(o, "o_orderdate", "o_totalprice", value_scale=100)
+    return mann_kendall_trend(o, "o_orderdate", "o_totalprice")
 
 
 @query(
@@ -702,5 +702,4 @@ def ts_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     return ols_trend_by_group(
         o, "o_orderpriority", "o_orderdate", "o_totalprice",
-        value_scale=100,
     )

@@ -56,12 +56,6 @@ _PARSE_AGGS = ["count(_corrupt)", "count_if(_corrupt)", "count(_anchor)"]
 class RunnerConfig:
     enforce_types: bool = True  # SURVEY §7 P2 (reference declares, never checks)
     failure_base_dir: Optional[str] = None  # default: alongside the input
-    # 100 TB sink hygiene (SURVEY §4): partition the failure sink by these
-    # contract columns (e.g. a date column) so downstream triage prunes
-    # partitions instead of scanning every failure ever written.  Columns
-    # not present in the failing rows are ignored rather than erroring —
-    # the sink must never be the reason a validation run dies.
-    failure_partition_by: Optional[tuple[str, ...]] = None
 
 
 class ValidationRunner:
@@ -150,13 +144,7 @@ class ValidationRunner:
                     self.config.failure_base_dir or csv_path.rsplit("/", 1)[0],
                     table,
                 )
-                bad = R.corrupt_rows(parsed)
-                part_cols = [
-                    c
-                    for c in (self.config.failure_partition_by or ())
-                    if c in bad.columns
-                ]
-                write_failures_parquet(bad, sink, partition_by=part_cols or None)
+                write_failures_parquet(R.corrupt_rows(parsed), sink)
                 report.failure_sink_path = sink
         report.add(line_result)
 

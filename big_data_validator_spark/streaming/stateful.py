@@ -41,9 +41,11 @@ _STATE_SCHEMA = StructType(
 )
 
 
+_GAP_SECONDS = 1800
+
+
 def sessionize_with_state(
     stream: DataFrame,
-    gap_seconds: int = 1800,
     value_col: str = "value",
     ts_col: str = "ts",
     user_col: str = "user_id",
@@ -53,7 +55,7 @@ def sessionize_with_state(
     per-user state machine.
 
     State per user: (session_start, last_event, event_count,
-    violation_count).  An event farther than ``gap_seconds`` from the last
+    violation_count).  An event farther than ``_GAP_SECONDS`` from the last
     closes the session (emitted) and opens a new one; an **event-time
     timeout** (watermark passes last_event + gap) flushes idle sessions.
     Event-time — not processing-time — timeouts matter twice over: state
@@ -102,7 +104,7 @@ def sessionize_with_state(
             events = violations = 0
 
         out = []
-        gap_us = gap_seconds * 1_000_000
+        gap_us = _GAP_SECONDS * 1_000_000
         for _, row in rows.iterrows():
             t_us = int(row[ts_col].value // 1_000)  # pandas .value is ns
             bad = int(row[value_col] < 0)

@@ -428,6 +428,9 @@ def _committed_batch_dirs(spark, root_path: str) -> list:
     return [p for _, p in sorted(out)]
 
 
+_PSI_EPSILON = 1e-6
+
+
 def stream_drift_psi(
     stream: DataFrame,
     baseline: DataFrame,
@@ -435,7 +438,6 @@ def stream_drift_psi(
     bin_edges,
     repo_path: str,
     checkpoint_path: str,
-    epsilon: float = 1e-6,
     run_col: str = "run_id",
 ) -> DataStreamWriter:
     """STREAMING drift monitor: every micro-batch's ``value_col``
@@ -494,7 +496,7 @@ def stream_drift_psi(
         p_run = counts.select(
             "bin_id", (F.col("n") / total).alias("p_run")
         )
-        eps = F.lit(float(epsilon))
+        eps = F.lit(_PSI_EPSILON)
         return (
             grid.join(p_run, "bin_id", "left")
             .select(
@@ -821,13 +823,15 @@ def stream_markov_drift(
     return _commit_batches(stream, repo_path, checkpoint_path, tv_terms)
 
 
+_VALUE_SCALE = 100
+
+
 def stream_mannwhitney_drift(
     stream: DataFrame,
     reference: DataFrame,
     value_col: str,
     repo_path: str,
     checkpoint_path: str,
-    value_scale: int = 100,
     bin_width: int = 1 << 20,
     run_col: str = "run_id",
 ) -> DataStreamWriter:
@@ -873,7 +877,7 @@ def stream_mannwhitney_drift(
         v = F.col(value_col)
         return (
             df.filter(v.isNotNull())
-            .select(F.round(v * F.lit(value_scale)).cast("long").alias("_v"))
+            .select(F.round(v * F.lit(_VALUE_SCALE)).cast("long").alias("_v"))
             .groupBy("_v")
             .agg(F.count(F.lit(1)).alias(count_col))
         )

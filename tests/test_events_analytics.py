@@ -118,7 +118,7 @@ class TestRollingZscore:
         ev = self._daily(spark, [10, 10, 11, 10, 11, 10, 11, 10, 50])
         rows = {
             r["day"]: r
-            for r in rolling_zscore_anomalies(ev, trailing=7).collect()
+            for r in rolling_zscore_anomalies(ev).collect()
         }
         assert rows["2024-01-01"]["z_score"] is None
         assert rows["2024-01-01"]["is_anomaly"] is False
@@ -131,7 +131,7 @@ class TestRollingZscore:
         ev = self._daily(spark, [5, 5, 5, 9])
         rows = {
             r["day"]: r
-            for r in rolling_zscore_anomalies(ev, trailing=7).collect()
+            for r in rolling_zscore_anomalies(ev).collect()
         }
         assert rows["2024-01-04"]["z_score"] is None
         assert rows["2024-01-04"]["is_anomaly"] is False
@@ -164,7 +164,7 @@ def test_weekday_anomaly_flags_broken_sunday_only(spark):
             rows.append((eid, day + dt.timedelta(seconds=eid % 3600)))
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, ts timestamp")
-    out = weekday_seasonal_anomalies(df, "ts", trailing=4, z_threshold=2.0)
+    out = weekday_seasonal_anomalies(df, "ts")
     got = {r["day"]: r for r in out.collect()}
     flagged = [d for d, r in got.items() if r["is_anomaly"]]
     assert flagged == ["2024-02-11"], flagged  # the collapsed Sunday
@@ -412,7 +412,7 @@ def test_removal_attribution_driver_channel_gets_the_credit(spark):
     out = {
         r["channel"]: r
         for r in removal_attribution(
-            _attr_events(spark, rows), channels=["a", "b"], horizon=8
+            _attr_events(spark, rows), channels=["a", "b"]
         ).collect()
     }
     # removing a: START->a edges redirect to END, no path to purchase
@@ -437,7 +437,7 @@ def test_removal_attribution_truncates_at_first_conversion(spark):
     out = {
         r["channel"]: r
         for r in removal_attribution(
-            _attr_events(spark, rows), channels=["a", "b"], horizon=8
+            _attr_events(spark, rows), channels=["a", "b"]
         ).collect()
     }
     assert out["b"]["removal_effect"] == 0.0
@@ -456,7 +456,7 @@ def test_removal_attribution_shares_sum_to_one(spark):
         for _ in range(rng.randrange(1, 8)):
             rows.append((u, rng.choice(["a", "b", "c", "purchase"])))
     out = removal_attribution(
-        _attr_events(spark, rows), channels=["a", "b", "c"], horizon=8
+        _attr_events(spark, rows), channels=["a", "b", "c"]
     ).collect()
     assert abs(sum(r["attribution_share"] for r in out) - 1.0) < 5e-6
     for r in out:

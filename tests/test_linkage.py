@@ -276,7 +276,7 @@ def test_fs_classify_posteriors_and_verdicts(spark):
     for _, _, b0, b1 in rows:
         cnt[(b0, b1)] = cnt.get((b0, b1), 0) + 1
     ns = [cnt.get(((g >> 0) & 1, (g >> 1) & 1), 0) for g in range(4)]
-    lam, m, u = _fs_em_core(ns, 2, 4, 0.9, 0.1, 0.5)
+    lam, m, u = _fs_em_core(ns, 2, 4)
     w = _fs_posteriors(2, lam, m, u)
     for (a, b, b0, b1) in rows:
         ppm = int(math.floor(w[b0 + 2 * b1] * 1000000.0))

@@ -1,6 +1,8 @@
 """Every top-level definition in the package is reached from code outside
 ``tests/``; every switch parameter is set to more than one value outside
-``tests/``; every module-level import is used by its module.
+``tests/``; every other constant default is changed by some caller; every
+module-level import is used by its module; every cache, checkpoint and
+temp directory is made by its owner.
 
 A definition is reached when its name appears in non-test code (the
 package, ``scripts/``, ``bench.py``, ``perfbench/`` and
@@ -20,6 +22,7 @@ import io
 import re
 import tokenize
 from pathlib import Path
+from typing import NamedTuple
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "big_data_validator_spark"
@@ -156,12 +159,43 @@ def test_exempt_references_are_still_defined():
 
 # --- settable values no caller varies ---------------------------------------
 # A switch is a parameter whose ``None``/``bool``/``str`` default its function
-# reads in a branch test.  When every call outside ``tests/`` binds it to the
-# same literal, the other paths are reached only from tests.  Calls match by
-# name, as in the definition scan; a non-literal argument, ``*args`` or
-# ``**kwargs`` counts as a varied value.  ``main(argv)`` takes the command line.
+# reads in a branch test, or a ``RunnerConfig``/``StreamingRuleConfig`` field
+# the package reads in one (a switch of the config's constructor).  When every
+# call outside ``tests/`` binds it to the same literal, the other paths are
+# reached only from tests.  A knob is any other parameter with a constant
+# default; some call, tests included, must set it to another value, or it is
+# a module constant.  Calls match by name, as in the definition scan.  An
+# argument that names a parameter of the calling function takes every value
+# that parameter receives; any other non-literal argument, ``*args`` or
+# ``**kwargs`` counts as a varied value.  ``main(argv)`` takes the command
+# line.  A parameter that names a column of an input frame (``*_col``,
+# ``*_cols``, ``column``, or a string default that spells the parameter's
+# own name, as ``src="src"``) is data, not a knob.
 
 MODE_EXEMPT = {("big_data_validator_spark/__main__.py", "main", "argv")}
+CONFIGS = {"RunnerConfig", "StreamingRuleConfig"}
+TESTS = sorted((ROOT / "tests").glob("*.py"))
+_COLUMN = re.compile(r"(?:\w+_)?(?:col|cols|column|columns)")
+
+
+class _Signature(NamedTuple):
+    """What a call binds: positional names (after ``self``/``cls``), the
+    default of each parameter that has one, and every parameter name."""
+
+    positional: list
+    defaults: dict
+    params: set
+
+
+def _signature(fn) -> _Signature:
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    defaults = dict(zip((a.arg for a in positional[len(positional) - len(args.defaults):]), args.defaults))
+    defaults.update((a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None)
+    names = [a.arg for a in positional]
+    if names[:1] in (["self"], ["cls"]):
+        names = names[1:]
+    return _Signature(names, defaults, set(names) | {a.arg for a in args.kwonlyargs})
 
 
 def _functions(tree: ast.Module):
@@ -174,25 +208,40 @@ def _functions(tree: ast.Module):
                 yield (node.name if init else child.name), child
 
 
-def _switches(fn) -> dict[str, ast.Constant]:
-    """Parameters with a ``None``, ``bool`` or ``str`` default that ``fn``
-    reads in an ``if``/``IfExp`` test or as the left operand of ``or``."""
-    args = fn.args
-    positional = args.posonlyargs + args.args
-    defaults = dict(zip(positional[len(positional) - len(args.defaults):], args.defaults))
-    defaults.update((a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None)
+def _config_fields(tree: ast.Module):
+    """``(class name, _Signature)`` per config dataclass in ``tree``."""
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef) and node.name in CONFIGS:
+            fields = [s for s in node.body if isinstance(s, ast.AnnAssign)]
+            names = [f.target.id for f in fields]
+            defaults = {f.target.id: f.value for f in fields if f.value is not None}
+            yield node.name, _Signature(names, defaults, set(names))
+
+
+def _branch_reads(node) -> tuple[set[str], set[str]]:
+    """Names and attribute names read in the ``if``/``IfExp`` tests and the
+    left operands of ``or`` under ``node``."""
     tests = []
-    for node in ast.walk(fn):
-        if isinstance(node, (ast.If, ast.IfExp)):
-            tests.append(node.test)
-        elif isinstance(node, ast.BoolOp) and isinstance(node.op, ast.Or):
-            tests.append(node.values[0])
-    read = {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
-    return {
-        a.arg: d for a, d in defaults.items()
-        if a.arg in read and isinstance(d, ast.Constant)
-        and (d.value is None or isinstance(d.value, (bool, str)))
-    }
+    for n in ast.walk(node):
+        if isinstance(n, (ast.If, ast.IfExp)):
+            tests.append(n.test)
+        elif isinstance(n, ast.BoolOp) and isinstance(n.op, ast.Or):
+            tests.append(n.values[0])
+    names = {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+    attrs = {n.attr for t in tests for n in ast.walk(t) if isinstance(n, ast.Attribute)}
+    return names, attrs
+
+
+def _names_column(name: str, default) -> bool:
+    return bool(_COLUMN.fullmatch(name)) or (
+        isinstance(default, ast.Constant) and default.value == name
+    )
+
+
+def _is_switch(default) -> bool:
+    return isinstance(default, ast.Constant) and (
+        default.value is None or isinstance(default.value, (bool, str))
+    )
 
 
 _VARIED = object()
@@ -205,52 +254,122 @@ def _literal(node: ast.expr):
         return _VARIED
 
 
-def _passed(call: ast.Call, fn, name: str, default: ast.Constant):
-    """The literal ``call`` binds to parameter ``name`` (``repr`` of it), or
-    ``_VARIED`` for anything that is not a literal."""
+def _bound(call: ast.Call, sig: _Signature, name: str):
+    """The expression ``call`` binds to ``name``, ``None`` if it leaves the
+    parameter out, or ``_VARIED`` behind ``*args``/``**kwargs``."""
     for kw in call.keywords:
         if kw.arg == name:
-            return _literal(kw.value)
-    positional = [a.arg for a in fn.args.posonlyargs + fn.args.args]
-    if positional[:1] in (["self"], ["cls"]):
-        positional = positional[1:]
-    index = positional.index(name) if name in positional else len(call.args)
+            return kw.value
+    index = sig.positional.index(name) if name in sig.positional else len(call.args)
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
             return _VARIED
         if i == index:
-            return _literal(arg)
+            return arg
     if any(kw.arg is None for kw in call.keywords):
         return _VARIED
-    return repr(default.value)
+    return None
+
+
+class _Calls:
+    """Every call in ``sources``, by callee name, with the function around
+    it, so that a forwarded parameter resolves to what its own callers pass."""
+
+    def __init__(self, sources):
+        self.by_name: dict[str, list[tuple[ast.Call, object]]] = {}
+        self.callee: dict[int, str] = {}
+        for path in sources:
+            tree = ast.parse(path.read_text())
+            for callee, fn in _functions(tree):
+                self.callee[id(fn)] = callee
+            self._visit(tree, None)
+
+    def _visit(self, node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                func = child.func
+                name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+                self.by_name.setdefault(name, []).append((child, fn))
+            self._visit(child, child if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn)
+
+    def values(self, callee: str, sig: _Signature, name: str, seen=frozenset()) -> set:
+        """``repr`` of each literal the calls to ``callee`` bind to ``name``
+        (its default where they leave it out); ``_VARIED`` for anything else."""
+        out = set()
+        for call, fn in self.by_name.get(callee, ()):
+            arg = _bound(call, sig, name)
+            if arg is None:
+                default = sig.defaults.get(name)
+                out.add(_literal(default) if default is not None else _VARIED)
+            elif arg is _VARIED:
+                out.add(_VARIED)
+            elif isinstance(arg, ast.Name) and fn is not None and arg.id in _signature(fn).params:
+                key = (id(fn), arg.id)
+                if key not in seen:
+                    out |= self.values(self.callee[id(fn)], _signature(fn), arg.id, seen | {key})
+            else:
+                out.add(_literal(arg))
+        return out
+
+
+def _package_signatures():
+    """``(module, callee, function name, _Signature, node)`` per package
+    function and config class."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(ROOT).as_posix()
+        tree = ast.parse(path.read_text())
+        for callee, fn in _functions(tree):
+            yield module, callee, fn.name, _signature(fn), fn
+        for name, sig in _config_fields(tree):
+            yield module, name, name, sig, None
 
 
 def mode_scan():
     """``module:function(parameter)`` for each switch that every call site
     outside ``tests/`` sets to the same literal, or leaves out."""
-    calls: dict[str, list[ast.Call]] = {}
-    for path in NON_TEST_SOURCES:
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Call):
-                func = node.func
-                name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
-                calls.setdefault(name, []).append(node)
+    calls = _Calls(NON_TEST_SOURCES)
+    config_reads = set().union(
+        *(_branch_reads(ast.parse(p.read_text()))[1] for p in PACKAGE.rglob("*.py"))
+    )
     hits = []
-    for path in sorted(PACKAGE.rglob("*.py")):
-        module = path.relative_to(ROOT).as_posix()
-        for callee, fn in _functions(ast.parse(path.read_text())):
-            for name, default in _switches(fn).items():
-                if (module, fn.name, name) in MODE_EXEMPT:
-                    continue
-                values = {_passed(c, fn, name, default) for c in calls.get(callee, ())}
-                if _VARIED not in values and len(values) <= 1:
-                    hits.append(f"{module}:{fn.name}({name})")
+    for module, callee, fn_name, sig, fn in _package_signatures():
+        read = _branch_reads(fn)[0] if fn is not None else config_reads
+        for name, default in sig.defaults.items():
+            if (module, fn_name, name) in MODE_EXEMPT or name not in read or not _is_switch(default):
+                continue
+            values = calls.values(callee, sig, name)
+            if _VARIED not in values and len(values) <= 1:
+                hits.append(f"{module}:{fn_name}({name})")
     return hits
 
 
 def test_every_switch_is_varied_by_a_caller_outside_tests():
     hits = mode_scan()
     assert hits == [], f"{len(hits)} parameters no caller outside tests varies: {hits}"
+
+
+def knob_scan():
+    """``module:function(parameter)`` for each other constant default that
+    no call, tests included, sets to another value."""
+    calls = _Calls(NON_TEST_SOURCES + TESTS)
+    hits = []
+    for module, callee, fn_name, sig, fn in _package_signatures():
+        if fn is None or fn_name in TEST_REFERENCES:
+            continue
+        read = _branch_reads(fn)[0]
+        for name, default in sig.defaults.items():
+            if (module, fn_name, name) in MODE_EXEMPT or _names_column(name, default) \
+                    or (name in read and _is_switch(default)) or _literal(default) is _VARIED:
+                continue
+            values = calls.values(callee, sig, name) - {_literal(default)}
+            if not values:
+                hits.append(f"{module}:{fn_name}({name})")
+    return hits
+
+
+def test_every_knob_is_set_to_another_value_by_some_caller():
+    hits = knob_scan()
+    assert hits == [], f"{len(hits)} defaults no caller changes: {hits}"
 
 
 # --- module imports ---------------------------------------------------------
@@ -288,21 +407,24 @@ def test_every_module_import_is_used():
 
 
 # --- resource owners --------------------------------------------------------
-# Every cache and temp directory the package makes has one owner: ``pin``
-# caches, the scratch helpers make directories (operators/__init__.py).  A
-# ``.cache()``, ``.persist()`` or ``mkdtemp`` anywhere else would be a
-# resource no scope releases.
+# Every cache, checkpoint and temp directory the package makes has one
+# owner: ``pin`` caches, ``checkpoint`` checkpoints, the scratch helpers
+# make directories (operators/__init__.py).  A ``.cache()``, ``.persist()``,
+# ``.localCheckpoint()`` or ``mkdtemp`` anywhere else would be a resource
+# no scope releases.
 
 RESOURCE_MAKERS = {
     "cache": {"pin"},
     "persist": {"pin"},
+    "localCheckpoint": {"checkpoint"},
     "mkdtemp": {"scratch_dir", "session_root", "session_dir"},
 }
 
 
 def unowned_resources():
-    """``module:line:call`` for each cache/persist/mkdtemp call in the
-    package outside the function allowed to make that resource."""
+    """``module:line:call`` for each cache/persist/localCheckpoint/mkdtemp
+    call in the package outside the function allowed to make that
+    resource."""
     hits = []
 
     def visit(node, module, owner):

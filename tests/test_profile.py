@@ -70,15 +70,6 @@ def test_profile_schema_is_stable_and_single_pass(spark, toy):
     assert shuffle_count(b) <= shuffle_count(a) + 1
 
 
-def test_profile_approx_distinct_path(spark, toy):
-    got = {
-        (r["column"], r["metric"]): r["value"]
-        for r in profile_table(toy, ["k"], exact_distinct=False).collect()
-    }
-    # HLL at this cardinality is exact
-    assert got[("k", "distinct_count")] == 3.0
-
-
 def test_functional_dependency_mode_and_violations(spark):
     from big_data_validator_spark.operators.profile import (
         functional_dependency_profile,
@@ -146,7 +137,7 @@ def test_metrics_history_and_trend_anomaly(spark):
     runs = [(0, run(1000)), (1, run(1010)), (2, run(990)), (3, run(200))]
     hist = metrics_history(runs, columns=["k"])
     assert hist.columns == ["run_id", "column", "metric", "value"]
-    out = profile_trend_anomalies(hist, trailing=3, z_threshold=3.0)
+    out = profile_trend_anomalies(hist)
     rows = {(r["run_id"], r["metric"]): r for r in out.collect()}
     # run 3 row_count: mean(1000,1010,990)=1000, std=10 → z=-80
     r3 = rows[(3, "row_count")]

@@ -521,7 +521,7 @@ def test_asof_nearest_excludes_null_keys_and_timestamps(spark):
         [(1, t), (1, None), (None, t)], "k long, r_ts timestamp"
     ).withColumn("v", F.col("r_ts"))
     out = asof_join_nearest(
-        left, right, "k", "k", "ts", "r_ts", ["v"]
+        left, right, "k", "k", "ts", "r_ts", ["v"], tolerance_seconds=60
     ).collect()
     # only the one fully-keyed left row survives, matched to the one
     # fully-keyed right row
@@ -563,7 +563,7 @@ def test_asof_direction_grid(spark):
         "k long, r_ts timestamp",
     ).withColumn("click_ts", F.col("r_ts"))
 
-    def run(direction, tol=None):
+    def run(direction, tol=3600):  # 3600 s: beyond every gap here
         out = asof_join_nearest(
             left, right, "k", "k", "ts", "r_ts", ["click_ts"],
             tolerance_seconds=tol, direction=direction,
@@ -597,7 +597,7 @@ def test_asof_direction_grid(spark):
     with pytest.raises(ValueError, match="direction"):
         asof_join_nearest(
             left, right, "k", "k", "ts", "r_ts", ["click_ts"],
-            direction="sideways",
+            tolerance_seconds=3600, direction="sideways",
         )
 
 
@@ -630,7 +630,7 @@ def test_asof_backward_direction_matches_asof_join(spark):
         (r["k"], r["ts"]): r["v"]
         for r in asof_join_nearest(
             left, right, "k", "k", "ts", "r_ts", ["v"],
-            direction="backward",
+            tolerance_seconds=3600, direction="backward",
         ).collect()
     }
     assert a == b and len(a) == 12

@@ -1,7 +1,7 @@
-"""Resource lifetime: :func:`resource_scope` owns the caches :func:`pin`
-and the directories :func:`scratch_dir` make inside it, :func:`session_dir`
-owns what outlives one call, and :func:`materialize` hands a result back
-free of both."""
+"""Resource lifetime: :func:`resource_scope` owns the caches :func:`pin`,
+the checkpoint RDDs :func:`checkpoint` and the directories
+:func:`scratch_dir` make inside it, :func:`session_dir` owns what outlives
+one call, and :func:`materialize` hands a result back free of them."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 import big_data_validator_spark.operators as O
 from big_data_validator_spark.operators import (
+    checkpoint,
     materialize,
     pin,
     resource_scope,
@@ -58,6 +59,30 @@ def test_resource_scope_releases_pins_on_exit_and_on_error(spark):
     bare = pin(spark.range(2))
     assert bare.storageLevel.useMemory
     bare.unpersist()
+
+
+def test_checkpoints_are_unpersisted_when_their_scope_exits(spark):
+    """A checkpoint made inside a scope is held by it and its RDDs leave
+    the JVM's persistent-RDD map on exit; the registry entries that
+    checkpoint (BPE training, FD discovery) leave no persistent RDD
+    behind.  Ids, not counts: the driver's GC may free RDDs that earlier
+    tests left outside any scope meanwhile."""
+    from __spark_entry__ import SMOKE_SF_DIR
+    from big_data_validator_spark.queries import REGISTRY
+
+    def rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = rdds()
+    with resource_scope() as held:
+        assert checkpoint(spark.range(10)).count() == 10
+        assert held and rdds() - before
+    assert rdds() <= before
+
+    for name in ("text_bpe_learn", "profile_fd_discovery"):
+        before = rdds()
+        assert REGISTRY[name].fn(spark, SMOKE_SF_DIR).collect()
+        assert rdds() <= before, name
 
 
 def test_session_dirs_are_removed_at_exit(tmp_path):

@@ -137,27 +137,17 @@ def test_weighted_sample_plans_take_ordered(spark):
 
 
 def test_hash_split_portable_device_matches_duckdb(spark):
-    """portable=True splits are recomputable by ANY engine: DuckDB
-    derives identical membership from the md5 digits; splits stay
-    disjoint-and-covering under both devices."""
+    """Splits are recomputable by ANY engine: DuckDB derives identical
+    membership from the md5 digits; splits stay disjoint-and-covering."""
     import duckdb
 
-    df = spark.range(0, 500).withColumnRenamed("id", "k")
-    for portable in (False, True):
-        from big_data_validator_spark.operators.sampling import hash_split
+    from big_data_validator_spark.operators.sampling import hash_split
 
-        tagged = hash_split(
-            df, "k", [0.8, 0.1, 0.1], seed=7, portable=portable
-        )
-        rows = tagged.collect()
-        assert len(rows) == 500  # covering
-        assert {r["split"] for r in rows} <= {0, 1, 2}
-    got = {
-        r["k"]: r["split"]
-        for r in hash_split(
-            df, "k", [0.8, 0.1, 0.1], seed=7, portable=True
-        ).collect()
-    }
+    df = spark.range(0, 500).withColumnRenamed("id", "k")
+    rows = hash_split(df, "k", [0.8, 0.1, 0.1], seed=7).collect()
+    assert len(rows) == 500  # covering
+    assert {r["split"] for r in rows} <= {0, 1, 2}
+    got = {r["k"]: r["split"] for r in rows}
     want = dict(
         duckdb.connect().execute(
             """
@@ -180,11 +170,8 @@ def test_hash_split_rejects_null_keys(spark):
     from big_data_validator_spark.operators.sampling import hash_split
 
     df = spark.createDataFrame([(1,), (None,)], "k long")
-    for portable in (False, True):
-        with pytest.raises(Exception, match="NULL in key column"):
-            hash_split(
-                df, "k", [0.5, 0.5], portable=portable
-            ).collect()
+    with pytest.raises(Exception, match="NULL in key column"):
+        hash_split(df, "k", [0.5, 0.5]).collect()
 
 
 def test_group_leakage_split_no_straddle_vs_row_split(spark):
@@ -215,7 +202,7 @@ def test_group_leakage_split_no_straddle_vs_row_split(spark):
     # group count
     assert all(r["n_rows"] == 5 * r["n_groups"] for r in g_audit)
 
-    rowwise = hash_split(docs, "doc_id", [0.8, 0.1, 0.1], portable=True)
+    rowwise = hash_split(docs, "doc_id", [0.8, 0.1, 0.1])
     r_audit = split_leakage_audit(rowwise, "grp").collect()
     assert r_audit[0]["straddling_groups"] > 0  # row split leaks
 

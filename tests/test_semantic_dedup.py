@@ -130,7 +130,6 @@ def test_within_cluster_discipline_and_keep_semantics(spark):
         dim=dim,
         num_clusters=3,
         threshold_ppm=990_000,
-        kmeans_iters=2,
         train_sample=100,
     )
     got = {r["vec_id"]: (r["cell"], r["keep"]) for r in out.collect()}
@@ -197,7 +196,6 @@ def test_two_level_assignment_matches_two_hop_reference(spark):
             df,
             dim=dim,
             threshold_ppm=990_000,
-            kmeans_iters=2,
             target_cluster_size=10,
             supercell_size=3,
         ).collect()

@@ -116,7 +116,7 @@ def test_pq_ann_recall_and_determinism(spark, vectors):
     queries = df.filter(F.col("vec_id") < 5)
     exact = S.brute_force_topk(df, queries, k=5).collect()
     got = S.pq_ann_topk(
-        df, queries, dim=dim, k=5, num_subspaces=4, codes_per_subspace=16
+        df, queries, dim=dim, k=5, num_subspaces=4
     ).collect()
     exact_sets, got_sets = {}, {}
     for r in exact:
@@ -134,7 +134,7 @@ def test_pq_ann_recall_and_determinism(spark, vectors):
     again = {
         (r["query_id"], r["vec_id"])
         for r in S.pq_ann_topk(
-            df, queries, dim=dim, k=5, num_subspaces=4, codes_per_subspace=16
+            df, queries, dim=dim, k=5, num_subspaces=4
         ).collect()
     }
     assert {(r["query_id"], r["vec_id"]) for r in got} == again
@@ -264,7 +264,7 @@ def test_sample_frames_fanout_and_bytes(spark):
         ["doc_id", "text"],
     )
     assets = M.assets_from_documents(docs)
-    frames = M.sample_frames(assets, num_frames=4).collect()
+    frames = M.sample_frames(assets).collect()
     by_asset = {}
     for r in frames:
         by_asset.setdefault(r["asset_id"], []).append(r)
@@ -527,7 +527,7 @@ def test_rrf_fuse_hand_example(spark):
     )
     rows = {
         r["vec_id"]: r
-        for r in rrf_fuse(a, b, k=10, rrf_k=60).collect()
+        for r in rrf_fuse(a, b, k=10).collect()
     }
     # doc 11: 1/62 + 1/61 ; doc 10: 1/61 + 1/62 → tie broken by id
     assert rows[10]["fused_rank"] == 1
@@ -548,7 +548,7 @@ def test_rrf_fuse_respects_k(spark):
     b = spark.createDataFrame(
         [(1, i, i) for i in range(1, 30)], ["query_id", "vec_id", "rank_b"]
     )
-    out = rrf_fuse(a, b, k=5, rrf_k=60).collect()
+    out = rrf_fuse(a, b, k=5).collect()
     assert len(out) == 5
     assert sorted(r["fused_rank"] for r in out) == [1, 2, 3, 4, 5]
 
@@ -582,7 +582,7 @@ def test_hybrid_rrf_finds_lexical_match_dense_misses(spark):
     rows = {
         r["vec_id"]: r
         for r in hybrid_lexical_dense_rrf(
-            docs, emb, lambda c: c < 1, dense_top_m=100, n=5, k=3
+            docs, emb, lambda c: c < 1, dense_top_m=100, k=3
         ).collect()
     }
     assert rows[1]["rank_lex"] == 1
@@ -655,7 +655,7 @@ def test_hybrid_rrf_bounded_dense_matches_full_at_cutoff(spark):
             (r["query_id"], r["vec_id"], r["fused_rank"], r["rrf_score"],
              r["rank_dense"])
             for r in hybrid_lexical_dense_rrf(
-                docs, emb, lambda c: c < 2, n=5, k=10, dense_top_m=m
+                docs, emb, lambda c: c < 2, k=10, dense_top_m=m
             )
             .orderBy("query_id", "fused_rank")
             .collect()

@@ -164,8 +164,7 @@ def test_exact_rank_cdf_and_monitor(spark):
     cdf2 = {r["_v"]: r["cum_le"] for r in exact_rank_cdf(df, "v", 137).collect()}
     assert cdf == cdf2
     out = kll_quantile_monitor(
-        df, "v", "day", [50, 90, 99], k=100, tol_ppm=25_000,
-        block_width=10_000,
+        df, "v", "day", [50, 90, 99], k=100, block_width=10_000,
     ).collect()
     assert len(out) == 3
     for r in out:
@@ -205,8 +204,7 @@ def test_grouped_cdf_and_per_segment_monitor(spark):
     assert cdf == cdf2
 
     out = kll_group_quantile_monitor(
-        df, "v", ["seg"], "day", [50, 90], k=100, tol_ppm=25_000,
-        block_width=10_000,
+        df, "v", ["seg"], "day", [50, 90], k=100, block_width=10_000,
     ).collect()
     assert len(out) == len(segs) * 2
     for r in out:

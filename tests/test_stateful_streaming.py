@@ -31,7 +31,7 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
     df.write.parquet(src)
 
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    sessions = sessionize_with_state(stream, gap_seconds=1800)
+    sessions = sessionize_with_state(stream)
     q = (
         sessions.writeStream.format("memory")
         .queryName("sess")

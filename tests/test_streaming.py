@@ -377,7 +377,6 @@ def test_stream_metrics_repository_matches_batch_and_replay(spark, tmp_path):
 
     trend = profile_trend_anomalies(
         got.filter(F.col("metric").isin("row_count", "distinct_count")),
-        trailing=3,
     )
     flagged = {
         (r["run_id"], r["column"], r["metric"])
@@ -760,7 +759,6 @@ def test_stream_mannwhitney_drift_matches_batch_on_prefixes(spark, tmp_path):
             value_col="value",
             repo_path=repo,
             checkpoint_path=str(tmp_path / ckpt),
-            value_scale=100,
         ).trigger(availableNow=True).start()
 
     launch("ckpt").awaitTermination()

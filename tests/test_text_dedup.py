@@ -84,7 +84,7 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_dedup_pairs(docs, threshold=0.8).collect()
+        for r in D.minhash_dedup_pairs(docs).collect()
     }
     # banded MinHash (r=4, b=16, t≈0.5) must recover all >0.8 pairs here
     assert lsh == exact
@@ -113,7 +113,7 @@ def test_winnowing_rolling_equals_horner():
 def test_winnowing_near_dup_pairs(spark, docs):
     # short fixture docs → short grams/window so every doc has a sketch
     pairs = D.winnowing_near_dup_pairs(
-        docs, k=5, window=4, min_common=5
+        docs, k=5, window=4
     ).collect()
     got = {(r["id_a"], r["id_b"]): r["overlap"] for r in pairs}
     # identical texts share every fingerprint
@@ -124,7 +124,7 @@ def test_winnowing_near_dup_pairs(spark, docs):
 
 
 def test_simhash_near_dups(spark, docs):
-    pairs = D.simhash_near_dup_pairs(docs, max_hamming=3).collect()
+    pairs = D.simhash_near_dup_pairs(docs).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     # docs 1,2 tokenize identically (distance 0); 3 normalizes the same
     assert (1, 2) in got and (1, 3) in got
@@ -418,7 +418,7 @@ def test_two_phase_cc_beats_diameter_on_adversarial_chain(spark):
     dist = {
         r["id"]: r["cluster_id"]
         for r in D.duplicate_clusters(
-            pairs, driver_edge_limit=None, max_iter=20
+            pairs, driver_edge_limit=None
         ).collect()
     }
     want = {
@@ -547,7 +547,7 @@ def test_ssjoin_prefix_actually_prunes(spark):
     # structural: the hot token 'x_x_x' (df=41) is in NO prefix — every
     # doc's 8-shingle set has prefix length 8-4+1=5, and the five
     # rarest tokens of each doc are its unique u/v/w/p/q shingles.
-    sets_df = D.word_shingle_sets(df, "text", "doc_id", 3)
+    sets_df = D.word_shingle_sets(df, "text", "doc_id")
     tok = sets_df.select(
         "id",
         F.size("shingles").alias("m"),
@@ -817,7 +817,7 @@ def test_containment_flags_subset_that_jaccard_misses(spark):
     assert row["cont_a_in_b"] >= 0.9  # the short doc is fully quoted
     assert row["cont_b_in_a"] < 0.5   # asymmetric by construction
     # the same pair is invisible to a Jaccard threshold
-    jac = ngram_jaccard_pairs(df, n=5, threshold=0.9).collect()
+    jac = ngram_jaccard_pairs(df, threshold=0.9).collect()
     assert jac == []
 
 

@@ -852,7 +852,7 @@ def test_mann_kendall_matches_bruteforce_with_ties_and_edges(spark):
         for i, v in enumerate(vals)
     ]
     df = spark.createDataFrame(rows, "d date, v double")
-    got = mann_kendall_trend(df, "d", "v", value_scale=100).first()
+    got = mann_kendall_trend(df, "d", "v").first()
     exp = brute([round(v * 100) for v in vals])
     assert (
         got["n_days"],
