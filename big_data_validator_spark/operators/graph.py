@@ -21,10 +21,10 @@ Scale design
   ``num/den`` applied as ``(num·Σ) div den``.  Integer sums are
   ORDER-INDEPENDENT (float sums are not, which is what makes naive
   PageRank un-oracleable cross-engine).  Under ANSI mode an overflow
-  raises loudly; with the default ``init=1e12`` the headroom bound is
-  ``85 · Σ_incoming rank/outdeg < 2⁶³`` — a single node fed by ~10⁵
-  out-degree-1 sources at full initial mass.  Scale ``init`` down for
-  graphs beyond that.
+  raises loudly; with the initial rank ``_INIT_RANK = 1e12`` the
+  headroom bound is ``85 · Σ_incoming rank/outdeg < 2⁶³`` — a single
+  node fed by ~10⁵ out-degree-1 sources at full initial mass.  Scale
+  ``_INIT_RANK`` down for graphs beyond that.
 
 The reference validator has no graph surface at all (row-local rules
 only — ``reference/bigDataValidator``); this extends the north-star
@@ -44,6 +44,10 @@ from big_data_validator_spark.operators import (
 
 _DAMPING_NUM = 85
 _DAMPING_DEN = 100
+#: Every node's starting rank (fixed-point units).
+_INIT_RANK = 10**12
+#: The undamped share every node receives each iteration.
+_BASE_RANK = ((_DAMPING_DEN - _DAMPING_NUM) * _INIT_RANK) // _DAMPING_DEN
 
 
 def pagerank_integer(
@@ -51,11 +55,11 @@ def pagerank_integer(
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    init: int = 10**12,
 ) -> DataFrame:
     """Fixed-point integer PageRank: ``iters`` synchronous iterations
     of ``r' = base + (d·Σ_in (r div outdeg)) div den`` over the
-    DISTINCT edge set, with ``base = ((den−num)·init) div den``
+    DISTINCT edge set, every node starting at ``_INIT_RANK``, with
+    ``base = _BASE_RANK = ((den−num)·_INIT_RANK) div den``
     uniform per node and no dangling-mass redistribution (sinks keep
     what flows in; the simplification is mirrored exactly by the
     oracle).  Every operation is BIGINT, so the result is exact and
@@ -92,8 +96,7 @@ def pagerank_integer(
     # iteration's contribution join needs, so the cache serves it back
     # without a new Exchange.
     ew = pin(e.join(outd, "_src").repartition(n_parts, "_src"))
-    base = ((_DAMPING_DEN - _DAMPING_NUM) * init) // _DAMPING_DEN
-    r = nodes.select("node", F.lit(init).cast("long").alias("rank_q"))
+    r = nodes.select("node", F.lit(_INIT_RANK).cast("long").alias("rank_q"))
     for _ in range(iters):
         contrib = ew.join(
             r, ew["_src"] == r["node"]
@@ -110,7 +113,7 @@ def pagerank_integer(
         r = nodes.join(insum, "node", "left").select(
             "node",
             (
-                F.lit(base)
+                F.lit(_BASE_RANK)
                 + F.expr(
                     f"({_DAMPING_NUM} * coalesce(_m, 0L)) div {_DAMPING_DEN}"
                 )

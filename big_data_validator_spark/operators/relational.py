@@ -206,7 +206,23 @@ def distribution_drift_psi(
     return out
 
 
+#: Smoothing of empty bins in every PSI term, so the log stays finite.
 _PSI_EPSILON = 1e-6
+
+
+def _psi_bin(col: Column, bin_edges: Sequence[float]) -> Column:
+    """PSI bin id of ``col`` over ascending ``bin_edges``: 0 below the
+    first edge, ``i + 1`` at or above edge ``i``."""
+    b = F.lit(0)
+    for i, e in enumerate(bin_edges):
+        b = F.when(col >= F.lit(float(e)), F.lit(i + 1)).otherwise(b)
+    return b
+
+
+def _psi_term(p_new: Column, p_old: Column) -> Column:
+    """One bin's PSI term ``(p_new − p_old)·ln((p_new+ε)/(p_old+ε))``."""
+    eps = F.lit(_PSI_EPSILON)
+    return (p_new - p_old) * F.log((p_new + eps) / (p_old + eps))
 
 
 def distribution_drift_psi_split(
@@ -226,14 +242,10 @@ def distribution_drift_psi_split(
     100 TB).  Same output contract and same numbers as the two-frame
     form over ``df.filter(old_pred)`` / ``df.filter(new_pred)`` —
     pinned in tests/test_drift.py."""
-    edges = [float(e) for e in bin_edges]
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col(value_col) >= F.lit(e), F.lit(i + 1)).otherwise(b)
     counts = (
         df.filter(old_pred | new_pred)
         .select(
-            b.alias("bin_id"),
+            _psi_bin(F.col(value_col), bin_edges).alias("bin_id"),
             old_pred.cast("long").alias("_o"),
             new_pred.cast("long").alias("_n"),
         )
@@ -248,9 +260,8 @@ def distribution_drift_psi_split(
     )
     spark = df.sparkSession
     frame = spark.createDataFrame(
-        [(bb,) for bb in range(len(edges) + 1)], ["bin_id"]
+        [(bb,) for bb in range(len(bin_edges) + 1)], ["bin_id"]
     )
-    eps = F.lit(_PSI_EPSILON)
     return (
         frame.join(props, "bin_id", "left")
         .select(
@@ -258,11 +269,7 @@ def distribution_drift_psi_split(
             F.coalesce("p_old", F.lit(0.0)).alias("p_old"),
             F.coalesce("p_new", F.lit(0.0)).alias("p_new"),
         )
-        .withColumn(
-            "psi_term",
-            (F.col("p_new") - F.col("p_old"))
-            * F.log((F.col("p_new") + eps) / (F.col("p_old") + eps)),
-        )
+        .withColumn("psi_term", _psi_term(F.col("p_new"), F.col("p_old")))
     )
 
 
@@ -838,12 +845,41 @@ def top_k_by(
     return df.orderBy(*order).limit(k)
 
 
+def _pooled_value_counts(
+    a: DataFrame, b: DataFrame, value_col: str, as_long: bool
+) -> DataFrame:
+    """The two-sample drift tests' pooled frame: both samples' non-null
+    ``value_col`` (cast to BIGINT when ``as_long``), tagged by side and
+    counted per distinct value — ``(_v, _na, _nb)``, one shuffle,
+    map-side combined, so the frame shrinks to the value domain.  It is
+    pinned hash-partitioned on ``_v``: every caller reads it more than
+    once (the block scan's local windows, its per-block totals, the
+    grand totals), and without the pin the pooled scan recomputes for
+    each consumer (6 base-table scans in the KS physical plan)."""
+    v = F.col(value_col)
+    val = v.cast("long") if as_long else v
+
+    def side(df: DataFrame, ca: int) -> DataFrame:
+        return df.filter(v.isNotNull()).select(
+            val.alias("_v"), F.lit(ca).alias("_ca"), F.lit(1 - ca).alias("_cb")
+        )
+
+    pooled = side(a, 1).unionAll(side(b, 0))
+    return pin(
+        pooled.groupBy("_v")
+        .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
+        .repartition(adaptive_partitions(pooled), "_v")
+    )
+
+
 def _value_block_scan(
     cnts: DataFrame, bin_width: float, sum_cols: Sequence[str]
 ) -> DataFrame:
     """:func:`block_scan` of a per-distinct-value counts frame in ``_v``
     order, blocked by ``floor(_v / bin_width)`` — the drift family's
     exact CDFs and ranks."""
+    if bin_width <= 0:
+        raise ValueError(f"bin_width must be positive, got {bin_width}")
     blk = F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
     return block_scan(cnts, blk, ["_v"], sum_cols)
 
@@ -871,29 +907,11 @@ def ks_two_sample(
     ``bin_width`` only controls block granularity, NEVER the result —
     any positive value yields the identical exact statistic (pinned in
     tests).  Returns one row: ``(ks_stat, n_a, n_b)``, ``ks_stat``
-    rounded to 6 for cross-engine hash stability.  Nulls are excluded
-    (a null carries no position in either CDF).
+    rounded to 6 for cross-engine hash stability and NULL when either
+    sample is empty (its count is then 0).  Nulls are excluded (a null
+    carries no position in either CDF).
     """
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
-    v = F.col(value_col)
-    pooled = a.filter(v.isNotNull()).select(
-        v.alias("_v"), F.lit(1).alias("_ca"), F.lit(0).alias("_cb")
-    ).unionAll(
-        b.filter(v.isNotNull()).select(
-            v.alias("_v"), F.lit(0).alias("_ca"), F.lit(1).alias("_cb")
-        )
-    )
-    # The per-distinct-value counts feed the local windows, the
-    # per-block totals AND the grand total — three consumers; without a
-    # pin the pooled scan recomputes for each (6 base-table scans in
-    # the physical plan).  The frame is the value domain (already
-    # shrunken), so the pin is cheap.
-    cnts = pin(
-        pooled.groupBy("_v")
-        .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
-        .repartition(adaptive_partitions(pooled), "_v")
-    )
+    cnts = _pooled_value_counts(a, b, value_col, as_long=False)
     cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"]).select(
         (F.col("_na_before") + F.col("_na")).alias("_cuma"),
         (F.col("_nb_before") + F.col("_nb")).alias("_cumb"),
@@ -901,20 +919,22 @@ def ks_two_sample(
     grand = cnts.agg(
         F.sum("_na").alias("_n_a"), F.sum("_nb").alias("_n_b")
     )
+    # an empty side divides by zero: try_divide makes the statistic
+    # NULL; no row at all means both sides are empty, so n = 0
     return (
         cum.join(F.broadcast(grand))
         .agg(
             F.round(
                 F.max(
                     F.abs(
-                        F.col("_cuma") / F.col("_n_a")
-                        - F.col("_cumb") / F.col("_n_b")
+                        F.try_divide(F.col("_cuma"), F.col("_n_a"))
+                        - F.try_divide(F.col("_cumb"), F.col("_n_b"))
                     )
                 ),
                 6,
             ).alias("ks_stat"),
-            F.first("_n_a").alias("n_a"),
-            F.first("_n_b").alias("n_b"),
+            F.coalesce(F.first("_n_a"), F.lit(0)).alias("n_a"),
+            F.coalesce(F.first("_n_b"), F.lit(0)).alias("n_b"),
         )
     )
 
@@ -952,33 +972,15 @@ def wasserstein_1d(
     ``bin_width`` only sets block granularity — any positive value
     yields the identical statistic (pinned in tests).  ``unit_scale``
     divides the final value (100.0 turns cents back into dollars).
-    Returns one row ``(w1_stat, n_a, n_b)``, ``w1_stat`` rounded to 6.
-    Nulls are excluded (no position in either CDF).
+    Returns one row ``(w1_stat, n_a, n_b)``, ``w1_stat`` rounded to 6
+    and NULL when either sample is empty (its count is then 0).  Nulls
+    are excluded (no position in either CDF).
     """
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
-    v = F.col(value_col)
-    pooled = a.filter(v.isNotNull()).select(
-        v.cast("long").alias("_v"),
-        F.lit(1).alias("_ca"),
-        F.lit(0).alias("_cb"),
-    ).unionAll(
-        b.filter(v.isNotNull()).select(
-            v.cast("long").alias("_v"),
-            F.lit(0).alias("_ca"),
-            F.lit(1).alias("_cb"),
-        )
-    )
-    # Same three-consumer shape as ks_two_sample: pin the shrunken
-    # per-value counts so the base relation is scanned once.
-    cnts = pin(
-        pooled.groupBy("_v")
-        .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
-        .repartition(adaptive_partitions(pooled), "_v")
-    )
+    cnts = _pooled_value_counts(a, b, value_col, as_long=True)
     cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"])
     grand = cnts.agg(
-        F.sum("_na").alias("_n_a"), F.sum("_nb").alias("_n_b")
+        F.coalesce(F.sum("_na"), F.lit(0)).alias("_n_a"),
+        F.coalesce(F.sum("_nb"), F.lit(0)).alias("_n_b"),
     )
     dec = "decimal(38,0)"
 
@@ -995,11 +997,11 @@ def wasserstein_1d(
     termsum = cum.join(F.broadcast(grand)).agg(F.sum(term).alias("_ts"))
     return grand.join(F.broadcast(termsum)).select(
         F.round(
-            F.col("_ts").cast("double")
-            / (
+            F.try_divide(  # an empty side: NULL, not a zero divide
+                F.col("_ts").cast("double"),
                 F.col("_n_a").cast("double")
                 * F.col("_n_b").cast("double")
-                * F.lit(float(unit_scale))
+                * F.lit(float(unit_scale)),
             ),
             6,
         ).alias("w1_stat"),
@@ -1127,28 +1129,12 @@ def mannwhitney_u(
     one shuffle to per-value counts, then :func:`block_scan`;
     ``bin_width`` moves block granularity only (identical statistic at
     any positive value, pinned in tests).  Returns one
-    row ``(n_a, n_b, u_a_x2, u_b_x2, z)``; nulls are excluded.
+    row ``(n_a, n_b, u_a_x2, u_b_x2, z)``; ``z`` is NULL when either
+    sample is empty (its count is then 0); nulls are excluded.
     """
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
-    v = F.col(value_col)
-    pooled = a.filter(v.isNotNull()).select(
-        v.cast("long").alias("_v"),
-        F.lit(1).alias("_ca"),
-        F.lit(0).alias("_cb"),
-    ).unionAll(
-        b.filter(v.isNotNull()).select(
-            v.cast("long").alias("_v"),
-            F.lit(0).alias("_ca"),
-            F.lit(1).alias("_cb"),
-        )
+    return mwu_from_value_counts(
+        _pooled_value_counts(a, b, value_col, as_long=True), bin_width
     )
-    cnts = pin(
-        pooled.groupBy("_v")
-        .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
-        .repartition(adaptive_partitions(pooled), "_v")
-    )
-    return mwu_from_value_counts(cnts, bin_width)
 
 
 def mwu_from_value_counts(
@@ -1162,8 +1148,6 @@ def mwu_from_value_counts(
     owns any caching of ``cnts`` (the batch wrapper pins it; the
     streaming monitor's per-batch frames are bounded parquet reads
     and pass through uncached)."""
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
     scanned = _value_block_scan(
         cnts.withColumn("_t", F.col("_na") + F.col("_nb")), bin_width, ["_t"]
     )
@@ -1182,8 +1166,8 @@ def mwu_from_value_counts(
         F.col("_nb"),
     )
     agg = terms.agg(
-        F.sum("_na").alias("n_a"),
-        F.sum("_nb").alias("n_b"),
+        F.coalesce(F.sum("_na"), F.lit(0)).cast("long").alias("n_a"),
+        F.coalesce(F.sum("_nb"), F.lit(0)).cast("long").alias("n_b"),
         F.sum("_r2a_term").alias("_r2a"),
         F.sum("_tie_term").alias("_ties"),
     )
@@ -1258,25 +1242,7 @@ def cramer_von_mises(
     Returns one row ``(n_a, n_b, cvm_t)``; ``cvm_t`` NULL when either
     sample is empty; nulls excluded.
     """
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
-    v = F.col(value_col)
-    pooled = a.filter(v.isNotNull()).select(
-        v.cast("long").alias("_v"),
-        F.lit(1).alias("_ca"),
-        F.lit(0).alias("_cb"),
-    ).unionAll(
-        b.filter(v.isNotNull()).select(
-            v.cast("long").alias("_v"),
-            F.lit(0).alias("_ca"),
-            F.lit(1).alias("_cb"),
-        )
-    )
-    cnts = pin(
-        pooled.groupBy("_v")
-        .agg(F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb"))
-        .repartition(adaptive_partitions(pooled), "_v")
-    )
+    cnts = _pooled_value_counts(a, b, value_col, as_long=True)
     scanned = _value_block_scan(
         cnts.withColumn("_t", F.col("_na") + F.col("_nb")),
         bin_width,
@@ -1353,8 +1319,6 @@ def _one_vs_rest_rank_frames(
     is a broadcast 1-row frame ``(_N, _ties)`` with the pool size and
     the Σ(t³−t) tie correction, and ``cnts`` is the pinned pair-count
     frame."""
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
     v = F.col(value_col)
     base = df.filter(v.isNotNull() & F.col(segment_col).isNotNull()).select(
         F.col(segment_col).alias("segment"),

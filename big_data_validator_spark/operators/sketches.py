@@ -34,6 +34,18 @@ they ship the EXACT percentile (block-CDF device, below) plus an
 driver hash while the hashed values stay engine-portable (the
 ``agg_hll_mergeable`` device).
 
+One pipeline, keyed by group columns: every Spark-facing operator takes
+``group_cols`` and an ungrouped caller passes ``[]``.  Partial sketches
+(:func:`kll_partial_sketches`, one per partition × key) merge per key
+(:func:`kll_merge_groups`, or the repartition-first build of the batch
+monitors), each key's rows roll up to percentile estimates
+(:func:`kll_rollup_quantiles`), and one rank-verdict leg checks them
+against an exact CDF (:func:`_rank_verdict`).  The global
+(``agg_kll_mergeable``), per-segment (``agg_kll_by_segment``), rolling
+(``agg_kll_rolling``, keyed on the report day) and streaming monitors
+are this pipeline with different keys, and every merge stage folds its
+sketches through one pandas kernel helper (:func:`_merged`).
+
 The reference validator has no aggregate surface at all beyond COUNT
 (``reference/big_data_validator.py`` — three row-local rules); this
 module is north-star scope.
@@ -45,11 +57,15 @@ import json
 import math
 from typing import Iterable, Iterator, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from big_data_validator_spark.operators import block_scan, pin
+from big_data_validator_spark.operators import (
+    adaptive_partitions,
+    block_scan,
+    pin,
+)
 
 DEFAULT_K = 200
 
@@ -174,25 +190,23 @@ def kll_deserialize(s: str) -> dict:
 
 # --------------------------------------------------------- spark plumbing
 
-def _sketch_build_partitions(df: DataFrame) -> int:
-    """Width for the keyed exchange feeding a python sketch-build
-    stage: at least the session parallelism (the stage is CPU-bound in
-    python, so every core should hold a slice of the key space), and
-    input-bytes-adaptive above it so partitions stay memory-sized at
-    scale."""
-    from big_data_validator_spark.operators import adaptive_partitions
+def _merged(sketches: Iterable[str], k: int) -> dict:
+    """Fold serialized sketches into one: the merge kernel every
+    pandas stage below runs."""
+    sk = kll_new(k)
+    for s in sketches:
+        sk = kll_merge(sk, kll_deserialize(s))
+    return sk
 
-    return max(
-        adaptive_partitions(df),
-        df.sparkSession.sparkContext.defaultParallelism,
-    )
+
+def _key_fields(df: DataFrame, cols: Sequence[str]) -> list:
+    by_name = {f.name: f for f in df.schema.fields}
+    return [by_name[c] for c in cols]
 
 
 def _sketch_schema(df: DataFrame, group_cols: Sequence[str]) -> T.StructType:
-    by_name = {f.name: f for f in df.schema.fields}
-    fields = [by_name[c] for c in group_cols]
     return T.StructType(
-        fields
+        _key_fields(df, group_cols)
         + [
             T.StructField("sketch", T.StringType(), False),
             T.StructField("n_rows", T.LongType(), False),
@@ -208,9 +222,11 @@ def kll_partial_sketches(
 ) -> DataFrame:
     """Map-side partial sketches: ONE pass over the input emitting one
     ``(group…, sketch, n_rows)`` row per (partition × group) — the
-    level-0 combine of the two-level aggregation.  No shuffle happens
-    here; the output is change-of-support, rows → sketch rows, sized
-    ``partitions × groups-per-partition``, each a few KB.
+    level-0 combine of the two-level aggregation.  With no group
+    columns each partition holding a value emits one ``(sketch,
+    n_rows)`` row.  No shuffle happens here; the output is
+    change-of-support, rows → sketch rows, sized ``partitions ×
+    groups-per-partition``, each a few KB.
 
     ``value_col`` must already be integral (BIGINT units — cents,
     micros); NULL values are skipped (SQL aggregate convention).
@@ -235,10 +251,15 @@ def kll_partial_sketches(
 
         acc: dict = {}
         for pdf in batches:
-            if len(pdf) == 0:
+            vals = pdf[pdf["_v"].notna()]
+            if len(vals) == 0:
                 continue
-            mask = pdf["_v"].notna()
-            for key, sub in pdf[mask].groupby(gcols, dropna=False, sort=False):
+            groups = (
+                vals.groupby(gcols, dropna=False, sort=False)
+                if gcols
+                else [((), vals)]
+            )
+            for key, sub in groups:
                 if not isinstance(key, tuple):
                     key = (key,)
                 sk = acc.get(key)
@@ -254,46 +275,76 @@ def kll_partial_sketches(
     return src.mapInPandas(build, out_schema)
 
 
+def _per_key_sketches(
+    df: DataFrame, value_col: str, keys: Sequence[str], k: int
+) -> DataFrame:
+    """One sketch row per ``keys`` value: the raw rows are repartitioned
+    on the key FIRST so the partial build emits exactly one sketch per
+    stored key.  Map-side partials (one sketch row per partition × key,
+    then a merge) drown in python sketch-object overhead under a
+    row-random layout with many keys (32 partitions × ~2400 days ≈ the
+    row count: measured 11.8 s against ~2 s repartitioned at sf0.1);
+    with key locality a merge stage would be 1-row groups of pure
+    applyInPandas overhead, so there is none.
+
+    The partition count is EXPLICIT (r14): a bare keyed repartition is
+    AQE-coalescible, and the shuffled bytes here are tiny while the
+    python build is CPU-bound — profiled at sf0.1, AQE coalesced the
+    build to 3 tasks (1.3 s of the query's 3.4 s).  So the width is at
+    least the session parallelism (every core holds a slice of the key
+    space), and input-bytes-adaptive above it so partitions stay
+    memory-sized at scale."""
+    width = max(
+        adaptive_partitions(df),
+        df.sparkSession.sparkContext.defaultParallelism,
+    )
+    return kll_partial_sketches(
+        df.repartition(width, *[F.col(c) for c in keys]), value_col, keys, k
+    )
+
+
 def kll_merge_groups(
     partials: DataFrame,
     group_cols: Sequence[str],
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """Merge partial sketches into ONE row per group — the persistable
-    per-day/per-partition sketch table.  The shuffle moves sketch rows
-    (KBs per group), never data rows."""
+    """Merge partial sketches into ONE row per group (one row in all
+    with no group columns) — the persistable per-day/per-partition
+    sketch table.  The shuffle moves sketch rows (KBs per group), never
+    data rows."""
     gcols = list(group_cols)
     out_schema = _sketch_schema(partials, gcols)
 
     def merge(pdf):
         import pandas as pd
 
-        sk = kll_new(k)
-        for s in pdf["sketch"]:
-            sk = kll_merge(sk, kll_deserialize(s))
+        sk = _merged(pdf["sketch"], k)
         key = [pdf.iloc[0][c] for c in gcols]
         return pd.DataFrame(
             [key + [kll_serialize(sk), int(pdf["n_rows"].sum())]],
             columns=[*gcols, "sketch", "n_rows"],
         )
 
-    return partials.groupBy(*gcols).applyInPandas(
-        lambda pdf: merge(pdf), out_schema
-    )
+    return partials.groupBy(*gcols).applyInPandas(merge, out_schema)
 
 
 def kll_rollup_quantiles(
     sketches: DataFrame,
+    group_cols: Sequence[str],
     quantile_pcts: Sequence[int],
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """The payoff step: merge N stored sketch ROWS (never the raw data)
-    and read the requested percentiles.  Returns ``(quantile_pct,
-    est, n_rows)``.  The merge is a single task over N few-KB rows —
-    exactly the "rolling percentile without rescan" contract."""
+    """The payoff step: merge each group's stored sketch ROWS (never the
+    raw data) and read the requested percentiles.  Returns ``(group…,
+    quantile_pct, est, n_rows)``; with no group columns every row merges
+    into one global sketch in a single task.  The shuffle moves sketch
+    rows only — exactly the "rolling percentile without rescan"
+    contract."""
+    gcols = list(group_cols)
     pcts = [int(p) for p in quantile_pcts]
     out_schema = T.StructType(
-        [
+        _key_fields(sketches, gcols)
+        + [
             T.StructField("quantile_pct", T.IntegerType(), False),
             T.StructField("est", T.LongType(), True),
             T.StructField("n_rows", T.LongType(), False),
@@ -303,22 +354,44 @@ def kll_rollup_quantiles(
     def rollup(pdf):
         import pandas as pd
 
-        sk = kll_new(k)
-        for s in pdf["sketch"]:
-            sk = kll_merge(sk, kll_deserialize(s))
+        sk = _merged(pdf["sketch"], k)
         ests = kll_quantiles(sk, [p / 100.0 for p in pcts])
         n = int(pdf["n_rows"].sum())
+        key = [pdf.iloc[0][c] for c in gcols]
         return pd.DataFrame(
-            [[p, e, n] for p, e in zip(pcts, ests)],
-            columns=["quantile_pct", "est", "n_rows"],
+            [key + [p, e, n] for p, e in zip(pcts, ests)],
+            columns=[*gcols, "quantile_pct", "est", "n_rows"],
         )
 
     return (
-        sketches.select(
-            F.lit(1).alias("_g"), "sketch", "n_rows"
+        sketches.select(*gcols, "sketch", "n_rows")
+        .groupBy(*gcols)
+        .applyInPandas(rollup, out_schema)
+    )
+
+
+def _fan_out(
+    df: DataFrame,
+    day_col: str,
+    window_days: int,
+    report_from: str,
+    report_to: str,
+) -> DataFrame:
+    """The bounded interval explode (the ``events_rolling_distinct``
+    device): each row of ``df`` repeats, with its report day as
+    ``_rd``, for the ≤``window_days`` report days in ``[report_from,
+    report_to]`` whose trailing window contains its ``day_col`` —
+    linear in rows, never a re-scan."""
+    day, rd = F.col(day_col), F.col("_rd")
+    return (
+        df.filter(
+            (day > F.date_sub(F.lit(report_from), window_days))
+            & (day <= F.lit(report_to))
         )
-        .groupBy("_g")
-        .applyInPandas(lambda pdf: rollup(pdf), out_schema)
+        .withColumn(
+            "_rd", F.explode(F.sequence(day, F.date_add(day, window_days - 1)))
+        )
+        .filter((rd >= F.lit(report_from)) & (rd <= F.lit(report_to)))
     )
 
 
@@ -336,56 +409,17 @@ def kll_rolling_quantiles(
     the stored per-day sketch rows — the raw table is not touched.
 
     Each sketch day fans out to the ≤``window_days`` report days whose
-    trailing window contains it (the bounded interval explode of
-    ``events_rolling_distinct`` — linear in sketch rows, never a
-    re-scan), then each report day merges its ≤``window_days`` sketch
-    rows.  At 100 TB this reads KBs per day instead of the window's
-    raw partitions; a 30-day rolling p99 over a year is ~365 × 30
-    sketch-row merges, total MBs.
+    trailing window contains it (:func:`_fan_out`), then
+    :func:`kll_rollup_quantiles` merges each report day's
+    ≤``window_days`` sketch rows.  At 100 TB this reads KBs per
+    day instead of the window's raw partitions; a 30-day rolling p99
+    over a year is ~365 × 30 sketch-row merges, total MBs.
 
-    Returns ``(day_col, est, n_rows)`` — ``n_rows`` is exact (sketch
-    row counts are exact even though ranks are approximate)."""
-    rd = F.col("_rd")
-    fan = (
-        per_day.filter(
-            (F.col(day_col) > F.date_sub(F.lit(report_from), window_days))
-            & (F.col(day_col) <= F.lit(report_to))
-        )
-        .select(
-            F.explode(
-                F.sequence(
-                    F.col(day_col),
-                    F.date_add(F.col(day_col), window_days - 1),
-                )
-            ).alias("_rd"),
-            "sketch",
-            "n_rows",
-        )
-        .filter((rd >= F.lit(report_from)) & (rd <= F.lit(report_to)))
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(day_col, T.DateType(), False),
-            T.StructField("est", T.LongType(), True),
-            T.StructField("n_rows", T.LongType(), False),
-        ]
-    )
-    frac = pct / 100.0
-
-    def roll(key, pdf):
-        import pandas as pd
-
-        sk = kll_new(k)
-        for s in pdf["sketch"]:
-            sk = kll_merge(sk, kll_deserialize(s))
-        return pd.DataFrame(
-            [[key[0], kll_quantiles(sk, [frac])[0], int(pdf["n_rows"].sum())]],
-            columns=[day_col, "est", "n_rows"],
-        )
-
-    return fan.groupBy("_rd").applyInPandas(
-        lambda key, pdf: roll(key, pdf), out_schema
-    )
+    Returns ``(_rd, quantile_pct, est, n_rows)`` keyed by report day
+    ``_rd`` — ``n_rows`` is exact (sketch row counts are exact even
+    though ranks are approximate)."""
+    fan = _fan_out(per_day, day_col, window_days, report_from, report_to)
+    return kll_rollup_quantiles(fan, ["_rd"], [pct], k)
 
 
 # ------------------------------------------------- exact verification leg
@@ -431,143 +465,83 @@ def exact_rank_cdf(
 _TOL_PPM = 25_000
 
 
-def kll_quantile_monitor(
-    df: DataFrame,
-    value_col: str,
-    day_col: str,
-    quantile_pcts: Sequence[int],
-    k: int = DEFAULT_K,
-    block_width: int = 1_000_000,
+def _rank_verdict(
+    est: DataFrame, cdf: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """End-to-end sketch-vs-exact monitor, oracle-ready: build one
-    mergeable sketch per day, roll all days up to
-    global percentile ESTIMATES by merging sketch rows, then verify
-    each estimate's RANK against the exact block-scan CDF.
+    """The rank-verdict leg every monitor ends in: given sketch
+    ESTIMATES ``(keys…, quantile_pct, est, n_rows)`` and an exact CDF
+    ``(keys…, _v, cum_le)``, each estimate's exact percentile is the
+    smallest ``_v`` whose ``cum_le`` reaches the integer rank ``_r =
+    (pct·n + 99) div 100``, and ``est_ok`` is ``|rank(est) − _r| ≤
+    (_TOL_PPM·n) div 10⁶`` (integer arithmetic end-to-end), where
+    ``rank(est)`` is the ``cum_le`` of the largest value ≤ ``est`` (0
+    below every value).  Returns ``(keys…, quantile_pct, exact,
+    n_rows, est_ok)``.
 
-    Ships ``(quantile_pct, exact, n_rows, est_ok)`` — the estimate
-    itself is partitioning-dependent and never leaves; ``est_ok`` is
-    ``|rank(est) − ceil(p·n)| ≤ (tol_ppm·n) div 10⁶`` (integer
-    arithmetic end-to-end), so a sketch accuracy regression flips the
-    driver hash while every hashed value stays engine-exact.  The
-    exact CDF leg is the VERIFICATION device — production reads the
-    sketch table alone.
-    """
-    pcts = [int(p) for p in quantile_pcts]
-    # The raw rows are repartitioned on the day FIRST so exactly one
-    # sketch is built per day.  Map-side partials (one sketch row per
-    # partition × day, then a merge) drown in python sketch-object
-    # overhead under a row-random layout with many days (32 partitions
-    # × ~2400 days ≈ the row count: measured 11.8 s against ~2 s
-    # repartitioned at sf0.1).  With day-locality the merge stage would
-    # be 1-row groups of pure applyInPandas overhead, so there is none.
-    # Explicit count: see kll_group_quantile_monitor (AQE would
-    # coalesce the CPU-bound python build stage by its tiny bytes).
-    per_day = kll_partial_sketches(
-        df.repartition(_sketch_build_partitions(df), F.col(day_col)),
-        value_col,
-        [day_col],
-        k,
+    Both relations feed MULTIPLE joins and Spark shares no subplans:
+    uncached, the whole estimate pipeline would re-run per consumer
+    (measured: 47 shuffles vs ~10), so both are pinned
+    (:func:`~big_data_validator_spark.operators.pin`)."""
+    keys = list(keys)
+    est = pin(est)
+    cdf = pin(cdf)
+    targets = est.select(
+        *keys,
+        "quantile_pct",
+        "est",
+        "n_rows",
+        F.expr("(quantile_pct * n_rows + 99) div 100").alias("_r"),
     )
-    est = kll_rollup_quantiles(per_day, pcts, k)
-    return kll_verify_quantiles(est, df, value_col, block_width=block_width)
+    t = F.broadcast(targets)
+    cdf_k = cdf.select(
+        *[F.col(c).alias(f"_k_{c}") for c in keys], "_v", "cum_le"
+    )
+    on_key = [cdf_k[f"_k_{c}"] == t[c] for c in keys]
+    exact = (
+        cdf_k.join(t, [*on_key, cdf_k["cum_le"] >= t["_r"]])
+        .groupBy(*keys, "quantile_pct")
+        .agg(F.min("_v").alias("exact"))
+    )
+    est_rank = (
+        cdf_k.join(t, [*on_key, cdf_k["_v"] <= t["est"]])
+        .groupBy(*keys, "quantile_pct")
+        .agg(F.max("cum_le").alias("_est_rank"))
+    )
+    return (
+        targets.join(exact, [*keys, "quantile_pct"])
+        .join(est_rank, [*keys, "quantile_pct"], "left")
+        .select(
+            *keys,
+            "quantile_pct",
+            "exact",
+            "n_rows",
+            (
+                F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
+                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
+            ).alias("est_ok"),
+        )
+    )
 
 
 def kll_verify_quantiles(
     est: DataFrame,
     df: DataFrame,
     value_col: str,
+    group_cols: Sequence[str],
     block_width: int = 1_000_000,
 ) -> DataFrame:
-    """The shared exact-verification leg: given sketch ESTIMATES
-    ``(quantile_pct, est, n_rows)`` (from any builder — batch rollup or
-    streaming repository), compute the exact percentile at integer
-    rank ``(pct·n + 99) div 100`` from the block-scan CDF of ``df``
-    and the ``est_ok`` rank-tolerance verdict.
-
-    Both relations feed MULTIPLE joins and Spark shares no subplans:
-    uncached, the whole estimate pipeline would re-run per consumer
-    (measured: 47 shuffles vs ~10), so both are pinned
-    (:func:`~big_data_validator_spark.operators.pin`)."""
-    est = pin(est)
-    cdf = pin(exact_rank_cdf(df, value_col, block_width))
-    targets = est.select(
-        "quantile_pct",
-        "est",
-        "n_rows",
-        F.expr("(quantile_pct * n_rows + 99) div 100").alias("_r"),
-    )
-    t = F.broadcast(targets)
-    exact = (
-        cdf.join(t, cdf["cum_le"] >= t["_r"])
-        .groupBy("quantile_pct")
-        .agg(F.min("_v").alias("exact"))
-    )
-    # rank of the estimate: cum_le of the largest distinct value ≤ est
-    # (0 when the estimate sits below every value)
-    est_rank = (
-        cdf.join(t, cdf["_v"] <= t["est"])
-        .groupBy("quantile_pct")
-        .agg(F.max("cum_le").alias("_est_rank"))
-    )
-    return (
-        targets.join(exact, "quantile_pct")
-        .join(est_rank, "quantile_pct", "left")
-        .select(
-            "quantile_pct",
-            "exact",
-            "n_rows",
-            (
-                F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
-            ).alias("est_ok"),
-        )
+    """The exact-verification leg shared by the batch monitor and the
+    streaming repository consumers: given per-group sketch ESTIMATES
+    ``(group…, quantile_pct, est, n_rows)`` from any builder (``[]``
+    for one global distribution), verify each against the exact
+    block-scan CDF of ``df`` (:func:`exact_rank_cdf`) with
+    :func:`_rank_verdict`.  NULL group keys are excluded."""
+    return _rank_verdict(
+        est, exact_rank_cdf(df, value_col, block_width, group_cols), group_cols
     )
 
 
-def kll_group_rollup_quantiles(
-    sketches: DataFrame,
-    group_cols: Sequence[str],
-    quantile_pcts: Sequence[int],
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Per-GROUP percentile read-off from stored sketch rows: merge each
-    group's rows (e.g. its daily sketches) and emit ``(group…,
-    quantile_pct, est, n_rows)`` — :func:`kll_rollup_quantiles` with the
-    merge keyed on the group instead of collapsing to one global row.
-    The shuffle moves sketch rows only; each merge task touches one
-    group's few-KB rows."""
-    gcols = list(group_cols)
-    pcts = [int(p) for p in quantile_pcts]
-    by_name = {f.name: f for f in sketches.schema.fields}
-    out_schema = T.StructType(
-        [by_name[c] for c in gcols]
-        + [
-            T.StructField("quantile_pct", T.IntegerType(), False),
-            T.StructField("est", T.LongType(), True),
-            T.StructField("n_rows", T.LongType(), False),
-        ]
-    )
-
-    def rollup(pdf):
-        import pandas as pd
-
-        sk = kll_new(k)
-        for s in pdf["sketch"]:
-            sk = kll_merge(sk, kll_deserialize(s))
-        ests = kll_quantiles(sk, [p / 100.0 for p in pcts])
-        n = int(pdf["n_rows"].sum())
-        key = [pdf.iloc[0][c] for c in gcols]
-        return pd.DataFrame(
-            [key + [p, e, n] for p, e in zip(pcts, ests)],
-            columns=[*gcols, "quantile_pct", "est", "n_rows"],
-        )
-
-    return sketches.groupBy(*gcols).applyInPandas(
-        lambda pdf: rollup(pdf), out_schema
-    )
-
-
-def kll_group_quantile_monitor(
+def kll_quantile_monitor(
     df: DataFrame,
     value_col: str,
     group_cols: Sequence[str],
@@ -576,108 +550,30 @@ def kll_group_quantile_monitor(
     k: int = DEFAULT_K,
     block_width: int = 1_000_000,
 ) -> DataFrame:
-    """Per-KEY percentile monitor (VERDICT r9 item 4): the shape real
-    latency/size monitors need — p90 *per customer segment*, per day —
-    where :func:`kll_quantile_monitor` tracks one global distribution.
+    """End-to-end sketch-vs-exact monitor, oracle-ready: build one
+    mergeable sketch per (group, day), merge each group's day rows to
+    percentile ESTIMATES, then verify each estimate's RANK against the
+    exact per-group block-scan CDF.  ``group_cols=[]`` tracks one
+    global distribution; a group key gives the shape real latency/size
+    monitors need — p90 *per customer segment* (VERDICT r9 item 4).
 
-    Pipeline: repartition the raw rows on (group, day) FIRST so the
-    partial build emits exactly ONE sketch per stored key (as in
-    :func:`kll_quantile_monitor` — map-side partials under a
-    row-random layout build partitions×keys tiny python sketches and
-    drown in object overhead; with the grouped key the cardinality is
-    groups×days, strictly worse), then merge each group's day rows to
-    per-group estimates, then verify each against the exact per-group
-    block-scan CDF.
-
-    Ships ``(group…, quantile_pct, exact, n_rows, est_ok)`` under the
-    shared hash discipline: sketch internals never leave; ``exact`` is
-    the integer per-group percentile at rank ``(pct·n_g + 99) div 100``
-    and ``est_ok`` the ±tol_ppm rank verdict, so a sketch accuracy
-    regression flips the driver hash while every hashed value stays
-    engine-exact.  NULL group keys are excluded on both legs.
+    Ships ``(group…, quantile_pct, exact, n_rows, est_ok)`` — the
+    estimate itself is partitioning-dependent and never leaves;
+    ``exact`` is the integer percentile at rank ``(pct·n + 99) div
+    100`` and ``est_ok`` the ±``_TOL_PPM`` rank verdict
+    (:func:`_rank_verdict`), so a sketch accuracy regression flips the
+    oracle hash while every hashed value stays engine-exact.  The exact
+    CDF leg is the VERIFICATION device — production reads the sketch
+    table alone.  NULL group keys are excluded on both legs.
     """
     gcols = list(group_cols)
-    pcts = [int(p) for p in quantile_pcts]
     src = df
     for c in gcols:
         src = src.filter(F.col(c).isNotNull())
-    # EXPLICIT partition count (r14): a bare keyed repartition is
-    # AQE-coalescible, and the shuffled bytes here are tiny while the
-    # downstream python sketch build is CPU-bound — profiled at sf0.1,
-    # AQE coalesced the build to 3 tasks (1.3s of the query's 3.4s).
-    # Bytes are the wrong coalescing signal for a python-kernel stage
-    # (guide §2.5: partition for the work, not the bytes).
-    per_key = kll_partial_sketches(
-        src.repartition(
-            _sketch_build_partitions(df),
-            *[F.col(c) for c in [*gcols, day_col]],
-        ),
-        value_col,
-        [*gcols, day_col],
-        k,
-    )
-    est = kll_group_rollup_quantiles(per_key, gcols, pcts, k)
-    return kll_group_verify_quantiles(
+    per_key = _per_key_sketches(src, value_col, [*gcols, day_col], k)
+    est = kll_rollup_quantiles(per_key, gcols, quantile_pcts, k)
+    return kll_verify_quantiles(
         est, src, value_col, gcols, block_width=block_width
-    )
-
-
-def kll_group_verify_quantiles(
-    est: DataFrame,
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    block_width: int = 1_000_000,
-) -> DataFrame:
-    """Per-GROUP exact-verification leg (the grouped twin of
-    :func:`kll_verify_quantiles`, shared by the batch monitor and the
-    streaming repository consumer): given per-group estimates
-    ``(group…, quantile_pct, est, n_rows)`` from ANY builder, compute
-    each group's exact percentile at integer rank
-    ``(pct·n_g + 99) div 100`` from the grouped block-scan CDF of
-    ``df`` plus the ±``_TOL_PPM`` rank verdict.  Both relations feed
-    multiple joins (Spark shares no subplans), so both are pinned.
-    NULL group keys are excluded on both legs."""
-    gcols = list(group_cols)
-    src = df
-    for c in gcols:
-        src = src.filter(F.col(c).isNotNull())
-    est = pin(est)
-    cdf = pin(exact_rank_cdf(src, value_col, block_width, gcols))
-    targets = est.select(
-        *gcols,
-        "quantile_pct",
-        "est",
-        "n_rows",
-        F.expr("(quantile_pct * n_rows + 99) div 100").alias("_r"),
-    )
-    t = F.broadcast(targets)
-    c_g = [F.col(c).alias(f"_cg_{c}") for c in gcols]
-    cdf_r = cdf.select(*c_g, "_v", "cum_le")
-    on_group = [cdf_r[f"_cg_{c}"] == t[c] for c in gcols]
-    exact = (
-        cdf_r.join(t, [*on_group, cdf_r["cum_le"] >= t["_r"]])
-        .groupBy(*gcols, "quantile_pct")
-        .agg(F.min("_v").alias("exact"))
-    )
-    est_rank = (
-        cdf_r.join(t, [*on_group, cdf_r["_v"] <= t["est"]])
-        .groupBy(*gcols, "quantile_pct")
-        .agg(F.max("cum_le").alias("_est_rank"))
-    )
-    return (
-        targets.join(exact, [*gcols, "quantile_pct"])
-        .join(est_rank, [*gcols, "quantile_pct"], "left")
-        .select(
-            *gcols,
-            "quantile_pct",
-            "exact",
-            "n_rows",
-            (
-                F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
-            ).alias("est_ok"),
-        )
     )
 
 
@@ -696,89 +592,38 @@ def kll_rolling_monitor(
     day, verified per day against the exact trailing percentile.
 
     The exact leg never globally sorts: per-(day, value) counts fan out
-    through the SAME bounded interval explode (≤``window_days`` report
-    days each), cumulative counts run in windows PARTITIONED by report
-    day over the distinct-value frame, and the exact percentile is the
-    smallest value whose cumulative count reaches the integer target
-    rank.  Ships ``(day, exact, n_rows, est_ok)`` — the estimate stays
+    through the SAME bounded interval explode (:func:`_fan_out`),
+    cumulative counts run in windows PARTITIONED by report day over
+    the distinct-value frame, and :func:`_rank_verdict` reads the
+    exact percentile and the rank verdict keyed on the report day.
+    Ships ``(day, exact, n_rows, est_ok)`` — the estimate stays
     internal (partitioning-dependent), the ``agg_kll_mergeable``
     discipline."""
-    from pyspark.sql import Window
-
-    # explicit width: see kll_group_quantile_monitor (AQE coalesces the
-    # CPU-bound python build stage by its tiny shuffled bytes)
-    per_day = kll_partial_sketches(
-        df.repartition(_sketch_build_partitions(df), F.col(day_col)),
-        value_col,
-        [day_col],
-        k,
+    est = kll_rolling_quantiles(
+        _per_key_sketches(df, value_col, [day_col], k),
+        day_col, pct, window_days, report_from, report_to, k,
     )
-    est = pin(kll_rolling_quantiles(
-        per_day, day_col, pct, window_days, report_from, report_to, k
-    ))
-
-    rd = F.col("_rd")
-    dist = (
-        df.filter(
-            (F.col(day_col) > F.date_sub(F.lit(report_from), window_days))
-            & (F.col(day_col) <= F.lit(report_to))
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(
-            F.col(day_col).alias("_d"),
-            F.col(value_col).cast("long").alias("_v"),
-        )
+    counts = (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(day_col, F.col(value_col).cast("long").alias("_v"))
         .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            F.explode(
-                F.sequence(
-                    F.col("_d"), F.date_add(F.col("_d"), window_days - 1)
-                )
-            ).alias("_rd"),
-            "_v",
-            "_n",
-        )
-        .filter((rd >= F.lit(report_from)) & (rd <= F.lit(report_to)))
+    )
+    cdf = (
+        _fan_out(counts, day_col, window_days, report_from, report_to)
         .groupBy("_rd", "_v")
         .agg(F.sum("_n").alias("_w"))
-    )
-    cum = pin(dist.withColumn(
-        "_cum",
-        F.sum("_w").over(
-            Window.partitionBy("_rd")
-            .orderBy("_v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    ))
-    targets = est.select(
-        F.col(day_col).alias("_td"),
-        "est",
-        "n_rows",
-        F.expr(f"({int(pct)} * n_rows + 99) div 100").alias("_r"),
-    )
-    t = F.broadcast(targets)
-    exact = (
-        cum.join(
-            t, (cum["_rd"] == t["_td"]) & (cum["_cum"] >= t["_r"])
-        )
-        .groupBy("_td")
-        .agg(F.min("_v").alias("exact"))
-    )
-    est_rank = (
-        cum.join(t, (cum["_rd"] == t["_td"]) & (cum["_v"] <= t["est"]))
-        .groupBy("_td")
-        .agg(F.max("_cum").alias("_est_rank"))
-    )
-    return (
-        targets.join(exact, "_td")
-        .join(est_rank, "_td", "left")
         .select(
-            F.col("_td").alias(day_col),
-            "exact",
-            "n_rows",
-            (
-                F.abs(F.coalesce(F.col("_est_rank"), F.lit(0)) - F.col("_r"))
-                <= F.expr(f"({_TOL_PPM} * n_rows) div 1000000")
-            ).alias("est_ok"),
+            "_rd",
+            "_v",
+            F.sum("_w")
+            .over(
+                Window.partitionBy("_rd")
+                .orderBy("_v")
+                .rowsBetween(Window.unboundedPreceding, 0)
+            )
+            .alias("cum_le"),
         )
+    )
+    return _rank_verdict(est, cdf, ["_rd"]).select(
+        F.col("_rd").alias(day_col), "exact", "n_rows", "est_ok"
     )

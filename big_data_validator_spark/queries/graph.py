@@ -6,6 +6,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.operators.graph import (
+    _BASE_RANK,
+    _DAMPING_DEN,
+    _DAMPING_NUM,
+    _INIT_RANK,
     label_propagation_min,
     pagerank_integer,
     triangle_counts,
@@ -14,9 +18,32 @@ from big_data_validator_spark.queries import query
 from big_data_validator_spark.queries.loader import _t
 
 
-@query(
-    "graph_pagerank_flow",
-    oracle="""
+#: Iterations of the PageRank entry and its oracle.
+_PR_ITERS = 3
+
+
+def _pagerank_oracle() -> str:
+    """Unrolled integer PageRank: one MATERIALIZED CTE per iteration,
+    with the damping ratio, initial and base rank of
+    :func:`~big_data_validator_spark.operators.graph.pagerank_integer`."""
+    stages = []
+    prev = "r0"
+    for it in range(1, _PR_ITERS + 1):
+        cur = f"i{it}"
+        stages.append(
+            f"""{cur} AS MATERIALIZED (
+      SELECT n.node,
+             CAST({_BASE_RANK} + ({_DAMPING_NUM} * COALESCE(s.m, 0)) // {_DAMPING_DEN}
+                  AS BIGINT) AS r
+      FROM nodes n LEFT JOIN (
+        SELECT e.dst AS node, SUM({prev}.r // outd.od) AS m
+        FROM e JOIN {prev} ON {prev}.node = e.src
+               JOIN outd ON outd.src = e.src
+        GROUP BY 1) s ON s.node = n.node)"""
+        )
+        prev = cur
+    stages_sql = ",\n    ".join(stages)
+    return f"""
     WITH e AS MATERIALIZED (
       SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
                       's' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -26,38 +53,14 @@ from big_data_validator_spark.queries.loader import _t
     outd AS MATERIALIZED (
       SELECT src, CAST(COUNT(*) AS BIGINT) AS od FROM e GROUP BY 1),
     r0 AS MATERIALIZED (
-      SELECT node, CAST(1000000000000 AS BIGINT) AS r FROM nodes),
-    i1 AS MATERIALIZED (
-      SELECT n.node,
-             CAST(150000000000 + (85 * COALESCE(s.m, 0)) // 100
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS node, SUM(r0.r // outd.od) AS m
-        FROM e JOIN r0 ON r0.node = e.src
-               JOIN outd ON outd.src = e.src
-        GROUP BY 1) s ON s.node = n.node),
-    i2 AS MATERIALIZED (
-      SELECT n.node,
-             CAST(150000000000 + (85 * COALESCE(s.m, 0)) // 100
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS node, SUM(i1.r // outd.od) AS m
-        FROM e JOIN i1 ON i1.node = e.src
-               JOIN outd ON outd.src = e.src
-        GROUP BY 1) s ON s.node = n.node),
-    i3 AS MATERIALIZED (
-      SELECT n.node,
-             CAST(150000000000 + (85 * COALESCE(s.m, 0)) // 100
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS node, SUM(i2.r // outd.od) AS m
-        FROM e JOIN i2 ON i2.node = e.src
-               JOIN outd ON outd.src = e.src
-        GROUP BY 1) s ON s.node = n.node)
-    SELECT node, r AS rank_q FROM i3
+      SELECT node, CAST({_INIT_RANK} AS BIGINT) AS r FROM nodes),
+    {stages_sql}
+    SELECT node, r AS rank_q FROM {prev}
     WHERE node LIKE 's%' ORDER BY node
-    """,
-)
+    """
+
+
+@query("graph_pagerank_flow", oracle=_pagerank_oracle())
 def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank over the customer→supplier flow graph
     (operators/graph.py:pagerank_integer — the registry's first link-
@@ -85,7 +88,7 @@ def graph_pagerank_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey").cast("long") * 2).alias("src"),
         (F.col("l_suppkey").cast("long") * 2 + 1).alias("dst"),
     )
-    ranks = pagerank_integer(edges, iters=3)
+    ranks = pagerank_integer(edges, iters=_PR_ITERS)
     return (
         ranks.filter(F.col("node") % 2 == 1)
         .select(

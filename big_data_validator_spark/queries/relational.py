@@ -31,7 +31,6 @@ from big_data_validator_spark.operators.relational import (
     salted_skew_join,
 )
 from big_data_validator_spark.operators.sketches import (
-    kll_group_quantile_monitor,
     kll_quantile_monitor,
     kll_rolling_monitor,
 )
@@ -1871,6 +1870,7 @@ def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = kll_quantile_monitor(
         o,
         value_col="c",
+        group_cols=[],
         day_col="day",
         quantile_pcts=[50, 90, 99],
         k=200,
@@ -1906,17 +1906,17 @@ def agg_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_kll_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-KEY mergeable quantile monitor (operators/sketches.py:
-    kll_group_quantile_monitor — VERDICT r9 item 4): p50/p90 of order
-    value in cents PER PRIORITY SEGMENT from stored per-(segment, day)
-    sketch rows — the shape real monitors need (p99 latency per
-    customer segment), where agg_kll_mergeable tracks one global
-    distribution.  The raw rows are repartitioned on (segment, day)
-    BEFORE the partial build (as in agg_kll_mergeable: one python
-    sketch per stored key, not per partition×key), each
-    segment's day rows merge to its estimates, and every estimate is
-    verified against the exact PER-GROUP block-scan CDF (windows
+    kll_quantile_monitor with group_cols=["o_orderpriority"] — VERDICT
+    r9 item 4): p50/p90 of order value in cents PER PRIORITY SEGMENT
+    from stored per-(segment, day) sketch rows — the shape real
+    monitors need (p99 latency per customer segment), where
+    agg_kll_mergeable runs the same pipeline with no group column.
+    The raw rows are repartitioned on (segment, day) BEFORE the partial
+    build (one python sketch per stored key, not per partition×key),
+    each segment's day rows merge to its estimates, and every estimate
+    is verified against the exact PER-GROUP block-scan CDF (windows
     partitioned by segment — no global sort, no cross-group window).
-    Hash discipline as the global twin: exact integer percentile at
+    Hash discipline as agg_kll_mergeable: exact integer percentile at
     rank ceil(p·n_seg) plus the ±2.5% rank verdict ship; sketch
     internals never do."""
     o = _t(spark, sf_dir, "orders").select(
@@ -1924,7 +1924,7 @@ def agg_kll_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
     )
-    res = kll_group_quantile_monitor(
+    res = kll_quantile_monitor(
         o,
         value_col="c",
         group_cols=["o_orderpriority"],

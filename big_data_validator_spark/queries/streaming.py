@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 from big_data_validator_spark.operators.cdc import changeset_delta_rows
 from big_data_validator_spark.operators.profile import profile_trend_anomalies
 from big_data_validator_spark.operators.sketches import (
-    kll_group_rollup_quantiles,
-    kll_group_verify_quantiles,
     kll_rollup_quantiles,
     kll_verify_quantiles,
 )
@@ -44,7 +42,6 @@ from big_data_validator_spark.streaming.validate_stream import (
     stream_apply_deltas_to_totals,
     stream_dedup,
     stream_drift_psi,
-    stream_kll_group_sketches,
     stream_kll_sketches,
     stream_mannwhitney_drift,
     stream_markov_drift,
@@ -887,14 +884,14 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def read_back(d: _Drain) -> DataFrame:
         sketches = read_metrics_repository(spark, f"{d.root}/repo")
-        est = kll_rollup_quantiles(sketches, [50, 90, 99], k=200)
+        est = kll_rollup_quantiles(sketches, [], [50, 90, 99], k=200)
         drained = (
             spark.read.parquet(f"{src}/*")
             .filter(F.col("value").isNotNull())
             .select(cents)
         )
         res = kll_verify_quantiles(
-            est, drained, "c", block_width=1_000_000
+            est, drained, "c", [], block_width=1_000_000
         )
         return res.orderBy("quantile_pct")
 
@@ -906,6 +903,7 @@ def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("value").isNotNull())
             .select(cents),
             value_col="c",
+            group_cols=[],
             repo_path=f"{d.root}/repo",
             checkpoint_path=d.checkpoint,
             k=200,
@@ -958,13 +956,13 @@ def _kll_group_stream_source(spark: SparkSession, sf_dir: str) -> str:
 )
 def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING per-group percentile monitor (streaming/
-    validate_stream.py:stream_kll_group_sketches): a real
+    validate_stream.py:stream_kll_sketches): a real
     ``readStream`` drains the 3-run grouped source with
     ``maxFilesPerTrigger=1``, each micro-batch persists ONE KLL sketch
     row PER event_type under the exactly-once batch-id commit
     protocol, and the live per-group p50/p90 is a per-group merge of
     the repository rows — the streaming twin of agg_kll_by_segment,
-    sharing its grouped rollup and grouped exact-CDF verify legs.
+    sharing its rollup and exact-CDF verify legs.
     Values are floor-quantized cents (floor of a double product is
     engine-portable).  The runs partition events by user hash, so the
     oracle is plain SQL over the whole table."""
@@ -972,14 +970,9 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def read_back(d: _Drain) -> DataFrame:
         sketches = read_metrics_repository(spark, f"{d.root}/repo")
-        est = kll_group_rollup_quantiles(
-            sketches.select("event_type", "sketch", "n_rows"),
-            ["event_type"],
-            [50, 90],
-            k=200,
-        )
+        est = kll_rollup_quantiles(sketches, ["event_type"], [50, 90], k=200)
         drained = spark.read.parquet(f"{src}/*")
-        res = kll_group_verify_quantiles(
+        res = kll_verify_quantiles(
             est, drained, "c", ["event_type"], block_width=1_000_000,
         )
         return res.orderBy("event_type", "quantile_pct")
@@ -987,7 +980,7 @@ def streaming_kll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bounded_drain(
         spark,
         "streaming_kll_by_group",
-        lambda d: stream_kll_group_sketches(
+        lambda d: stream_kll_sketches(
             _ordered_stream(spark, src),
             value_col="c",
             group_cols=["event_type"],

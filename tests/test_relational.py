@@ -1296,6 +1296,40 @@ def test_cramer_von_mises_matches_rank_reference(spark):
         cramer_von_mises(a, b, "v", bin_width=0)
 
 
+_TWO_SAMPLE_TESTS = {
+    # name: (operator, statistic column, statistic on one row each: 1 vs 2)
+    "ks": (R.ks_two_sample, "ks_stat", 1.0),
+    "w1": (R.wasserstein_1d, "w1_stat", 1.0),
+    "mwu": (R.mannwhitney_u, "z", -1.0),
+    "cvm": (R.cramer_von_mises, "cvm_t", 0.25),
+}
+_DEGENERATE_SAMPLES = {
+    "empty_side": ([1, 2, 3], []),
+    "both_empty": ([], []),
+    "all_null_side": ([1, 2, 3], [None, None]),
+    "one_row_each": ([1], [2]),
+}
+
+
+@pytest.mark.parametrize("case", list(_DEGENERATE_SAMPLES))
+@pytest.mark.parametrize("test", list(_TWO_SAMPLE_TESTS))
+def test_two_sample_drift_degenerate_inputs(spark, test, case):
+    """Every two-sample drift test has one contract on degenerate
+    inputs: the statistic is NULL when either side has no non-null
+    value, and ``n_a``/``n_b`` count each side's non-null values
+    exactly, 0 for an empty side; one row per side gives the
+    statistic's hand-computed value."""
+    fn, stat, one_each = _TWO_SAMPLE_TESTS[test]
+    xs, ys = _DEGENERATE_SAMPLES[case]
+    a = spark.createDataFrame([(v,) for v in xs], "v long")
+    b = spark.createDataFrame([(v,) for v in ys], "v long")
+    [r] = fn(a, b, "v", bin_width=10).collect()
+    n_a = sum(v is not None for v in xs)
+    n_b = sum(v is not None for v in ys)
+    assert (r["n_a"], r["n_b"]) == (n_a, n_b), r
+    assert r[stat] == (one_each if n_a and n_b else None), r
+
+
 def test_mannwhitney_bh_scan_matches_python_reference(spark):
     """p_cheby_ppm equals the exact integer Chebyshev identity and the
     BH step-up rejects exactly the reference set: a planted strongly

@@ -145,7 +145,9 @@ def test_spark_pipeline_matches_pure_python(spark):
     # rollup = N-row merge, compared against all-data exact
     est = {
         r["quantile_pct"]: r["est"]
-        for r in kll_rollup_quantiles(per_day, [50, 90, 99], k=100).collect()
+        for r in kll_rollup_quantiles(
+            per_day, [], [50, 90, 99], k=100
+        ).collect()
     }
     srt_all = sorted(v for _, v in rows)
     for pct, e in est.items():
@@ -164,7 +166,7 @@ def test_exact_rank_cdf_and_monitor(spark):
     cdf2 = {r["_v"]: r["cum_le"] for r in exact_rank_cdf(df, "v", 137).collect()}
     assert cdf == cdf2
     out = kll_quantile_monitor(
-        df, "v", "day", [50, 90, 99], k=100, block_width=10_000,
+        df, "v", [], "day", [50, 90, 99], k=100, block_width=10_000,
     ).collect()
     assert len(out) == 3
     for r in out:
@@ -178,10 +180,6 @@ def test_grouped_cdf_and_per_segment_monitor(spark):
     """VERDICT r9 item 4: the per-key monitor's exact column must equal
     a per-group brute-force percentile, est_ok must hold, and the
     grouped CDF must be the per-group cumulative distribution."""
-    from big_data_validator_spark.operators.sketches import (
-        kll_group_quantile_monitor,
-    )
-
     rng = random.Random(53)
     segs = ["a", "b", "c"]
     rows = [
@@ -203,7 +201,7 @@ def test_grouped_cdf_and_per_segment_monitor(spark):
     }
     assert cdf == cdf2
 
-    out = kll_group_quantile_monitor(
+    out = kll_quantile_monitor(
         df, "v", ["seg"], "day", [50, 90], k=100, block_width=10_000,
     ).collect()
     assert len(out) == len(segs) * 2
@@ -258,7 +256,7 @@ def test_monitor_plan_is_single_pipeline_per_leg(spark):
     )
     with resource_scope():
         res = kll_quantile_monitor(
-            df, "v", "day", [50, 90], k=64, block_width=100
+            df, "v", [], "day", [50, 90], k=64, block_width=100
         )
         # shuffle_count is a TEXT count and the cached subtree's plan text
         # reprints under every InMemoryRelation reference, so the number
@@ -337,7 +335,7 @@ def test_stream_kll_sketches_exactly_once_and_merge(spark, tmp_path):
             .parquet(str(src / "*"))
         )
         q = stream_kll_sketches(
-            stream, "c", repo, str(tmp_path / ckpt), k=100
+            stream, "c", [], repo, str(tmp_path / ckpt), k=100
         ).trigger(availableNow=True).start()
         q.awaitTermination()
 
@@ -356,7 +354,7 @@ def test_stream_kll_sketches_exactly_once_and_merge(spark, tmp_path):
     sketches = read_metrics_repository(spark, repo)
     est = {
         r["quantile_pct"]: r["est"]
-        for r in kll_rollup_quantiles(sketches, [50, 99], k=100).collect()
+        for r in kll_rollup_quantiles(sketches, [], [50, 99], k=100).collect()
     }
     all_vals = sorted(
         r["c"] for r in spark.read.parquet(str(src / "*")).collect()
@@ -373,12 +371,9 @@ def test_stream_kll_group_sketches_per_group_rows_and_replay(spark, tmp_path):
     excluded."""
     import os
 
-    from big_data_validator_spark.operators.sketches import (
-        kll_group_rollup_quantiles,
-    )
     from big_data_validator_spark.streaming.validate_stream import (
         read_metrics_repository,
-        stream_kll_group_sketches,
+        stream_kll_sketches,
     )
 
     rng = random.Random(77)
@@ -409,7 +404,7 @@ def test_stream_kll_group_sketches_per_group_rows_and_replay(spark, tmp_path):
             .option("latestFirst", "false")
             .parquet(str(src / "*"))
         )
-        q = stream_kll_group_sketches(
+        q = stream_kll_sketches(
             stream, "c", ["seg"], repo, str(tmp_path / ckpt), k=100
         ).trigger(availableNow=True).start()
         q.awaitTermination()
@@ -426,10 +421,8 @@ def test_stream_kll_group_sketches_per_group_rows_and_replay(spark, tmp_path):
     assert sorted(r["sketch"] for r in rows2) == sorted(
         r["sketch"] for r in rows1
     )
-    est = kll_group_rollup_quantiles(
-        read_metrics_repository(spark, repo).select(
-            "seg", "sketch", "n_rows"
-        ),
+    est = kll_rollup_quantiles(
+        read_metrics_repository(spark, repo),
         ["seg"],
         [50, 90],
         k=100,
