@@ -6,10 +6,11 @@
     python bench.py --ref DIR [names...]  # scale run, merged into BENCH_SCALE.json
 
 Every run builds one session, runs an untimed warm pass, then reports the
-per-query median (and min) of $SPARK_GRAFT_BENCH_PASSES timed passes.
+per-query median (with min and max) of $SPARK_GRAFT_BENCH_PASSES timed
+passes.
 
-Prints per-query detail (one JSON line, with the full {name: sec} median
-and min maps), then the FINAL line is the compact driver contract — small
+Prints per-query detail (one JSON line, with the full {name: sec} median,
+min and max maps), then the FINAL line is the compact driver contract — small
 enough to always survive the driver's ~2 KB tail capture (VERDICT r4 §1):
     {"metric": "headline_queries_total_wall", "value": <total_sec>,
      "unit": "sec", "value_min": ..., "sf": ..., "stat": "median",
@@ -274,6 +275,11 @@ def main() -> None:
     timings_min = {
         name: round(min(vals), 3) for name, vals in samples.items()
     }
+    # `queries_max` with `queries_min` is each entry's spread across the
+    # timed passes: a subset A/B reads a median difference against it
+    timings_max = {
+        name: round(max(vals), 3) for name, vals in samples.items()
+    }
     # Previous round's committed detail, read BEFORE this run overwrites
     # it — the denominator of the session-noise device (see
     # compute_prev_ratios).
@@ -293,6 +299,7 @@ def main() -> None:
         "metric": "headline_queries_detail",
         "queries": timings,
         "queries_min": timings_min,
+        "queries_max": timings_max,
         "sf": sf_val,
         "cpus": int(CPUS),
         # explicit, machine-readable exclusion record (VERDICT r7

@@ -734,7 +734,7 @@ def winnowing_near_dup_pairs(
 
 # ----------------------------------------------------------- dedup clusters
 
-def _driver_union_find(spark, e: DataFrame, edges: DataFrame) -> DataFrame:
+def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     """Union-find (path compression + union-by-min-root) over a BOUNDED
     collected edge list; the caller enforces the bound.  Roots are always
     the minimum id, so labels match the distributed propagation exactly."""
@@ -751,8 +751,8 @@ def _driver_union_find(spark, e: DataFrame, edges: DataFrame) -> DataFrame:
         return root
 
     # the symmetric frame is cached (and being materialized by the probe
-    # count); collecting it instead of `e` avoids recomputing candidate
-    # generation at the cost of 2x tiny rows
+    # count); collecting it instead of the one-way pair list avoids
+    # recomputing candidate generation at the cost of 2x tiny rows
     vertices = set()
     for r in edges.collect():
         a, b = r[0], r[1]
@@ -828,7 +828,7 @@ def duplicate_clusters(
         # edges.count() also materializes the cache the iterative path
         # would fill anyway, so the probe is not wasted work either way
         if edges.count() <= 2 * driver_edge_limit:
-            return _driver_union_find(pairs.sparkSession, e, edges)
+            return _driver_union_find(pairs.sparkSession, edges)
     # eager checkpoint, not cache: the labels frame returned below joins
     # against vertices lazily, possibly after the pinned `edges` is
     # released — a cached-but-unmaterialized frame would silently

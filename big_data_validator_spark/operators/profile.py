@@ -238,9 +238,8 @@ def candidate_key_rule(df: DataFrame) -> DataFrame:
 
     ONE aggregation pass for all columns (the :func:`profile_table`
     shape): N ``count_distinct`` aggregates compile into a single
-    multi-distinct Expand plan — one scan, no per-column jobs.  At
-    100 TB swap ``approx_count_distinct`` in via the profiler when a
-    ±2% screen is enough; this exact form is the hash-checkable rule.
+    multi-distinct Expand plan — one scan, no per-column jobs.  The
+    counts are exact, so the rule is hash-checkable.
     """
     columns = [c for c, t in df.dtypes if not t.startswith(("array", "map", "struct"))]
     if not columns:

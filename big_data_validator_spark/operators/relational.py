@@ -12,9 +12,7 @@ a Spark-first design:
   only materialize violations when asked;
 - joins against dimension tables take an explicit ``broadcast_dim`` hint
   (small dims should never shuffle the fact table's full width);
-- cardinality at scale uses ``approx_count_distinct`` (HLL sketch, no
-  shuffle of distinct values) with the exact variant available for
-  small-data oracle comparison.
+- distinct counts are exact ``count_distinct`` aggregates.
 """
 
 from __future__ import annotations
@@ -241,7 +239,7 @@ def distribution_drift_psi_split(
     so the generic operator's flexibility costs a needless 2× read at
     100 TB).  Same output contract and same numbers as the two-frame
     form over ``df.filter(old_pred)`` / ``df.filter(new_pred)`` —
-    pinned in tests/test_drift.py."""
+    pinned in tests/test_relational.py."""
     counts = (
         df.filter(old_pred | new_pred)
         .select(
@@ -872,16 +870,15 @@ def _pooled_value_counts(
     )
 
 
-def _value_block_scan(
-    cnts: DataFrame, bin_width: float, sum_cols: Sequence[str]
-) -> DataFrame:
-    """:func:`block_scan` of a per-distinct-value counts frame in ``_v``
-    order, blocked by ``floor(_v / bin_width)`` — the drift family's
-    exact CDFs and ranks."""
+def _value_blocks(bin_width: float) -> Column:
+    """The block key ``floor(_v / bin_width)`` under which the drift
+    family's exact CDFs and ranks :func:`block_scan` a per-distinct-value
+    counts frame in ``_v`` order.  Callers build it before they pin
+    their counts, so a non-positive width raises with no cache left
+    behind."""
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
-    blk = F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
-    return block_scan(cnts, blk, ["_v"], sum_cols)
+    return F.floor(F.col("_v") / F.lit(float(bin_width))).cast("long")
 
 
 def ks_two_sample(
@@ -911,8 +908,9 @@ def ks_two_sample(
     sample is empty (its count is then 0).  Nulls are excluded (a null
     carries no position in either CDF).
     """
+    blocks = _value_blocks(bin_width)
     cnts = _pooled_value_counts(a, b, value_col, as_long=False)
-    cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"]).select(
+    cum = block_scan(cnts, blocks, ["_v"], ["_na", "_nb"]).select(
         (F.col("_na_before") + F.col("_na")).alias("_cuma"),
         (F.col("_nb_before") + F.col("_nb")).alias("_cumb"),
     )
@@ -976,8 +974,9 @@ def wasserstein_1d(
     and NULL when either sample is empty (its count is then 0).  Nulls
     are excluded (no position in either CDF).
     """
+    blocks = _value_blocks(bin_width)
     cnts = _pooled_value_counts(a, b, value_col, as_long=True)
-    cum = _value_block_scan(cnts, bin_width, ["_na", "_nb"])
+    cum = block_scan(cnts, blocks, ["_v"], ["_na", "_nb"])
     grand = cnts.agg(
         F.coalesce(F.sum("_na"), F.lit(0)).alias("_n_a"),
         F.coalesce(F.sum("_nb"), F.lit(0)).alias("_n_b"),
@@ -1132,6 +1131,7 @@ def mannwhitney_u(
     row ``(n_a, n_b, u_a_x2, u_b_x2, z)``; ``z`` is NULL when either
     sample is empty (its count is then 0); nulls are excluded.
     """
+    _value_blocks(bin_width)  # a bad width raises before the pin
     return mwu_from_value_counts(
         _pooled_value_counts(a, b, value_col, as_long=True), bin_width
     )
@@ -1148,8 +1148,11 @@ def mwu_from_value_counts(
     owns any caching of ``cnts`` (the batch wrapper pins it; the
     streaming monitor's per-batch frames are bounded parquet reads
     and pass through uncached)."""
-    scanned = _value_block_scan(
-        cnts.withColumn("_t", F.col("_na") + F.col("_nb")), bin_width, ["_t"]
+    scanned = block_scan(
+        cnts.withColumn("_t", F.col("_na") + F.col("_nb")),
+        _value_blocks(bin_width),
+        ["_v"],
+        ["_t"],
     )
     dec = "decimal(38,0)"
     c = F.col("_t_before").cast(dec)
@@ -1242,10 +1245,12 @@ def cramer_von_mises(
     Returns one row ``(n_a, n_b, cvm_t)``; ``cvm_t`` NULL when either
     sample is empty; nulls excluded.
     """
+    blocks = _value_blocks(bin_width)
     cnts = _pooled_value_counts(a, b, value_col, as_long=True)
-    scanned = _value_block_scan(
+    scanned = block_scan(
         cnts.withColumn("_t", F.col("_na") + F.col("_nb")),
-        bin_width,
+        blocks,
+        ["_v"],
         ["_t", "_na"],
     )
     dec = "decimal(38,0)"
@@ -1319,6 +1324,7 @@ def _one_vs_rest_rank_frames(
     is a broadcast 1-row frame ``(_N, _ties)`` with the pool size and
     the Σ(t³−t) tie correction, and ``cnts`` is the pinned pair-count
     frame."""
+    blocks = _value_blocks(bin_width)
     v = F.col(value_col)
     base = df.filter(v.isNotNull() & F.col(segment_col).isNotNull()).select(
         F.col(segment_col).alias("segment"),
@@ -1334,7 +1340,7 @@ def _one_vs_rest_rank_frames(
     )
     vals = cnts.groupBy("_v").agg(F.sum("_c").alias("_t"))
     dec = "decimal(38,0)"
-    vstats = _value_block_scan(vals, bin_width, ["_t"]).select(
+    vstats = block_scan(vals, blocks, ["_v"], ["_t"]).select(
         "_v",
         F.col("_t").cast(dec).alias("_t"),
         F.col("_t_before").cast(dec).alias("_cb"),
@@ -1735,7 +1741,7 @@ def equidepth_histogram(
     )
     grand = cnts.agg(F.sum("_n").alias("_total"))
     binned = (
-        _value_block_scan(cnts, block_width, ["_n"])
+        block_scan(cnts, _value_blocks(block_width), ["_v"], ["_n"])
         .join(F.broadcast(grand))
         .select(
             "_v",

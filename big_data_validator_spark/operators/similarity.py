@@ -1,14 +1,34 @@
-"""Embedding similarity search: brute-force cosine top-k (baseline) and a
-random-hyperplane-LSH bucketed variant (scale path).
+"""Embedding similarity: top-k search, recall audits, near-duplicates,
+semantic dedup, rank fusion and coresets.
 
-Everything is expression-level (``zip_with`` / ``aggregate`` higher-order
-functions) — no Python UDFs on the hot path.  At 100 TB:
+Every top-k operator is candidate generation followed by one exact
+rerank, :func:`_top_k` (``score DESC, id ASC``, ``row_number``, cut at
+``k``).  The generators differ only in how candidates reach it:
 
-- brute-force is O(|queries| × |corpus|) but shuffle-free when the query
-  set is broadcast — right answer for small query batches;
-- the LSH variant buckets the corpus once (one projection + one shuffle on
-  the bucket key) and only scores within matching buckets; recall is tuned
-  by ``num_planes``/``num_tables`` exactly like FAISS-style IVF probes.
+- :func:`brute_force_topk` — a broadcast cross join of the queries
+  against the corpus: O(|queries| × |corpus|), but the corpus never
+  shuffles;
+- :func:`lsh_ann_topk` — an equi-join on ``(table, bucket)`` of
+  random-hyperplane sign buckets (:func:`lsh_buckets_kernel`); recall
+  is tuned by ``num_planes``/``num_tables``;
+- :func:`ivf_probe_topk` — an equi-join on the ``nprobe`` nearest cells
+  of a k-means coarse quantizer;
+- :func:`pq_ann_topk` — product-quantization codes scored against
+  per-query lookup tables;
+- :func:`ann_topk_exactint` — the ``(table, bucket)`` join over
+  integer-quantized vectors and hyperplanes, exact in any engine.
+
+Brute force, LSH and IVF score candidates with one round-6 cosine
+(:func:`_cosine_top_k`) against one broadcast query projection
+(:func:`_query_side`).  The SQ8 and Matryoshka audits are one recall
+audit (:func:`_recall_audit`).  The exact-integer near-duplicate pairs,
+SemDeDup and the k-center coreset share the integer quantization;
+:func:`hybrid_lexical_dense_rrf` fuses a lexical ranking with the
+brute-force one through :func:`rrf_fuse`.
+
+Scoring is expression-level (``zip_with`` / ``aggregate``
+higher-order functions); Python runs only in the Arrow bucketing,
+assignment and encoding kernels, one matmul per batch.
 """
 
 from __future__ import annotations
@@ -16,11 +36,75 @@ from __future__ import annotations
 import random
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_validator_spark.functions.exprs import cosine_similarity
-from big_data_validator_spark.operators import pin
+from big_data_validator_spark.operators import pin, rebalance_for_compute
+from big_data_validator_spark.operators.dedup import _shingle_rows, capped_bucket_pairs
+
+SEED = 42
+
+
+# ------------------------------------------------ candidates and rerank
+
+def _top_k(
+    scored: DataFrame, score: str, k: int, id_col: str, rank: str
+) -> DataFrame:
+    """The one per-query rerank: number each query's rows into ``rank``
+    by ``score`` descending, ties to the lower ``id_col``, and keep the
+    first ``k``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col(id_col).asc()
+    )
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _query_side(
+    queries: DataFrame, id_col: str, vec: Column, *extra: Column
+) -> DataFrame:
+    """The broadcast query projection ``(query_id, _qvec, *extra)`` —
+    the small side by construction, so the corpus streams past it."""
+    return F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), vec.alias("_qvec"), *extra
+        )
+    )
+
+
+def _cosine_top_k(
+    cands: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Score ``(query_id, id, vec, _qvec)`` candidates by round-6 cosine
+    and rerank them: ``(query_id, id, cosine, rank)``."""
+    scored = cands.select(
+        "query_id",
+        id_col,
+        F.round(cosine_similarity(F.col(vec_col), F.col("_qvec")), 6).alias(
+            "cosine"
+        ),
+    )
+    return _top_k(scored, "cosine", k, id_col, "rank")
+
+
+def _fold(a: Column, b: Column, zero: Column) -> Column:
+    """``zero + Σ a[i]·b[i]``: the dot product every scorer folds."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), zero, lambda acc, v: acc + v
+    )
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Round-6 float dot product — the audits' rank-determinism device."""
+    return F.round(_fold(a, b, F.lit(0.0)), 6)
+
+
+def _int_dot(a: Column, b: Column) -> Column:
+    """Exact integer dot product of two ``array<bigint>`` columns as
+    DECIMAL(38,0) — expression-level, codegen-friendly, reproducible."""
+    return _fold(a, b, F.lit(0).cast("long")).cast("decimal(38,0)")
 
 
 def brute_force_topk(
@@ -33,38 +117,20 @@ def brute_force_topk(
     """Exact cosine top-k of each query against the corpus; both
     frames carry ``id_col`` and ``vec_col``.
 
-    The query side is broadcast (it is the small side by construction), so
-    the corpus streams through executors without a shuffle; per-query top-k
-    uses a rank window partitioned by query id.  Returns
-    ``(query_id, vec_id, cosine, rank)``; self-matches excluded.
+    Every (query, corpus row) pair is a candidate: the query side is
+    broadcast, so the corpus streams through executors without a
+    shuffle.  Returns ``(query_id, vec_id, cosine, rank)``;
+    self-matches excluded.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
-    corpus = rebalance_for_compute(corpus)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
+    cands = (
+        rebalance_for_compute(corpus)
+        .select(F.col(id_col), F.col(vec_col))
+        .join(
+            _query_side(queries, id_col, F.col(vec_col)),
+            F.col(id_col) != F.col("query_id"),
         )
     )
-    scored = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .join(q, F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col("_qvec")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_top_k(cands, k, id_col, vec_col)
 
 
 def _random_hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
@@ -75,26 +141,46 @@ def _random_hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float
     ]
 
 
+def quantized_hyperplanes(
+    dim: int,
+    num_planes: int,
+    seed: int,
+    scale: int = 10_000,
+) -> list[list[int]]:
+    """:func:`_random_hyperplanes` quantized to integer units — the
+    bucketing geometry for the EXACT-INTEGER paths, where every
+    arithmetic step must be bit-reproducible by any engine (half-up
+    rounding happens once, driver-side, in Python)."""
+    return [
+        [int(round(x * scale)) for x in plane]
+        for plane in _random_hyperplanes(dim, num_planes, seed)
+    ]
+
+
 def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
     """Arrow-batched kernel computing EVERY table's bucket id in one
     ``V @ P.T`` matmul: stack all tables' hyperplanes into a single
-    (tables*planes, dim) matrix, take signs, pack each table's bit block
-    into a long.  Returns a pandas_udf column: ``array<bigint>`` of
-    ``len(tables)`` bucket ids per row.
+    (tables*planes, dim) matrix, take signs (``>= 0``), pack bit ``j`` of
+    each table's id from plane ``j``.  Returns a pandas_udf column:
+    ``array<bigint>`` of ``len(tables)`` bucket ids per row, NULL for a
+    NULL vector.
 
-    One BLAS call per Arrow batch in place of tables×planes interpreted
-    array passes per row — the same ~6× win measured on the
-    MinHash/SimHash kernels."""
+    The matmul runs in the hyperplanes' dtype: float64 for
+    :func:`_random_hyperplanes`, int64 for :func:`quantized_hyperplanes`
+    over pre-quantized vectors.  int64 products are EXACT (no FMA, no
+    reassociation error), so the integer sign pattern is reproducible
+    by any engine summing the same integers in any order; magnitudes
+    are bounded by construction (|q| ≤ ~1e5, |plane| ≤ ~1e5, dim ≤ 4096
+    keeps sums < 2^63).  One BLAS call per Arrow batch in place of
+    tables×planes interpreted array passes per row."""
     import numpy as np
 
     from pyspark.sql.pandas.functions import pandas_udf
 
     num_tables = len(tables)
     num_planes = len(tables[0])
-    P = np.array(
-        [p for planes in tables for p in planes], dtype=np.float64
-    )  # (tables*planes, dim)
-    weights = (1 << np.arange(num_planes, dtype=np.int64))  # bit packing
+    P = np.array([p for planes in tables for p in planes])  # (tables*planes, dim)
+    weights = 1 << np.arange(num_planes, dtype=np.int64)  # bit packing
 
     @pandas_udf("array<bigint>")
     def kernel(vs):
@@ -105,11 +191,13 @@ def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
             return pd.Series([None] * len(vs))
         V = np.stack(
             [
-                np.zeros(P.shape[1]) if m else np.asarray(v, dtype=np.float64)
+                np.zeros(P.shape[1], dtype=P.dtype)
+                if m
+                else np.asarray(v, dtype=P.dtype)
                 for v, m in zip(vs, null_mask)
             ]
         )
-        signs = (V @ P.T) >= 0.0
+        signs = (V @ P.T) >= 0
         buckets = (
             signs.reshape(len(vs), num_tables, num_planes).astype(np.int64)
             * weights
@@ -119,9 +207,6 @@ def lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[float]]]):
         return out
 
     return kernel
-
-
-SEED = 42
 
 
 def lsh_ann_topk(
@@ -141,52 +226,27 @@ def lsh_ann_topk(
     (id, bucket) pairs only.  Recall rises with tables, cost with
     2^-num_planes bucket occupancy; defaults give ~0.9 recall on 64-d
     Gaussian data (pinned by tests against :func:`brute_force_topk`).
-    Returns ``(query_id, vec_id, cosine, rank)``.
+    Returns ``(query_id, vec_id, cosine, rank)``; self-matches excluded.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
-    corpus = rebalance_for_compute(corpus)
-    tables = [
-        _random_hyperplanes(dim, num_planes, SEED + 1000 * t)
-        for t in range(num_tables)
-    ]
-    kernel = lsh_buckets_kernel(tables)
-
-    def bucketize(df: DataFrame, idc: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(idc),
-                F.col(vec_col),
-                F.posexplode(kernel(vec_col)).alias("table", "bucket"),
-            )
-        )
-
-    cb = bucketize(corpus, id_col)
-    qb = bucketize(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        "query_id",
-    ).withColumnRenamed(vec_col, "_qvec")
-
+    kernel = lsh_buckets_kernel(
+        [
+            _random_hyperplanes(dim, num_planes, SEED + 1000 * t)
+            for t in range(num_tables)
+        ]
+    )
+    buckets = F.posexplode(kernel(vec_col)).alias("table", "bucket")
     cands = (
-        cb.join(F.broadcast(qb), ["table", "bucket"])
+        rebalance_for_compute(corpus)
+        .select(F.col(id_col), F.col(vec_col), buckets)
+        .join(
+            _query_side(queries, id_col, F.col(vec_col), buckets),
+            ["table", "bucket"],
+        )
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col, vec_col, "_qvec")
         .dropDuplicates(["query_id", id_col])
     )
-    scored = cands.select(
-        "query_id",
-        id_col,
-        F.round(cosine_similarity(F.col(vec_col), F.col("_qvec")), 6).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_top_k(cands, k, id_col, vec_col)
 
 
 _KMEANS_ITERS = 8
@@ -213,6 +273,25 @@ def _train_centroids_kmeans(
             if len(members):
                 C[c] = members.mean(axis=0)
     return C
+
+
+_TRAIN_SAMPLE = 1024
+
+
+def _train_sample(corpus: DataFrame, id_col: str, vec_col: str) -> list:
+    """The index trainers' bounded deterministic sample: the vectors of
+    the ``_TRAIN_SAMPLE`` smallest ids, in one collect.  orderBy+limit
+    plans as a distributed top-k (TakeOrderedAndProject), so the sample
+    is stable across runs and partitionings — a bare limit() picks
+    whichever tasks finish first, which would make centroids (and ANN
+    recall) run-dependent."""
+    return [
+        r[1]
+        for r in corpus.select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(_TRAIN_SAMPLE)
+        .collect()
+    ]
 
 
 def ivf_assign_kernel(centroids, nprobe: int):
@@ -244,34 +323,22 @@ def ivf_assign_kernel(centroids, nprobe: int):
     return kernel
 
 
-_TRAIN_SAMPLE = 1024
-
-
 def ivf_train(
     corpus: DataFrame,
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Train the IVF coarse quantizer from a bounded deterministic sample.
+    """Train the IVF coarse quantizer from :func:`_train_sample`.
 
     Split out of :func:`ivf_ann_topk` so an audit running SEVERAL probe
     settings over one corpus trains (and collects) ONCE — the training
     collect is a whole Spark job, and at audit-query granularity job count
     dominates wall-clock long before data size does (BENCH r4).
     """
-    # deterministic bounded sample: orderBy+limit plans as a distributed
-    # top-k (TakeOrderedAndProject), so the training set is stable across
-    # runs/partitionings — a bare limit() picks whichever tasks finish
-    # first, which would make centroids (and ANN recall) run-dependent
-    sample = [
-        r[1]
-        for r in corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(_TRAIN_SAMPLE)
-        .collect()
-    ]
-    return _train_centroids_kmeans(sample, num_centroids, seed=SEED)
+    return _train_centroids_kmeans(
+        _train_sample(corpus, id_col, vec_col), num_centroids, seed=SEED
+    )
 
 
 def ivf_assign_cells(
@@ -300,38 +367,29 @@ def ivf_probe_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Score each query against the ``nprobe`` nearest cells of a
-    pre-assigned corpus (:func:`ivf_assign_cells`)."""
-    assignN = ivf_assign_kernel(centroids, nprobe)
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(assignN(vec_col)).alias("cell"),
-    )
+    pre-assigned corpus (:func:`ivf_assign_cells`): candidates join on
+    the cell id.  Returns ``(query_id, vec_id, cosine, rank)``;
+    self-matches excluded."""
+    probe = ivf_assign_kernel(centroids, nprobe)
     cands = (
-        cells.join(F.broadcast(qb), "cell")
+        cells.join(
+            _query_side(
+                queries,
+                id_col,
+                F.col(vec_col),
+                F.explode(probe(vec_col)).alias("cell"),
+            ),
+            "cell",
+        )
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col, vec_col, "_qvec")
     )
-    scored = cands.select(
-        "query_id",
-        id_col,
-        F.round(cosine_similarity(F.col(vec_col), F.col("_qvec")), 6).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_top_k(cands, k, id_col, vec_col)
 
 
 def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
     k: int = 10,
     num_centroids: int = 16,
     nprobe: int = 4,
@@ -354,8 +412,6 @@ def ivf_ann_topk(
     :func:`ivf_probe_topk`; call the pieces directly to share the
     quantizer across probe settings.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
     corpus = rebalance_for_compute(corpus)
     centroids = ivf_train(corpus, num_centroids, id_col=id_col, vec_col=vec_col)
     cells = ivf_assign_cells(corpus, centroids, id_col, vec_col)
@@ -372,8 +428,8 @@ def pq_train(
 ):
     """Train product-quantization codebooks: split the vector into
     ``num_subspaces`` contiguous blocks and k-means each block
-    independently over a bounded deterministic sample (same
-    bounded-driver-work pattern as :func:`ivf_train`).
+    independently over :func:`_train_sample` (the bounded driver work
+    :func:`ivf_train` does).
 
     Returns a ``(num_subspaces, codes_per_subspace, dim/num_subspaces)``
     numpy array.  PQ is the memory-side scale lever the hash/cell indexes
@@ -388,14 +444,7 @@ def pq_train(
 
     if dim % num_subspaces != 0:
         raise ValueError("dim must divide evenly into num_subspaces")
-    sample = [
-        r[1]
-        for r in corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(_TRAIN_SAMPLE)
-        .collect()
-    ]
-    X = np.asarray(sample, dtype=np.float64)
+    X = np.asarray(_train_sample(corpus, id_col, vec_col), dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     dsub = dim // num_subspaces
     books = [
@@ -459,13 +508,11 @@ def pq_ann_topk(
     broadcast with the query set; scoring is a pure expression over the
     code array (``aggregate`` over zipped LUT slices), JVM-side, no
     Python in the scoring scan.  Returns ``(query_id, vec_id, adc_score,
-    rank)`` where higher ``adc_score`` ≈ higher cosine; rows-only
-    (k-means codebooks are engine-specific), recall pinned in pytest
-    against :func:`brute_force_topk`.
+    rank)`` where higher ``adc_score`` ≈ higher cosine; self-matches
+    excluded; rows-only (k-means codebooks are engine-specific), recall
+    pinned in pytest against :func:`brute_force_topk`.
     """
     import numpy as np
-
-    from big_data_validator_spark.operators import rebalance_for_compute
 
     corpus = rebalance_for_compute(corpus)
     books = pq_train(
@@ -481,11 +528,8 @@ def pq_ann_topk(
     # flattened to one literal array the scoring expression indexes into:
     # lut[s*kc + code] — built driver-side from the collected query set
     # (the query side is small by construction, same as brute force)
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    ).collect()
     lut_rows = []
-    for r in qrows:
+    for r in _query_side(queries, id_col, F.col(vec_col)).collect():
         x = np.asarray(r["_qvec"], dtype=np.float64)
         x = x / max(np.linalg.norm(x), 1e-12)
         xs = x.reshape(m, dsub)
@@ -519,87 +563,10 @@ def pq_ann_topk(
             ).alias("adc_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "adc_score", k, id_col, "rank")
 
 
 # ----------------------------------------------- exact-integer near-dup
-
-def quantized_hyperplanes(
-    dim: int,
-    num_planes: int,
-    seed: int,
-    scale: int = 10_000,
-) -> list[list[int]]:
-    """:func:`_random_hyperplanes` quantized to integer units — the
-    bucketing geometry for the EXACT-INTEGER near-dup path, where every
-    arithmetic step must be bit-reproducible by any engine (half-up
-    rounding happens once, driver-side, in Python)."""
-    return [
-        [int(round(x * scale)) for x in plane]
-        for plane in _random_hyperplanes(dim, num_planes, seed)
-    ]
-
-
-def int_lsh_buckets_kernel(tables: Sequence[Sequence[Sequence[int]]]):
-    """Integer twin of :func:`lsh_buckets_kernel`: one int64 matmul per
-    Arrow batch over PRE-QUANTIZED vectors.  int64 matrix products are
-    EXACT (no FMA, no reassociation error — integer adds commute), so
-    the resulting sign pattern is reproducible by any engine summing the
-    same integers in any order; magnitudes are bounded by construction
-    (|q| ≤ ~1e5, |plane| ≤ ~1e5, dim ≤ 4096 keeps sums < 2^63)."""
-    import numpy as np
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    num_tables = len(tables)
-    num_planes = len(tables[0])
-    P = np.array(
-        [p for planes in tables for p in planes], dtype=np.int64
-    )  # (tables*planes, dim)
-    weights = 1 << np.arange(num_planes, dtype=np.int64)
-
-    @pandas_udf("array<bigint>")
-    def kernel(vs):
-        import pandas as pd
-
-        null_mask = vs.isna()
-        if null_mask.all():
-            return pd.Series([None] * len(vs))
-        V = np.stack(
-            [
-                np.zeros(P.shape[1], dtype=np.int64)
-                if m
-                else np.asarray(v, dtype=np.int64)
-                for v, m in zip(vs, null_mask)
-            ]
-        )
-        signs = (V @ P.T) >= 0  # same >= 0 rule as the float path
-        buckets = (
-            signs.reshape(len(vs), num_tables, num_planes).astype(np.int64)
-            * weights
-        ).sum(axis=2)
-        out = pd.Series(list(buckets))
-        out[null_mask] = None
-        return out
-
-    return kernel
-
-
-def _int_dot(a, b):
-    """Exact integer dot product of two ``array<bigint>`` columns as
-    DECIMAL(38,0) — expression-level, codegen-friendly, reproducible."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    ).cast("decimal(38,0)")
-
 
 def quantize_vec(vec_col, scale: int):
     """``floor(x * scale)`` per component as ``array<bigint>``.  floor of
@@ -610,6 +577,50 @@ def quantize_vec(vec_col, scale: int):
     return F.transform(
         vec_col.cast("array<double>"),
         lambda x: F.floor(x * F.lit(float(scale))).cast("long"),
+    )
+
+
+def _check_decimal_verify(name: str, dim: int, quant_scale: int) -> None:
+    """Refuse a ``dim``/``quant_scale`` pair whose exact verify products
+    overflow DECIMAL(38,0) (ADVICE r7): both extremes — dot²·10¹² and
+    t_ppm²·na²·nb² — are bounded by (dim·quant_scale²)²·10¹² for
+    unit-range components, and past DECIMAL(38,0) the non-ANSI products
+    NULL out and the filter silently drops EVERY pair.  dim·quant_scale²
+    must stay below 1e13, i.e. dim < ~1000 at the default quant_scale."""
+    if (dim * quant_scale * quant_scale) ** 2 * 10**12 >= 10**38:
+        raise ValueError(
+            f"{name}: dim * quant_scale**2 = "
+            f"{dim * quant_scale * quant_scale:.3g} >= 1e13 pushes the "
+            "exact verify products past DECIMAL(38,0) (they would NULL "
+            "out and drop all pairs); lower quant_scale — precision is "
+            "~1/quant_scale per component — or reduce dim"
+        )
+
+
+def _verified_pairs(pairs: DataFrame, threshold_ppm: int) -> DataFrame:
+    """The exact-integer cosine verdict over candidate pairs
+    ``(id_a, id_b, qv_a, qv_b)``: distinct pairs with
+    ``cos ≥ threshold_ppm / 1e6``, decided WITHOUT sqrt or division as
+    ``dot > 0 ∧ dot²·10¹² ≥ threshold_ppm²·|a|²·|b|²`` in DECIMAL(38,0).
+    Returns ``(id_a, id_b, dot, na2, nb2)``."""
+    t2 = F.lit(threshold_ppm * threshold_ppm).cast("decimal(13,0)")
+    return (
+        pairs.dropDuplicates(["id_a", "id_b"])
+        .select(
+            "id_a",
+            "id_b",
+            _int_dot(F.col("qv_a"), F.col("qv_b")).alias("dot"),
+            _int_dot(F.col("qv_a"), F.col("qv_a")).alias("na2"),
+            _int_dot(F.col("qv_b"), F.col("qv_b")).alias("nb2"),
+        )
+        .filter(
+            (F.col("dot") > 0)
+            & (
+                (F.col("dot") * F.col("dot"))
+                * F.lit(10**12).cast("decimal(13,0)")
+                >= t2 * F.col("na2") * F.col("nb2")
+            )
+        )
     )
 
 
@@ -636,12 +647,12 @@ def embedding_near_dup_pairs_exactint(
 
     1. quantize: ``q[i] = floor(embedding[i] * quant_scale)`` (int64);
     2. bucket:   sign pattern of ``q · plane_int`` per table — int64
-       matmul in an Arrow kernel (:func:`int_lsh_buckets_kernel`);
+       matmul in an Arrow kernel (:func:`lsh_buckets_kernel` over
+       :func:`quantized_hyperplanes`);
     3. candidates: per-(table, bucket) self-join with the
        ``capped_bucket_pairs`` skew guard;
     4. verify: ``cos(a, b) >= threshold_ppm / 1e6`` decided WITHOUT
-       sqrt or division: ``dot > 0  AND  dot² · 10¹²  >=
-       threshold_ppm² · |a|² · |b|²`` in DECIMAL(38,0) — with
+       sqrt or division (:func:`_verified_pairs`) — with
        ``quant_scale = 1e5`` and 64 dims the extreme magnitudes are
        ~3e34, inside DECIMAL(38,0) and DuckDB's HUGEINT.
 
@@ -655,30 +666,14 @@ def embedding_near_dup_pairs_exactint(
     within ~1e-4 of the threshold — and moves them identically in every
     engine, which is the point.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
-
-    # ADVICE r7: both verify-predicate extremes — dot²·10¹² and
-    # t_ppm²·na²·nb² — are bounded by (dim·quant_scale²)²·10¹² for
-    # unit-range components; past DECIMAL(38,0) the non-ANSI products
-    # NULL out and the filter silently drops EVERY pair.  Refuse the
-    # parameter combination loudly instead (dim·quant_scale² < 1e13,
-    # i.e. dim < ~1000 at the default quant_scale — the docstring's
-    # 4096-dim case needs quant_scale ≤ ~4e4).
-    if (dim * quant_scale * quant_scale) ** 2 * 10**12 >= 10**38:
-        raise ValueError(
-            "embedding_near_dup_pairs_exactint: dim * quant_scale**2 = "
-            f"{dim * quant_scale * quant_scale:.3g} >= 1e13 pushes the "
-            "exact verify products past DECIMAL(38,0) (they would NULL "
-            "out and drop all pairs); lower quant_scale — precision is "
-            "~1/quant_scale per component — or reduce dim"
-        )
+    _check_decimal_verify("embedding_near_dup_pairs_exactint", dim, quant_scale)
     df = rebalance_for_compute(df)
-    tables = [
-        quantized_hyperplanes(dim, num_planes, seed + 1000 * t, plane_scale)
-        for t in range(num_tables)
-    ]
-    kernel = int_lsh_buckets_kernel(tables)
+    kernel = lsh_buckets_kernel(
+        [
+            quantized_hyperplanes(dim, num_planes, seed + 1000 * t, plane_scale)
+            for t in range(num_tables)
+        ]
+    )
     q = df.select(
         F.col(id_col).alias("id"),
         quantize_vec(F.col(vec_col), quant_scale).alias("qv"),
@@ -691,33 +686,12 @@ def embedding_near_dup_pairs_exactint(
     pairs = capped_bucket_pairs(
         b, ["table", "bucket"], max_bucket_size, payload_cols=["qv"]
     )
-    dot = _int_dot(F.col("qv_a"), F.col("qv_b"))
-    na2 = _int_dot(F.col("qv_a"), F.col("qv_a"))
-    nb2 = _int_dot(F.col("qv_b"), F.col("qv_b"))
-    t2 = F.lit(threshold_ppm * threshold_ppm).cast("decimal(13,0)")
-    return (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            dot.alias("dot"),
-            na2.alias("na2"),
-            nb2.alias("nb2"),
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                (F.col("dot") * F.col("dot")) * F.lit(10**12).cast("decimal(13,0)")
-                >= t2 * F.col("na2") * F.col("nb2")
-            )
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.col("dot").cast("long").alias("dot_q"),
-            F.col("na2").cast("long").alias("na2"),
-            F.col("nb2").cast("long").alias("nb2"),
-        )
+    return _verified_pairs(pairs, threshold_ppm).select(
+        "id_a",
+        "id_b",
+        F.col("dot").cast("long").alias("dot_q"),
+        F.col("na2").cast("long").alias("na2"),
+        F.col("nb2").cast("long").alias("nb2"),
     )
 
 
@@ -740,14 +714,19 @@ def ann_topk_exactint(
     Same integer contract as
     :func:`embedding_near_dup_pairs_exactint`: vectors floor-quantized
     to 1/``quant_scale`` units, buckets from int64 sign patterns
-    (:func:`int_lsh_buckets_kernel`), candidates = corpus rows sharing
-    ≥1 (table, bucket) with a query.  The COSINE itself is then safe as
-    a double: ``dot``, ``|a|²``, ``|b|²`` are exact integers, and
-    ``dot / sqrt(|a|²·|b|²)`` is two correctly-rounded IEEE ops on a
-    once-rounded product — bit-identical in every conforming engine, so
-    the per-query ORDER BY over it (ties broken by id) is too.  The
-    emitted score is ``floor(cosine · 1e6)`` (floor of identical
-    doubles; ``round`` would re-open the shortest-repr-vs-binary trap).
+    (:func:`lsh_buckets_kernel` over :func:`quantized_hyperplanes`),
+    candidates = corpus rows sharing ≥1 (table, bucket) with a query.
+    The COSINE itself is then safe as a double: ``dot``, ``|a|²``,
+    ``|b|²`` are exact integers, and ``dot / sqrt(|a|²·|b|²)`` is two
+    correctly-rounded IEEE ops on a once-rounded product — bit-identical
+    in every conforming engine, so the per-query ORDER BY over it (ties
+    broken by id) is too.  The emitted score is ``floor(cosine · 1e6)``
+    (floor of identical doubles; ``round`` would re-open the
+    shortest-repr-vs-binary trap).
+
+    Unlike its float siblings, it KEEPS self-matches: a query in the
+    corpus is its own candidate (cosine 1, normally rank 1), as in its
+    oracle.
 
     Scale shape: corpus bucketed in one Arrow pass + one shuffle on the
     bucket key; the query side is tiny and broadcasts; scoring touches
@@ -758,14 +737,13 @@ def ann_topk_exactint(
     Returns ``(query_id, {id_col}, cosine_e6, rank)`` with
     ``rank <= k``.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
     corpus = rebalance_for_compute(corpus)
-    tables = [
-        quantized_hyperplanes(dim, num_planes, SEED + 1000 * t, plane_scale)
-        for t in range(num_tables)
-    ]
-    kernel = int_lsh_buckets_kernel(tables)
+    kernel = lsh_buckets_kernel(
+        [
+            quantized_hyperplanes(dim, num_planes, SEED + 1000 * t, plane_scale)
+            for t in range(num_tables)
+        ]
+    )
 
     def bucketize(df: DataFrame, out_id: str) -> DataFrame:
         q = df.select(
@@ -798,20 +776,13 @@ def ann_topk_exactint(
         na2.alias("_na2"),
         nb2.alias("_nb2"),
     ).filter((F.col("_na2") > 0) & (F.col("_nb2") > 0))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            F.floor(F.col("_cos") * F.lit(1_000_000.0))
-            .cast("long")
-            .alias("cosine_e6"),
-            "rank",
-        )
+    return _top_k(scored, "_cos", k, id_col, "rank").select(
+        "query_id",
+        id_col,
+        F.floor(F.col("_cos") * F.lit(1_000_000.0))
+        .cast("long")
+        .alias("cosine_e6"),
+        "rank",
     )
 
 
@@ -1105,15 +1076,7 @@ def semantic_dedup_exactint(
     the same exact-integer arithmetic; the within-cluster pair stage
     is unchanged.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-    from big_data_validator_spark.operators.dedup import capped_bucket_pairs
-
-    if (dim * quant_scale * quant_scale) ** 2 * 10**12 >= 10**38:
-        raise ValueError(
-            "semantic_dedup_exactint: dim * quant_scale**2 = "
-            f"{dim * quant_scale * quant_scale:.3g} >= 1e13 pushes the "
-            "exact verify products past DECIMAL(38,0); lower quant_scale"
-        )
+    _check_decimal_verify("semantic_dedup_exactint", dim, quant_scale)
     df = rebalance_for_compute(df)
     q = df.select(
         F.col(id_col).alias("id"),
@@ -1185,28 +1148,7 @@ def semantic_dedup_exactint(
         None,  # uncapped: every within-cluster pair is compared
         payload_cols=["qv"],
     )
-    dot = _int_dot(F.col("qv_a"), F.col("qv_b"))
-    na2 = _int_dot(F.col("qv_a"), F.col("qv_a"))
-    nb2 = _int_dot(F.col("qv_b"), F.col("qv_b"))
-    t2 = F.lit(threshold_ppm * threshold_ppm).cast("decimal(13,0)")
-    dup = (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            dot.alias("dot"),
-            na2.alias("na2"),
-            nb2.alias("nb2"),
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                (F.col("dot") * F.col("dot"))
-                * F.lit(10**12).cast("decimal(13,0)")
-                >= t2 * F.col("na2") * F.col("nb2")
-            )
-        )
-    )
+    dup = _verified_pairs(pairs, threshold_ppm)
     # NOT broadcast: SemDeDup prune rates run to double-digit percent
     # of the corpus, so the pruned set scales with the data — let AQE
     # pick broadcast only when runtime stats say it fits.
@@ -1234,7 +1176,6 @@ def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     k: int = 10,
-    query_col: str = "query_id",
     id_col: str = "vec_id",
     rank_a_col: str = "rank_a",
     rank_b_col: str = "rank_b",
@@ -1245,18 +1186,18 @@ def rrf_fuse(
     standard missing-member convention, which is what lets truncated
     candidate lists fuse without a full cross-product.
 
-    Inputs are ``(query, id, rank)`` relations.  The full outer join and
-    the fused-rank window both partition by the query key, so one
+    Inputs are ``(query_id, id, rank)`` relations.  The full outer join
+    and the fused-rank window both partition by ``query_id``, so one
     Exchange serves both; per-query frame size is bounded by the UNION
     of the two lists (at scale, feed top-M lists, not full rankings).
     ``rrf_score`` is a sum of at most two exact small-int reciprocals —
     deterministic across engines — rounded to 6; ties break by id.
-    Returns ``(query, id, rank_a, rank_b, rrf_score, fused_rank)`` for
+    Returns ``(query_id, id, rank_a, rank_b, rrf_score, fused_rank)`` for
     ``fused_rank <= k``; absent-list ranks ship as NULL.
     """
-    a = ranked_a.select(query_col, id_col, rank_a_col)
-    b = ranked_b.select(query_col, id_col, rank_b_col)
-    fused = a.join(b, [query_col, id_col], "full_outer").withColumn(
+    a = ranked_a.select("query_id", id_col, rank_a_col)
+    b = ranked_b.select("query_id", id_col, rank_b_col)
+    fused = a.join(b, ["query_id", id_col], "full_outer").withColumn(
         "rrf_score",
         F.round(
             F.coalesce(
@@ -1268,13 +1209,7 @@ def rrf_fuse(
             6,
         ),
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= k)
-    )
+    return _top_k(fused, "rrf_score", k, id_col, "fused_rank")
 
 
 _HYBRID_N = 5
@@ -1326,8 +1261,6 @@ def hybrid_lexical_dense_rrf(
     rank_lex, rank_dense, rrf_score, fused_rank)``, top ``k`` fused
     per query.
     """
-    from big_data_validator_spark.operators.dedup import _shingle_rows
-
     q_ids = docs.filter(query_pred(F.col(doc_id_col)))
     # exploded-row shingle builder: positions explode first (codegen
     # Generate) and substring compiles whole-stage, instead of the
@@ -1418,8 +1351,6 @@ def kcenter_coreset(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from big_data_validator_spark.operators import rebalance_for_compute
-
     q = rebalance_for_compute(emb).select(
         F.col(id_col).alias("id"),
         quantize_vec(F.col(vec_col), quant_scale).alias("_qv"),
@@ -1502,9 +1433,73 @@ def kcenter_coreset(
     )
 
 
+# --------------------------------------------------------- recall audits
+
+def _recall_audit(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    arms: Sequence[tuple[list, Column]],
+) -> DataFrame:
+    """Recall@k of each arm's ranking against the full-precision round-6
+    dot ranking, from ONE broadcast-join scoring pass.
+
+    ``arms`` is ``[(lead, score)]``: ``score`` is a Column over the
+    candidate vector ``_cvec`` and the query vector ``_qvec`` (both
+    ``array<double>``), ``lead`` the columns that start the arm's rows.
+    The corpus streams once for every arm.  Both the scored frame and
+    the truth top-k are pinned: every arm's rank window reads the
+    first, and each arm reads the second twice — unpinned, Spark
+    re-executes the corpus-scoring join once per reference.  Ranks
+    break ties by id; self-matches are excluded.  Returns ``(*lead,
+    query_id, n_hits, recall)`` per arm and query, unordered, with
+    ``recall = |top-k(arm) ∩ top-k(truth)| / k``."""
+    q = _query_side(queries, id_col, F.col(vec_col).cast("array<double>"))
+    scored = pin(
+        rebalance_for_compute(emb)
+        .select(
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>").alias("_cvec"),
+        )
+        .join(q, F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            id_col,
+            _dot(F.col("_cvec"), F.col("_qvec")).alias("_truth"),
+            *(score.alias(f"_arm{i}") for i, (_, score) in enumerate(arms)),
+        )
+    )
+
+    def top(score: str) -> DataFrame:
+        return _top_k(scored, score, k, id_col, "_r").select("query_id", id_col)
+
+    truth = pin(top("_truth"))
+    out = None
+    for i, (lead, _) in enumerate(arms):
+        hits = (
+            top(f"_arm{i}")
+            .join(truth, ["query_id", id_col], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).alias("n_hits"))
+        )
+        n_hits = F.coalesce("n_hits", F.lit(0))
+        row = truth.select("query_id").distinct().join(
+            hits, "query_id", "left"
+        ).select(
+            *lead,
+            "query_id",
+            n_hits.cast("long").alias("n_hits"),
+            F.round(n_hits / F.lit(float(k)), 6).alias("recall"),
+        )
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
 def sq8_recall(
     emb: DataFrame,
-    query_pred,
+    queries: DataFrame,
     dim: int,
     k: int = 10,
     id_col: str = "vec_id",
@@ -1527,17 +1522,15 @@ def sq8_recall(
 
     Two corpus passes, nothing pairwise-unbounded: (1) one aggregation
     computes per-dimension min/max (2·dim partial-agg expressions, no
-    shuffle of rows); (2) one broadcast-join scoring pass computes BOTH
-    the int8 dot and the float dot per (query, candidate) — the corpus
-    streams once for both rankings.  Quantization is row-local
+    shuffle of rows); (2) the :func:`_recall_audit` scoring pass of the
+    ``queries`` against the corpus computes BOTH the int8 dot and the
+    float dot per (query, candidate).  Quantization is row-local
     ``transform`` arithmetic: ``q_i = clamp(round((x_i − lo_i) ·
     255/(hi_i − lo_i)), 0, 255)`` (constant dims pin to 0), the
     quantized dot is exact-integer so ranks are engine-portable with
-    id tie-breaks; the float ranking uses the round-6 device.  Returns
-    ``(query_id, n_hits, recall)``, one row per query.
+    id tie-breaks.  Returns ``(query_id, n_hits, recall)``, one row per
+    query, ordered.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
     if dim <= 0:
         raise ValueError(f"dim must be positive, got {dim}")
     stats = emb.agg(
@@ -1574,76 +1567,19 @@ def sq8_recall(
             ).cast("long"),
         )
 
-    corpus = rebalance_for_compute(emb)
-    q = F.broadcast(
-        emb.filter(query_pred(F.col(id_col))).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qvec"),
-        )
-    )
-    int_dot = F.aggregate(
-        F.zip_with(
-            quantize(F.col("_cvec")),
-            quantize(F.col("_qvec")),
-            lambda x, y: x * y,
-        ),
+    int8_dot = _fold(
+        quantize(F.col("_cvec")),
+        quantize(F.col("_qvec")),
         F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).alias("_dot_sq")
-    full_dot = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("_cvec"), F.col("_qvec"), lambda x, y: x * y
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    ).alias("_dot_full")
-    scored = pin(
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_cvec"),
-        )
-        .join(q, F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, full_dot, int_dot)
     )
-
-    def topk(score_col):
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        )
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .select("query_id", id_col)
-        )
-
-    truth = pin(topk("_dot_full"))
-    hits = (
-        topk("_dot_sq")
-        .join(truth, ["query_id", id_col], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        truth.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0)) / F.lit(float(k)), 6
-            ).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_audit(
+        emb, queries, k, id_col, vec_col, [([], int8_dot)]
+    ).orderBy("query_id")
 
 
 def matryoshka_recall(
     emb: DataFrame,
-    query_pred,
+    queries: DataFrame,
     prefix_dims: Sequence[int],
     k: int = 10,
     id_col: str = "vec_id",
@@ -1657,90 +1593,24 @@ def matryoshka_recall(
     most recall at small prefixes; this operator tells you whether
     YOURS do before you cut the index size 8×).
 
-    ONE broadcast-join scoring pass computes every prefix's dot product
-    per (query, candidate) — ``slice`` + the same fold, so the corpus
-    streams ONCE for all prefixes, not once per prefix; each prefix's
-    rank window partitions by the same query key.  Rankings use round-6
-    scores with id tie-breaks (the cross-engine rank-determinism
-    device).  Returns ``(prefix_dim, query_id, n_hits, recall)`` with
-    ``recall = |top-k(prefix) ∩ top-k(full)| / k``, one row per
-    (prefix, query), ordered.
+    ONE :func:`_recall_audit` scoring pass computes every prefix's dot
+    product per (query, candidate) — ``slice`` + the same round-6 fold,
+    so the corpus streams ONCE for all prefixes, not once per prefix;
+    each prefix's rank window partitions by the same query key.
+    Returns ``(prefix_dim, query_id, n_hits, recall)`` with ``recall =
+    |top-k(prefix) ∩ top-k(full)| / k``, one row per (prefix, query),
+    ordered.
     """
-    from big_data_validator_spark.operators import rebalance_for_compute
-
-    corpus = rebalance_for_compute(emb)
-    q = F.broadcast(
-        emb.filter(query_pred(F.col(id_col))).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qvec"),
-        )
-    )
-    dot_prefix = {
-        d: F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("_cvec"), 1, int(d)),
-                    F.slice(F.col("_qvec"), 1, int(d)),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+    arms = [
+        (
+            [F.lit(int(d)).alias("prefix_dim")],
+            _dot(
+                F.slice(F.col("_cvec"), 1, int(d)),
+                F.slice(F.col("_qvec"), 1, int(d)),
             ),
-            6,
-        ).alias(f"_dot_{d}")
+        )
         for d in prefix_dims
-    }
-    full_dot = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("_cvec"), F.col("_qvec"), lambda x, y: x * y
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    ).alias("_dot_full")
-    # scored feeds the truth ranking plus one window per prefix, and
-    # truth is consumed twice per prefix — unpinned, Spark re-executes
-    # the corpus-scoring join once per reference (the ks_two_sample
-    # recompute shape).  Both frames are pinned.
-    scored = pin(
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_cvec"),
-        )
-        .join(q, F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, full_dot, *dot_prefix.values())
+    ]
+    return _recall_audit(emb, queries, k, id_col, vec_col, arms).orderBy(
+        "prefix_dim", "query_id"
     )
-
-    def topk(score_col):
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        )
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .select("query_id", id_col)
-        )
-
-    truth = pin(topk("_dot_full"))
-    out = None
-    for d in prefix_dims:
-        hits = (
-            topk(f"_dot_{d}")
-            .join(truth, ["query_id", id_col], "left_semi")
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        row = truth.select("query_id").distinct().join(
-            hits, "query_id", "left"
-        ).select(
-            F.lit(int(d)).alias("prefix_dim"),
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0)) / F.lit(float(k)), 6
-            ).alias("recall"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("prefix_dim", "query_id")

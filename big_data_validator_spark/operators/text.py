@@ -397,7 +397,6 @@ def bpe_learn_merges(
 
 def unigram_seed_pieces(
     words: "DataFrame",
-    num_pieces: int = 48,
     max_piece_len: int = 4,
     word_col: str = "w",
     count_col: str = "_n",
@@ -526,9 +525,7 @@ def unigram_learn_vocab(
             F.col(count_col).cast("long").alias("cnt"),
         )
     )
-    cand = unigram_seed_pieces(
-        work, num_pieces, max_piece_len, "w", "cnt"
-    )
+    cand = unigram_seed_pieces(work, max_piece_len, "w", "cnt")
     top = (
         cand.orderBy(F.col("freq").desc(), F.col("piece").asc())
         .limit(num_pieces)

@@ -47,6 +47,15 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _embeddings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The top-k entries' corpus and queries: ``embeddings`` with its
+    vectors cast to ``array<double>``, and its rows with ``vec_id < 5``."""
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    return emb, emb.filter(F.col("vec_id") < 5)
+
+
 @query(
     "sim_bruteforce_topk",
     oracle="""
@@ -67,11 +76,7 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for 5 query vectors — broadcast nested-loop; the
     corpus never shuffles."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter(F.col("vec_id") < 5)
-    return S.brute_force_topk(emb, q, k=10)
+    return S.brute_force_topk(*_embeddings(spark, sf_dir), k=10)
 
 
 @query(
@@ -114,20 +119,13 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for both probe settings, the three candidate sets union under a
     # method tag, and every hit count comes out of ONE aggregation job.
 
-    emb_src = _t(spark, sf_dir, "embeddings")
-    emb = pin(
-        _rb(
-            emb_src.withColumn(
-                "embedding", F.col("embedding").cast("array<double>")
-            )
-        )
-        # the audit's four pipelines all consume this cache; size its
-        # partition count to the input, not the session constant
-        # (operators.adaptive_partitions rationale)
-        .repartition(adaptive_partitions(emb_src), "vec_id")
-    )
+    src, _ = _embeddings(spark, sf_dir)
+    # the audit's four pipelines all consume this cache; size its
+    # partition count to the input, not the session constant
+    # (operators.adaptive_partitions rationale)
+    emb = pin(_rb(src).repartition(adaptive_partitions(src), "vec_id"))
     k, n_queries = 10, 5
-    q = emb.filter(F.col("vec_id") < 5)
+    q = emb.filter(F.col("vec_id") < n_queries)
     truth = S.brute_force_topk(emb, q, k=k).select("query_id", "vec_id")
     centroids = S.ivf_train(emb, num_centroids=16)
     cells = S.ivf_assign_cells(emb, centroids)
@@ -164,20 +162,16 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sim_ann_lsh")  # hash-dependent buckets: recall oracled via sim_ann_recall
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
+    return S.lsh_ann_topk(
+        *_embeddings(spark, sf_dir), dim=64, k=10, num_planes=8, num_tables=4
     )
-    q = emb.filter(F.col("vec_id") < 5)
-    return S.lsh_ann_topk(emb, q, dim=64, k=10, num_planes=8, num_tables=4)
 
 
 @query("sim_ann_ivf")  # sampled k-means cells: recall oracled via sim_ann_recall
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
+    return S.ivf_ann_topk(
+        *_embeddings(spark, sf_dir), k=10, num_centroids=16, nprobe=4
     )
-    q = emb.filter(F.col("vec_id") < 5)
-    return S.ivf_ann_topk(emb, q, dim=64, k=10, num_centroids=16, nprobe=4)
 
 
 @query("sim_ann_pq")  # k-means codebooks: recall pytest-pinned vs brute force
@@ -186,11 +180,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector (vs 256 float bytes), scored by asymmetric distance against
     broadcast per-query lookup tables — the memory-side scale lever
     (operators/similarity.py: pq_train/pq_encode_kernel/pq_ann_topk)."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter(F.col("vec_id") < 5)
-    return S.pq_ann_topk(emb, q, dim=64, k=10)
+    return S.pq_ann_topk(*_embeddings(spark, sf_dir), dim=64, k=10)
 
 
 def _dot(a: str, b: str) -> str:
@@ -624,7 +614,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks (the rank-determinism device)."""
     emb = _t(spark, sf_dir, "embeddings")
     return S.matryoshka_recall(
-        emb, lambda c: c < 5, prefix_dims=[8, 16, 32], k=10
+        emb, emb.filter(F.col("vec_id") < 5), prefix_dims=[8, 16, 32], k=10
     )
 
 
@@ -741,4 +731,4 @@ def sim_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus streams once; integer dots make the quantized ranks
     engine-portable with id tie-breaks."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.sq8_recall(emb, lambda c: c < 5, dim=64, k=10)
+    return S.sq8_recall(emb, emb.filter(F.col("vec_id") < 5), dim=64, k=10)

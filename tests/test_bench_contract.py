@@ -104,10 +104,13 @@ def test_bench_emits_contract_json_line(tmp_path):
     detail = json.loads(lines[-2])
     assert set(detail["queries"]) == set(bench.HEADLINE[:12])
     assert set(detail["queries_min"]) == set(bench.HEADLINE[:12])
+    # with one timed pass the spread collapses: min == median == max
+    assert detail["queries_max"] == detail["queries"] == detail["queries_min"]
     assert "ratio_vs_prev" in detail and "ratio_vs_prev_adj" in detail
     with open(tmp_path / "BENCH_DETAIL.json") as fh:
         fdetail = json.load(fh)
     assert fdetail["queries"] == detail["queries"]
+    assert fdetail["queries_max"] == detail["queries_max"]
 
 
 def test_scale_merge_replaces_timed_rows_and_keeps_the_rest():

@@ -1,8 +1,9 @@
 """Every top-level definition in the package is reached from code outside
 ``tests/``; every switch parameter is set to more than one value outside
 ``tests/``; every other constant default is changed by some caller; every
-module-level import is used by its module; every cache, checkpoint and
-temp directory is made by its owner.
+function parameter is read by its body; every module-level import is used
+by its module; every cache, checkpoint and temp directory is made by its
+owner.
 
 A definition is reached when its name appears in non-test code (the
 package, ``scripts/``, ``bench.py``, ``perfbench/`` and
@@ -370,6 +371,42 @@ def knob_scan():
 def test_every_knob_is_set_to_another_value_by_some_caller():
     hits = knob_scan()
     assert hits == [], f"{len(hits)} defaults no caller changes: {hits}"
+
+
+# --- parameters no body reads ----------------------------------------------
+# A parameter its function never reads is a value every caller computes and
+# passes for nothing.  Exempt: the registry signature ``(spark, sf_dir)`` of a
+# ``@query`` entry and the drain harness's ``writer(d)`` callback, whose
+# shapes the caller fixes.
+
+UNUSED_EXEMPT = {"writer": {"d"}}
+QUERY_SIGNATURE = {"spark", "sf_dir"}
+
+
+def unused_parameters():
+    """``module:function(parameter)`` for each parameter of a package
+    function (nested and methods included, ``self``/``cls`` aside) that its
+    body never reads."""
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(ROOT).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = fn.args
+            params = [a.arg for a in args.posonlyargs + args.args + args.kwonlyargs]
+            params += [a.arg for a in (args.vararg, args.kwarg) if a is not None]
+            exempt = {"self", "cls"} | UNUSED_EXEMPT.get(fn.name, set())
+            if _is_query_entry(fn):
+                exempt |= QUERY_SIGNATURE
+            read = {n.id for stmt in fn.body for n in ast.walk(stmt) if isinstance(n, ast.Name)}
+            hits += [f"{module}:{fn.name}({p})" for p in params if p not in read | exempt]
+    return hits
+
+
+def test_every_parameter_is_read_by_its_function():
+    hits = unused_parameters()
+    assert hits == [], f"{len(hits)} parameters their function never reads: {hits}"
 
 
 # --- module imports ---------------------------------------------------------

@@ -1448,3 +1448,24 @@ def test_mcnemar_paired_rules_matches_hand_counts(spark):
     r3 = R.mcnemar_paired_rules(near, F.col("a"), F.col("b")).first()
     assert r3["mcnemar_x2_ppm"] == (1 * 1_000_000) // 3
     assert r3["mcnemar_cc_x2_ppm"] == 0
+
+
+def test_bad_bin_width_raises_before_anything_is_pinned(spark):
+    """Called outside a resource scope, the value-count drift tests check
+    ``bin_width`` before they pin their counts: the ValueError leaves no
+    cache registered."""
+    df = spark.createDataFrame([(1, "x"), (2, "y"), (3, "x")], "v long, seg string")
+    calls = {
+        "ks_two_sample": lambda: R.ks_two_sample(df, df, "v", bin_width=0),
+        "wasserstein_1d": lambda: R.wasserstein_1d(df, df, "v", bin_width=0),
+        "mannwhitney_u": lambda: R.mannwhitney_u(df, df, "v", bin_width=0),
+        "cramer_von_mises": lambda: R.cramer_von_mises(df, df, "v", bin_width=0),
+        "mannwhitney_by_segment": lambda: R.mannwhitney_by_segment(df, "seg", "v", bin_width=0),
+        "mannwhitney_bh_scan": lambda: R.mannwhitney_bh_scan(df, "seg", "v", bin_width=0),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="positive"):
+            call()
+        assert cache.isEmpty(), f"{name} left a cached Dataset"

@@ -85,12 +85,51 @@ def test_lsh_ann_recall(spark, vectors):
     assert sum(recalls) / len(recalls) >= 0.6  # approximate, but useful
 
 
-def test_ivf_ann_recall(spark, vectors):
+def _sign_bucket(vec, planes):
+    """Bucket id by plain Python: bit ``j`` set iff ``vec · planes[j] >= 0``."""
+    return sum(
+        1 << j
+        for j, p in enumerate(planes)
+        if sum(a * h for a, h in zip(vec, p)) >= 0
+    )
+
+
+@pytest.mark.parametrize("quantized", [False, True])
+def test_lsh_kernel_matches_python_sign_replay(spark, vectors, quantized):
+    """One kernel for both geometries: every row's bucket ids equal a
+    plain-Python sign replay, for float hyperplanes over float vectors
+    and for quantized-int hyperplanes over quantized vectors (the int64
+    matmul).  A NULL row inside a batch stays NULL, and so does every
+    row of an all-NULL batch."""
     df, dim = vectors
+    rows = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    if quantized:
+        tables = [S.quantized_hyperplanes(dim, 6, 42 + 1000 * t) for t in range(3)]
+        rows = {i: [math.floor(x * 100_000) for x in v] for i, v in rows.items()}
+        schema = "vec_id long, v array<bigint>"
+    else:
+        tables = [S._random_hyperplanes(dim, 6, 42 + 1000 * t) for t in range(3)]
+        schema = "vec_id long, v array<double>"
+    kernel = S.lsh_buckets_kernel(tables)
+
+    def buckets(data):
+        frame = spark.createDataFrame(data, schema).coalesce(1)  # one batch
+        return {
+            r["vec_id"]: r["b"]
+            for r in frame.select("vec_id", kernel("v").alias("b")).collect()
+        }
+
+    want = {i: [_sign_bucket(v, planes) for planes in tables] for i, v in rows.items()}
+    assert buckets(list(rows.items()) + [(-1, None)]) == want | {-1: None}
+    assert buckets([(-1, None), (-2, None)]) == {-1: None, -2: None}
+
+
+def test_ivf_ann_recall(spark, vectors):
+    df, _ = vectors
     queries = df.filter(F.col("vec_id") < 5)
     exact = S.brute_force_topk(df, queries, k=5).collect()
     got = S.ivf_ann_topk(
-        df, queries, dim=dim, k=5, num_centroids=8, nprobe=3
+        df, queries, k=5, num_centroids=8, nprobe=3
     ).collect()
     exact_sets, got_sets = {}, {}
     for r in exact:
@@ -107,7 +146,7 @@ def test_ivf_ann_recall(spark, vectors):
 
     # deterministic: identical results on a second run
     again = {(r["query_id"], r["vec_id"]) for r in S.ivf_ann_topk(
-        df, queries, dim=dim, k=5, num_centroids=8, nprobe=3).collect()}
+        df, queries, k=5, num_centroids=8, nprobe=3).collect()}
     assert {(r["query_id"], r["vec_id"]) for r in got} == again
 
 
@@ -766,7 +805,7 @@ def test_sq8_lossless_grid_gives_perfect_recall(spark):
     rows.append((48, [0.0] * 6))    # anchor lo = 0 in every dim
     rows.append((49, [255.0] * 6))  # anchor hi = 255 in every dim
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = sq8_recall(emb, lambda c: c < 3, dim=6, k=5).collect()
+    out = sq8_recall(emb, emb.filter(F.col("vec_id") < 3), dim=6, k=5).collect()
     assert len(out) == 3
     assert all(r["recall"] == 1.0 for r in out)
 
@@ -787,10 +826,10 @@ def test_sq8_degrades_under_coarse_quantization_and_guards(spark):
     ]
     rows.append((40, [1000.0, 1000.0, 1000.0, 1000.0]))  # span stretcher
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = sq8_recall(emb, lambda c: c < 2, dim=4, k=5).collect()
+    out = sq8_recall(emb, emb.filter(F.col("vec_id") < 2), dim=4, k=5).collect()
     assert any(r["recall"] < 1.0 for r in out)
     with pytest.raises(ValueError, match="positive"):
-        sq8_recall(emb, lambda c: c < 2, dim=0)
+        sq8_recall(emb, emb.filter(F.col("vec_id") < 2), dim=0)
 
 
 # ------------------------------------------------- matryoshka recall
@@ -807,7 +846,7 @@ def test_matryoshka_full_prefix_is_perfect_recall(spark):
         ["vec_id", "embedding"],
     )
     out = matryoshka_recall(
-        emb, lambda c: c < 3, prefix_dims=[16], k=5
+        emb, emb.filter(F.col("vec_id") < 3), prefix_dims=[16], k=5
     ).collect()
     # prefix == full dimension -> identical ranking -> recall 1.0
     assert all(r["recall"] == 1.0 for r in out)
@@ -838,7 +877,7 @@ def test_matryoshka_informative_prefix_beats_noise_prefix(spark):
     out = {
         (r["prefix_dim"], r["query_id"]): r["recall"]
         for r in matryoshka_recall(
-            emb, lambda c: c < 3, prefix_dims=[4], k=8
+            emb, emb.filter(F.col("vec_id") < 3), prefix_dims=[4], k=8
         ).collect()
     }
     avg = sum(out.values()) / len(out)
